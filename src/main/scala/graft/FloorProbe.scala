@@ -24,10 +24,7 @@ object FloorProbe {
     var b = GraftSession.configure(
       SparkSession.builder().master(s"local[$cpus]"), cpus)
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach { s =>
-      s.split(";").filter(_.nonEmpty).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        b = b.config(k, v)
-      }
+      extraConf(s).foreach { case (k, v) => b = b.config(k, v) }
     }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -56,4 +53,13 @@ object FloorProbe {
     println(f"${"MEAN"}%-32s ${rows.map(_._2).sum / n}%7.3f ${rows.map(_._3).sum / n}%7.3f ${rows.map(_._4).sum / n}%7.3f ${rows.map(_._5).sum / n}%7.3f ${rows.map(_._6).sum / n}%7.3f")
     spark.stop()
   }
+
+  /** `SPARK_GRAFT_EXTRA_CONF` (`k1=v1;k2=v2`) as conf pairs; a token
+    * without `=` fails by name instead of as a MatchError. */
+  private[graft] def extraConf(spec: String): Seq[(String, String)] =
+    spec.split(";").toSeq.filter(_.nonEmpty).map { kv =>
+      val i = kv.indexOf('=')
+      require(i > 0, s"SPARK_GRAFT_EXTRA_CONF: token '$kv' is not key=value")
+      (kv.take(i), kv.drop(i + 1))
+    }
 }

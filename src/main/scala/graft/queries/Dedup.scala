@@ -2239,9 +2239,11 @@ object Dedup {
     }
   }
 
-  /** Schema sidecar for sinks whose parquet can be EMPTY (degenerate
-    * corpora) or whose reader runs in a later session: files starting
-    * with `_` are invisible to Spark's parquet listing. */
+  /** Schema sidecar EVERY write-once sink carries, session-local or
+    * persistent: sink reads take their schema from it, so no read starts
+    * a parquet footer-inference job, and an EMPTY sink (degenerate
+    * corpora) round-trips. Files starting with `_` are invisible to
+    * Spark's parquet listing. */
   private def writeSchemaSidecar(dir: String,
       schema: org.apache.spark.sql.types.StructType): Unit = {
     val p = java.nio.file.Paths.get(dir, "_GRAFT_SCHEMA.json")
@@ -2249,12 +2251,41 @@ object Dedup {
     java.nio.file.Files.write(p, schema.json.getBytes("UTF-8")): Unit
   }
   private def readSchemaSidecar(
-      dir: String): Option[org.apache.spark.sql.types.StructType] = {
-    val p = java.nio.file.Paths.get(dir, "_GRAFT_SCHEMA.json")
-    if (!java.nio.file.Files.exists(p)) None
-    else Some(org.apache.spark.sql.types.DataType.fromJson(
-      new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-      .asInstanceOf[org.apache.spark.sql.types.StructType])
+      dir: String): org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.DataType.fromJson(new String(
+      java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(dir, "_GRAFT_SCHEMA.json")), "UTF-8"))
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
+
+  /** The write-once protocol behind every [[materializeOnce]]-family
+    * sink: runs `write` for `out` exactly once per JVM (putIfAbsent
+    * publishes a future; losers await it; a failed writer un-publishes
+    * so a later call can retry). A waiter whose writer failed with a
+    * NonFatal cause retries the race for the slot itself instead of
+    * failing permanently on someone else's hiccup; a fatal cause is
+    * rethrown, never retried. */
+  private def writeOnce(out: String)(write: => Unit): Unit = {
+    var done = false
+    while (!done) {
+      val fresh = new java.util.concurrent.CompletableFuture[String]()
+      val prior = clusterSinks.putIfAbsent(out, fresh)
+      if (prior == null) {
+        try { write; fresh.complete(out): Unit; done = true }
+        catch {
+          case t: Throwable =>
+            // wake any waiters with the failure instead of deadlocking them
+            clusterSinks.remove(out, fresh)
+            fresh.completeExceptionally(t)
+            throw t
+        }
+      } else {
+        try { prior.join(); done = true }
+        catch {
+          case e: java.util.concurrent.CompletionException =>
+            if (!scala.util.control.NonFatal(e.getCause)) throw e.getCause
+        }
+      }
+    }
   }
 
   /** Cross-session persistence for small DRIVER-SIDE model constants
@@ -2310,50 +2341,24 @@ object Dedup {
       dedupClusters(spark, sfDir))
 
   /** The write-once sink engine behind [[dedupClustersMaterialized]] and
-    * [[dedupDelta]]'s base index: builds `df` and writes it to the
-    * session-keyed sink for (`prefix`, `sfDir`) exactly once per JVM
-    * (putIfAbsent publishes a future; losers await it; a failed writer
-    * un-publishes so a later call can retry), registers the dir with the
-    * shutdown-hook cleaner, and returns a plain parquet scan. */
+    * [[dedupDelta]]'s base index: builds `df` and writes it, with its
+    * schema sidecar, to the sink for (`prefix`, `sfDir`) exactly once
+    * per JVM ([[writeOnce]]), registers a session-local dir with the
+    * shutdown-hook cleaner, and returns a plain parquet scan whose
+    * schema comes from the sidecar. */
   private[queries] def materializeOnce(spark: SparkSession, prefix: String,
                                        sfDir: String)(df: => DataFrame): DataFrame = {
     val (out, persistent) = sinkOut(spark, prefix, sfDir)
-    var done = false
-    while (!done) {
-      val fresh = new java.util.concurrent.CompletableFuture[String]()
-      val prior = clusterSinks.putIfAbsent(out, fresh)
-      if (prior == null) {
-        try {
-          if (persistent) buildAtomically(spark, out) { tmp =>
-            val frame = df
-            frame.write.mode("overwrite").parquet(tmp)
-            writeSchemaSidecar(tmp, frame.schema)
-          } else {
-            cleanupHook; cleanupDirs.add(out)
-            df.write.mode("overwrite").parquet(out)
-          }
-          fresh.complete(out): Unit
-          done = true
-        } catch {
-          case t: Throwable =>
-            // un-publish so a later call can retry; wake any waiters with
-            // the failure instead of deadlocking them
-            clusterSinks.remove(out, fresh)
-            fresh.completeExceptionally(t)
-            throw t
-        }
-      } else {
-        // a waiter whose writer failed transiently retries the race for
-        // the slot itself (computeIfAbsent's old semantics) instead of
-        // failing permanently on someone else's hiccup
-        try { prior.join(); done = true }
-        catch { case _: Throwable => () }
+    writeOnce(out) {
+      def writeTo(dst: String): Unit = {
+        val frame = df
+        frame.write.mode("overwrite").parquet(dst)
+        writeSchemaSidecar(dst, frame.schema)
       }
+      if (persistent) buildAtomically(spark, out)(writeTo)
+      else { cleanupHook; cleanupDirs.add(out); writeTo(out) }
     }
-    readSchemaSidecar(out) match {
-      case Some(s) => spark.read.schema(s).parquet(out)
-      case None    => spark.read.parquet(out)
-    }
+    spark.read.schema(readSchemaSidecar(out)).parquet(out)
   }
 
   /** [[materializeOnce]] with a BUCKETED sink: the frame is written as a
@@ -2378,48 +2383,32 @@ object Dedup {
     val (out, persistent) = sinkOut(spark, prefix, sfDir)
     val tbl = "graft_b_" + java.security.MessageDigest.getInstance("MD5")
       .digest(out.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    var done = false
-    while (!done) {
-      val fresh = new java.util.concurrent.CompletableFuture[String]()
-      val prior = clusterSinks.putIfAbsent(out, fresh)
-      if (prior == null) {
-        try {
-          if (persistent) buildAtomically(spark, out) { tmp =>
-            // bucketed layout needs the catalog writer: write through a
-            // throwaway EXTERNAL table at the build path (drop leaves
-            // the files), rename, then the re-register branch below
-            // recreates the DDL over the final location
-            val tmpTbl = tbl + "_bld"
-            spark.sql(s"DROP TABLE IF EXISTS $tmpTbl")
-            val frame = df
-            frame.write.format("parquet").mode("overwrite")
-              .bucketBy(nBuckets, key).sortBy(key)
-              .option("path", tmp).saveAsTable(tmpTbl)
-            writeSchemaSidecar(tmp, frame.schema)
-            spark.sql(s"DROP TABLE IF EXISTS $tmpTbl")
-          } else {
-            cleanupHook; cleanupDirs.add(out)
-            spark.sql(s"DROP TABLE IF EXISTS $tbl")
-            df.write.format("parquet").mode("overwrite")
-              .bucketBy(nBuckets, key).sortBy(key)
-              .option("path", out).saveAsTable(tbl)
-          }
-          fresh.complete(out): Unit
-          done = true
-        } catch {
-          case t: Throwable =>
-            clusterSinks.remove(out, fresh)
-            fresh.completeExceptionally(t)
-            throw t
-        }
+    writeOnce(out) {
+      if (persistent) buildAtomically(spark, out) { tmp =>
+        // bucketed layout needs the catalog writer: write through a
+        // throwaway EXTERNAL table at the build path (drop leaves
+        // the files), rename, then the re-register branch below
+        // recreates the DDL over the final location
+        val tmpTbl = tbl + "_bld"
+        spark.sql(s"DROP TABLE IF EXISTS $tmpTbl")
+        val frame = df
+        frame.write.format("parquet").mode("overwrite")
+          .bucketBy(nBuckets, key).sortBy(key)
+          .option("path", tmp).saveAsTable(tmpTbl)
+        writeSchemaSidecar(tmp, frame.schema)
+        spark.sql(s"DROP TABLE IF EXISTS $tmpTbl")
       } else {
-        try { prior.join(); done = true }
-        catch { case _: Throwable => () }
+        cleanupHook; cleanupDirs.add(out)
+        spark.sql(s"DROP TABLE IF EXISTS $tbl")
+        val frame = df
+        frame.write.format("parquet").mode("overwrite")
+          .bucketBy(nBuckets, key).sortBy(key)
+          .option("path", out).saveAsTable(tbl)
+        writeSchemaSidecar(out, frame.schema)
       }
     }
     if (!spark.catalog.tableExists(tbl)) {
-      val ddl = readSchemaSidecar(out)
-        .getOrElse(spark.read.parquet(out).schema).toDDL
+      val ddl = readSchemaSidecar(out).toDDL
       spark.sql(s"CREATE TABLE $tbl ($ddl) USING PARQUET " +
         s"CLUSTERED BY ($key) SORTED BY ($key) INTO $nBuckets BUCKETS " +
         s"LOCATION '$out'")
@@ -2440,35 +2429,17 @@ object Dedup {
       spark: SparkSession, prefix: String, sfDir: String,
       partCol: String)(df: => DataFrame): DataFrame = {
     val (out, persistent) = sinkOut(spark, prefix, sfDir)
-    var done = false
-    while (!done) {
-      val fresh = new java.util.concurrent.CompletableFuture[String]()
-      val prior = clusterSinks.putIfAbsent(out, fresh)
-      if (prior == null) {
-        try {
-          def writeTo(dst: String): Unit = {
-            val frame = df
-            frame.repartition(col(partCol)).write.mode("overwrite")
-              .partitionBy(partCol).parquet(dst)
-            writeSchemaSidecar(dst, frame.schema)
-          }
-          if (persistent) buildAtomically(spark, out)(writeTo)
-          else { cleanupHook; cleanupDirs.add(out); writeTo(out) }
-          fresh.complete(out): Unit
-          done = true
-        } catch {
-          case t: Throwable =>
-            clusterSinks.remove(out, fresh)
-            fresh.completeExceptionally(t)
-            throw t
-        }
-      } else {
-        try { prior.join(); done = true }
-        catch { case _: Throwable => () }
+    writeOnce(out) {
+      def writeTo(dst: String): Unit = {
+        val frame = df
+        frame.repartition(col(partCol)).write.mode("overwrite")
+          .partitionBy(partCol).parquet(dst)
+        writeSchemaSidecar(dst, frame.schema)
       }
+      if (persistent) buildAtomically(spark, out)(writeTo)
+      else { cleanupHook; cleanupDirs.add(out); writeTo(out) }
     }
-    spark.read.schema(readSchemaSidecar(out).getOrElse(
-      spark.read.parquet(out).schema)).parquet(out)
+    spark.read.schema(readSchemaSidecar(out)).parquet(out)
   }
 
   // --------------------------------------------------------------------

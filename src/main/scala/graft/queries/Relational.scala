@@ -1897,46 +1897,47 @@ object Relational {
     * The exact version needs a global sort + cumsum over |customers|;
     * instead spend quantises to $100 buckets (the [[rfmSegments]]
     * move — bucket count bounded by the PRICE RANGE, not the customer
-    * count), the bucket histogram collects as model state, the driver
-    * walks it for each bar's cutoff bucket, and one re-agg sums
-    * revenue/count above the cutoffs. Quantisation semantics (both
-    * engines identical): the "top p%" boundary rounds to a bucket
-    * edge, so the reported customer count can exceed p% by at most one
-    * bucket's population — the honest price of never sorting the
-    * corpus, stated in the output (n_top is reported, not assumed). */
+    * count), and ONE bounded collect brings back each bucket's
+    * customer count and cents sum as model state. The driver folds
+    * everything else from those rows in exact Long arithmetic: n, the
+    * totals, each bar's cutoff bucket and its (cents, count) above the
+    * cutoff — no re-aggregation of the corpus per bar. A NULL bucket
+    * (customers with no priced order) walks as key 0, as `getAs[Long]`
+    * reads it, counts in n_cust, and never passes a bar (SQL's
+    * `m_b >= cut` drops it). The 2 rows come back already in
+    * `top_pct` desc order as a local frame, so execution is one
+    * LocalTableScan. Quantisation semantics (both engines identical):
+    * the "top p%" boundary rounds to a bucket edge, so the reported
+    * customer count can exceed p% by at most one bucket's population —
+    * the honest price of never sorting the corpus, stated in the
+    * output (n_top is reported, not assumed). */
   def revenueParetoShare(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val perCust = Tables.orders(spark, sfDir)
       .groupBy("o_custkey")
       .agg(sum(cents(col("o_totalprice"))).as("cents"))
       .select(col("cents"), expr("cents div 10000").as("m_b"))
+    // (m_b, customers, cents, NULL bucket?), top spenders first
     val hist = Hist.bounded(
-        perCust.groupBy("m_b").agg(count(lit(1)).as("cnt")),
+        perCust.groupBy("m_b").agg(count(lit(1)).as("cnt"),
+          coalesce(sum("cents"), lit(0L)).as("s")),
         "revenue_pareto_share")
-      .map(r => (r.getAs[Long]("m_b"), r.getAs[Long]("cnt")))
-      .sortBy(v => -v._1) // top spenders first
-    if (hist.isEmpty)
-      return Seq.empty[(Double, Long, Long, Double, Double)]
-        .toDF("top_pct", "cutoff_dollars", "n_top", "rev_share", "cust_share")
+      .map(r => (r.getAs[Long]("m_b"), r.getAs[Long]("cnt"),
+        r.getAs[Long]("s"), r.isNullAt(0)))
+      .sortBy(v => -v._1)
     val n = hist.map(_._2).sum
+    val totCents = hist.map(_._3).sum
     val cums = hist.scanLeft(0L)(_ + _._2)
-    def cutoff(p: Double): Long = {
+    // empty orders: no rows, as the oracle's n > 0 guard
+    val rows = (if (n == 0) Nil else Seq(0.10, 0.01)).map { p =>
       val want = math.ceil(p * n).toLong
-      hist(hist.indices.find(i => cums(i + 1) >= want).get)._1
-    }
-    val bars = Seq(0.10, 0.01).map(p => (p, cutoff(p)))
-    val total = perCust.agg(sum("cents").as("tc"), count(lit(1)).as("nc")).head()
-    val (totCents, nCust) = (total.getAs[Long]("tc"), total.getAs[Long]("nc"))
-    val rows = bars.map { case (p, cut) =>
-      val top = perCust.filter(col("m_b") >= cut)
-        .agg(coalesce(sum("cents"), lit(0L)).as("s"),
-          count(lit(1)).as("k")).head()
-      (p, cut * 100, top.getAs[Long]("k"),
-        math.floor(top.getAs[Long]("s").toDouble / totCents * 1e6 + 0.5) / 1e6,
-        math.floor(top.getAs[Long]("k").toDouble / nCust * 1e6 + 0.5) / 1e6)
+      val cut = hist(hist.indices.find(i => cums(i + 1) >= want).get)._1
+      val top = hist.filter(b => !b._4 && b._1 >= cut)
+      val (s, k) = (top.map(_._3).sum, top.map(_._2).sum)
+      (p, cut * 100, k, math.floor(s.toDouble / totCents * 1e6 + 0.5) / 1e6,
+        math.floor(k.toDouble / n * 1e6 + 0.5) / 1e6)
     }
     rows.toDF("top_pct", "cutoff_dollars", "n_top", "rev_share", "cust_share")
-      .orderBy(col("top_pct").desc)
   }
 
   val revenueParetoShareSql: String =

@@ -713,6 +713,24 @@ class EdgeCaseSpec extends AnyFunSuite {
     // the hash gate never exercises
     assert(queries.Temporal.eventsWinsorizedStats(spark, dir).count() == 0)
     assert(queries.Relational.revenueParetoShare(spark, dir).count() == 0)
+    // the degenerate non-empty corpora: every price NULL (one NULL m_b
+    // bucket, in n_cust but in no bar, so both shares divide by zero
+    // cents), and every customer tied on one $100 bucket edge
+    def pareto(name: String, orders: Seq[(Long, Option[Double])]) = {
+      val d = new java.io.File(System.getProperty("java.io.tmpdir"),
+        s"graft_edge_pareto_$name").getAbsolutePath
+      orders.toDF("o_custkey", "o_totalprice")
+        .write.mode("overwrite").parquet(s"$d/orders.parquet")
+      queries.Relational.revenueParetoShare(spark, d).collect().toSeq
+        .map(r => (r.getDouble(0), r.getLong(1), r.getLong(2),
+          r.getDouble(3), r.getDouble(4)))
+    }
+    val allNull = pareto("allnull", Seq((1L, None), (1L, None), (2L, None)))
+    assert(allNull.map(r => (r._1, r._2, r._3, r._5)) ==
+      Seq((0.10, 0L, 0L, 0.0), (0.01, 0L, 0L, 0.0)))
+    assert(allNull.forall(_._4.isNaN))
+    assert(pareto("alltied", (1L to 5L).map(c => (c, Some(200.0)))) ==
+      Seq((0.10, 200L, 5L, 1.0, 1.0), (0.01, 200L, 5L, 1.0, 1.0)))
     assert(queries.TextAnalysis.datasetCard(spark, dir).count() == 0)
     assert(queries.TextAnalysis.readability(spark, dir).count() == 0)
   }

@@ -1225,6 +1225,22 @@ class PipelineOpsSpec extends AnyFunSuite {
       // spend-ranked top group must hold at least its headcount share
       assert(r.getAs[Double]("rev_share") >= r.getAs[Double]("cust_share") - 1e-9)
     }
+    // edge inputs: customer 4's every price is NULL, so its NULL m_b
+    // bucket counts in n and n_cust but in no bar; customers 2 and 3 tie
+    // in the 10% bar's cutoff bucket, 2 exactly on its $100 edge; the 1%
+    // bar's running count meets its target exactly at the top bucket
+    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
+      "graft_pareto_edges").getAbsolutePath
+    (Seq[(Long, Option[Double])]((1L, Some(500.0)), (2L, Some(300.0)),
+      (3L, Some(250.0)), (3L, Some(149.99)), (4L, None), (4L, None)) ++
+      (5L to 20L).map(c => (c, Some(10.0))))
+      .toDF("o_custkey", "o_totalprice")
+      .write.mode("overwrite").parquet(s"$dir/orders.parquet")
+    val edges = queries.Relational.revenueParetoShare(spark, dir).collect()
+      .map(r => (r.getDouble(0), r.getLong(1), r.getLong(2), r.getDouble(3),
+        r.getDouble(4)))
+    assert(edges.toSeq == Seq((0.10, 300L, 3L, 0.882352, 0.15),
+      (0.01, 500L, 1L, 0.36765, 0.05)))
   }
 
   test("l_diversity: cells match the k-anonymity audit; l bounded by n and band count") {
