@@ -1,13 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import scala.util.control.NonFatal
 
 /** Benchmark main: one JSON line with per-query wall times at the given SF.
   *
-  * An UNTIMED warmup (the flagship entry query + a count per fixture
-  * table) absorbs one-time session costs — Janino/codegen bootstrap, JIT
-  * compilation, parquet footer reads — which otherwise land on whichever
-  * query happens to run first (~6 s of noise on a ~0.5 s query). Queries
-  * then run in sorted name order for stable attribution.
+  * An UNTIMED [[GraftSession.warmup]] absorbs one-time session costs
+  * (~6 s of noise on a ~0.5 s query otherwise). Queries then run in
+  * sorted name order for stable attribution.
   *
   * Contention-proofing: the whole suite runs TWICE inside one session and
   * each query reports its per-query MINIMUM — a single contended window
@@ -24,30 +23,15 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => }
-    Seq("lineitem", "orders", "events", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => }
-    }
+    val spark = GraftSession.local()
+    GraftSession.warmup(spark, sfDir)
     val names = SparkEntry.queries.keys.toSeq.sorted
-    // pass → name -> (seconds, succeeded)
+    // pass → name -> (seconds, succeeded). timedNoop drops the previous
+    // query's intra-query caches first — otherwise cached partitions
+    // accumulate over the suite and GC noise lands on whatever runs late
     def runPass(subset: Seq[String] = names): Map[String, (Double, Boolean)] = subset.map { name =>
-      // drop the previous query's intra-query caches — otherwise cached
-      // partitions accumulate over the suite and GC noise lands on
-      // whatever runs late
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      // noop sink fully materializes every output row/column; a bare
-      // count() lets Catalyst prune projections and sorts, so map-heavy
-      // queries would time only the parquet scan
-      val ok =
-        try { SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case _: Throwable => false }
-      name -> ((System.nanoTime() - t0) / 1e9, ok)
+      val (s, failure) = GraftSession.timedNoop(spark)(SparkEntry.queries(name)(spark, sfDir))
+      name -> (s, failure.isEmpty)
     }.toMap
     val p1 = runPass(); val p2 = runPass()
     // third pass only for queries whose two timings disagree by >25% —
@@ -107,7 +91,7 @@ object Bench {
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("bench.json"),
       json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case _: Throwable => }
+    catch { case NonFatal(_) => }
     // The driver keeps only the LAST 2000 chars of stdout and json-parses
     // the last line. The full per-query line outgrew that window at ~80
     // queries, so it prints first (humans + belt-and-braces) and a compact

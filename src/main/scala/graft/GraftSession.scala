@@ -1,8 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Shared session tuning for every entry point (Verify, Bench, tests).
+import scala.util.control.NonFatal
+
+/** The one session-setup point for every entry point (Bench, Verify,
+  * Probe, tests), plus the warmup and the timed noop run they share.
   *
   * - AQE on: runtime shuffle-partition coalescing + skew-join splitting —
   *   the local stand-in for what matters on a 1000-executor cluster.
@@ -28,7 +31,7 @@ object GraftSession {
       // 100 entries). The 269-query registry compiles ~8 codegen units
       // per query, so at the default size every unit is LRU-evicted
       // before its query runs again — each bench pass re-pays Janino
-      // compilation (~0.25 s/query, FloorProbe r14) that a long-lived
+      // compilation (~0.25 s/query, `Probe floor`, r14) that a long-lived
       // production driver pays once. Sized to hold the whole suite;
       // entries are compiled classes (JVM code, never data), so this
       // cannot cache results across runs.
@@ -40,11 +43,62 @@ object GraftSession {
       .config("spark.speculation.interval", "5s")
       .config("spark.ui.enabled", "false")
 
-  /** Local session for tests / ad-hoc mains. */
-  def local(cpus: Int = Runtime.getRuntime.availableProcessors.min(32)): SparkSession = {
+  /** Local session for tests and mains, `local[cpus]` with
+    * [[configure]]'s tuning. The default is `SPARK_GRAFT_CPUS`, or the
+    * machine's processors capped at 32 when it is unset. */
+  def local(cpus: Int = cpusFrom(sys.env.get("SPARK_GRAFT_CPUS"))): SparkSession = {
     val s = configure(SparkSession.builder().master(s"local[$cpus]"), cpus.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** `SPARK_GRAFT_CPUS` as a core count; a value that is not a positive
+    * integer fails by name rather than as a bad master URL. */
+  private[graft] def cpusFrom(env: Option[String]): Int = env match {
+    case None => Runtime.getRuntime.availableProcessors.min(32)
+    case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+  }
+
+  /** Untimed warmup: the flagship entry query plus a count per large
+    * fixture table absorbs one-time session costs (codegen bootstrap,
+    * JIT, parquet footer reads) that would otherwise land on whichever
+    * query runs first. A table missing from `sfDir` is skipped. */
+  def warmup(spark: SparkSession, sfDir: String): Unit = {
+    try SparkEntry.entry(spark).count() catch { case NonFatal(_) => }
+    Seq("lineitem", "orders", "events", "documents", "embeddings").foreach { t =>
+      try spark.read.parquet(s"$sfDir/$t.parquet").count()
+      catch { case NonFatal(_) => }
+    }
+  }
+
+  /** Wall seconds of `body`, with its result. */
+  def timed[A](body: => A): (Double, A) = {
+    val t0 = System.nanoTime()
+    val a = body
+    ((System.nanoTime() - t0) / 1e9, a)
+  }
+
+  /** Clears cached frames, then times building `df` and writing it to the
+    * noop sink. The noop sink materializes every output row and column; a
+    * bare count() lets Catalyst prune projections and sorts. Whatever the
+    * build or the write throws comes back with the seconds it took rather
+    * than propagating: Bench records every failure and goes on, the scale
+    * probe rethrows fatal ones, [[noopSeconds]] rethrows all. */
+  def timedNoop(spark: SparkSession)(df: => DataFrame): (Double, Option[Throwable]) = {
+    spark.catalog.clearCache()
+    timed {
+      try { df.write.format("noop").mode("overwrite").save(); None }
+      catch { case e: Throwable => Some(e) }
+    }
+  }
+
+  /** [[timedNoop]] for callers that stop on any failure. */
+  def noopSeconds(spark: SparkSession)(df: => DataFrame): Double =
+    timedNoop(spark)(df) match {
+      case (s, None) => s
+      case (_, Some(e)) => throw e
+    }
 }

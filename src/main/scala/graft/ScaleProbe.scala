@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+
+import scala.util.control.NonFatal
 
 /** Empirical scale probe: synthesize a documents+embeddings corpus N×
   * the sf0.1 fixtures (same vocabulary/shape, deterministic LCG text,
@@ -16,7 +18,7 @@ import org.apache.spark.sql.functions._
   * at probe scale — approximation quality must hold as the corpus grows
   * (bucket occupancy and cell geometry both shift with n), not just at
   * fixture scale where SimilaritySpec bounds it.
-  * Usage: tools/run.sh graft.ScaleProbe [nDocs] [nVecs] [outDir]
+  * Usage: tools/run.sh graft.Probe scale [nDocs] [nVecs] [outDir]
   *          [q1,q2,...] [nEvents] [relScale] [skewPct] */
 object ScaleProbe {
 
@@ -28,8 +30,8 @@ object ScaleProbe {
 
   /** Queries that read only documents/embeddings (the LLM-pipeline family).
     * ProbeCoverageSpec asserts every registered query appears in exactly
-    * one of these lists (or the two dual-input entries below) — a query
-    * missing here is SILENTLY dropped by the `only` filter. */
+    * one of these lists (or the dual-input entries below); [[selection]]
+    * rejects an `only` name that is in none of them. */
   private[graft] val DocQueries = Seq(
     "wordcount", "exact_dedup", "para_dedup", "para_dedup_stats",
     "substring_dedup", "pipeline_funnel",
@@ -142,7 +144,40 @@ object ScaleProbe {
     "dq_violations", "asof_join_native", "asof_join_native_fwd",
     "user_erasure_audit")
 
-  def main(args: Array[String]): Unit = {
+  /** Pseudo-queries: probe legs that `only` can name but that are not
+    * registered queries. */
+  private[graft] val PseudoQueries = Set("multi_touch_salt",
+    "decont_substrate_ab", "pipeline_composite", "live_ingest_stream",
+    "minhash_geometry")
+
+  /** The registered queries the probe runs for an `only` filter (empty =
+    * every enabled family). Fails, naming the name, on an `only` entry
+    * that is neither a listed query nor a pseudo-query, and, naming the
+    * parameter, on a listed query whose family this corpus does not
+    * synthesize (events need nEvents > 0, relational tables
+    * relScale > 0) — never drops a name silently. */
+  private[graft] def selection(only: Set[String], nEvents: Long,
+                               relScale: Int): Seq[String] = {
+    val families = Seq(
+      DocQueries -> Nil,
+      EventQueries -> Seq("nEvents" -> (nEvents > 0)),
+      RelQueries -> Seq("relScale" -> (relScale > 0)),
+      DualInputQueries -> Seq("nEvents" -> (nEvents > 0), "relScale" -> (relScale > 0)))
+    val unknown = only -- families.flatMap(_._1) -- PseudoQueries
+    require(unknown.isEmpty,
+      s"unknown probe queries: ${unknown.toSeq.sorted.mkString(",")}")
+    families.flatMap { case (qs, needs) =>
+      val missing = needs.collect { case (param, false) => param }
+      val asked = qs.filter(only)
+      require(missing.isEmpty || asked.isEmpty,
+        s"${asked.mkString(",")} need ${missing.map(_ + " > 0").mkString(" and ")}")
+      if (missing.nonEmpty) Nil else if (only.isEmpty) qs else asked
+    }
+  }
+
+  /** `graft.Probe scale`: synthesize the corpus, then time the selected
+    * queries and legs on `spark` (arguments as in the usage above). */
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     val nDocs = if (args.length > 0) args(0).toLong else 100000L
     val nVecs = if (args.length > 1) args(1).toLong else 40000L
     val dir = if (args.length > 2 && args(2).nonEmpty) args(2)
@@ -156,7 +191,7 @@ object ScaleProbe {
     // on top of its uniform share — the adversarial shape for every
     // query that shuffles or windows on user_id
     val skewPct = if (args.length > 6) args(6).toInt else 0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val selected = selection(only, nEvents, relScale)
     // SPARK_GRAFT_PROBE_REUSE=1: skip synthesis for tables already in
     // `dir` — lets a multi-batch sweep over one big corpus (100M events
     // takes minutes to write) generate once and probe many times. The
@@ -192,9 +227,6 @@ object ScaleProbe {
     if (!reuse) java.nio.file.Files.deleteIfExists(manifestPath)
     def have(table: String): Boolean =
       reuse && new java.io.File(s"$dir/$table.parquet/_SUCCESS").exists()
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
     // -- synthesize documents: LCG text over the fixture vocabulary;
@@ -316,20 +348,13 @@ object ScaleProbe {
     java.nio.file.Files.write(manifestPath,
       manifest.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     println(s"""{"corpus":"$dir","n_docs":$nDocs,"n_vecs":$nVecs,"n_events":$nEvents,"rel_scale":$relScale}""")
-    val all = DocQueries ++
-      (if (nEvents > 0) EventQueries else Nil) ++
-      (if (relScale > 0) RelQueries else Nil) ++
-      (if (nEvents > 0 && relScale > 0) DualInputQueries else Nil)
-    val run = if (only.isEmpty) all else all.filter(only)
-    run.foreach { name =>
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      val res = try {
-        SparkEntry.queries(name)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        "ok"
-      } catch { case e: Throwable => s"FAIL ${e.getClass.getSimpleName}" }
-      val dt = (System.nanoTime() - t0) / 1e9
+    def noopSec(df: => DataFrame): Double = GraftSession.noopSeconds(spark)(df)
+    selected.foreach { name =>
+      val (dt, res) = GraftSession.timedNoop(spark)(SparkEntry.queries(name)(spark, dir)) match {
+        case (s, None) => (s, "ok")
+        case (s, Some(NonFatal(e))) => (s, s"FAIL ${e.getClass.getSimpleName}")
+        case (_, Some(fatal)) => throw fatal
+      }
       // Locale.ROOT: the f-interpolator uses the default locale, which
       // would emit comma decimals (invalid JSON) on non-English JVMs
       println(String.format(java.util.Locale.ROOT,
@@ -339,7 +364,7 @@ object ScaleProbe {
     //    a perturbed copy of its predecessor, cosine ≈ 1): the LSH-blocked
     //    dedup must keep finding them as bucket geometry shifts with n.
     //    Join-based count — found pairs never collect to the driver.
-    if (run.contains("embedding_dedup_lsh")) {
+    if (selected.contains("embedding_dedup_lsh")) {
       val found = SparkEntry.queries("embedding_dedup_lsh")(spark, dir)
         .select("vec_a", "vec_b")
       val expected = spark.range(nVecs).filter(col("id") % 50 === 49)
@@ -359,15 +384,11 @@ object ScaleProbe {
     //    of points that separates |delta|-scaling from |corpus|-scaling.
     //    First run per mod builds the index untimed (production builds
     //    it once, amortized over every later shard).
-    if (run.contains("dedup_delta")) {
+    if (selected.contains("dedup_delta")) {
       Seq(10L, 100L).foreach { m =>
         queries.Dedup.dedupDelta(spark, dir, m)
           .write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        queries.Dedup.dedupDelta(spark, dir, m)
-          .write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
+        val dt = noopSec(queries.Dedup.dedupDelta(spark, dir, m))
         println(String.format(java.util.Locale.ROOT,
           """{"query":"dedup_delta_warm","delta_mod":%d,"sec":%.2f}""",
           Long.box(m), Double.box(dt)))
@@ -382,17 +403,15 @@ object ScaleProbe {
     // nVecs >= 2 guard: nQ = nVecs/2 is 0 on a degenerate config, and
     // annCosineIvfPqBatch's require(nQueries > 0) would kill the whole
     // probe run instead of skipping the bulk point (ADVICE r10).
-    if (run.contains("ann_cosine_ivfpq_batch") && nVecs >= 2) {
+    if (selected.contains("ann_cosine_ivfpq_batch") && nVecs >= 2) {
       val eqRes = SparkEntry.queries("ann_cosine_ivfpq_res")(spark, dir)
         .collect().map(_.toString).sorted.toSeq
       val eqBatch = SparkEntry.queries("ann_cosine_ivfpq_batch")(spark, dir)
         .collect().map(_.toString).sorted.toSeq
       val nQ = math.min(100000L, nVecs.toLong / 2)
       spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      val nRows = queries.Similarity
-        .annCosineIvfPqBatch(spark, dir, nQueries = nQ).count()
-      val dt = (System.nanoTime() - t0) / 1e9
+      val (dt, nRows) = GraftSession.timed(queries.Similarity
+        .annCosineIvfPqBatch(spark, dir, nQueries = nQ).count())
       println(String.format(java.util.Locale.ROOT,
         """{"query":"ann_batch_bulk","n_queries":%d,"rows":%d,"equal_to_res_path":%b,"sec":%.2f}""",
         Long.box(nQ), Long.box(nRows), Boolean.box(eqRes == eqBatch),
@@ -405,7 +424,7 @@ object ScaleProbe {
     //    audit pass is tableProfileApproxRaw — ONE scan, HLL only, no
     //    Expand. This block prices all three so the twin's bench line
     //    is never mistaken for the production cost.
-    if (run.contains("table_profile_approx") && relScale > 0) {
+    if (selected.contains("table_profile_approx") && relScale > 0) {
       Seq("exact" -> ((s: SparkSession, d: String) =>
             queries.Relational.tableProfile(s, d)),
           "approx_twin" -> ((s: SparkSession, d: String) =>
@@ -413,10 +432,7 @@ object ScaleProbe {
           "approx_raw" -> ((s: SparkSession, d: String) =>
             queries.Relational.tableProfileApproxRaw(s, d)))
         .foreach { case (label, fn) =>
-          spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          fn(spark, dir).write.format("noop").mode("overwrite").save()
-          val dt = (System.nanoTime() - t0) / 1e9
+          val dt = noopSec(fn(spark, dir))
           println(String.format(java.util.Locale.ROOT,
             """{"query":"table_profile_paths","path":"%s","sec":%.2f}""",
             label, Double.box(dt)))
@@ -428,7 +444,7 @@ object ScaleProbe {
     //    last-call instrumentation (prune rounds + driver-collected band
     //    size) so the MaxRounds-bound fallback to the boxed percentile
     //    is tracked, not rediscovered. relScale=1 replays sf0.1 exactly.
-    if (run.contains("revenue_trend_theilsen") && relScale > 0) {
+    if (selected.contains("revenue_trend_theilsen") && relScale > 0) {
       println(String.format(java.util.Locale.ROOT,
         """{"query":"theilsen_selection_state","rounds":%d,"collected":%d}""",
         Int.box(operators.Selection.lastRounds),
@@ -443,7 +459,7 @@ object ScaleProbe {
     // the pseudo-name "multi_touch_salt" in `only` runs JUST this grid —
     // the main loop's uncapped registered run is not survivable at the
     // event volumes the capped rows exist to measure
-    if ((run.contains("multi_touch_attribution") ||
+    if ((selected.contains("multi_touch_attribution") ||
          only.contains("multi_touch_salt")) && skewPct > 0) {
       // (salt, cap) grid: salts bound WHERE the hot user's pair work
       // lands; the clicks_cap bounds the intrinsic clicks×purchases
@@ -459,11 +475,7 @@ object ScaleProbe {
         })
         .getOrElse(Seq((1, 0), (8, 0), (8, 8)))
       grid.foreach { case (s, cap) =>
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        queries.Temporal.multiTouchAttribution(spark, dir, 7, s, cap)
-          .write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
+        val dt = noopSec(queries.Temporal.multiTouchAttribution(spark, dir, 7, s, cap))
         println(String.format(java.util.Locale.ROOT,
           """{"query":"multi_touch_salt","salt_bins":%d,"clicks_cap":%d,"skew_pct":%d,"sec":%.2f}""",
           Int.box(s), Int.box(cap), Int.box(skewPct), Double.box(dt)))
@@ -478,7 +490,7 @@ object ScaleProbe {
     //    call builds the write-once sink) vs per-consumer time on the
     //    warm sink. Run with only=knn_graph,knn_components,... at
     //    several nVecs for the cost-law fit.
-    if (run.contains("knn_graph")) {
+    if (selected.contains("knn_graph")) {
       val (bits, nV, sumSq, p99, mx) = queries.Similarity.knnBucketStats(spark, dir)
       val uniform =
         if (bits >= 63) 0.0
@@ -491,39 +503,17 @@ object ScaleProbe {
       // call writes the once-per-session edge sink); this re-run prices
       // the WARM path — the parquet rescan every later consumer pays —
       // so build-stage time = cold line − this line
-      spark.catalog.clearCache()
-      val tb = System.nanoTime()
-      SparkEntry.queries("knn_graph")(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      val warmSec = (System.nanoTime() - tb) / 1e9
+      val warmSec = noopSec(SparkEntry.queries("knn_graph")(spark, dir))
       println(String.format(java.util.Locale.ROOT,
         """{"query":"knn_edge_warm_rescan","n_vecs":%d,"sec":%.2f}""",
         Long.box(nV), Double.box(warmSec)))
       Seq("knn_mutual", "knn_components", "label_propagation")
-        .filter(run.contains).foreach { name =>
-          spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          SparkEntry.queries(name)(spark, dir)
-            .write.format("noop").mode("overwrite").save()
-          val dt = (System.nanoTime() - t0) / 1e9
+        .filter(selected.contains).foreach { name =>
+          val dt = noopSec(SparkEntry.queries(name)(spark, dir))
           println(String.format(java.util.Locale.ROOT,
             """{"query":"knn_edge_consumer","consumer":"%s","n_vecs":%d,"sec":%.2f}""",
             name, Long.box(nV), Double.box(dt)))
         }
-    }
-
-    // -- kNN edge-build stage split (r11 verdict #3: isolate the ~131 s
-    //    intercept): cumulative wall time for signatures / +pairs /
-    //    +top-k / +sink-write, so the fixed cost lands on a named stage
-    //    instead of a bracketed guess. Pseudo-query (only=knn_stage_split)
-    //    — not part of the default sweep.
-    if (only.contains("knn_stage_split")) {
-      queries.Similarity.knnEdgeStageTimings(spark, dir).foreach {
-        case (stage, sec) =>
-          println(String.format(java.util.Locale.ROOT,
-            """{"query":"knn_stage_split","stage":"%s","n_vecs":%d,"cumulative_sec":%.2f}""",
-            stage, Long.box(nVecs), Double.box(sec)))
-      }
     }
 
     // -- decont substrate cold/warm A/B (r12 verdict #1 observable): the
@@ -532,21 +522,13 @@ object ScaleProbe {
     //    side); the second call and the drift monitor read them back as
     //    bucketed scans. Pseudo-query (only=decont_substrate_ab).
     if (only.contains("decont_substrate_ab")) {
-      def timeIt(body: => Unit): Double = {
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-      }
-      val cold = timeIt(queries.Curation.semanticDecontaminationDelta(spark, dir)
-        .write.format("noop").mode("overwrite").save())
-      val warm = timeIt(queries.Curation.semanticDecontaminationDelta(spark, dir)
-        .write.format("noop").mode("overwrite").save())
-      val drift = timeIt(queries.Similarity.ingestDrift(spark, dir)
-        .write.format("noop").mode("overwrite").save())
+      val cold = noopSec(queries.Curation.semanticDecontaminationDelta(spark, dir))
+      val warm = noopSec(queries.Curation.semanticDecontaminationDelta(spark, dir))
+      val drift = noopSec(queries.Similarity.ingestDrift(spark, dir))
       // the LIVE gate on the now-warm substrate: isolates the replay's
       // own work (incoming build + tokenize + placement + ledger) from
       // the substrate freeze the cold leg pays
-      val replayWarm = timeIt(queries.Curation.decontGateReplay(spark, dir)
-        .write.format("noop").mode("overwrite").save())
+      val replayWarm = noopSec(queries.Curation.decontGateReplay(spark, dir))
       println(String.format(java.util.Locale.ROOT,
         """{"query":"decont_substrate_ab","n_docs":%d,"n_vecs":%d,"cold_sec":%.2f,"warm_sec":%.2f,"drift_warm_sec":%.2f,"gate_replay_warm_sec":%.2f}""",
         Long.box(nDocs), Long.box(nVecs), Double.box(cold), Double.box(warm),
@@ -561,12 +543,9 @@ object ScaleProbe {
     //    interplay) visible across rounds. Stages run the registered
     //    queries verbatim. Pseudo-query (only=pipeline_composite).
     if (only.contains("pipeline_composite")) {
-      def stage(label: String)(name: String): (String, Double) = {
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        label -> (System.nanoTime() - t0) / 1e9
-      }
+      def stage(label: String)(name: String): (String, Double) =
+        label -> GraftSession.timed(SparkEntry.queries(name)(spark, dir)
+          .write.format("noop").mode("overwrite").save())._1
       val stages = Seq(
         stage("gate_decont")("decont_gate_replay"),
         stage("monitor_drift")("ingest_drift_replay"),
@@ -632,10 +611,7 @@ object ScaleProbe {
         "dedup" -> scala.collection.mutable.ArrayBuffer.empty[Double],
         "drift" -> scala.collection.mutable.ArrayBuffer.empty[Double],
         "quality" -> scala.collection.mutable.ArrayBuffer.empty[Double])
-      def t(k: String)(body: => Unit): Unit = {
-        val t0 = System.nanoTime(); body
-        times(k) += (System.nanoTime() - t0) / 1e9
-      }
+      def t(k: String)(body: => Unit): Unit = times(k) += GraftSession.timed(body)._1
       var batchRows = 0L
       (0 until nb).foreach { i =>
         // a stream delivers MATERIALIZED rows — feed the kernels a
@@ -699,31 +675,11 @@ object ScaleProbe {
       val geoms = Seq("fixture" -> Some((4, 32)), "derived" -> Some(derived))
         .distinctBy(_._2)
       geoms.foreach { case (leg, g) =>
-        val t0 = System.nanoTime()
-        val st = queries.Dedup.minhashGeometryStats(spark, dir, g)
-        val sec = (System.nanoTime() - t0) / 1e9
+        val (sec, st) = GraftSession.timed(queries.Dedup.minhashGeometryStats(spark, dir, g))
         val body = st.map { case (k, v) => s""""$k":$v""" }.mkString(",")
         println(String.format(java.util.Locale.ROOT,
           """{"query":"minhash_geometry","leg":"%s",%s,"sec":%.2f}""",
           leg, body, Double.box(sec)))
-      }
-    }
-
-    // -- live-gate placement A/B (r12 verdict #3 observable): place an
-    //    incoming shard (docs ⋈ embeddings) in IVF cells via the shipped
-    //    codegen expression vs the replaced typed-map encoder path.
-    //    Pseudo-query (only=decont_gate_placement).
-    if (only.contains("decont_gate_placement")) {
-      val incoming = spark.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id"), col("text"))
-        .join(spark.read.parquet(s"$dir/embeddings.parquet"),
-          col("doc_id") === col("vec_id"))
-        .select(col("doc_id"), col("text"), col("embedding"))
-      queries.Curation.gatePlacementTimings(spark, dir, incoming).foreach {
-        case (leg, sec) =>
-          println(String.format(java.util.Locale.ROOT,
-            """{"query":"decont_gate_placement","leg":"%s","n_vecs":%d,"sec":%.2f}""",
-            leg, Long.box(nVecs), Double.box(sec)))
       }
     }
 
@@ -733,7 +689,7 @@ object ScaleProbe {
     //    encoding, across the cardinality range a map-side partial
     //    actually sees. Pure serializer measurement — deterministic
     //    Weyl-sequence ids spread over the full domain, no cluster work.
-    if (run.contains("events_user_bitmap_daily")) {
+    if (selected.contains("events_user_bitmap_daily")) {
       val agg = functions.BitmapDistinct(
         org.apache.spark.sql.graft.Bridge.expression(lit(0L)))
       Seq(100, 10000, 1000000, 1 << 24).foreach { card =>
@@ -758,13 +714,11 @@ object ScaleProbe {
     //    ~1/stride (the r10 verdict #4 escape hatch); removable-mass
     //    recall vs stride 1 stays ~1 on the injected whole-doc dups
     //    (alignments agree at offset 0). One scalar agg per point.
-    if (run.contains("substring_dedup")) {
+    if (selected.contains("substring_dedup")) {
       def massAt(stride: Int): (Double, Long) = {
         spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        val m = queries.Dedup.substringDedup(spark, dir, stride)
-          .agg(sum("removable_tokens")).head().getLong(0)
-        ((System.nanoTime() - t0) / 1e9, m)
+        GraftSession.timed(queries.Dedup.substringDedup(spark, dir, stride)
+          .agg(sum("removable_tokens")).head().getLong(0))
       }
       val (sec1, m1) = massAt(1)
       Seq(1 -> (sec1, m1), 4 -> massAt(4), 16 -> massAt(16)).foreach {
@@ -780,7 +734,7 @@ object ScaleProbe {
     //    must actually flag the closed-vocabulary regime the 600k probe
     //    drives the sketch into (this is the observable for the r9
     //    "recall cliff is silent" verdict item)
-    if (run.contains("containment_sketch_coverage")) {
+    if (selected.contains("containment_sketch_coverage")) {
       val r = SparkEntry.queries("containment_sketch_coverage")(spark, dir)
         .head()
       println(String.format(java.util.Locale.ROOT,
@@ -794,7 +748,7 @@ object ScaleProbe {
     //    is fully contained (ratio 1.0) — the bounded sketch path must
     //    keep finding these directed pairs as corpus density grows.
     //    Join-based count, nothing corpus-sized collects.
-    if (run.contains("containment_pairs_sketch")) {
+    if (selected.contains("containment_pairs_sketch")) {
       val found = SparkEntry.queries("containment_pairs_sketch")(spark, dir)
         .select("contained", "container")
       val expected = spark.range(nDocs).filter(col("id") % 100 === 99)
@@ -810,13 +764,13 @@ object ScaleProbe {
 
     // -- ANN recall at probe scale (50 result rows per query — model-
     //    sized collects, not data)
-    if (run.exists(Set("ann_cosine_lsh", "ann_cosine_ivf", "ann_cosine_ivf_mp"))) {
+    if (selected.exists(Set("ann_cosine_lsh", "ann_cosine_ivf", "ann_cosine_ivf_mp"))) {
       def top5(name: String): Set[(Long, Long)] =
         SparkEntry.queries(name)(spark, dir).select("qid", "vec_id")
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val bf = top5("ann_cosine_topk")
       Seq("ann_cosine_lsh", "ann_cosine_ivf", "ann_cosine_ivf_mp")
-        .filter(run.contains).foreach { name =>
+        .filter(selected.contains).foreach { name =>
         val recall = if (bf.isEmpty) 0.0
           else top5(name).intersect(bf).size.toDouble / bf.size
         println(String.format(java.util.Locale.ROOT,
@@ -824,6 +778,5 @@ object ScaleProbe {
           name, Double.box(recall), Long.box(nVecs)))
       }
     }
-    spark.stop()
   }
 }

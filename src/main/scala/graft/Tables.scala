@@ -10,7 +10,7 @@ object Tables {
   /** Memoized parquet SCHEMA per (sfDir, table) — metadata only, never
     * data. Every `spark.read.parquet(path)` call re-runs footer-based
     * schema inference (~0.1-0.2 s of the per-query floor at sf0.1,
-    * FloorProbe r14); corpus dirs are immutable for a session's
+    * `Probe floor`, r14); corpus dirs are immutable for a session's
     * lifetime (the contract every fixture, sink and ScaleProbe corpus
     * already satisfies — CLAUDE.md model-state memoization precedent),
     * so the schema is inferred once and passed explicitly thereafter.

@@ -20,8 +20,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * best = 0 there), then the same ascending multiply-accumulate per
   * centroid and strict `>` first-wins scan.
   *
-  * Why this exact shape (two designs measured and rejected,
-  * ScaleProbe `decont_gate_placement`):
+  * Why this exact shape (two designs measured and rejected, PERF.md r12
+  * verdict #3):
   * (1) one `array_dot(u, lit(centroid_c))` column per cell +
   * first-position-of-max — the projection collapse inlines the
   * normalization into every reference and the score array is referenced

@@ -656,27 +656,18 @@ object Curation {
     * an all-zero vector NaN-floods every score on both paths and lands
     * in cell 0), deleting the Dataset-encoder round trip that was the
     * only object-churn stage on the live hot path — the same class of
-    * win the r12 edge build paid 7× for. `decont_gate_replay`
-    * hash-gates this exact path against DuckDB; ScaleProbe's
-    * `decont_gate_placement` A/Bs it against the replaced map path. */
+    * win the r12 edge build paid 7× for (PERF.md r12 verdict #3 holds
+    * the A/B against the replaced map path). `decont_gate_replay`
+    * hash-gates this exact path against DuckDB. */
   def decontGateBatch(spark: SparkSession, sfDir: String,
                       incoming: DataFrame,
                       tau: Double = SemDecontTau): DataFrame = {
     require(tau > 0 && tau <= 1, s"tau must be in (0,1], got $tau")
     val evalSide = evalSideMaterialized(spark, sfDir)
       .select(col("cell"), col("eval_doc"), col("xe"), col("ne"))
-    decontLedger(gatePlacement(spark, sfDir, incoming), evalSide, tau)
-  }
-
-  /** The live gate's placement stage: (cell, train_doc, n_tokens, xt,
-    * nt) for an incoming (doc_id, text, embedding) frame. Shared by
-    * [[decontGateBatch]] and the ScaleProbe placement A/B so the probe
-    * times the exact production expression. */
-  private[graft] def gatePlacement(spark: SparkSession, sfDir: String,
-                                   incoming: DataFrame): DataFrame = {
     val dot = graft.functions.VectorFunctions.array_dot _
     val cents = Similarity.ivfCentroids(spark, sfDir)
-    incoming
+    val placed = incoming
       .select(col("doc_id").as("train_doc"),
         size(TextAnalysis.toks(col("text"))).cast("long").as("n_tokens"),
         col("embedding").cast("array<double>").as("xt"))
@@ -685,54 +676,7 @@ object Curation {
         Similarity.cellArgminCol(cents, col("xt"), col("nt")))
       .select(col("cell"), col("train_doc"), col("n_tokens"),
         col("xt"), col("nt"))
-  }
-
-  /** Probe-only A/B for the placement stage (the r12 verdict #3
-    * observable): wall seconds to place `incoming` in cells and noop-sink
-    * the shard frame via (a) the shipped whole-stage-codegen expression
-    * and (b) the pre-r13 typed-map encoder round trip it replaced. Both
-    * legs share the tokenize + norm stage, so the delta isolates the
-    * placement implementation. */
-  private[graft] def gatePlacementTimings(
-      spark: SparkSession, sfDir: String,
-      incoming: DataFrame): Seq[(String, Double)] = {
-    import spark.implicits._
-    // min-of-2 per leg (the Bench convention), first round untimed-ish:
-    // the first leg in a fresh JVM otherwise absorbs JIT + cold parquet
-    // footers and the A/B measures session warmup, not placement
-    def time(label: String)(df: => DataFrame): (String, Double) =
-      label -> (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        df.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }.min
-    val dot = graft.functions.VectorFunctions.array_dot _
-    val kernel = Similarity.IvfKernel
-    val bc = spark.sparkContext.broadcast(Similarity.ivfCentroids(spark, sfDir))
-    Seq(
-      // placement-free baseline: the shared tokenize + norm stage, so
-      // the two placement legs read as deltas over it
-      time("base_no_placement") {
-        incoming
-          .select(col("doc_id").as("train_doc"),
-            size(TextAnalysis.toks(col("text"))).cast("long").as("n_tokens"),
-            col("embedding").cast("array<double>").as("xt"))
-          .withColumn("nt", sqrt(dot(col("xt"), col("xt"))))
-      },
-      time("placement_expr")(gatePlacement(spark, sfDir, incoming)),
-      time("placement_map") {
-        incoming
-          .select(col("doc_id"),
-            size(TextAnalysis.toks(col("text"))).cast("long").as("n_tokens"),
-            col("embedding").cast("array<double>").as("v"))
-          .withColumn("nt", sqrt(dot(col("v"), col("v"))))
-          .as[(Long, Long, Seq[Double], Double)]
-          .map { case (id, ntok, v, n) =>
-            val arr = v.toArray
-            (kernel.nearestCell(bc.value, arr.map(_ / n)), id, ntok, arr, n)
-          }
-          .toDF("cell", "train_doc", "n_tokens", "xt", "nt")
-      })
+    decontLedger(placed, evalSide, tau)
   }
 
   /** Shared CTE chain through the per-doc `led` ledger — composed by

@@ -144,6 +144,13 @@ object Dedup {
 
   private val VerifyChunkPairs = 5_000_000L  // candidate pairs per verify slice
 
+  /** `graft.verify.broadcastMaxBytes` from the session conf (default
+    * 512 MB): the largest build side the verify and anti-join paths
+    * broadcast. */
+  private[queries] def broadcastMaxBytes(spark: SparkSession): Long =
+    spark.conf.getOption("graft.verify.broadcastMaxBytes")
+      .map(_.toLong).getOrElse(512L << 20)
+
   /** Exact verification over hashed shingle sets: join each candidate
     * pair to both hash arrays, count the intersection with a two-pointer
     * merge (arrays are sorted), filter on the RAW jaccard (the same
@@ -212,10 +219,7 @@ object Dedup {
     val st = hv.agg(count(lit(1)).as("n"),
       coalesce(sum(size(col("hs")).cast("long")), lit(0L)).as("tot")).head()
     val hvBytes = st.getLong(1) * 8L + st.getLong(0) * 32L
-    val maxBc = spark.conf.getOption("graft.verify.broadcastMaxBytes")
-      .orElse(sys.props.get("graft.verify.broadcastMaxBytes"))  // probe/CLI override
-      .map(_.toLong).getOrElse(512L << 20)
-    if (hvBytes <= maxBc) kernel(joined(cands, bc = true))
+    if (hvBytes <= broadcastMaxBytes(spark)) kernel(joined(cands, bc = true))
     else {
       val persisted = cands.persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

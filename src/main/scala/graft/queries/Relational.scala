@@ -1398,8 +1398,8 @@ object Relational {
     ("o_orderdate", "strftime(%s, '%%Y-%%m-%%d %%H:%%M:%%S')"),
     ("o_orderpriority", "CAST(%s AS VARCHAR)"))
 
-  /** r13 OPTIMIZATION (guide §1.2 step 2 — per-task work; probed in
-    * `ProfileProbe`): min/max buffers inside the multi-distinct Expand
+  /** r13 OPTIMIZATION (guide §1.2 step 2 — per-task work; probe table in
+    * OPTIMIZATION_r13.md §3): min/max buffers inside the multi-distinct Expand
     * aggregate force the whole aggregate onto the sort-based path
     * (5.4 s at sf0.1); with the Expand aggregate carrying ONLY counts +
     * exact distincts (all-primitive buffers → hash aggregation) and

@@ -630,8 +630,7 @@ object Similarity {
   }
 
   /** The edge build's pair stage — signatures, bucket self-join, scored
-    * (va, vb, score_u) rows, distinct — split out so the stage probe can
-    * price it separately from the top-k and sink stages.
+    * (va, vb, score_u) rows.
     *
     * Score INSIDE the bucket self-join, where the arrays are already
     * collocated by the (t, sig) shuffle, and project to 24-byte
@@ -683,71 +682,6 @@ object Similarity {
       .withColumnRenamed("qid", "vec_id")
       .select(col("vec_id"), col("rank"), col("neighbor"),
         (col("score_u").cast("double") / 1e6).as("cosine"))
-  }
-
-  /** Stage-split timings for the kNN edge build (the r11 "isolate the
-    * intercept" probe): cumulative wall seconds for (1) signature
-    * generation alone, (2) + bucket self-join + pair scoring,
-    * (3) + directed top-k, (4) + the parquet sink write the memoized
-    * edge frame pays once per session. Cumulative by construction —
-    * subtract adjacent rows for per-stage cost. Probe-only surface
-    * (ScaleProbe `knn_stage_split`); results never feed a registered
-    * query. */
-  private[graft] def knnEdgeStageTimings(spark: SparkSession, sfDir: String,
-                                         k: Int = KnnK): Seq[(String, Double)] = {
-    // A/B hook: SPARK_GRAFT_TOPK_HASHAGG=1 keeps the top-k agg in hash
-    // mode past the 128-group ObjectHashAggregate fallback (TopKScores
-    // buffers are O(k) longs, so ~n groups in the map is ~100 B each —
-    // the fallback exists for UNBOUNDED buffers like collect_list or
-    // the 8 MiB dense bitmaps, not this one). Probe-only experiment;
-    // set/restore like knnEdgesMaterialized so the raised threshold
-    // never leaks past the probe into a bitmap-agg consumer.
-    val fbKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-    val fbPrev = spark.conf.getOption(fbKey)
-    sys.env.get("SPARK_GRAFT_TOPK_HASHAGG").foreach { _ =>
-      spark.conf.set(fbKey, 4000000)
-    }
-    def time(label: String)(body: => Unit): (String, Double) = {
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      body
-      label -> (System.nanoTime() - t0) / 1e9
-    }
-    val all = vecs(spark, sfDir)
-    val nb = derivedSigBits(corpusVecCount(spark, sfDir))
-    val sink = java.nio.file.Files.createTempDirectory("graft_knn_stage")
-      .toString
-    try Seq(
-      time("signatures") {
-        signaturesFor(spark, all, NumTables, nb)
-          .write.format("noop").mode("overwrite").save()
-      },
-      time("pairs_scored") {
-        knnScoredPairs(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-      },
-      time("topk_edges") {
-        knnEdges(spark, sfDir, k)
-          .write.format("noop").mode("overwrite").save()
-      },
-      time("edges_sink_write") {
-        knnEdges(spark, sfDir, k)
-          .write.mode("overwrite").parquet(s"$sink/edges.parquet")
-      })
-    finally {
-      // this box has a documented disk-full failure mode — never leak
-      // a multi-GB probe sink past the probe's own lifetime
-      def rm(f: java.io.File): Unit = {
-        val cs = f.listFiles()
-        if (cs != null) cs.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(new java.io.File(sink))
-      if (sys.env.contains("SPARK_GRAFT_TOPK_HASHAGG")) fbPrev match {
-        case Some(v) => spark.conf.set(fbKey, v)
-        case None => spark.conf.unset(fbKey)
-      }
-    }
   }
 
   /** The kNN-edge CTE chain shared by [[knnGraphSql]] and

@@ -57,10 +57,7 @@ object TextAnalysis {
       Tables.documents(spark, sfDir)
         .agg(coalesce(sum("n_chars"), lit(0L))).head().getLong(0))
     val upperBytes = totChars / math.max(1, maxDf) * 32L  // 8B fp + row overhead
-    val maxBc = spark.conf.getOption("graft.verify.broadcastMaxBytes")
-      .orElse(sys.props.get("graft.verify.broadcastMaxBytes"))
-      .map(_.toLong).getOrElse(512L << 20)
-    upperBytes <= maxBc
+    upperBytes <= Dedup.broadcastMaxBytes(spark)
   }
 
 

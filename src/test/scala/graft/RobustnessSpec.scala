@@ -36,12 +36,6 @@ class RobustnessSpec extends AnyFunSuite {
     assert(ids == Set("7", "8"))
   }
 
-  test("FloorProbe extra conf: key=value pairs parse; a token without = fails by name") {
-    assert(FloorProbe.extraConf("a.b=1;;c=x=y") == Seq("a.b" -> "1", "c" -> "x=y"))
-    val e = intercept[IllegalArgumentException](FloorProbe.extraConf("a=1;oops"))
-    assert(e.getMessage.contains("'oops'"), e.getMessage)
-  }
-
   test("Hist.bounded: wide-range key fails the occupancy guard, bounded key passes") {
     // adversarial fixture: an unquantised key with more distinct values
     // than the cap — the shape a raw nanosecond/float column produces.

@@ -2,6 +2,8 @@
 # Run a graft main class against the spark jars without sbt overhead.
 # Usage: tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/verify_out
 #        SPARK_GRAFT_SF_DIR=... tools/run.sh graft.Bench
+#        tools/run.sh graft.Probe <time|floor|plans|audit|scale> <args...>
+# SPARK_GRAFT_CPUS sets local[N] for every main (default: nproc, max 32).
 set -e
 cd "$(dirname "$0")/.."
 ADD_OPENS=""
