@@ -22,12 +22,12 @@ import scala.util.control.NonFatal
   *    (DataFrame construction), plan (analyzed → executedPlan, pre-AQE)
   *    and three noop runs — exec1 includes first-run codegen/JIT, exec2
   *    and exec3 follow a clearCache (exec3 is the warm floor).
-  *  - `plans <outDir> [sfDir] [query...]`: `explain("formatted")` per
+  *  - `plans <outDir> <sfDir> [query...]`: `explain("formatted")` per
   *    query (every registered query when none is named) to
   *    `<outDir>/<query>.txt`; a query whose construction throws writes
   *    `<query>._ERROR` with the message instead, so a sweep cannot
   *    silently skip one.
-  *  - `audit [sfDir]`: plan-hygiene sweep over every registered query —
+  *  - `audit <sfDir>`: plan-hygiene sweep over every registered query —
   *    parquet scans per table, cached scans and exchanges in the physical
   *    plan; the quick way to spot a table scanned N times or a shuffle
   *    regression.
@@ -96,7 +96,7 @@ object Probe {
 
   private def plans(spark: SparkSession, args: Array[String]): Unit = {
     val outDir = args(0)
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
+    val sfDir = args(1)
     val names =
       if (args.length > 2) args.drop(2).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
@@ -116,7 +116,7 @@ object Probe {
   }
 
   private def audit(spark: SparkSession, args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
+    val sfDir = args(0)
     val tableRe = raw".*/(\w+)\.parquet.*".r
     println(f"${"query"}%-24s scans cache exch  per-table (file scans only)")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
