@@ -165,9 +165,10 @@ object VectorFunctions {
 }
 
 /** SparkSessionExtensions hook: registers `array_dot` for SQL use
-  * (`spark.sql("SELECT array_dot(a, b) ...")`) and the year-predicate
-  * pushdown rewrite (graft.plans.YearPredicateRewrite). Applied by
-  * GraftSession. */
+  * (`spark.sql("SELECT array_dot(a, b) ...")`), the year-predicate
+  * pushdown rewrite (graft.plans.YearPredicateRewrite), the as-of join
+  * strategy and the small-shuffle collapse AQE rule
+  * (graft.plans.SmallShuffleCollapse). Applied by GraftSession. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   /** Arity gate for the SQL builders: without it, `bitmap_distinct(a, b)`
     * would silently ignore the second argument (a silent-wrong-answer
@@ -211,5 +212,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         BitmapDistinct(exactArity("bitmap_distinct", 1, children).head)))
     ext.injectOptimizerRule(_ => graft.plans.YearPredicateRewrite)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    ext.injectQueryStagePrepRule(s => graft.plans.SmallShuffleCollapse(s))
   }
 }

@@ -677,7 +677,6 @@ object Relational {
                   topN: Int = RulesTopN,
                   maxBasket: Int = AffinityMaxBasket): DataFrame = {
     require(topN > 0, s"topN must be positive, got $topN")
-    import spark.implicits._
     // r14: the distinct-order count rides a broadcast 1-row aggregate
     // instead of a driver count() action on a cached frame — the cache
     // materialization + count round trip cost more than the reused
@@ -1210,7 +1209,6 @@ object Relational {
   // --------------------------------------------------------------------
 
   private val FuzzyMaxDist = 2
-  private val FuzzyBandWidth = FuzzyMaxDist + 1
 
   /** FUZZY SELF-JOIN (entity resolution): part pairs within a brand whose
     * names are ≤ [[FuzzyMaxDist]] edits apart — the near-duplicate
@@ -1220,7 +1218,7 @@ object Relational {
     * An unblocked fuzzy join is the n² scale-killer, so candidates are
     * BLOCKED twice, losslessly: (1) equality on the structured attribute
     * (p_brand — the classic blocking key); (2) name-length bands of width
-    * [[FuzzyBandWidth]]: lev(a,b) ≤ 2 forces |len(a)−len(b)| ≤ 2 < 3, so
+    * maxDist + 1: lev(a,b) ≤ 2 forces |len(a)−len(b)| ≤ 2 < 3, so
     * the bands floor(len/3) differ by at most 1 — the LEFT side explodes
     * to bands {b−1, b, b+1} and the right keeps its own band, so every
     * qualifying pair meets on the (brand, band) equi key EXACTLY once

@@ -59,7 +59,10 @@ object TextJobs {
         explode(array_distinct(split(lower(col("text")), "\\W+"))).as("word"))
       .filter(length(col("word")) > 2)
       .groupBy("word")
-      .agg(concat_ws(",", array_sort(collect_set(col("doc_id").cast("string"))))
+      // sort_array, not array_sort: the comparator-less array_sort runs
+      // its default comparator lambda interpreted per comparison;
+      // collect_set holds no NULLs, so both orders are identical
+      .agg(concat_ws(",", sort_array(collect_set(col("doc_id").cast("string"))))
         .as("doc_ids"),
         count(lit(1)).as("n_docs"))
       .orderBy("word")

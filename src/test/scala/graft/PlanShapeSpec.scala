@@ -268,6 +268,10 @@ class PlanShapeSpec extends AnyFunSuite {
     // The ONE sanctioned SinglePartition shape is the final step of a
     // global scalar aggregate (e.g. tfidf's corpus doc count): its input
     // is pre-aggregated, so the exchange moves one row per partition.
+    // This gate reads the plan before execution. At runtime
+    // graft.plans.SmallShuffleCollapse may run a post-shuffle sort or
+    // aggregate in one task, but only when AQE would read its input as
+    // one partition anyway (a bound in bytes); that is not a funnel.
     // Collect per-query failures and assert ONCE at the end: one query
     // that fails analysis must report as one failure, not disable the
     // funnel gate for the other 100+ queries (the r6 regression — the
