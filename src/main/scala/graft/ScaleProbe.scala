@@ -379,7 +379,7 @@ object ScaleProbe {
     }
 
     // -- incremental-dedup |delta| scaling: with the base index warm
-    //    (the materializeOnce sinks persist for the session), time the
+    //    (the Substrate sinks persist for the session), time the
     //    delta pass at 10% and 1% shards of the SAME corpus — the pair
     //    of points that separates |delta|-scaling from |corpus|-scaling.
     //    First run per mod builds the index untimed (production builds
@@ -599,13 +599,7 @@ object ScaleProbe {
       // prior for the next batch (never re-shingled from text)
       val stateBands = s"$dir/gate_state_bands"
       val stateHv = s"$dir/gate_state_hv"
-      def rmDir(p: String): Unit = {
-        def rm(f: java.io.File): Unit = {
-          val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-          f.delete(): Unit
-        }
-        rm(new java.io.File(p))
-      }
+      def rmDir(p: String): Unit = Substrate.deleteRecursively(new java.io.File(p))
       rmDir(stateBands); rmDir(stateHv)
       val times = Map("decont" -> scala.collection.mutable.ArrayBuffer.empty[Double],
         "dedup" -> scala.collection.mutable.ArrayBuffer.empty[Double],

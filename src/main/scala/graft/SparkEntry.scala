@@ -53,8 +53,8 @@ object SparkEntry {
       Dedup.embeddingCosineDups(s, d, a.getOrElse("threshold", "0.47").toDouble)),
     "quality_gate" -> ((s, d, a) =>
       TextAnalysis.qualityGate(s, d,
-        a.getOrElse("min_tokens", "20").toInt,
-        a.getOrElse("max_dup_frac", "0.05").toDouble)),
+        a.get("min_tokens").fold(TextAnalysis.QualityMinTokens)(_.toInt),
+        a.get("max_dup_frac").fold(TextAnalysis.QualityMaxDupFrac)(_.toDouble))),
     "sequence_pack" -> ((s, d, a) =>
       TextAnalysis.sequencePack(s, d, a.getOrElse("budget", "256").toInt,
         a.getOrElse("shards", "0").toInt)),

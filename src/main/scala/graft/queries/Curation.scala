@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Substrate, Tables}
 
 /** Corpus-curation operators: the deterministic ordering / budgeting steps
   * between "filtered corpus" and "training shards" in an LLM data pipeline.
@@ -263,7 +263,8 @@ object Curation {
     * at train time; a re-derivation that could drift per reader is the
     * bug, not the optimization). */
   private def splitAssigned(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.materializeOnceBucketed(spark, "graft_split_", sfDir, 32, "doc_id")(
+    Substrate.materialize(spark, "graft_split_", sfDir,
+      Substrate.Bucketed(32, "doc_id"))(
       Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("lang"), col("source"),
           md5(trim(regexp_replace(lower(col("text")), "\\W+", " "))).as("ch"),
@@ -284,7 +285,8 @@ object Curation {
     * 100 TB this is the difference between re-shuffling the eval corpus
     * every nightly shard and never touching it after freeze. */
   private def evalSideMaterialized(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.materializeOnceBucketed(spark, "graft_decont_eval_", sfDir, 32, "cell")(
+    Substrate.materialize(spark, "graft_decont_eval_", sfDir,
+      Substrate.Bucketed(32, "cell"))(
       Similarity.ivfAssigned(spark, sfDir)
         .join(Similarity.vecs(spark, sfDir), "vec_id")
         .join(splitAssigned(spark, sfDir)

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Substrate, Tables}
 
 /** Deduplication family over `documents` — the training-data-pipeline
   * operators a 100 TB corpus needs (exact, MinHash+LSH, SimHash, n-gram
@@ -89,7 +89,7 @@ object Dedup {
     * whole corpus, because the session `.cache()` is dropped between
     * bench entries. The (doc_id, hs) frame is a pure function of the
     * corpus, so it is substrate exactly like the kNN edge sink and the
-    * co-purchase edge sink ([[materializeOnce]] precedent): first
+    * co-purchase edge sink ([[Substrate.materialize]] precedent): first
     * consumer pays the kernel once, every later consumer gets a plain
     * FileSourceScan of narrow (id, sorted-long-array) rows. Under
     * `SPARK_GRAFT_SUBSTRATE_DIR` it persists cross-session like the
@@ -98,7 +98,7 @@ object Dedup {
     * so every consumer's oracle hash is unchanged. */
   private def corpusShingleHashes(spark: SparkSession,
                                   sfDir: String): DataFrame =
-    materializeOnce(spark, "graft_shinglehash_", sfDir)(
+    Substrate.materialize(spark, "graft_shinglehash_", sfDir)(
       docShingleHashesRaw(spark, docShingles(spark, sfDir)))
 
   /** The shingle-hash kernel over a caller-supplied shingled frame —
@@ -531,12 +531,12 @@ object Dedup {
   def pipelineFunnel(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(spark, sfDir)
-    // keep = the qualityGateFrame default thresholds, inlined on the
-    // shared repetition substrate (same rule the oracle twin states)
+    // keep = the qualityGateFrame default rule, on the shared
+    // repetition substrate
     val perDoc = TextAnalysis.repetitionBaseFrame(docs)
       .select(col("doc_id"), col("text"), col("t"),
         col("n_tokens").cast("long").as("n_toks"),
-        (col("n_tokens") >= 20 && col("dup_bigram_frac") <= 0.05).as("keep"))
+        TextAnalysis.qualityKeep().as("keep"))
       .withColumn("ch",
         md5(trim(regexp_replace(lower(col("text")), "\\W+", " "))))
       .withColumn("keep_id", min(when(col("keep"), col("doc_id")))
@@ -578,10 +578,10 @@ object Dedup {
       .orderBy("stage_id")
   }
 
-  /** DuckDB twin — the gate keep condition restated from the
-    * qualityGate thresholds (n_tokens ≥ 20 AND dup_bigram_frac ≤ 0.05
-    * over [[TextAnalysis]]'s shared repetition CTE), then the same
-    * hash/window chain. */
+  /** DuckDB twin — the gate keep condition at the
+    * [[TextAnalysis.QualityMinTokens]] / [[TextAnalysis.QualityMaxDupFrac]]
+    * thresholds over [[TextAnalysis]]'s shared repetition CTE, then the
+    * same hash/window chain. */
   val pipelineFunnelSql: String =
     s"""WITH ${TextAnalysis.repetitionBaseSqlCte},
        |d AS (SELECT doc_id, text,
@@ -590,7 +590,7 @@ object Dedup {
        |      FROM documents),
        |b AS (SELECT doc_id, text, t, CAST(len(t) AS BIGINT) AS n_toks FROM d),
        |kept AS (SELECT b.* FROM b JOIN rb USING (doc_id)
-       |         WHERE rb.n_tokens >= 20 AND rb.dup_bigram_frac <= 0.05),
+       |         WHERE rb.n_tokens >= ${TextAnalysis.QualityMinTokens} AND rb.dup_bigram_frac <= ${TextAnalysis.QualityMaxDupFrac}),
        |h AS (SELECT doc_id, t, n_toks,
        |             md5(trim(regexp_replace(lower(text), '\\W+', ' ', 'g'))) AS ch
        |      FROM kept),
@@ -1482,8 +1482,8 @@ object Dedup {
       if (smallBatch) broadcast(df) else df
     val corpusHv = corpusShingleHashes(spark, sfDir)
     val baseFilter = col("doc_id") % deltaMod =!= deltaMod - 1
-    val baseIndex = materializeOncePartitioned(spark,
-      s"graft_dgate${deltaMod}_", sfDir, "pb")(
+    val baseIndex = Substrate.materialize(spark,
+      s"graft_dgate${deltaMod}_", sfDir, Substrate.Partitioned("pb"))(
       minhashBandRows(spark, corpusHv.filter(baseFilter), rG, bG)
         .select(col("doc_id").as("other_doc"), col("band"), col("bv"),
           col("n").as("n_o"), pmod(col("bv"), lit(GatePartitions)).as("pb")))
@@ -1977,9 +1977,7 @@ object Dedup {
     val reliable = spark.conf.getOption("graft.cc.reliableCheckpoint")
       .exists(_.toBoolean)
     if (reliable && spark.sparkContext.getCheckpointDir.isEmpty)
-      spark.sparkContext.setCheckpointDir(
-        new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_ckpt_${spark.sparkContext.applicationId}").getAbsolutePath)
+      spark.sparkContext.setCheckpointDir(Substrate.sessionDir(spark, "graft_ckpt_"))
     def persistStep(df: DataFrame): DataFrame =
       if (reliable) df.checkpoint() else df.localCheckpoint()
     val sym = pairs.union(pairs.select(col("doc_b"), col("doc_a")))
@@ -2110,341 +2108,20 @@ object Dedup {
   // Materialized cluster intermediate (write-once pipeline composition)
   // --------------------------------------------------------------------
 
-  /** Paths whose cluster parquet has been (or is being) written this
-    * JVM. Values are futures so at-most-once-per-path holds under
-    * concurrent query construction (R4's concurrent-jobs parity) while
-    * the multi-minute simhash+CC job runs OUTSIDE any CHM bin lock —
-    * `putIfAbsent` only publishes the future; losers await it. */
-  private val clusterSinks =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, java.util.concurrent.CompletableFuture[String]]()
-
-  /** One JVM-wide shutdown hook deletes every materialized sink —
-    * without it each (sfDir, applicationId) pair leaks a parquet dir in
-    * java.io.tmpdir across sessions. */
-  private val cleanupDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private lazy val cleanupHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      cleanupDirs.forEach { d =>
-        def rm(f: java.io.File): Unit = {
-          val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-          f.delete(): Unit
-        }
-        rm(new java.io.File(d))
-      }))
-
-  // --------------------------------------------------------------------
-  // Cross-session persistent sinks (opt-in)
-  // --------------------------------------------------------------------
-
-  /** Root for CROSS-SESSION persistent substrate sinks. Unset (the
-    * default): every [[materializeOnce]]-family sink is a session temp
-    * dir, deleted at JVM exit — each cold session re-pays every freeze
-    * (IVF train + assignment, kNN edge build, cluster labels). Set
-    * (`SPARK_GRAFT_SUBSTRATE_DIR` env, or the system property for
-    * in-JVM tests): sinks land at `$root/<prefix><content-key>` where
-    * [[corpusContentKey]] digests the corpus FILES and the engine CODE
-    * — staleness is structurally impossible because a changed corpus or
-    * a rebuilt engine changes the key and lands in a fresh dir (stale
-    * dirs become unreferenced garbage; operators reap them like any
-    * warehouse retention policy). This is the production write-once
-    * form the substrate scaladocs prescribe: the freeze is paid once
-    * per (corpus, engine build), not once per session. */
-  private def substrateRoot: Option[String] =
-    sys.props.get("graft.substrate.dir")
-      .orElse(sys.env.get("SPARK_GRAFT_SUBSTRATE_DIR")).filter(_.nonEmpty)
-
-  /** Engine-code fingerprint folded into every sink key: size+mtime of
-    * the class files whose kernels define substrate contents, so a
-    * recompiled engine never reads a previous build's sinks. Covers the
-    * substrate-defining modules — a deliberate over-approximation of
-    * "did the bytes change" is impossible cheaply, so the rule is: any
-    * rebuild of these classes invalidates (touching them is exactly
-    * editing the kernels). */
-  private lazy val codeTag: String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    Seq("graft/queries/Dedup.class", "graft/queries/Similarity.class",
-      "graft/queries/Curation.class", "graft/queries/TextAnalysis.class")
-      .foreach { c =>
-        val url = getClass.getClassLoader.getResource(c)
-        if (url != null) {
-          val conn = url.openConnection()
-          md.update(s"$c:${conn.getContentLengthLong}:${conn.getLastModified}"
-            .getBytes("UTF-8"))
-        }
-      }
-    md.digest().take(6).map("%02x".format(_)).mkString
-  }
-
-  /** Content key of a corpus dir: md5 over the sfDir string, every
-    * TABLE file's (relative path, size, mtime), and [[codeTag]].
-    * Only `*.parquet` entries participate — the substrate is a function
-    * of table contents, and corpus dirs carry non-table files that
-    * change per run (ScaleProbe's reuse MANIFEST) which must not
-    * invalidate the key. Memoized per sfDir (corpus dirs are
-    * session-immutable, the repo-wide contract). */
-  private val corpusKeyMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def corpusContentKey(sfDir: String): String =
-    corpusKeyMemo.computeIfAbsent(sfDir, { _ =>
-      val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-      def walk(f: java.io.File, rel: String): Unit =
-        if (f.isDirectory) {
-          val kids = f.listFiles()
-          if (kids != null) kids.sortBy(_.getName)
-            .foreach(c => walk(c, rel + "/" + c.getName))
-        } else entries += s"$rel:${f.length}:${f.lastModified}"
-      val top = new java.io.File(sfDir).listFiles()
-      if (top != null) top.filter(_.getName.endsWith(".parquet"))
-        .sortBy(_.getName).foreach(t => walk(t, t.getName))
-      val md = java.security.MessageDigest.getInstance("MD5")
-      md.update((sfDir + "\n" + codeTag + "\n" + entries.mkString("\n"))
-        .getBytes("UTF-8"))
-      md.digest().take(8).map("%02x".format(_)).mkString
-    })
-
-  /** Resolve a sink location: (path, persistent?). Persistent sinks are
-    * NOT registered for exit cleanup. */
-  private def sinkOut(spark: SparkSession, prefix: String,
-                      sfDir: String): (String, Boolean) =
-    substrateRoot match {
-      case Some(r) =>
-        (new java.io.File(r, prefix + corpusContentKey(sfDir)).getAbsolutePath,
-          true)
-      case None => (TextJobs.tmpOut(spark, prefix, sfDir), false)
-    }
-
-  /** Build a persistent sink: run `write` into a `.build.<appId>`
-    * sibling, then ATOMIC-RENAME into place. A dir that exists IS
-    * complete (renames are atomic on one filesystem); losing a
-    * cross-session race is benign — the loser deletes its temp and
-    * reads the winner's dir. */
-  private def buildAtomically(spark: SparkSession, out: String)
-                             (write: String => Unit): Unit = {
-    val outPath = java.nio.file.Paths.get(out)
-    if (java.nio.file.Files.exists(outPath)) return
-    java.nio.file.Files.createDirectories(outPath.getParent)
-    val app = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9._-]", "_")
-    val tmp = out + ".build." + app
-    def rm(f: java.io.File): Unit = {
-      val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-      f.delete(): Unit
-    }
-    rm(new java.io.File(tmp))
-    write(tmp)
-    try java.nio.file.Files.move(java.nio.file.Paths.get(tmp), outPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException |
-           _: java.nio.file.DirectoryNotEmptyException |
-           _: java.nio.file.AccessDeniedException =>
-        rm(new java.io.File(tmp))  // another session won; theirs is complete
-    }
-  }
-
-  /** Schema sidecar EVERY write-once sink carries, session-local or
-    * persistent: sink reads take their schema from it, so no read starts
-    * a parquet footer-inference job, and an EMPTY sink (degenerate
-    * corpora) round-trips. Files starting with `_` are invisible to
-    * Spark's parquet listing. */
-  private def writeSchemaSidecar(dir: String,
-      schema: org.apache.spark.sql.types.StructType): Unit = {
-    val p = java.nio.file.Paths.get(dir, "_GRAFT_SCHEMA.json")
-    java.nio.file.Files.createDirectories(p.getParent)
-    java.nio.file.Files.write(p, schema.json.getBytes("UTF-8")): Unit
-  }
-  private def readSchemaSidecar(
-      dir: String): org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.DataType.fromJson(new String(
-      java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(dir, "_GRAFT_SCHEMA.json")), "UTF-8"))
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-
-  /** The write-once protocol behind every [[materializeOnce]]-family
-    * sink: runs `write` for `out` exactly once per JVM (putIfAbsent
-    * publishes a future; losers await it; a failed writer un-publishes
-    * so a later call can retry). A waiter whose writer failed with a
-    * NonFatal cause retries the race for the slot itself instead of
-    * failing permanently on someone else's hiccup; a fatal cause is
-    * rethrown, never retried. */
-  private def writeOnce(out: String)(write: => Unit): Unit = {
-    var done = false
-    while (!done) {
-      val fresh = new java.util.concurrent.CompletableFuture[String]()
-      val prior = clusterSinks.putIfAbsent(out, fresh)
-      if (prior == null) {
-        try { write; fresh.complete(out): Unit; done = true }
-        catch {
-          case t: Throwable =>
-            // wake any waiters with the failure instead of deadlocking them
-            clusterSinks.remove(out, fresh)
-            fresh.completeExceptionally(t)
-            throw t
-        }
-      } else {
-        try { prior.join(); done = true }
-        catch {
-          case e: java.util.concurrent.CompletionException =>
-            if (!scala.util.control.NonFatal(e.getCause)) throw e.getCause
-        }
-      }
-    }
-  }
-
-  /** Cross-session persistence for small DRIVER-SIDE model constants
-    * (the IVF centroid matrix; the PQ codebook and BPE merge list fit
-    * the same hook): in persistent mode the computed bytes land once at
-    * `$root/<prefix><content-key>` — content-keyed like every sink, so
-    * staleness is impossible — and later sessions read them back
-    * instead of re-training. Session mode just computes. Callers encode
-    * doubles as RAW BITS so the round trip is bit-exact (a formatted
-    * double would thread a parse through every hash gate). */
-  private[queries] def persistedModel(spark: SparkSession, prefix: String,
-      sfDir: String)(compute: => Array[Byte]): Array[Byte] =
-    substrateRoot match {
-      case None => compute
-      case Some(_) =>
-        val (out, _) = sinkOut(spark, prefix, sfDir)
-        val p = java.nio.file.Paths.get(out)
-        if (java.nio.file.Files.exists(p)) java.nio.file.Files.readAllBytes(p)
-        else {
-          val bytes = compute
-          java.nio.file.Files.createDirectories(p.getParent)
-          val app = spark.sparkContext.applicationId
-            .replaceAll("[^A-Za-z0-9._-]", "_")
-          val tmp = java.nio.file.Paths.get(out + ".build." + app)
-          java.nio.file.Files.write(tmp, bytes)
-          try java.nio.file.Files.move(tmp, p,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          catch {
-            case _: java.nio.file.FileAlreadyExistsException =>
-              java.nio.file.Files.deleteIfExists(tmp): Unit
-          }
-          bytes
-        }
-    }
-
   /** Write-once materialization of [[dedupClusters]] — pipeline
     * COMPOSITION, the thing the reference's every-job-recomputes model
     * can't do: [[dedupCanonical]] and [[dedupStats]] both need the
     * cluster labels, and at 100 TB re-running simhash + connected
     * components per consumer IS the dominant cost (2.2 s each of the
     * r3 bench; hours each at scale). The first consumer in a session
-    * writes the labels to a session-keyed parquet sink
-    * ([[TextJobs.tmpOut]]: injective in sfDir, keyed by applicationId
-    * so concurrent sessions never race); every later consumer gets a
-    * plain FileSourceScan of the tiny label table (dup-mass rows, 4
-    * columns) instead of a CC pipeline. Assumes a corpus dir is
-    * immutable for the session's lifetime — the same contract every
-    * fixture and production partition layout already satisfies. The
-    * standalone `dedup_clusters` query keeps computing live, anchoring
-    * the oracle (and therefore this parquet's contents) every round. */
+    * writes the labels to a [[graft.Substrate]] sink; every later
+    * consumer gets a plain FileSourceScan of the tiny label table
+    * (dup-mass rows, 4 columns) instead of a CC pipeline. The standalone
+    * `dedup_clusters` query keeps computing live, anchoring the oracle
+    * (and therefore this parquet's contents) every round. */
   def dedupClustersMaterialized(spark: SparkSession, sfDir: String): DataFrame =
-    materializeOnce(spark, "graft_clusters_", sfDir)(
+    Substrate.materialize(spark, "graft_clusters_", sfDir)(
       dedupClusters(spark, sfDir))
-
-  /** The write-once sink engine behind [[dedupClustersMaterialized]] and
-    * [[dedupDelta]]'s base index: builds `df` and writes it, with its
-    * schema sidecar, to the sink for (`prefix`, `sfDir`) exactly once
-    * per JVM ([[writeOnce]]), registers a session-local dir with the
-    * shutdown-hook cleaner, and returns a plain parquet scan whose
-    * schema comes from the sidecar. */
-  private[queries] def materializeOnce(spark: SparkSession, prefix: String,
-                                       sfDir: String)(df: => DataFrame): DataFrame = {
-    val (out, persistent) = sinkOut(spark, prefix, sfDir)
-    writeOnce(out) {
-      def writeTo(dst: String): Unit = {
-        val frame = df
-        frame.write.mode("overwrite").parquet(dst)
-        writeSchemaSidecar(dst, frame.schema)
-      }
-      if (persistent) buildAtomically(spark, out)(writeTo)
-      else { cleanupHook; cleanupDirs.add(out); writeTo(out) }
-    }
-    spark.read.schema(readSchemaSidecar(out)).parquet(out)
-  }
-
-  /** [[materializeOnce]] with a BUCKETED sink: the frame is written as a
-    * bucketed parquet table (in-memory-catalog entry over the same
-    * session-keyed path), so every consumer's scan reports
-    * `HashPartitioning(key, nBuckets)` and an equi-join on `key` plans
-    * NO exchange above this side — only the other side shuffles, to the
-    * bucket count. This is the production "persist it cell-partitioned
-    * and this join is exchange-free" shape the decontamination gate's
-    * scaladoc prescribes: the static side of a stream-static join must
-    * not re-shuffle per micro-batch, and the substrate of the
-    * full/delta/live gates must not re-shuffle per consumer. Bucket
-    * count 32 == spark.sql.shuffle.partitions at test scale; a cluster
-    * deployment sizes it like any bucketed fact table (buckets ≈
-    * corpus_bytes / target_task_bytes). CurationSpec pins the
-    * no-exchange plan shape. A session whose catalog lacks the table
-    * (fresh catalog over a survivor path) re-registers the DDL over the
-    * existing files. */
-  private[queries] def materializeOnceBucketed(
-      spark: SparkSession, prefix: String, sfDir: String,
-      nBuckets: Int, key: String)(df: => DataFrame): DataFrame = {
-    val (out, persistent) = sinkOut(spark, prefix, sfDir)
-    val tbl = "graft_b_" + java.security.MessageDigest.getInstance("MD5")
-      .digest(out.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    writeOnce(out) {
-      if (persistent) buildAtomically(spark, out) { tmp =>
-        // bucketed layout needs the catalog writer: write through a
-        // throwaway EXTERNAL table at the build path (drop leaves
-        // the files), rename, then the re-register branch below
-        // recreates the DDL over the final location
-        val tmpTbl = tbl + "_bld"
-        spark.sql(s"DROP TABLE IF EXISTS $tmpTbl")
-        val frame = df
-        frame.write.format("parquet").mode("overwrite")
-          .bucketBy(nBuckets, key).sortBy(key)
-          .option("path", tmp).saveAsTable(tmpTbl)
-        writeSchemaSidecar(tmp, frame.schema)
-        spark.sql(s"DROP TABLE IF EXISTS $tmpTbl")
-      } else {
-        cleanupHook; cleanupDirs.add(out)
-        spark.sql(s"DROP TABLE IF EXISTS $tbl")
-        val frame = df
-        frame.write.format("parquet").mode("overwrite")
-          .bucketBy(nBuckets, key).sortBy(key)
-          .option("path", out).saveAsTable(tbl)
-        writeSchemaSidecar(out, frame.schema)
-      }
-    }
-    if (!spark.catalog.tableExists(tbl)) {
-      val ddl = readSchemaSidecar(out).toDDL
-      spark.sql(s"CREATE TABLE $tbl ($ddl) USING PARQUET " +
-        s"CLUSTERED BY ($key) SORTED BY ($key) INTO $nBuckets BUCKETS " +
-        s"LOCATION '$out'")
-    }
-    spark.table(tbl)
-  }
-
-  /** [[materializeOnce]] with a PARTITIONED sink (one dir per value of
-    * `partCol`): a consumer probing a bounded set of partition values
-    * (the live dedup gate's per-batch band-bucket probe) reads ONLY the
-    * touched dirs — scan cost ∝ touched partitions, not corpus
-    * (PartitionFilters in the scan node; BucketingSpec pins it). The
-    * frame is repartitioned by `partCol` before the write so each dir
-    * holds O(1) files rather than one per task; the read re-applies the
-    * written schema explicitly so an EMPTY frame (degenerate corpora)
-    * round-trips instead of failing parquet schema inference. */
-  private[queries] def materializeOncePartitioned(
-      spark: SparkSession, prefix: String, sfDir: String,
-      partCol: String)(df: => DataFrame): DataFrame = {
-    val (out, persistent) = sinkOut(spark, prefix, sfDir)
-    writeOnce(out) {
-      def writeTo(dst: String): Unit = {
-        val frame = df
-        frame.repartition(col(partCol)).write.mode("overwrite")
-          .partitionBy(partCol).parquet(dst)
-        writeSchemaSidecar(dst, frame.schema)
-      }
-      if (persistent) buildAtomically(spark, out)(writeTo)
-      else { cleanupHook; cleanupDirs.add(out); writeTo(out) }
-    }
-    spark.read.schema(readSchemaSidecar(out)).parquet(out)
-  }
 
   // --------------------------------------------------------------------
   // Incremental dedup: label a delta shard against the standing index
@@ -2462,7 +2139,7 @@ object Dedup {
     * `doc_id % DeltaMod == DeltaRes` (10%) are the delta; the rest is
     * the base. The base's standing artifacts — its simhash signatures
     * and its cluster labels — are built write-once per session
-    * ([[materializeOnce]], the [[dedupClustersMaterialized]] engine);
+    * ([[Substrate.materialize]], the [[dedupClustersMaterialized]] engine);
     * in production they are maintained incrementally too.
     *
     * The delta pass: (1) signature kernel over delta docs only;
@@ -2500,9 +2177,9 @@ object Dedup {
     val docs = Tables.documents(spark, sfDir)
     val baseDocs = docs.filter(col("doc_id") % deltaMod =!= deltaRes)
     val deltaDocs = docs.filter(col("doc_id") % deltaMod === deltaRes)
-    val baseSigs = materializeOnce(spark, s"graft_base_sigs_m${deltaMod}_", sfDir)(
+    val baseSigs = Substrate.materialize(spark, s"graft_base_sigs_m${deltaMod}_", sfDir)(
       simhashSigsOf(spark, baseDocs))
-    val baseLabels = materializeOnce(spark, s"graft_base_labels_m${deltaMod}_", sfDir)(
+    val baseLabels = Substrate.materialize(spark, s"graft_base_labels_m${deltaMod}_", sfDir)(
       ccLabelsOf(spark,
         bandedHammingPairs(baseSigs, baseSigs,
           col("x.doc_id") < col("y.doc_id")).select("doc_a", "doc_b")))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Substrate, Tables}
 
 /** Relational core over the star-schema fixtures.
   *
@@ -803,7 +803,7 @@ object Relational {
 
   private def coPurchaseWeightedEdgesMaterialized(
       spark: SparkSession, sfDir: String, maxBasket: Int): DataFrame =
-    Dedup.materializeOnce(spark, s"graft_copurchw${maxBasket}_", sfDir)(
+    Substrate.materialize(spark, s"graft_copurchw${maxBasket}_", sfDir)(
       coPurchaseWeightedEdges(spark, sfDir, maxBasket))
 
   /** Unweighted projection of the shared weighted sink (the pair set is
@@ -1235,14 +1235,14 @@ object Relational {
 
   /** [[fuzzyJoinParts]] without the presentation sort — the reusable
     * fuzzy-match edge frame, MATERIALIZED ONCE per (sfDir, maxDist)
-    * via the [[Dedup.materializeOnce]] sink (the knn-edge precedent:
+    * via the [[Substrate.materialize]] sink (the knn-edge precedent:
     * the blocked DP join is the expensive stage and two queries —
     * fuzzy_join_parts and entity_resolution — consume the identical
     * frame; edges are pair-density-sized, far smaller than `part`). */
   private def fuzzyPairs(spark: SparkSession, sfDir: String,
                          maxDist: Int): DataFrame = {
     require(maxDist >= 0, s"maxDist must be >= 0, got $maxDist")
-    Dedup.materializeOnce(spark, s"graft_fuzzy${maxDist}_", sfDir) {
+    Substrate.materialize(spark, s"graft_fuzzy${maxDist}_", sfDir) {
       val bandW = maxDist + 1
       val p = Tables.part(spark, sfDir)
         .select(col("p_partkey"), col("p_brand"), col("p_name"),

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Substrate, Tables}
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (`embedding: array<float>`, 64-dim).
@@ -593,7 +593,7 @@ object Similarity {
   }
 
   /** [[knnEdges]] behind the write-once session sink
-    * ([[Dedup.materializeOnce]], the dedupClustersMaterialized engine):
+    * ([[Substrate.materialize]], the dedupClustersMaterialized engine):
     * the edge build is the expensive stage of the family (probe: ~100 s
     * at 100k vecs) and THREE queries consume the identical frame
     * (knn_graph, label_propagation, knn_coherence) — without the sink
@@ -620,7 +620,7 @@ object Similarity {
     val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, 4000000)
-    try Dedup.materializeOnce(spark, s"graft_knn${k}_", sfDir)(
+    try Substrate.materialize(spark, s"graft_knn${k}_", sfDir)(
       knnEdges(spark, sfDir, k))
     finally prev match {
       case Some(v) => spark.conf.set(key, v)
@@ -1736,7 +1736,7 @@ object Similarity {
     * persisted the three sinks). */
   private[queries] def ivfCentroids(spark: SparkSession, sfDir: String): Array[Array[Double]] =
     ivfCentMemo.computeIfAbsent(sfDir, _ => {
-      val bytes = Dedup.persistedModel(spark, "graft_ivfcent_", sfDir) {
+      val bytes = Substrate.persistedModel(spark, "graft_ivfcent_", sfDir) {
         val m = trainIvfCentroids(spark, sfDir)
         val bb = java.nio.ByteBuffer.allocate(8 + m.map(8 + _.length * 8).sum)
         bb.putInt(m.length): Unit
@@ -1822,7 +1822,8 @@ object Similarity {
     * eval-side substrate build in Curation joins it to vecs + the split
     * table). Cold/warm A/B in PERF.md (`decont_substrate_ab`). */
   private[queries] def ivfAssigned(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.materializeOnceBucketed(spark, "graft_ivfasg_", sfDir, 32, "vec_id")(
+    Substrate.materialize(spark, "graft_ivfasg_", sfDir,
+      Substrate.Bucketed(32, "vec_id"))(
       ivfAssignedLive(spark, sfDir))
 
   /** Expression-level nearest-cell argmin over the trained centroids —
@@ -1851,13 +1852,22 @@ object Similarity {
                                      nProbe: Int): DataFrame = {
     require(nProbe > 0 && nProbe <= IvfMinCells,
       s"nProbe must be in 1..$IvfMinCells, got $nProbe")
+    // each query probes its nProbe nearest cells
+    val probes = rankedProbes(spark, sfDir, nProbe).select("qid", "cell")
+    ivfAssigned(spark, sfDir).join(broadcast(probes), "cell")
+      .filter(col("vec_id") =!= col("qid"))
+      .select("qid", "vec_id").distinct()
+  }
+
+  /** Each query's `n` nearest IVF cells by centroid score, as
+    * (qid, cell, rk) with rk = 1 for the best cell; ties break on the
+    * lower cell id. The |Q|-sized probe list behind [[ivfCandidates]] and
+    * [[ivfNprobeCurve]]. */
+  private def rankedProbes(spark: SparkSession, sfDir: String,
+                           n: Int): DataFrame = {
     import spark.implicits._
-    val centroids = ivfCentroids(spark, sfDir)
-    val unit = unitVecs(spark, sfDir)
-    val bc = spark.sparkContext.broadcast(centroids)
-    val assigned = ivfAssigned(spark, sfDir)
-    // each query probes its NProbe nearest cells
-    val probes = unit.as[(Long, Array[Double])]
+    val bc = spark.sparkContext.broadcast(ivfCentroids(spark, sfDir))
+    unitVecs(spark, sfDir).as[(Long, Array[Double])]
       .filter(_._1 < NumQueries)
       .flatMap { case (qid, u) =>
         val cs = bc.value
@@ -1866,12 +1876,9 @@ object Similarity {
           while (i < w.length) { s += w(i) * u(i); i += 1 }
           (c, s)
         }
-        scored.sortBy { case (c, s) => (-s, c) }.take(nProbe)
-          .map { case (c, _) => (qid, c) }
-      }.toDF("qid", "cell")
-    assigned.join(broadcast(probes), "cell")
-      .filter(col("vec_id") =!= col("qid"))
-      .select("qid", "vec_id").distinct()
+        scored.sortBy { case (c, s) => (-s, c) }.take(n)
+          .zipWithIndex.map { case ((c, _), r) => (qid, c, r + 1) }
+      }.toDF("qid", "cell", "rk")
   }
 
   /** Multiprobe IVF — [[annCosineIvf]] at [[NProbeMp]] probes: the
@@ -1912,21 +1919,7 @@ object Similarity {
     * Corpus-side work is nprobe-independent — exactly the property the
     * curve exists to demonstrate. */
   def ivfNprobeCurve(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val maxNp = NprobeCurvePoints.max
-    val bc = spark.sparkContext.broadcast(ivfCentroids(spark, sfDir))
-    val probes = unitVecs(spark, sfDir).as[(Long, Array[Double])]
-      .filter(_._1 < NumQueries)
-      .flatMap { case (qid, u) =>
-        val cs = bc.value
-        val scored = cs.zipWithIndex.map { case (w, c) =>
-          var s = 0.0; var i = 0
-          while (i < w.length) { s += w(i) * u(i); i += 1 }
-          (c, s)
-        }
-        scored.sortBy { case (c, s) => (-s, c) }.take(maxNp)
-          .zipWithIndex.map { case ((c, _), r) => (qid, c, r + 1) }
-      }.toDF("qid", "cell", "rk")
+    val probes = rankedProbes(spark, sfDir, NprobeCurvePoints.max)
     val cand = ivfAssigned(spark, sfDir).join(broadcast(probes), "cell")
       .filter(col("vec_id") =!= col("qid"))
       .select("qid", "vec_id", "rk")

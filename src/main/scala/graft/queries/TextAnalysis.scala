@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Substrate, Tables}
 
 /** Text-analysis operators over `documents` — the per-document scoring
   * passes of a training-data pipeline: language ID, quality scoring,
@@ -395,37 +395,52 @@ object TextAnalysis {
   /** Composite quality gate — the keep/drop decision a training-data
     * pipeline applies before tokenization, with the REASON recorded (what
     * production filters log for ablation). Rules in priority order:
-    * too_short (<20 tokens), repetitive (dup-bigram fraction > 0.05,
-    * ~p90 of this corpus), else ok. Thresholds compare the 6-dp-rounded
-    * fraction, computed identically in both engines, so the boundary is
-    * deterministic. One scan, no shuffle except the output sort. */
+    * too_short (< [[QualityMinTokens]] tokens), repetitive (dup-bigram
+    * fraction > [[QualityMaxDupFrac]], ~p90 of this corpus), else ok.
+    * Thresholds compare the 6-dp-rounded fraction, computed identically
+    * in both engines, so the boundary is deterministic. One scan, no
+    * shuffle except the output sort. */
   def qualityGate(spark: SparkSession, sfDir: String,
-                  minTokens: Int = 20, maxDupFrac: Double = 0.05): DataFrame =
+                  minTokens: Int = QualityMinTokens,
+                  maxDupFrac: Double = QualityMaxDupFrac): DataFrame =
     qualityGateFrame(Tables.documents(spark, sfDir), minTokens, maxDupFrac)
       .orderBy("doc_id")
+
+  /** The quality gate's default thresholds: every Spark form and every
+    * SQL twin of the gate reads these two. */
+  final val QualityMinTokens = 20
+  final val QualityMaxDupFrac = 0.05
+
+  /** The gate's reason over [[repetitionBaseFrame]]'s columns. */
+  private def qualityReason(minTokens: Int, maxDupFrac: Double): Column =
+    when(col("n_tokens") < minTokens, "too_short")
+      .when(col("dup_bigram_frac") > maxDupFrac, "repetitive")
+      .otherwise("ok")
+
+  /** The gate's keep column over [[repetitionBaseFrame]]'s columns. */
+  private[queries] def qualityKeep(minTokens: Int = QualityMinTokens,
+                                   maxDupFrac: Double = QualityMaxDupFrac): Column =
+    qualityReason(minTokens, maxDupFrac) === "ok"
 
   /** Gate as a frame-in/frame-out transform: stateless narrow column
     * math, so the SAME code runs over `readStream` unchanged (asserted in
     * StreamingSpec) — filter documents as they arrive instead of in a
     * nightly batch. */
-  def qualityGateFrame(docs: DataFrame, minTokens: Int = 20,
-                       maxDupFrac: Double = 0.05): DataFrame =
+  def qualityGateFrame(docs: DataFrame, minTokens: Int = QualityMinTokens,
+                       maxDupFrac: Double = QualityMaxDupFrac): DataFrame =
     repetitionBaseFrame(docs)
       .select(col("doc_id"), col("n_tokens"), col("dup_bigram_frac"),
-        when(col("n_tokens") < minTokens, "too_short")
-          .when(col("dup_bigram_frac") > maxDupFrac, "repetitive")
-          .otherwise("ok").as("reason"))
-      .withColumn("keep", col("reason") === "ok")
-      .select("doc_id", "n_tokens", "dup_bigram_frac", "keep", "reason")
+        qualityKeep(minTokens, maxDupFrac).as("keep"),
+        qualityReason(minTokens, maxDupFrac).as("reason"))
 
   val qualityGateSql: String =
     s"""WITH $repetitionBaseSqlCte
        |SELECT doc_id, n_tokens, dup_bigram_frac,
-       |       (CASE WHEN n_tokens < 20 THEN 'too_short'
-       |             WHEN dup_bigram_frac > 0.05 THEN 'repetitive'
+       |       (CASE WHEN n_tokens < $QualityMinTokens THEN 'too_short'
+       |             WHEN dup_bigram_frac > $QualityMaxDupFrac THEN 'repetitive'
        |             ELSE 'ok' END) = 'ok' AS keep,
-       |       CASE WHEN n_tokens < 20 THEN 'too_short'
-       |            WHEN dup_bigram_frac > 0.05 THEN 'repetitive'
+       |       CASE WHEN n_tokens < $QualityMinTokens THEN 'too_short'
+       |            WHEN dup_bigram_frac > $QualityMaxDupFrac THEN 'repetitive'
        |            ELSE 'ok' END AS reason
        |FROM rb
        |ORDER BY doc_id""".stripMargin
@@ -448,7 +463,7 @@ object TextAnalysis {
     * (no cross-run collisions); the manifest agg is one shuffle over the
     * read-back. */
   def pipelineExport(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = TextJobs.tmpOut(spark, "graft_export_", sfDir)
+    val out = Substrate.sessionDir(spark, "graft_export_", sfDir)
     val b = Temporal.bucketCol(col("doc_id"))
     val kept = qualityGateFrame(Tables.documents(spark, sfDir))
       .filter(col("keep"))
@@ -473,7 +488,7 @@ object TextAnalysis {
        |              WHEN ${Temporal.bucketSql("doc_id")} < 10 THEN 'val'
        |              ELSE 'train' END AS split
        |  FROM rb
-       |  WHERE NOT (n_tokens < 20 OR dup_bigram_frac > 0.05))
+       |  WHERE NOT (n_tokens < $QualityMinTokens OR dup_bigram_frac > $QualityMaxDupFrac))
        |SELECT split, count(*) AS n_docs,
        |       CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
        |       min(doc_id) AS min_doc, max(doc_id) AS max_doc
@@ -1093,7 +1108,7 @@ object TextAnalysis {
     // 100 TB passes — and the sink additionally survives the
     // per-query cache clears a long-lived session performs, without
     // pinning corpus-sized executor memory
-    val fp = Dedup.materializeOnce(spark, "graft_contamfp_", sfDir)(
+    val fp = Substrate.materialize(spark, "graft_contamfp_", sfDir)(
       tokenShinglePairs(spark, sfDir)
         .withColumn("bucket", Temporal.bucketCol(col("doc_id"))))
     val hotRaw = fp.groupBy("fp").agg(count(lit(1)).as("df"))
@@ -1372,7 +1387,7 @@ object TextAnalysis {
     require(topN > 0, s"topN must be positive, got $topN")
     import spark.implicits._
     // r14: the fingerprint frame goes behind the write-once session
-    // sink ([[Dedup.materializeOnce]], the corpusShingleHashes pattern)
+    // sink ([[Substrate.materialize]], the corpusShingleHashes pattern)
     // instead of the measured-flat .cache() (PERF.md r11: 10.4 s vs
     // 9.8 s at the 1M probe — cache round-trips lost to the JIT'd
     // kernel). The sink is different economics: the typed-flatMap
@@ -1380,7 +1395,7 @@ object TextAnalysis {
     // (per-doc counts, hot-set df, cold join — previously three full
     // kernel re-runs, a 12-scan plan) become plain parquet scans of
     // narrow (doc_id, fp) rows, with no executor memory pinned.
-    val fp = Dedup.materializeOnce(spark, "graft_winnowfp_", sfDir)(
+    val fp = Substrate.materialize(spark, "graft_winnowfp_", sfDir)(
       normalized(spark, sfDir)
         .flatMap { case (id, ns) =>
           val mins = winnowMins(kgramHashes(ns))
@@ -1714,7 +1729,7 @@ object TextAnalysis {
     * before this memo the bench paid the 20 driver-synced merge rounds
     * three times (~14 s → ~6 s, r6 verdict item 3). Keyed (sfDir, nMerges)
     * under the same corpus-dir-immutable-per-session contract as
-    * Dedup.materializeOnce; the value is driver-side model state (≤500
+    * Substrate.materialize; the value is driver-side model state (≤500
     * tiny rows), so a plain concurrent map is enough — no Spark storage
     * involved, hence NOT subject to the SPARK_GRAFT_DISABLE_CACHE A/B knob
     * (which toggles measured intra-query frame caches, not model state). */
@@ -2353,7 +2368,7 @@ object TextAnalysis {
     * identical frame (nb_quality_score, quality_calibration); the
     * fuzzy/knn substrate-sharing discipline. */
   private def nbScored(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.materializeOnce(spark, "graft_nb_", sfDir) {
+    Substrate.materialize(spark, "graft_nb_", sfDir) {
       val tok = nbTok(spark, sfDir)
       val prior = nbPriorCounts(spark, sfDir)
         .withColumn("prior_micros",
@@ -2789,7 +2804,7 @@ object TextAnalysis {
       s" + ((both_drop + gopher_only) / $n) * ((both_drop + gate_only) / $n)"
     s"""WITH $repetitionBaseSqlCte,
        |gatef AS (SELECT doc_id,
-       |                 NOT (n_tokens < 20 OR dup_bigram_frac > 0.05) AS keep
+       |                 NOT (n_tokens < $QualityMinTokens OR dup_bigram_frac > $QualityMaxDupFrac) AS keep
        |          FROM rb),
        |gopherf AS (SELECT doc_id, pass FROM (${gopherLabeledSql()})),
        |cells AS (
@@ -2978,8 +2993,8 @@ object TextAnalysis {
        |      FROM hh),
        |med AS (SELECT min(n_chars) AS p50 FROM w WHERE cum >= ceil(0.5 * n)),
        |q AS (SELECT count(*) AS nq,
-       |             CAST(coalesce(sum(CASE WHEN n_tokens >= 20
-       |                                     AND dup_bigram_frac <= 0.05
+       |             CAST(coalesce(sum(CASE WHEN n_tokens >= $QualityMinTokens
+       |                                     AND dup_bigram_frac <= $QualityMaxDupFrac
        |                                    THEN 1 ELSE 0 END), 0) AS BIGINT) AS nk
        |      FROM rb)
        |SELECT metric, value FROM (
@@ -3514,7 +3529,7 @@ object TextAnalysis {
     * past 2⁵³).
     *
     * Scale: the corpus band histogram is a ≤21-row write-once sink
-    * ([[graft.queries.Dedup.materializeOnce]] — persistent across
+    * ([[graft.Substrate.materialize]] — persistent across
     * sessions under SPARK_GRAFT_SUBSTRATE_DIR); the shard side is one
     * scored scan of the shard + a ≤21-group count. Nothing corpus-sized
     * moves after the histogram freeze. Empty corpus or shard → zero
@@ -3538,7 +3553,7 @@ object TextAnalysis {
 
   /** Frozen corpus quality histogram — a ≤21-row write-once sink. */
   private def corpusQualityBands(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.materializeOnce(spark, "graft_qbands_", sfDir)(
+    Substrate.materialize(spark, "graft_qbands_", sfDir)(
       bandCountsOf(qualityScoredFrame(Tables.documents(spark, sfDir)))
         .withColumnRenamed("n", "n_corpus"))
 

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Substrate, Tables}
 
 /** The reference's shipped example jobs (SURVEY.md §2.2 E1-E9), re-expressed
   * as declarative Spark plans over `documents`/`events`.
@@ -169,25 +169,8 @@ object TextJobs {
     * lands in the JVM temp dir (per-sfDir path, overwritten per run); the
     * write is a distributed text sink — one file per partition, exactly
     * the reference worker's sharded `part-*` layout. */
-  /** Injective temp-output path: readable sanitized dir name PLUS an md5
-    * tag of the exact original string — sanitization alone maps distinct
-    * dirs (`/a/sf0.1` vs `/a_sf0.1`) to one path, which would silently
-    * serve another corpus's output. The path is additionally keyed by the
-    * session's applicationId: the round-trip write happens eagerly at
-    * DataFrame-construction time, and two concurrent sessions on the same
-    * sfDir must not race on one overwrite target (within a session the
-    * path is stable, so repeated construction just overwrites its own
-    * output — what the byte-stability double-Verify run expects). */
-  private[queries] def tmpOut(spark: SparkSession, prefix: String, sfDir: String): String = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    val app = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9._-]", "_")
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      prefix + sfDir.replaceAll("[^A-Za-z0-9._-]", "_") + "_" + tag + "_" + app).getAbsolutePath
-  }
-
   def wordcountTsv(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = tmpOut(spark, "graft_tsv_", sfDir)
+    val out = Substrate.sessionDir(spark, "graft_tsv_", sfDir)
     wordcount(spark, sfDir)
       .select(concat_ws("\t", col("word"), col("cnt")).as("value"))
       .write.mode("overwrite").text(out)
@@ -207,7 +190,7 @@ object TextJobs {
     * driver merge of N rows — never a full sort or a single-partition
     * funnel). */
   def resultsLimit(spark: SparkSession, sfDir: String, n: Int = 20): DataFrame = {
-    val out = tmpOut(spark, "graft_results_", sfDir)
+    val out = Substrate.sessionDir(spark, "graft_results_", sfDir)
     wordcount(spark, sfDir)
       .select(concat_ws("\t", col("word"), col("cnt")).as("value"))
       .write.mode("overwrite").text(out)
@@ -223,7 +206,7 @@ object TextJobs {
     * source-side complement of [[wordcountTsv]]'s text sink; quoting and
     * type inference are where CSV round-trips usually break). */
   def eventsCsv(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = tmpOut(spark, "graft_csv_", sfDir)
+    val out = Substrate.sessionDir(spark, "graft_csv_", sfDir)
     Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
       .write.mode("overwrite").option("header", "true").csv(out)
@@ -243,7 +226,7 @@ object TextJobs {
     * survive being embedded inside a JSON document) and number
     * formatting. */
   def eventsJsonl(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = tmpOut(spark, "graft_jsonl_", sfDir)
+    val out = Substrate.sessionDir(spark, "graft_jsonl_", sfDir)
     Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("props"))
       .write.mode("overwrite").json(out)
@@ -267,7 +250,7 @@ object TextJobs {
     * scale. The min/max aggregates ride on exactly those stats. Oracle
     * reads the parquet ORIGINAL — lossless round-trip is the assertion. */
   def eventsOrc(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = tmpOut(spark, "graft_orc_", sfDir)
+    val out = Substrate.sessionDir(spark, "graft_orc_", sfDir)
     Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
       .write.mode("overwrite").orc(out)

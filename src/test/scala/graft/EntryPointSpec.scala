@@ -28,6 +28,13 @@ class EntryPointSpec extends AnyFunSuite {
     assert(sourcesContaining("SparkSession.builder()") == Set("GraftSession.scala"))
   }
 
+  test("src/main writes catalog tables and keys dirs on the application id only in Substrate") {
+    assert(sourcesContaining("saveAsTable(") == Set("Substrate.scala"))
+    assert(sourcesContaining("applicationId") == Set("Substrate.scala"))
+    // ScaleProbe's generated corpus must outlive the JVM for reuse
+    assert(sourcesContaining("java.io.tmpdir") == Set("Substrate.scala", "ScaleProbe.scala"))
+  }
+
   test("SPARK_GRAFT_CPUS: an integer is the core count, anything else fails by name") {
     assert(GraftSession.cpusFrom(Some("3")) == 3)
     assert(GraftSession.cpusFrom(None) ==
