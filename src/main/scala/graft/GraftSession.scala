@@ -36,6 +36,13 @@ object GraftSession {
       // entries are compiled classes (JVM code, never data), so this
       // cannot cache results across runs.
       .config("spark.sql.codegen.cache.maxEntries", "4096")
+      // InferFiltersFromGenerate adds `size(t) > 0` under an `explode(t)`;
+      // when `t` is a projected alias (a tokenizer), predicate pushdown
+      // substitutes the alias, so a Filter above the scan re-runs the
+      // whole projection per row, interpreted lambdas included. The
+      // filter only drops rows the `explode` drops anyway.
+      .config("spark.sql.optimizer.excludedRules",
+        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
       .config("spark.sql.warehouse.dir", "target/spark-warehouse")
       .config("spark.speculation", "true")
       .config("spark.speculation.multiplier", "1.5")

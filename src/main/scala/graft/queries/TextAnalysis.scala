@@ -2172,12 +2172,14 @@ object TextAnalysis {
     * uni+bigrams (languages share 100% of the token vocabulary and
     * differ only in co-occurrence patterns).
     *
-    * Scale: pass 1 builds BOTH histograms in one grouped scan (model
-    * state = B rows, map-side partial agg does the heavy lifting); pass 2
-    * re-scans the feature stream and joins the broadcast B-row weight
-    * table — at 100 TB both passes run at parquet-scan speed and the only
-    * shuffle is B-row. Two scans beat caching a corpus-sized feature
-    * stream (the [[docSurprisal]] argument).
+    * Scale: ONE scan tokenizes the corpus into [[dsirPerDocCounts]]'s
+    * per-(doc, lang, bucket) fold; the histogram (BOTH class counts, B
+    * rows of model state) and the per-doc scoring join against the
+    * broadcast B-row weight table both read that one exchange. At 100 TB
+    * the corpus is scanned and tokenized once, and the shuffles are the
+    * fold (≤ distinct buckets per doc, map-side combined) and the B-row
+    * histogram — never a cached corpus-sized stream (the [[docSurprisal]]
+    * argument).
     *
     * Determinism: per-bucket log-ratio integerised to micros BEFORE the
     * per-doc integer sum ([[Det]] discipline); the double divisions are
@@ -2194,20 +2196,26 @@ object TextAnalysis {
           (a, b) => concat_ws(" ", a, b)))).as("tok"))
       .withColumn("b", tokBucket(col("tok")))
 
+  /** The feature stream folded ONCE into per-(doc, lang, bucket)
+    * occurrence counts: the histogram and per-doc scoring legs both
+    * re-aggregate from this exchange, so ReuseExchange shares one scan
+    * and one tokenize pass between them. That holds only while the
+    * subtree is canonically equal in both legs: the scoring join infers
+    * `isnotnull(b)` and would push it below this aggregate (b is a
+    * grouping key), forking the scoring leg onto its own scan. Filtering
+    * `b IS NOT NULL` before the fold makes the inferred filter redundant;
+    * it drops nothing, since `conv` of 8 hex chars always parses, so b
+    * is never NULL for a non-NULL token. */
+  private def dsirPerDocCounts(spark: SparkSession, sfDir: String): DataFrame =
+    dsirTok(spark, sfDir).filter(col("b").isNotNull)
+      .groupBy("doc_id", "lang", "b")
+      .agg(count(lit(1)).as("n"))
+
   /** The exact integer count tuples feeding [[dsirLwMicros]] — exposed
     * private[graft] so PropertiesSpec can recompute every emitted micro
     * with 30-digit BigDecimal ln (the r8-flagged libm-ulp hazard: a
     * libm/engine bump that lands a weight within 1 ulp of a
     * ⌊x·10⁶+0.5⌋ boundary must fail a spec HERE, not the hash gate). */
-  /** The feature stream folded ONCE into per-(doc, lang, bucket)
-    * occurrence counts (r14): the histogram and per-doc scoring legs
-    * both re-aggregate from this exchange — its subtree is
-    * canonicalized-equal in both, so ReuseExchange shares one tokenize
-    * pass where the raw stream (narrow, exchange-free) ran it twice. */
-  private def dsirPerDocCounts(spark: SparkSession, sfDir: String): DataFrame =
-    dsirTok(spark, sfDir).groupBy("doc_id", "lang", "b")
-      .agg(count(lit(1)).as("n"))
-
   private[graft] def dsirBucketCounts(spark: SparkSession, sfDir: String,
                                       targetLang: String = "en"): DataFrame = {
     val db = dsirPerDocCounts(spark, sfDir)
@@ -2305,16 +2313,29 @@ object TextAnalysis {
     * buckets discretize ALREADY-deterministic values (r4-rounded ratios,
     * integer counts), so the feature strings are cross-engine exact.
     *
-    * Scale: identical to [[dsirWeights]] — one grouped scan trains
-    * (B-row model + 2-long priors), one scan scores against the
-    * broadcast weight table, plus a skinny doc-count agg for the prior.
+    * Scale: the [[dsirWeights]] shape — ONE scan labels and tokenizes
+    * the corpus into [[nbPerDocCounts]]'s per-(doc, pass, bucket) fold,
+    * and all three legs read that one exchange: the B-row histogram
+    * trains the weights, the 2-long class prior counts the `len:`
+    * features, and the per-doc score joins the broadcast weight table.
+    * At 100 TB the fold trades three extra full corpus scans and
+    * tokenizations for one shuffle of per-(doc, bucket) counts.
     * Determinism: all log terms integerised to micros before any sum.
     *
     * Self-labeled-and-self-scored on the fixture, the classifier is a
     * SMOOTHED reconstruction of its labels (TextAnalysisSpec pins the
     * agreement floor); the production use trains here, scores elsewhere. */
-  /** The NB labeled feature stream (hashed unigrams + meta features). */
-  private def nbTok(spark: SparkSession, sfDir: String): DataFrame =
+  /** The NB labeled feature stream (hashed unigrams + meta features)
+    * folded ONCE into per-(doc, pass, bucket, is_len) occurrence counts
+    * `n` — the [[dsirPerDocCounts]] pattern. Every labeled row with a
+    * non-NULL text emits exactly one `len:` feature (no word token holds
+    * a `:`), so `is_len` rows count documents: the class prior sums their
+    * `n`, which counts duplicate doc_ids once per row and skips NULL-text
+    * rows (no tokens, NULL pass) exactly as a per-row count over the
+    * labels does. The `b IS NOT NULL` filter drops nothing and keeps the
+    * scoring join's inferred `isnotnull(b)` above the fold, so all three
+    * legs share one exchange (see [[dsirPerDocCounts]]). */
+  private def nbPerDocCounts(spark: SparkSession, sfDir: String): DataFrame =
     gopherLabeled(spark, sfDir, GopherMinWords)
       .select(col("doc_id"), col("pass"),
         concat(col("t"), array(
@@ -2327,27 +2348,35 @@ object TextAnalysis {
           concat(lit("stp:"),
             least(col("stop_hits"), lit(4)).cast("string")))).as("t"))
       .select(col("doc_id"), col("pass"), explode(col("t")).as("tok"))
-      .withColumn("b", tokBucket(col("tok")))
+      .select(col("doc_id"), col("pass"), tokBucket(col("tok")).as("b"),
+        col("tok").startsWith("len:").as("is_len"))
+      .filter(col("b").isNotNull)
+      .groupBy("doc_id", "pass", "b", "is_len")
+      .agg(count(lit(1)).as("n"))
 
   /** Count tuples feeding [[nbLwMicros]] — the [[dsirBucketCounts]]
     * libm-hardening hook for the NB weight table. */
   private[graft] def nbBucketCounts(spark: SparkSession,
                                     sfDir: String): DataFrame = {
-    val hist = nbTok(spark, sfDir).groupBy("b").agg(
-      sum(when(col("pass"), 1L).otherwise(0L)).as("cnt_p"),
-      sum(when(!col("pass"), 1L).otherwise(0L)).as("cnt_f"))
+    val hist = nbPerDocCounts(spark, sfDir).groupBy("b").agg(
+      sum(when(col("pass"), col("n")).otherwise(0L)).as("cnt_p"),
+      sum(when(!col("pass"), col("n")).otherwise(0L)).as("cnt_f"))
     val tokTot = hist.agg(
       coalesce(sum("cnt_p"), lit(0L)).as("tot_p"),
       coalesce(sum("cnt_f"), lit(0L)).as("tot_f"))
     hist.crossJoin(broadcast(tokTot))
   }
 
-  /** Count tuple feeding the class-prior micros — libm-hardening hook. */
+  /** Count tuple feeding the class-prior micros — libm-hardening hook.
+    * Conditional sums, not a filter: a filter on `is_len` would be pushed
+    * below the fold and fork its exchange. */
   private[graft] def nbPriorCounts(spark: SparkSession,
                                    sfDir: String): DataFrame =
-    gopherLabeled(spark, sfDir, GopherMinWords).agg(
-      coalesce(sum(when(col("pass"), 1L).otherwise(0L)), lit(0L)).as("n_p"),
-      coalesce(sum(when(!col("pass"), 1L).otherwise(0L)), lit(0L)).as("n_f"))
+    nbPerDocCounts(spark, sfDir).agg(
+      coalesce(sum(when(col("is_len") && col("pass"), col("n")).otherwise(0L)),
+        lit(0L)).as("n_p"),
+      coalesce(sum(when(col("is_len") && !col("pass"), col("n")).otherwise(0L)),
+        lit(0L)).as("n_f"))
 
   private def nbLwMicros: Column = {
     val B = HashBuckets
@@ -2369,7 +2398,7 @@ object TextAnalysis {
     * fuzzy/knn substrate-sharing discipline. */
   private def nbScored(spark: SparkSession, sfDir: String): DataFrame =
     Substrate.materialize(spark, "graft_nb_", sfDir) {
-      val tok = nbTok(spark, sfDir)
+      val db = nbPerDocCounts(spark, sfDir)
       val prior = nbPriorCounts(spark, sfDir)
         .withColumn("prior_micros",
           floor((log((col("n_p") + 1).cast("double"))
@@ -2378,9 +2407,11 @@ object TextAnalysis {
       val w = nbBucketCounts(spark, sfDir)
         .withColumn("lw_micros", nbLwMicros)
         .select("b", "lw_micros")
-      tok.join(broadcast(w), "b")
+      // Σ n and Σ n·lw over the fold ≡ count and Σ lw over occurrences
+      db.join(broadcast(w), "b")
         .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_feats"), sum("lw_micros").as("ratio_micros"))
+        .agg(sum("n").as("n_feats"),
+          sum(col("n") * col("lw_micros")).as("ratio_micros"))
         .crossJoin(broadcast(prior))
         .withColumn("nb_micros", col("prior_micros") + col("ratio_micros"))
         .select("doc_id", "n_feats", "nb_micros")

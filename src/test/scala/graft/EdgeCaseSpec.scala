@@ -836,4 +836,59 @@ class EdgeCaseSpec extends AnyFunSuite {
     assert(both.getAs[Double]("billed") == 50.0 && both.getAs[Double]("shipped") == 20.0)
     assert(both.getAs[Double]("delta") == 30.0)
   }
+
+  /** The hashed-feature models on a corpus with duplicate doc_ids (one
+    * exact-duplicate row pair, one pair with different texts and
+    * labels), NULL, empty and whitespace-only texts, a doc under the
+    * Gopher 20-word floor and a digits-only doc. Every pinned value was
+    * printed by the per-row (unfolded) builders these replaced. */
+  private lazy val hashedEdge: String = {
+    val pass = "the quick brown fox jumps over the lazy dog while the small " +
+      "cat sleeps near the warm fire and rain falls outside the old house"
+    fixture("hashed",
+      docs = Seq(
+        (1L, pass, "en", "web", 0L),
+        (1L, pass, "en", "web", 0L),                           // exact dup row
+        (2L, pass + " again today", "de", "web", 0L),
+        (2L, "the cat sat on the mat", "de", "web", 0L),       // dup id, fails
+        (3L, null, "en", "web", 0L),                           // NULL text
+        (4L, "", "en", "web", 0L),                             // empty
+        (5L, "   \t  ", "fr", "web", 0L),                      // whitespace only
+        (6L, "the cat sat on the mat", "en", "web", 0L),       // < 20 words
+        (7L, "123 456 7890 42", "en", "web", 0L),              // digits only
+        (8L, "over the lazy dog the fox jumps and the warm rain falls on the old " +
+          "house near the small fire while a cat sleeps", "fr", "web", 0L)),
+      embs = Seq.empty)
+  }
+
+  test("nb/dsir hashed-feature builders: edge corpus pins (dup ids, NULL/empty/blank, short, digits)") {
+    val T = queries.TextAnalysis
+    val buckets = T.nbBucketCounts(spark, hashedEdge).orderBy("b").collect()
+      .map(r => (0 until r.length).map(r.get).mkString(",")).mkString(";")
+    assert(buckets ==
+      "296,0,1,117,36;488,4,2,117,36;496,4,0,117,36;580,4,2,117,36;" +
+      "789,4,0,117,36;865,3,0,117,36;921,4,0,117,36;998,4,0,117,36;" +
+      "1130,3,0,117,36;1204,4,0,117,36;1315,0,3,117,36;1338,0,2,117,36;" +
+      "1355,0,2,117,36;1378,1,1,117,36;1465,1,0,117,36;1514,0,3,117,36;" +
+      "1577,3,0,117,36;1768,0,1,117,36;2010,0,2,117,36;2089,4,0,117,36;" +
+      "2229,0,1,117,36;2233,4,0,117,36;2402,0,1,117,36;2480,0,2,117,36;" +
+      "2548,4,0,117,36;2550,1,0,117,36;2716,4,0,117,36;2810,3,0,117,36;" +
+      "3073,1,2,117,36;3181,20,4,117,36;3272,4,0,117,36;3293,4,0,117,36;" +
+      "3339,4,0,117,36;3383,4,0,117,36;3418,4,0,117,36;3475,0,2,117,36;" +
+      "3486,0,2,117,36;3509,4,0,117,36;3543,4,0,117,36;3760,4,0,117,36;" +
+      "3765,4,0,117,36;4015,1,0,117,36;4018,0,3,117,36")
+    // 4 passing rows (doc 1 twice, doc 2's long text, doc 8), 5 failing
+    // (doc 2's short text, empty, blank, short, digits); NULL text in neither
+    assert(T.nbPriorCounts(spark, hashedEdge).collect().mkString(";") == "[4,5]")
+    assert(T.nbQualityScore(spark, hashedEdge).collect().mkString(";") ==
+      "[1,58,84115948,true];[2,41,40825756,true];[4,4,-5229790,false];" +
+      "[5,4,-5229790,false];[6,10,-2670847,false];[7,8,-7269103,false];" +
+      "[8,28,36728731,true]")
+    assert(T.qualityCalibration(spark, hashedEdge).collect().mkString(";") ==
+      "[-10,3,0,0.0,-1.1745];[-3,1,0,0.0,-0.2671];[9,5,4,0.8,1.2408]")
+    assert(T.dsirWeights(spark, hashedEdge).collect().mkString(";") ==
+      "[1,98,-41689022,-0.425398];[2,64,-28913471,-0.451773];" +
+      "[6,11,-5400420,-0.490947];[7,7,-223381,-0.031912];" +
+      "[8,47,-25997681,-0.553142]")
+  }
 }
