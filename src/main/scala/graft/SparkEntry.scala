@@ -3,12 +3,12 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Every implemented operator from SURVEY.md §2 (and the LLM-pipeline
-  * extensions) registers here as a named query over the driver's parquet
-  * fixtures, with a DuckDB-runnable SQL twin in [[oracleSql]] where the
-  * semantics are ANSI-SQL-expressible.
+  * extensions) is one [[Query]] entry in its module's `queries`: a named
+  * query over the driver's parquet fixtures with its DuckDB-runnable SQL
+  * twin. This object indexes the entries and derives the driver's maps.
   */
 object SparkEntry {
 
@@ -19,364 +19,33 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     TextJobs.wordcount(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  /** Every registered query by name: each module's `queries` entries,
+    * indexed once. A name declared twice fails here, naming it. Adding a
+    * query module means adding it to this one list. */
+  lazy val registry: Map[String, Query] = Query.index(
     TextJobs.queries ++ Relational.queries ++ Dedup.queries ++
       Similarity.queries ++ TextAnalysis.queries ++ Multimodal.queries ++
       Temporal.queries ++ Functions.queries ++ Curation.queries ++
       graft.streaming.StreamingJobs.queries ++
       graft.operators.TopKAggregator.queries ++ graft.operators.SkewJoin.queries ++
-      graft.operators.BucketedJoin.queries
+      graft.operators.BucketedJoin.queries)
 
-  /** Parameterized variants — reference parity for the GREP_PATTERN env
-    * channel (examples/grep/mapper.py:15). Same operators as [[queries]],
-    * but taking user arguments (string map, like the reference's env);
-    * every key here also has a fixed-argument twin in [[queries]] so the
-    * driver's oracle contract is untouched. Exercised in ArgsSpec.
-    *
-    * ORACLE VALIDITY: [[oracleSql]] twins hard-code the DEFAULT argument
-    * values (they mirror the zero-arg [[queries]] entries — the only
-    * surface the driver runs). For a NON-default-arg run, use
-    * [[oracleSqlWithArgs]] — the SQL twin templated on the same argument
-    * map — via `graft.Verify <sf> <out> name@arg=value` + tools/check.py;
-    * families absent there carry result-affecting args whose SQL is not
-    * arg-expressible (model-state iterations etc.) and fall back to
-    * rows/shape checks. */
-  def queriesWithArgs: Map[String, (SparkSession, String, Map[String, String]) => DataFrame] = Map(
-    "grep" -> ((s, d, a) =>
-      TextJobs.grep(s, d, a.getOrElse("pattern", "error"))),
-    "bigrams" -> ((s, d, a) =>
-      TextJobs.bigrams(s, d, a.getOrElse("top_n", "100").toInt)),
-    "ann_cosine_topk" -> ((s, d, a) =>
-      Similarity.bruteForceTopK(s, d, a.getOrElse("k", "5").toInt)),
-    "embedding_cosine_dedup" -> ((s, d, a) =>
-      Dedup.embeddingCosineDups(s, d, a.getOrElse("threshold", "0.47").toDouble)),
-    "quality_gate" -> ((s, d, a) =>
-      TextAnalysis.qualityGate(s, d,
-        a.get("min_tokens").fold(TextAnalysis.QualityMinTokens)(_.toInt),
-        a.get("max_dup_frac").fold(TextAnalysis.QualityMaxDupFrac)(_.toDouble))),
-    "sequence_pack" -> ((s, d, a) =>
-      TextAnalysis.sequencePack(s, d, a.getOrElse("budget", "256").toInt,
-        a.getOrElse("shards", "0").toInt)),
-    "contamination_check" -> ((s, d, a) =>
-      TextAnalysis.contaminationCheck(s, d, a.getOrElse("max_df", "1000").toInt)),
-    "ann_cosine_ivf" -> ((s, d, a) =>
-      Similarity.annCosineIvf(s, d, a.getOrElse("n_probe", "4").toInt)),
-    "mm_frame_sample" -> ((s, d, a) =>
-      Multimodal.mmFrameSample(s, d, a.getOrElse("stride", "16").toInt)),
-    "crossmodal_retrieval" -> ((s, d, a) =>
-      Multimodal.crossmodalRetrieval(s, d,
-        a.getOrElse("modality", "image"), a.getOrElse("k", "5").toInt)),
-    "results_limit" -> ((s, d, a) =>
-      TextJobs.resultsLimit(s, d, a.getOrElse("limit", "20").toInt)),
-    "doc_chunk" -> ((s, d, a) =>
-      TextAnalysis.docChunk(s, d, a.getOrElse("budget", "64").toInt,
-        a.getOrElse("overlap", "16").toInt)),
-    "mixture_weights" -> ((s, d, a) =>
-      TextAnalysis.mixtureWeights(s, d, a.getOrElse("alpha", "0.7").toDouble)),
-    "group_sample" -> ((s, d, a) =>
-      Temporal.groupSample(s, d, a.getOrElse("k", "3").toInt)),
-    "quality_percentile_gate" -> ((s, d, a) =>
-      TextAnalysis.qualityPercentileGate(s, d,
-        a.getOrElse("drop_pct", "0.25").toDouble)),
-    "token_histogram" -> ((s, d, a) =>
-      TextAnalysis.tokenHistogram(s, d, a.getOrElse("bin_tokens", "64").toInt)),
-    "events_rolling_24h" -> ((s, d, a) =>
-      Temporal.eventsRolling24h(s, d, a.getOrElse("window_hours", "24").toInt)),
-    "part_affinity" -> ((s, d, a) =>
-      Relational.partAffinity(s, d, a.getOrElse("top_n", "50").toInt,
-        a.getOrElse("max_basket", "256").toInt)),
-    "market_share" -> ((s, d, a) =>
-      Relational.marketShare(s, d, a.getOrElse("nation", "NATION_5"),
-        a.getOrElse("region", "AMERICA"), a.getOrElse("ptype", "PROMO"))),
-    "local_supplier_volume" -> ((s, d, a) =>
-      Relational.localSupplierVolume(s, d, a.getOrElse("region", "ASIA"))),
-    "nation_trade_volume" -> ((s, d, a) =>
-      Relational.nationTradeVolume(s, d,
-        a.getOrElse("nation1", "NATION_3"), a.getOrElse("nation2", "NATION_7"))),
-    "large_volume_customers" -> ((s, d, a) =>
-      Relational.largeVolumeCustomers(s, d,
-        a.getOrElse("min_qty", "250").toLong,
-        a.getOrElse("top_n", "100").toInt)),
-    "part_link_prediction" -> ((s, d, a) =>
-      Relational.partLinkPrediction(s, d, a.getOrElse("top_n", "50").toInt,
-        a.getOrElse("top_q", "32").toInt,
-        a.getOrElse("max_basket", "256").toInt)),
-    "shard_plan" -> ((s, d, a) =>
-      TextAnalysis.shardPlan(s, d,
-        a.getOrElse("shard_tokens", "4096").toLong)),
-    "part_name_profit" -> ((s, d, a) =>
-      Relational.partNameProfit(s, d, a.getOrElse("pattern", "bolt"))),
-    "mixture_apply" -> ((s, d, a) =>
-      TextAnalysis.mixtureApply(s, d, a.getOrElse("rate", "0.5").toDouble)),
-    "winnow_overlap" -> ((s, d, a) =>
-      TextAnalysis.winnowOverlap(s, d, a.getOrElse("top_n", "50").toInt)),
-    "token_pmi" -> ((s, d, a) =>
-      TextAnalysis.tokenPmi(s, d, a.getOrElse("top_n", "50").toInt)),
-    "bpe_train" -> ((s, d, a) =>
-      TextAnalysis.bpeTrain(s, d, a.getOrElse("n_merges", "20").toInt)),
-    "bpe_apply" -> ((s, d, a) =>
-      TextAnalysis.bpeApply(s, d, a.getOrElse("n_merges", "20").toInt)),
-    "bpe_vocab" -> ((s, d, a) =>
-      TextAnalysis.bpeVocab(s, d, a.getOrElse("n_merges", "20").toInt)),
-    "embedding_dedup_lsh" -> ((s, d, a) =>
-      Dedup.embeddingDupsLsh(s, d, a.getOrElse("threshold", "0.47").toDouble)),
-    "dedup_delta" -> ((s, d, a) =>
-      Dedup.dedupDelta(s, d, a.getOrElse("delta_mod", "10").toLong)),
-    "asof_join_orders_salted" -> ((s, d, a) =>
-      Temporal.asofJoinOrdersSalted(s, d, a.getOrElse("salts", "8").toInt)),
-    "corpus_shuffle" -> ((s, d, a) =>
-      Curation.corpusShuffle(s, d, a.getOrElse("n_shards", "16").toInt)),
-    "token_budget_sample" -> ((s, d, a) =>
-      Curation.tokenBudgetSample(s, d, a.getOrElse("budget", "800").toLong)),
-    "ann_cosine_pq" -> ((s, d, a) =>
-      Similarity.annCosinePq(s, d, a.getOrElse("k", "5").toInt)),
-    "embedding_outliers" -> ((s, d, a) =>
-      Similarity.embeddingOutliers(s, d, a.getOrElse("top_n", "10").toInt)),
-    "events_cms_topk" -> ((s, d, a) =>
-      Temporal.eventsCmsTopk(s, d, a.getOrElse("top_n", "20").toInt)),
-    "ann_cosine_ivfpq" -> ((s, d, a) =>
-      Similarity.annCosineIvfPq(s, d, a.getOrElse("n_probe", "4").toInt)),
-    "part_pagerank" -> ((s, d, a) =>
-      Relational.partPagerank(s, d, a.getOrElse("top_n", "50").toInt,
-        a.getOrElse("max_basket", "256").toInt)),
-    "ann_cosine_pq_rerank" -> ((s, d, a) =>
-      Similarity.annCosinePqRerank(s, d, a.getOrElse("k", "5").toInt)),
-    "ann_cosine_ivfpq_rerank" -> ((s, d, a) =>
-      Similarity.annCosineIvfPqRerank(s, d, a.getOrElse("n_probe", "4").toInt)),
-    "knn_graph" -> ((s, d, a) =>
-      Similarity.knnGraph(s, d, a.getOrElse("k", "3").toInt)),
-    "knn_mutual" -> ((s, d, a) =>
-      Similarity.knnMutual(s, d, a.getOrElse("k", "3").toInt)),
-    "cluster_balanced_sample" -> ((s, d, a) =>
-      Similarity.clusterBalancedSample(s, d,
-        a.getOrElse("alpha", "0.5").toDouble)),
-    "semdedup" -> ((s, d, a) =>
-      Dedup.semDedup(s, d, a.getOrElse("tau", "0.47").toDouble)),
-    "semantic_decontamination" -> ((s, d, a) =>
-      Curation.semanticDecontamination(s, d,
-        a.getOrElse("tau", "0.47").toDouble)),
-    "semantic_decontamination_delta" -> ((s, d, a) =>
-      Curation.semanticDecontaminationDelta(s, d,
-        a.getOrElse("tau", "0.47").toDouble,
-        a.getOrElse("delta_mod", "10").toLong)),
-    "ingest_drift" -> ((s, d, a) =>
-      Similarity.ingestDrift(s, d, a.getOrElse("delta_mod", "10").toLong)),
-    "ingest_drift_replay" -> ((s, d, a) =>
-      Similarity.ingestDriftReplay(s, d, a.getOrElse("delta_mod", "10").toLong)),
-    "decont_gate_replay" -> ((s, d, a) =>
-      Curation.decontGateReplay(s, d,
-        a.getOrElse("tau", "0.47").toDouble,
-        a.getOrElse("delta_mod", "10").toLong)),
-    "dedup_gate_replay" -> ((s, d, a) =>
-      Dedup.dedupGateReplay(s, d, a.getOrElse("delta_mod", "10").toLong)),
-    "quality_drift" -> ((s, d, a) =>
-      TextAnalysis.qualityDrift(s, d, a.getOrElse("delta_mod", "10").toLong)),
-    "quality_drift_replay" -> ((s, d, a) =>
-      TextAnalysis.qualityDriftReplay(s, d,
-        a.getOrElse("delta_mod", "10").toLong)),
-    "gopher_quality" -> ((s, d, a) =>
-      TextAnalysis.gopherQuality(s, d, a.getOrElse("min_words", "20").toInt)),
-    "dsir_weights" -> ((s, d, a) =>
-      TextAnalysis.dsirWeights(s, d, a.getOrElse("target_lang", "en"))),
-    "bigram_lm_score" -> ((s, d, a) =>
-      TextAnalysis.bigramLmScore(s, d, a.getOrElse("train_lang", "en"))),
-    "embedding_rp" -> ((s, d, a) =>
-      Similarity.embeddingRp(s, d, a.getOrElse("out_dims", "16").toInt)),
-    "triangle_count" -> ((s, d, a) =>
-      Relational.triangleCount(s, d, a.getOrElse("max_basket", "256").toInt)),
-    "label_propagation" -> ((s, d, a) =>
-      Similarity.labelPropagation(s, d,
-        a.getOrElse("iters", "3").toInt,
-        a.getOrElse("k", "3").toInt,
-        a.getOrElse("mask_mod", "4").toInt,
-        a.getOrElse("edges", "raw"))),
-    "knn_components" -> ((s, d, a) =>
-      Similarity.knnComponents(s, d,
-        a.getOrElse("k", "3").toInt,
-        a.getOrElse("edges", "raw"))),
-    "knn_clustering_coeff" -> ((s, d, a) =>
-      Similarity.knnClusteringCoeff(s, d, a.getOrElse("k", "3").toInt)),
-    "fuzzy_join_parts" -> ((s, d, a) =>
-      Relational.fuzzyJoinParts(s, d, a.getOrElse("max_dist", "2").toInt)),
-    "weighted_sample_pps" -> ((s, d, a) =>
-      Curation.weightedSamplePps(s, d, a.getOrElse("k", "50").toLong)),
-    "hard_negatives" -> ((s, d, a) =>
-      Similarity.hardNegatives(s, d, a.getOrElse("k", "3").toInt)),
-    "knn_coherence" -> ((s, d, a) =>
-      Similarity.knnCoherence(s, d, a.getOrElse("k", "3").toInt)),
-    "seed_expansion" -> ((s, d, a) =>
-      Similarity.seedExpansion(s, d, a.getOrElse("max_hops", "3").toInt)),
-    "ann_cosine_filtered" -> ((s, d, a) =>
-      Similarity.annCosineFiltered(s, d, a.getOrElse("k", "5").toInt)),
-    "kcore_graph" -> ((s, d, a) =>
-      Similarity.kcoreGraph(s, d,
-        a.getOrElse("k", "3").toInt,
-        a.getOrElse("core_k", "3").toInt,
-        a.getOrElse("peels", "8").toInt)),
-    "knn_delta" -> ((s, d, a) =>
-      Similarity.knnDelta(s, d,
-        a.getOrElse("k", "3").toInt,
-        a.getOrElse("delta_mod", "10").toLong)),
-    "events_heavy_hitters" -> ((s, d, a) =>
-      Temporal.eventsHeavyHitters(s, d, a.getOrElse("k", "150").toInt)),
-    "basket_rules" -> ((s, d, a) =>
-      Relational.basketRules(s, d,
-        a.getOrElse("top_n", "50").toInt,
-        a.getOrElse("max_basket", "256").toInt)),
-    "entity_resolution" -> ((s, d, a) =>
-      Relational.entityResolution(s, d, a.getOrElse("max_dist", "2").toInt)),
-    "shipping_priority" -> ((s, d, a) =>
-      Relational.shippingPriority(s, d, a.getOrElse("segment", "BUILDING"))),
-    "late_order_priority" -> ((s, d, a) =>
-      Relational.lateOrderPriority(s, d, a.getOrElse("lag_days", "90").toInt)),
-    "waiting_supplier" -> ((s, d, a) =>
-      Relational.waitingSupplier(s, d, a.getOrElse("lag_days", "90").toInt)),
-    "multi_touch_attribution" -> ((s, d, a) =>
-      Temporal.multiTouchAttribution(s, d,
-        a.getOrElse("window_days", "7").toInt,
-        a.getOrElse("salt_bins", "8").toInt,
-        a.getOrElse("clicks_cap", "0").toInt)),
-    "containment_pairs_sketch" -> ((s, d, a) =>
-      Dedup.containmentPairsSketch(s, d,
-        a.getOrElse("t", "0.8").toDouble,
-        a.getOrElse("k", "128").toInt)),
-    "substring_dedup" -> ((s, d, a) =>
-      Dedup.substringDedup(s, d, a.getOrElse("stride", "1").toInt)),
-    "events_late_audit" -> ((s, d, a) =>
-      graft.streaming.StreamingJobs.eventsLateAudit(s, d,
-        a.getOrElse("delay_minutes", "60").toInt,
-        a.getOrElse("jitter_minutes", "180").toInt)),
-    "ann_cosine_ivfpq_batch" -> ((s, d, a) =>
-      Similarity.annCosineIvfPqBatch(s, d,
-        a.getOrElse("n_probe", "8").toInt,
-        a.getOrElse("n_queries", "10").toLong)),
-    "watermark_delay_curve" -> ((s, d, a) =>
-      graft.streaming.StreamingJobs.watermarkDelayCurve(s, d,
-        a.getOrElse("jitter_minutes", "180").toInt)),
-  )
+  /** One entry per implemented operator from SURVEY.md §2, at its
+    * registered arguments. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (n, q) => n -> q.run }
 
-  /** Arg-TEMPLATED oracle twins for the SQL-expressible
-    * [[queriesWithArgs]] families: each function renders the same DuckDB
-    * SQL the fixed registry uses, with the user argument interpolated —
-    * so a NON-default-arg run stays hash-checkable instead of silently
-    * escaping the oracle gate (the r9 verdict's #4). Contract, pinned by
-    * ArgsSpec: calling an entry with `Map.empty` must reproduce
-    * [[oracleSql]]'s registered string byte-for-byte (the defaults here
-    * mirror [[queriesWithArgs]]' defaults; grep's fixed-registry twin
-    * pins the non-default "(error|scan)" pattern instead, because its
-    * no-args default is reference parity with GREP_PATTERN's "error").
-    * Args that cannot change the RESULT (pure execution knobs: salt
-    * counts, shard counts) are deliberately absent — the registered
-    * string is already valid for any value of those. Verified
-    * end-to-end by `graft.Verify name@arg=value` specs + tools/check.py
-    * (see Verify's scaladoc). */
-  def oracleSqlWithArgs: Map[String, Map[String, String] => String] = Map(
-    "grep" -> (a => TextJobs.grepSqlFor(a.getOrElse("pattern", "error"))),
-    "results_limit" -> (a =>
-      TextJobs.resultsLimitSqlFor(a.getOrElse("limit", "20").toInt)),
-    "bigrams" -> (a =>
-      TextJobs.bigramsSqlFor(a.getOrElse("top_n", "100").toInt)),
-    "events_rolling_24h" -> (a =>
-      Temporal.eventsRolling24hSqlFor(a.getOrElse("window_hours", "24").toInt)),
-    "events_heavy_hitters" -> (a =>
-      Temporal.eventsHeavyHittersSqlFor(a.getOrElse("k", "150").toInt)),
-    "group_sample" -> (a =>
-      Temporal.groupSampleSqlFor(a.getOrElse("k", "3").toInt)),
-    "multi_touch_attribution" -> (a =>
-      Temporal.multiTouchAttributionSqlFor(a.getOrElse("window_days", "7").toInt,
-        a.getOrElse("clicks_cap", "0").toInt)),
-    "basket_rules" -> (a =>
-      Relational.basketRulesSqlFor(a.getOrElse("top_n", "50").toInt,
-        a.getOrElse("max_basket", "256").toInt)),
-    "market_share" -> (a =>
-      Relational.marketShareSqlFor(a.getOrElse("nation", "NATION_5"),
-        a.getOrElse("region", "AMERICA"), a.getOrElse("ptype", "PROMO"))),
-    "local_supplier_volume" -> (a =>
-      Relational.localSupplierVolumeSqlFor(a.getOrElse("region", "ASIA"))),
-    "nation_trade_volume" -> (a =>
-      Relational.nationTradeVolumeSqlFor(
-        a.getOrElse("nation1", "NATION_3"), a.getOrElse("nation2", "NATION_7"))),
-    "large_volume_customers" -> (a =>
-      Relational.largeVolumeCustomersSqlFor(
-        a.getOrElse("min_qty", "250").toLong,
-        a.getOrElse("top_n", "100").toInt)),
-    "part_link_prediction" -> (a =>
-      Relational.partLinkPredictionSqlFor(a.getOrElse("top_n", "50").toInt,
-        a.getOrElse("top_q", "32").toInt,
-        a.getOrElse("max_basket", "256").toInt)),
-    "shard_plan" -> (a =>
-      TextAnalysis.shardPlanSqlFor(
-        a.getOrElse("shard_tokens", "4096").toLong)),
-    "part_name_profit" -> (a =>
-      Relational.partNameProfitSqlFor(a.getOrElse("pattern", "bolt"))),
-    "late_order_priority" -> (a =>
-      Relational.lateOrderPrioritySqlFor(a.getOrElse("lag_days", "90").toInt)),
-    "waiting_supplier" -> (a =>
-      Relational.waitingSupplierSqlFor(a.getOrElse("lag_days", "90").toInt)),
-    "kcore_graph" -> (a =>
-      Similarity.kcoreGraphSqlFor(a.getOrElse("k", "3").toInt,
-        a.getOrElse("core_k", "3").toInt,
-        a.getOrElse("peels", "8").toInt)),
-    "token_histogram" -> (a =>
-      TextAnalysis.tokenHistogramSqlFor(a.getOrElse("bin_tokens", "64").toInt)),
-    "events_late_audit" -> (a =>
-      graft.streaming.StreamingJobs.eventsLateAuditSqlFor(
-        a.getOrElse("delay_minutes", "60").toInt,
-        a.getOrElse("jitter_minutes", "180").toInt)),
-    "watermark_delay_curve" -> (a =>
-      graft.streaming.StreamingJobs.watermarkDelayCurveSqlFor(
-        a.getOrElse("jitter_minutes", "180").toInt)),
-    "substring_dedup" -> (a =>
-      Dedup.substringDedupSqlFor(a.getOrElse("stride", "1").toInt)),
-    "cluster_balanced_sample" -> (a =>
-      Similarity.clusterBalancedSampleSqlFor(
-        a.getOrElse("alpha", "0.5").toDouble)),
-    "label_propagation" -> (a =>
-      Similarity.labelPropagationSqlFor(
-        a.getOrElse("iters", "3").toInt,
-        a.getOrElse("k", "3").toInt,
-        a.getOrElse("mask_mod", "4").toInt,
-        a.getOrElse("edges", "raw"))),
-    "knn_components" -> (a =>
-      Similarity.knnComponentsSqlFor(
-        a.getOrElse("k", "3").toInt,
-        a.getOrElse("edges", "raw"))),
-    "knn_clustering_coeff" -> (a =>
-      Similarity.knnClusteringCoeffSqlFor(a.getOrElse("k", "3").toInt)),
-    "semantic_decontamination" -> (a =>
-      Curation.semanticDecontaminationSqlFor(
-        a.getOrElse("tau", "0.47").toDouble)),
-    "semantic_decontamination_delta" -> (a =>
-      Curation.semanticDecontaminationDeltaSqlFor(
-        a.getOrElse("tau", "0.47").toDouble,
-        a.getOrElse("delta_mod", "10").toLong)),
-    "ingest_drift" -> (a =>
-      Similarity.ingestDriftSqlFor(a.getOrElse("delta_mod", "10").toLong)),
-    "ingest_drift_replay" -> (a =>
-      Similarity.ingestDriftSqlFor(a.getOrElse("delta_mod", "10").toLong)),
-    "crossmodal_retrieval" -> (a =>
-      Multimodal.crossmodalRetrievalSqlFor(
-        a.getOrElse("modality", "image"), a.getOrElse("k", "5").toInt)),
-    "decont_gate_replay" -> (a =>
-      Curation.decontGateReplaySqlFor(
-        a.getOrElse("tau", "0.47").toDouble,
-        a.getOrElse("delta_mod", "10").toLong)),
-    "dedup_gate_replay" -> (a =>
-      Dedup.dedupGateReplaySqlFor(a.getOrElse("delta_mod", "10").toLong)),
-    "quality_drift" -> (a =>
-      TextAnalysis.qualityDriftSqlFor(a.getOrElse("delta_mod", "10").toLong)),
-    "quality_drift_replay" -> (a =>
-      TextAnalysis.qualityDriftSqlFor(a.getOrElse("delta_mod", "10").toLong)),
-  )
+  /** For each key in [[queries]], equivalent ANSI SQL runnable by DuckDB
+    * on the same parquet tables. */
+  lazy val oracleSql: Map[String, String] =
+    registry.map { case (n, q) => n -> q.oracleSql }
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    TextJobs.oracles ++ Relational.oracles ++ Dedup.oracles ++
-      Similarity.oracles ++ TextAnalysis.oracles ++ Multimodal.oracles ++
-      Temporal.oracles ++ Functions.oracles ++ Curation.oracles ++
-      graft.streaming.StreamingJobs.oracles ++
-      graft.operators.TopKAggregator.oracles ++ graft.operators.SkewJoin.oracles ++
-      graft.operators.BucketedJoin.oracles
+  /** The parameterised entries' builders over user arguments; the args
+    * contract is on [[Query]]. */
+  lazy val queriesWithArgs: Map[String, Query.Build] =
+    registry.flatMap { case (n, q) => q.withArgs.map(n -> _) }
+
+  /** The templated entries' DuckDB twins over the same arguments. */
+  lazy val oracleSqlWithArgs: Map[String, Map[String, String] => String] =
+    registry.flatMap { case (n, q) => q.template.map(n -> _) }
 }

@@ -6,19 +6,38 @@ import java.nio.file.{Files, Paths}
   * iteration only; the driver always runs the full set.
   *
   * NON-DEFAULT-ARG specs (local iteration; closes the r9 verdict's #4):
-  * an arg of the form `name@key=val,key2=val2` runs
-  * SparkEntry.queriesWithArgs(name) with that argument map, writes the
-  * result under the full spec string, and emits the ARG-TEMPLATED oracle
-  * from SparkEntry.oracleSqlWithArgs under the same key — so
-  * `tools/check.py SF OUT 'name@key=val'` hash-checks a non-default-arg
-  * run cross-engine exactly like a registered query. A spec naming a
-  * family with no templated oracle fails fast (use the registered entry
-  * or a rows-only check for those). */
+  * an arg of the form `name@key=val,key2=val2` runs the registry entry
+  * `name`'s builder with that argument map, writes the result under the
+  * full spec string, and emits the entry's ARG-TEMPLATED oracle under the
+  * same key — so `tools/check.py SF OUT 'name@key=val'` hash-checks a
+  * non-default-arg run cross-engine exactly like a registered query. A
+  * spec naming an entry with no templated oracle fails fast (use the
+  * registered entry or a rows-only check for those). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1)
     val (argSpecs, plain) = args.drop(2).partition(_.contains("@"))
     val subset = plain.toSet
+    // Parse and validate every arg spec UP FRONT (fail fast, before any
+    // query runs): a malformed spec ('name@k' with no '=') would otherwise
+    // throw outside the per-spec try/catch AFTER some queries already
+    // dumped, aborting before oracle_sql.json is written and leaving the
+    // earlier results uncheckable with no _FAILED marker (ADVICE r10).
+    val parsed = argSpecs.toSeq.map { spec =>
+      val parts = spec.split("@", 2)
+      require(parts.length == 2 && parts(0).nonEmpty,
+        s"malformed arg spec '$spec' — expected name@key=val[,key2=val2]")
+      val argMap = parts(1).split(",").filter(_.nonEmpty).map { kv =>
+        require(kv.contains("="), s"malformed arg spec '$spec' — '$kv' has no '='")
+        val Array(k, v) = kv.split("=", 2); k -> v
+      }.toMap
+      val q = SparkEntry.registry.getOrElse(parts(0), throw new IllegalArgumentException(
+        s"arg spec '$spec': no registry entry named '${parts(0)}'"))
+      require(q.template.isDefined, s"arg spec '$spec': registry entry '${q.name}' " +
+        "has no templated oracle (it is not declared with Query.templated)")
+      // rendering the oracle here runs its argument gates up front too
+      (spec, q.withArgs.get, q.template.get(argMap), argMap)
+    }
     val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
@@ -38,45 +57,6 @@ object Verify {
           Option(e.getMessage).getOrElse(e.getClass.getName))
       }
     }
-    // Validate every arg spec UP FRONT (fail fast, before any query runs):
-    // a malformed spec ('name@k' with no '=') would otherwise throw
-    // MatchError outside the per-spec try/catch AFTER some queries already
-    // dumped, aborting before oracle_sql.json is written and leaving the
-    // earlier results uncheckable with no _FAILED marker (ADVICE r10).
-    argSpecs.foreach { spec =>
-      val parts = spec.split("@", 2)
-      require(parts.length == 2 && parts(0).nonEmpty,
-        s"malformed arg spec '$spec' — expected name@key=val[,key2=val2]")
-      parts(1).split(",").filter(_.nonEmpty).foreach { kv =>
-        require(kv.contains("="),
-          s"malformed arg spec '$spec' — '$kv' has no '='")
-      }
-      require(SparkEntry.oracleSqlWithArgs.contains(parts(0)),
-        s"no templated oracle for '${parts(0)}' — " +
-          "add it to SparkEntry.oracleSqlWithArgs")
-      require(SparkEntry.queriesWithArgs.contains(parts(0)),
-        s"no parameterized query '${parts(0)}' in SparkEntry.queriesWithArgs")
-    }
-    // name@key=val,... specs: parameterized run + templated oracle
-    val argOracles = argSpecs.map { spec =>
-      val Array(name, argStr) = spec.split("@", 2)
-      val argMap = argStr.split(",").filter(_.nonEmpty).map { kv =>
-        val Array(k, v) = kv.split("=", 2); k -> v
-      }.toMap
-      val oracle = SparkEntry.oracleSqlWithArgs.getOrElse(name,
-        sys.error(s"no templated oracle for '$name' — " +
-          "add it to SparkEntry.oracleSqlWithArgs"))(argMap)
-      spark.catalog.clearCache()
-      Files.deleteIfExists(Paths.get(s"$outDir/$spec._FAILED"))
-      try SparkEntry.queriesWithArgs(name)(spark, sfDir, argMap)
-        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$spec")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $spec failed: ${e.getMessage}")
-        Files.writeString(Paths.get(s"$outDir/$spec._FAILED"),
-          Option(e.getMessage).getOrElse(e.getClass.getName))
-      }
-      spec -> oracle
-    }.toMap
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -89,6 +69,19 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    // name@key=val,... specs: parameterized run + templated oracle
+    val argOracles = parsed.map { case (spec, build, oracle, argMap) =>
+      spark.catalog.clearCache()
+      Files.deleteIfExists(Paths.get(s"$outDir/$spec._FAILED"))
+      try build(spark, sfDir, argMap)
+        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$spec")
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] $spec failed: ${e.getMessage}")
+        Files.writeString(Paths.get(s"$outDir/$spec._FAILED"),
+          Option(e.getMessage).getOrElse(e.getClass.getName))
+      }
+      spec -> oracle
+    }.toMap
     val json = (SparkEntry.oracleSql ++ argOracles)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

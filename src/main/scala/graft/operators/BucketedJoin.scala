@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Substrate, Tables}
+import graft.{Query, Substrate, Tables}
 
 /** Write-time co-located join: bucket BOTH fact tables by the join key at
   * write time (`bucketBy` + `sortBy`), so every later join on that key
@@ -55,8 +55,7 @@ object BucketedJoin {
       |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "bucketed_join_orders" -> ((s, d) => bucketedJoinOrders(s, d)))
-  val oracles: Map[String, String] = Map(
-    "bucketed_join_orders" -> bucketedJoinOrdersSql)
+  val queries: Seq[Query] = Seq(
+    Query("bucketed_join_orders", bucketedJoinOrdersSql)(bucketedJoinOrders),
+  )
 }

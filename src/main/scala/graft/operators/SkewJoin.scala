@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Skew-mitigation join: salt the skewed (big) side into `salt` sub-keys
   * and replicate the matching rows of the small side once per sub-key, so
@@ -55,8 +55,7 @@ object SkewJoin {
       |FROM orders JOIN customer ON o_custkey = c_custkey
       |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "salted_join_stats" -> ((s, d) => saltedJoinStats(s, d)))
-  val oracles: Map[String, String] = Map(
-    "salted_join_stats" -> saltedJoinStatsSql)
+  val queries: Seq[Query] = Seq(
+    Query("salted_join_stats", saltedJoinStatsSql)(saltedJoinStats),
+  )
 }

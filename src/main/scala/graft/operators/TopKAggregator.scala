@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Typed custom reducer (SURVEY.md §2.3 R7): the reference ships arbitrary
   * Python `reducer(key, values)` generators; the Spark-native equivalent of
@@ -66,8 +66,7 @@ object TopKAggregator {
       |      FROM orders)
       |WHERE rnk <= 3 ORDER BY o_custkey, rnk""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_custom_topk" -> ((s, d) => customTopKPrices(s, d)))
-  val oracles: Map[String, String] = Map(
-    "agg_custom_topk" -> customTopKPricesSql)
+  val queries: Seq[Query] = Seq(
+    Query("agg_custom_topk", customTopKPricesSql)(customTopKPrices),
+  )
 }

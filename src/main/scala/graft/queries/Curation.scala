@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Substrate, Tables}
+import graft.{Query, Substrate, Tables}
+import graft.Query.ArgOps
 
 /** Corpus-curation operators: the deterministic ordering / budgeting steps
   * between "filtered corpus" and "training shards" in an LLM data pipeline.
@@ -561,9 +562,6 @@ object Curation {
        |ORDER BY l.cosine DESC, l.eval_doc
        |LIMIT $SemDecontTopN""".stripMargin
 
-  val semanticDecontaminationSql: String =
-    semanticDecontaminationSqlFor(SemDecontTau)
-
   private val DecontDeltaMod = 10L
 
   /** INCREMENTAL DECONTAMINATION GATE — the nightly-ingest twin of
@@ -746,9 +744,6 @@ object Curation {
        |ORDER BY l.cosine DESC NULLS LAST, l.train_doc
        |LIMIT $SemDecontTopN""".stripMargin
 
-  val semanticDecontaminationDeltaSql: String =
-    semanticDecontaminationDeltaSqlFor(SemDecontTau, DecontDeltaMod)
-
   /** THE LIVE GATE, ORACLE-GATED — [[decontGateBatch]] (the exact entry
     * point the streaming sink calls per micro-batch) run over the delta
     * shard as its incoming frame, so the gate KERNEL itself — incoming
@@ -781,31 +776,31 @@ object Curation {
        |FROM led
        |ORDER BY cosine DESC NULLS LAST, train_doc""".stripMargin
 
-  val decontGateReplaySql: String =
-    decontGateReplaySqlFor(SemDecontTau, DecontDeltaMod)
-
   // --------------------------------------------------------------------
   // Registration
   // --------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "corpus_shuffle" -> ((s, d) => corpusShuffle(s, d)),
-    "token_budget_sample" -> ((s, d) => tokenBudgetSample(s, d)),
-    "weighted_sample_pps" -> ((s, d) => weightedSamplePps(s, d)),
-    "leakage_safe_split" -> ((s, d) => leakageSafeSplit(s, d)),
-    "split_balance_audit" -> ((s, d) => splitBalanceAudit(s, d)),
-    "semantic_decontamination" -> ((s, d) => semanticDecontamination(s, d)),
-    "semantic_decontamination_delta" ->
-      ((s, d) => semanticDecontaminationDelta(s, d)),
-    "decont_gate_replay" -> ((s, d) => decontGateReplay(s, d)))
-
-  val oracles: Map[String, String] = Map(
-    "corpus_shuffle" -> corpusShuffleSql,
-    "token_budget_sample" -> tokenBudgetSampleSql,
-    "weighted_sample_pps" -> weightedSamplePpsSql,
-    "leakage_safe_split" -> leakageSafeSplitSql,
-    "split_balance_audit" -> splitBalanceAuditSql,
-    "semantic_decontamination" -> semanticDecontaminationSql,
-    "semantic_decontamination_delta" -> semanticDecontaminationDeltaSql,
-    "decont_gate_replay" -> decontGateReplaySql)
+  val queries: Seq[Query] = Seq(
+    Query.args("corpus_shuffle", corpusShuffleSql) { (s, d, a) =>
+      corpusShuffle(s, d, a.int("n_shards", ShuffleShards)) },
+    Query.args("token_budget_sample", tokenBudgetSampleSql) { (s, d, a) =>
+      tokenBudgetSample(s, d, a.long("budget", BudgetDefault)) },
+    Query.args("weighted_sample_pps", weightedSamplePpsSql) { (s, d, a) =>
+      weightedSamplePps(s, d, a.long("k", PpsK)) },
+    Query("leakage_safe_split", leakageSafeSplitSql)(leakageSafeSplit),
+    Query("split_balance_audit", splitBalanceAuditSql)(splitBalanceAudit),
+    Query.templated("semantic_decontamination",
+        a => semanticDecontaminationSqlFor(a.double("tau", SemDecontTau))) { (s, d, a) =>
+      semanticDecontamination(s, d, a.double("tau", SemDecontTau)) },
+    Query.templated("semantic_decontamination_delta",
+        a => semanticDecontaminationDeltaSqlFor(a.double("tau", SemDecontTau),
+        a.long("delta_mod", DecontDeltaMod))) { (s, d, a) =>
+      semanticDecontaminationDelta(s, d, a.double("tau", SemDecontTau),
+          a.long("delta_mod", DecontDeltaMod)) },
+    Query.templated("decont_gate_replay",
+        a => decontGateReplaySqlFor(a.double("tau", SemDecontTau),
+        a.long("delta_mod", DecontDeltaMod))) { (s, d, a) =>
+      decontGateReplay(s, d, a.double("tau", SemDecontTau),
+          a.long("delta_mod", DecontDeltaMod)) },
+  )
 }

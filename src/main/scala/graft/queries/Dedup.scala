@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Substrate, Tables}
+import graft.{Query, Substrate, Tables}
+import graft.Query.ArgOps
 
 /** Deduplication family over `documents` — the training-data-pipeline
   * operators a 100 TB corpus needs (exact, MinHash+LSH, SimHash, n-gram
@@ -370,6 +371,8 @@ object Dedup {
 
   private val SubTokens = 16
 
+  private val SubStride = 1
+
   /** Sliding-window EXACT substring dedup — the granularity
     * [[paraDedup]] can't see: its windows are TILED at fixed
     * [[ParaTokens]] offsets, so a verbatim passage duplicated at an
@@ -407,7 +410,7 @@ object Dedup {
     * merge rule (break when s > prev_s + SubTokens) is stride-
     * independent. No corpus-sized state, nothing broadcast. */
   def substringDedup(spark: SparkSession, sfDir: String,
-                     stride: Int = 1): DataFrame = {
+                     stride: Int = SubStride): DataFrame = {
     require(stride > 0, s"stride must be positive, got $stride")
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(spark, sfDir)
@@ -497,8 +500,6 @@ object Dedup {
        |       ${Det.rSql("CAST(COALESCE(removable_tokens, 0) AS DOUBLE) / n", 6)} AS removable_frac
        |FROM dn LEFT JOIN pd ON dn.doc_id = pd.pd_doc_id
        |ORDER BY dn.doc_id""".stripMargin
-
-  val substringDedupSql: String = substringDedupSqlFor(1)
 
   // --------------------------------------------------------------------
   // Pipeline funnel (the composed keep-mass readout)
@@ -1612,8 +1613,6 @@ object Dedup {
        |FROM inc i LEFT JOIN best b USING (in_doc)
        |ORDER BY jaccard DESC NULLS LAST, in_doc""".stripMargin
 
-  val dedupGateReplaySql: String = dedupGateReplaySqlFor(GateDeltaMod)
-
   // --------------------------------------------------------------------
   // SimHash
   // --------------------------------------------------------------------
@@ -2530,6 +2529,8 @@ object Dedup {
   // Embedding-cosine near-dup
   // --------------------------------------------------------------------
 
+  private val CosineDupThreshold = 0.47
+
   /** Cosine near-dup pairs over `embeddings` (threshold 0.47, data-driven:
     * this corpus's pair distribution tops out at 0.513 with a clear gap
     * below 0.47 — nothing sits near the boundary, so exact compare is
@@ -2556,7 +2557,7 @@ object Dedup {
     * Fold order (sequential 0..63) matches DuckDB's list_dot_product →
     * bit-identical cosines. */
   def embeddingCosineDups(spark: SparkSession, sfDir: String,
-                          threshold: Double = 0.47): DataFrame = {
+                          threshold: Double = CosineDupThreshold): DataFrame = {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
@@ -2813,57 +2814,39 @@ object Dedup {
        |FROM fin f LEFT JOIN dup d ON d.vec_id = f.vec_id
        |ORDER BY f.vec_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "exact_dedup"          -> ((s, d) => exactDedup(s, d)),
-    "para_dedup"           -> ((s, d) => paraDedup(s, d)),
-    "para_dedup_stats"     -> ((s, d) => paraDedupStats(s, d)),
-    "substring_dedup"      -> ((s, d) => substringDedup(s, d)),
-    "pipeline_funnel"      -> ((s, d) => pipelineFunnel(s, d)),
-    "ngram_jaccard_dedup"  -> ((s, d) => ngramJaccardPairs(s, d)),
-    "dedup_threshold_curve" -> ((s, d) => dedupThresholdCurve(s, d)),
-    "containment_pairs"    -> ((s, d) => containmentPairs(s, d)),
-    "containment_pairs_sketch" -> ((s, d) => containmentPairsSketch(s, d)),
-    "containment_sketch_coverage" -> ((s, d) => containmentSketchCoverage(s, d)),
-    "minhash_lsh_dedup"    -> ((s, d) => minhashLshDedup(s, d)),
-    "dedup_gate_replay"    -> ((s, d) => dedupGateReplay(s, d)),
-    "simhash_dedup"        -> ((s, d) => simhashDedup(s, d)),
-    "dup_pair_sources"     -> ((s, d) => dupPairSources(s, d)),
-    "embedding_cosine_dedup" -> ((s, d) => embeddingCosineDups(s, d)),
-    "embedding_dedup_lsh"  -> ((s, d) => embeddingDupsLsh(s, d)),
-    "dedup_clusters"       -> ((s, d) => dedupClusters(s, d)),
-    "dedup_consensus"      -> ((s, d) => dedupConsensus(s, d)),
-    "dedup_delta"          -> ((s, d) => dedupDelta(s, d)),
-    "dedup_canonical"      -> ((s, d) => dedupCanonical(s, d)),
-    "dedup_stats"          -> ((s, d) => dedupStats(s, d)),
-    "dup_cluster_size_dist" -> ((s, d) => dupClusterSizeDist(s, d)),
-    "dedup_method_agreement" -> ((s, d) => dedupMethodAgreement(s, d)),
-    "semdedup"             -> ((s, d) => semDedup(s, d)),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "exact_dedup"          -> exactDedupSql,
-    "para_dedup"           -> paraDedupSql,
-    "para_dedup_stats"     -> paraDedupStatsSql,
-    "substring_dedup"      -> substringDedupSql,
-    "pipeline_funnel"      -> pipelineFunnelSql,
-    "ngram_jaccard_dedup"  -> ngramJaccardPairsSql,
-    "dedup_threshold_curve" -> dedupThresholdCurveSql,
-    "containment_pairs"    -> containmentPairsSql,
-    "containment_pairs_sketch" -> containmentPairsSketchSql,
-    "containment_sketch_coverage" -> containmentSketchCoverageSql,
-    "minhash_lsh_dedup"    -> minhashLshDedupSql,
-    "dedup_gate_replay"    -> dedupGateReplaySql,
-    "simhash_dedup"        -> simhashDedupSql,
-    "dup_pair_sources"     -> dupPairSourcesSql,
-    "embedding_cosine_dedup" -> embeddingCosineDupsSql,
-    "embedding_dedup_lsh"  -> embeddingDupsLshSql,
-    "dedup_clusters"       -> dedupClustersSql,
-    "dedup_consensus"      -> dedupConsensusSql,
-    "dedup_delta"          -> dedupDeltaSql,
-    "dedup_canonical"      -> dedupCanonicalSql,
-    "dedup_stats"          -> dedupStatsSql,
-    "dup_cluster_size_dist" -> dupClusterSizeDistSql,
-    "dedup_method_agreement" -> dedupMethodAgreementSql,
-    "semdedup"             -> semDedupSql,
+  val queries: Seq[Query] = Seq(
+    Query("exact_dedup", exactDedupSql)(exactDedup),
+    Query("para_dedup", paraDedupSql)(paraDedup),
+    Query("para_dedup_stats", paraDedupStatsSql)(paraDedupStats),
+    Query.templated("substring_dedup",
+        a => substringDedupSqlFor(a.int("stride", SubStride))) { (s, d, a) =>
+      substringDedup(s, d, a.int("stride", SubStride)) },
+    Query("pipeline_funnel", pipelineFunnelSql)(pipelineFunnel),
+    Query("ngram_jaccard_dedup", ngramJaccardPairsSql)(ngramJaccardPairs),
+    Query("dedup_threshold_curve", dedupThresholdCurveSql)(dedupThresholdCurve),
+    Query("containment_pairs", containmentPairsSql)(containmentPairs(_, _)),
+    Query.args("containment_pairs_sketch", containmentPairsSketchSql) { (s, d, a) =>
+      containmentPairsSketch(s, d, a.double("t", ContainT), a.int("k", SketchK)) },
+    Query("containment_sketch_coverage", containmentSketchCoverageSql)(containmentSketchCoverage(_, _)),
+    Query("minhash_lsh_dedup", minhashLshDedupSql)(minhashLshDedup),
+    Query.templated("dedup_gate_replay",
+        a => dedupGateReplaySqlFor(a.long("delta_mod", GateDeltaMod))) { (s, d, a) =>
+      dedupGateReplay(s, d, a.long("delta_mod", GateDeltaMod)) },
+    Query("simhash_dedup", simhashDedupSql)(simhashDedup),
+    Query("dup_pair_sources", dupPairSourcesSql)(dupPairSources),
+    Query.args("embedding_cosine_dedup", embeddingCosineDupsSql) { (s, d, a) =>
+      embeddingCosineDups(s, d, a.double("threshold", CosineDupThreshold)) },
+    Query.args("embedding_dedup_lsh", embeddingDupsLshSql) { (s, d, a) =>
+      embeddingDupsLsh(s, d, a.double("threshold", LshDedupThreshold)) },
+    Query("dedup_clusters", dedupClustersSql)(dedupClusters(_, _)),
+    Query("dedup_consensus", dedupConsensusSql)(dedupConsensus),
+    Query.args("dedup_delta", dedupDeltaSql) { (s, d, a) =>
+      dedupDelta(s, d, a.long("delta_mod", DeltaMod)) },
+    Query("dedup_canonical", dedupCanonicalSql)(dedupCanonical),
+    Query("dedup_stats", dedupStatsSql)(dedupStats),
+    Query("dup_cluster_size_dist", dupClusterSizeDistSql)(dupClusterSizeDist),
+    Query("dedup_method_agreement", dedupMethodAgreementSql)(dedupMethodAgreement),
+    Query.args("semdedup", semDedupSql) { (s, d, a) =>
+      semDedup(s, d, a.double("tau", SemTau)) },
   )
 }

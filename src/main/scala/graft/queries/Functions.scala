@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Scalar/array function-library batteries — the breadth axis of the
   * "complete library" claim (the reference exposes only the regex/string
@@ -82,13 +82,8 @@ object Functions {
       |      FROM lineitem GROUP BY l_orderkey)
       |ORDER BY l_orderkey""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "string_battery" -> ((s, d) => stringBattery(s, d)),
-    "array_battery"  -> ((s, d) => arrayBattery(s, d)),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "string_battery" -> stringBatterySql,
-    "array_battery"  -> arrayBatterySql,
+  val queries: Seq[Query] = Seq(
+    Query("string_battery", stringBatterySql)(stringBattery),
+    Query("array_battery", arrayBatterySql)(arrayBattery),
   )
 }

@@ -2,7 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Query, Tables}
+import graft.Query.ArgOps
 
 /** Multimodal-column plumbing: image/audio/video as opaque `binary`
   * payloads + typed metadata, processed by partition-local batch stages —
@@ -232,8 +233,10 @@ object Multimodal {
       }
   }
 
+  private val FrameStride = 16
+
   def mmFrameSample(spark: SparkSession, sfDir: String,
-                    stride: Int = 16): DataFrame =
+                    stride: Int = FrameStride): DataFrame =
     frameSampleDs(spark, sfDir, stride)
       .toDF()
       .select("doc_id", "modality", "n_bytes", "n_frames", "first_frame",
@@ -474,6 +477,8 @@ object Multimodal {
   private val XmodalNProbe = 4
   private val XmodalTopK = 5
 
+  private val XmodalModality = "image"
+
   /** CROSS-MODAL RETRIEVAL — the first retrieval CONSUMER of the
     * multimodal family (r12 verdict #6): "find the top-k `modality`
     * assets for this text query", joining the TEXT-side ANN substrate
@@ -501,7 +506,7 @@ object Multimodal {
     * candidate stream before the window. MultimodalSpec pins recall vs
     * the brute-force cross-modal leg. */
   def crossmodalRetrieval(spark: SparkSession, sfDir: String,
-                          modality: String = "image",
+                          modality: String = XmodalModality,
                           k: Int = XmodalTopK): DataFrame = {
     Args.lit("modality", modality)
     require(k > 0, s"k must be positive, got $k")
@@ -557,28 +562,18 @@ object Multimodal {
        |FROM scored WHERE rank <= $k ORDER BY qid, rank""".stripMargin
   }
 
-  val crossmodalRetrievalSql: String =
-    crossmodalRetrievalSqlFor("image", XmodalTopK)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "crossmodal_retrieval" -> ((s, d) => crossmodalRetrieval(s, d)),
-    "mm_integrity" -> ((s, d) => mmIntegrity(s, d)),
-    "mm_dedup"     -> ((s, d) => mmDedup(s, d)),
-    "mm_near_dedup" -> ((s, d) => mmNearDedup(s, d)),
-    "mm_features"     -> ((s, d) => mmFeatures(s, d)),
-    "mm_frame_sample" -> ((s, d) => mmFrameSample(s, d)),
-    "mm_fusion"       -> ((s, d) => mmFusion(s, d)),
-    "mm_resize"       -> ((s, d) => mmResize(s, d)),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "crossmodal_retrieval" -> crossmodalRetrievalSql,
-    "mm_integrity" -> mmIntegritySql,
-    "mm_dedup"     -> mmDedupSql,
-    "mm_near_dedup" -> mmNearDedupSql,
-    "mm_features"     -> mmFeaturesSql,
-    "mm_frame_sample" -> mmFrameSampleSql,
-    "mm_fusion"       -> mmFusionSql,
-    "mm_resize"       -> mmResizeSql,
+  val queries: Seq[Query] = Seq(
+    Query.templated("crossmodal_retrieval",
+        a => crossmodalRetrievalSqlFor(a.str("modality", XmodalModality),
+        a.int("k", XmodalTopK))) { (s, d, a) =>
+      crossmodalRetrieval(s, d, a.str("modality", XmodalModality), a.int("k", XmodalTopK)) },
+    Query("mm_integrity", mmIntegritySql)(mmIntegrity),
+    Query("mm_dedup", mmDedupSql)(mmDedup),
+    Query("mm_near_dedup", mmNearDedupSql)(mmNearDedup),
+    Query("mm_features", mmFeaturesSql)(mmFeatures),
+    Query.args("mm_frame_sample", mmFrameSampleSql) { (s, d, a) =>
+      mmFrameSample(s, d, a.int("stride", FrameStride)) },
+    Query("mm_fusion", mmFusionSql)(mmFusion),
+    Query("mm_resize", mmResizeSql)(mmResize),
   )
 }

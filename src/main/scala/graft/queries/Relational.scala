@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Substrate, Tables}
+import graft.{Query, Substrate, Tables}
+import graft.Query.ArgOps
 
 /** Relational core over the star-schema fixtures.
   *
@@ -735,8 +736,6 @@ object Relational {
        |        CROSS JOIN nn
        |ORDER BY lift DESC, conf DESC, ant, cons
        |LIMIT $topN""".stripMargin
-
-  val basketRulesSql: String = basketRulesSqlFor(RulesTopN, AffinityMaxBasket)
 
   private val PrIters = 5
   private val PrTopN = 50
@@ -2727,6 +2726,8 @@ object Relational {
   // support shapes a reference user would expect any engine to run
   // --------------------------------------------------------------------
 
+  private val ShipSegment = "BUILDING"
+
   /** SHIPPING PRIORITY (TPC-H Q3 shape): the 10 highest-revenue orders
     * in the BUILDING segment that were placed before the cut date but
     * (partly) shipped after it — the unshipped-backlog report. Shape:
@@ -2738,7 +2739,7 @@ object Relational {
     * sort. Revenue is exact integer cents·(100−disc) summed as
     * decimal(38,0), one final division; ties broken on o_orderkey. */
   def shippingPriority(spark: SparkSession, sfDir: String,
-                       segment: String = "BUILDING"): DataFrame = {
+                       segment: String = ShipSegment): DataFrame = {
     val cut = lit("1998-01-01").cast("timestamp")
     val cust = Tables.customer(spark, sfDir)
       .filter(col("c_mktsegment") === segment).select("c_custkey")
@@ -2863,8 +2864,6 @@ object Relational {
        |GROUP BY o_orderpriority
        |ORDER BY o_orderpriority""".stripMargin
 
-  val lateOrderPrioritySql: String = lateOrderPrioritySqlFor(LateLagDays)
-
   /** TOP SUPPLIER (TPC-H Q15 shape): the supplier(s) with maximum
     * shipped revenue in 1997 — ALL ties kept, the Q15 semantics that
     * makes this a max-subquery shape rather than a top-1 sort. Revenue
@@ -2962,8 +2961,6 @@ object Relational {
       |WHERE os.late = 1 AND po.n_suppliers >= 2 AND po.n_late = 1
       |GROUP BY 1, 2
       |ORDER BY numwait DESC, s_suppkey ASC""".stripMargin
-
-  val waitingSupplierSql: String = waitingSupplierSqlFor(LateLagDays)
 
   /** MONTHLY ORDER BACKLOG — the interval-accounting ledger (how many
     * orders are open at each month end, and how much value they hold):
@@ -3753,9 +3750,6 @@ object Relational {
        |ORDER BY o_year""".stripMargin
   }
 
-  val marketShareSql: String =
-    marketShareSqlFor(ShareNation, ShareRegion, SharePartType)
-
   private val SmallQtyBrand = "Brand#4"
 
   /** TPC-H Q17-shaped small-quantity revenue: total + per-year-average
@@ -3848,9 +3842,6 @@ object Relational {
        |JOIN customer ON o_custkey = c_custkey
        |ORDER BY o_totalprice DESC, o_orderkey
        |LIMIT $topN""".stripMargin
-
-  val largeVolumeCustomersSql: String =
-    largeVolumeCustomersSqlFor(LargeQtyThreshold, LargeVolTopN)
 
   /** TPC-H Q19-shaped disjunctive-predicate revenue: three
     * (brand, size-range, quantity-range) branches OR-ed together. The
@@ -4000,8 +3991,6 @@ object Relational {
        |GROUP BY 1, 2
        |ORDER BY nation, o_year DESC""".stripMargin
   }
-
-  val partNameProfitSql: String = partNameProfitSqlFor(ProfitNamePattern)
 
   private val OrderDistPriority = "1-URGENT"
 
@@ -4401,8 +4390,6 @@ object Relational {
        |ORDER BY revenue DESC, nation""".stripMargin
   }
 
-  val localSupplierVolumeSql: String = localSupplierVolumeSqlFor(LocalVolRegion)
-
   /** TPC-H Q6-shaped revenue-uplift forecast: the revenue that would be
     * RECLAIMED by eliminating small discounts on small-quantity orders —
     * Σ price·discount over the 5–7% discount band at quantity < 24,
@@ -4515,9 +4502,6 @@ object Relational {
        |GROUP BY 1, 2, 3
        |ORDER BY 1, 2, 3""".stripMargin
   }
-
-  val nationTradeVolumeSql: String =
-    nationTradeVolumeSqlFor(TradeNation1, TradeNation2)
 
   /** RFM SEGMENT ROLLUP — the population-quantile companion of
     * [[rfmSegments]] (which emits the per-customer feature ledger with
@@ -4775,166 +4759,113 @@ object Relational {
        |ORDER BY cn DESC, union_sz, part_a, part_b
        |LIMIT $topN""".stripMargin
 
-  val partLinkPredictionSql: String =
-    partLinkPredictionSqlFor(LinkTopN, LinkTopQ, AffinityMaxBasket)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "market_share"        -> ((s, d) => marketShare(s, d)),
-    "small_qty_revenue"   -> ((s, d) => smallQtyRevenue(s, d)),
-    "large_volume_customers" -> ((s, d) => largeVolumeCustomers(s, d)),
-    "disc_revenue_brands" -> ((s, d) => discRevenueBrands(s, d)),
-    "dormant_high_balance" -> ((s, d) => dormantHighBalance(s, d)),
-    "part_name_profit"    -> ((s, d) => partNameProfit(s, d)),
-    "customer_order_dist" -> ((s, d) => customerOrderDist(s, d)),
-    "region_part_value"   -> ((s, d) => regionPartValue(s, d)),
-    "min_cost_supplier"   -> ((s, d) => minCostSupplier(s, d)),
-    "supplier_part_counts" -> ((s, d) => supplierPartCounts(s, d)),
-    "dominant_ship_suppliers" -> ((s, d) => dominantShipSuppliers(s, d)),
-    "returned_item_losses" -> ((s, d) => returnedItemLosses(s, d)),
-    "local_supplier_volume" -> ((s, d) => localSupplierVolume(s, d)),
-    "forecast_revenue_uplift" -> ((s, d) => forecastRevenueUplift(s, d)),
-    "nation_trade_volume" -> ((s, d) => nationTradeVolume(s, d)),
-    "customer_rfm" -> ((s, d) => customerRfm(s, d)),
-    "part_link_prediction" -> ((s, d) => partLinkPrediction(s, d)),
-    "orders_gini"         -> ((s, d) => ordersGini(s, d)),
-    "parts_abc_class"     -> ((s, d) => partsAbcClass(s, d)),
-    "km_ship_survival"    -> ((s, d) => kmShipSurvival(s, d)),
-    "revenue_ewma_anomaly" -> ((s, d) => revenueEwmaAnomaly(s, d)),
-    "revenue_bridge"      -> ((s, d) => revenueBridge(s, d)),
-    "benford_audit"       -> ((s, d) => benfordAudit(s, d)),
-    "rfm_segments"        -> ((s, d) => rfmSegments(s, d)),
-    "window_battery"      -> ((s, d) => windowBattery(s, d)),
-    "zorder_orders"       -> ((s, d) => zorderOrders(s, d)),
-    "orders_forecast_snaive" -> ((s, d) => ordersForecastSnaive(s, d)),
-    "revenue_cusum"       -> ((s, d) => revenueCusum(s, d)),
-    "revenue_changepoint" -> ((s, d) => revenueChangepoint(s, d)),
-    "k_anonymity"         -> ((s, d) => kAnonymity(s, d)),
-    "revenue_pareto_share" -> ((s, d) => revenueParetoShare(s, d)),
-    "nation_revenue_yoy"  -> ((s, d) => nationRevenueYoy(s, d)),
-    "orders_recon"        -> ((s, d) => ordersRecon(s, d)),
-    "shipping_priority"   -> ((s, d) => shippingPriority(s, d)),
-    "promo_revenue"       -> ((s, d) => promoRevenue(s, d)),
-    "late_order_priority" -> ((s, d) => lateOrderPriority(s, d)),
-    "top_supplier"        -> ((s, d) => topSupplier(s, d)),
-    "waiting_supplier"    -> ((s, d) => waitingSupplier(s, d)),
-    "grouping_sets_orders" -> ((s, d) => groupingSetsOrders(s, d)),
-    "order_backlog_monthly" -> ((s, d) => orderBacklogMonthly(s, d)),
-    "supplier_hhi"        -> ((s, d) => supplierHhi(s, d)),
-    "revenue_trend_theilsen" -> ((s, d) => revenueTrendTheilSen(s, d)),
-    "l_diversity"         -> ((s, d) => lDiversity(s, d)),
-    "t_closeness"         -> ((s, d) => tCloseness(s, d)),
-    "basket_rules"        -> ((s, d) => basketRules(s, d)),
-    "corr_matrix"         -> ((s, d) => corrMatrix(s, d)),
-    "mv_refresh_incremental" -> ((s, d) => mvRefreshIncremental(s, d)),
-    "table_profile"       -> ((s, d) => tableProfile(s, d)),
-    "table_profile_approx" -> ((s, d) => tableProfileApprox(s, d)),
-    "dq_violations"       -> ((s, d) => dqViolations(s, d)),
-    "bloom_semi_join"     -> ((s, d) => bloomSemiJoin(s, d)),
-    "skyline_parts"       -> ((s, d) => skylineParts(s, d)),
-    "fuzzy_join_parts"    -> ((s, d) => fuzzyJoinParts(s, d)),
-    "entity_resolution"   -> ((s, d) => entityResolution(s, d)),
-    "pricing_summary"     -> ((s, d) => pricingSummary(s, d)),
-    "distinct_agg"        -> ((s, d) => distinctAgg(s, d)),
-    "rollup_orders"       -> ((s, d) => rollupOrders(s, d)),
-    "cube_orders"         -> ((s, d) => cubeOrders(s, d)),
-    "stats_agg"           -> ((s, d) => statsAgg(s, d)),
-    "percentile_prices"   -> ((s, d) => percentilePrices(s, d)),
-    "regional_revenue"    -> ((s, d) => regionalRevenue(s, d)),
-    "customer_order_stats"-> ((s, d) => customerOrderStats(s, d)),
-    "semi_join_heavy"     -> ((s, d) => semiJoinHeavyOrders(s, d)),
-    "anti_join_idle"      -> ((s, d) => antiJoinIdleCustomers(s, d)),
-    "window_top_orders"   -> ((s, d) => windowTopOrders(s, d)),
-    "window_running_spend"-> ((s, d) => windowRunningSpend(s, d)),
-    "window_order_gaps"   -> ((s, d) => windowOrderGaps(s, d)),
-    "top_parts_revenue"   -> ((s, d) => topPartsByRevenue(s, d)),
-    "set_ops_nations"     -> ((s, d) => setOpsNations(s, d)),
-    "distinct_part_kinds" -> ((s, d) => distinctPartKinds(s, d)),
-    "scalar_battery"      -> ((s, d) => scalarBattery(s, d)),
-    "approx_distinct_parts" -> ((s, d) => approxDistinctParts(s, d)),
-    "sql_above_avg_orders" -> ((s, d) => sqlAboveAvgOrders(s, d)),
-    "part_affinity"       -> ((s, d) => partAffinity(s, d)),
-    "part_pagerank"       -> ((s, d) => partPagerank(s, d)),
-    "triangle_count"      -> ((s, d) => triangleCount(s, d)),
-    "key_skew_report"     -> ((s, d) => keySkewReport(s, d)),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "market_share"         -> marketShareSql,
-    "small_qty_revenue"    -> smallQtyRevenueSql,
-    "large_volume_customers" -> largeVolumeCustomersSql,
-    "disc_revenue_brands"  -> discRevenueBrandsSql,
-    "dormant_high_balance" -> dormantHighBalanceSql,
-    "part_name_profit"     -> partNameProfitSql,
-    "customer_order_dist"  -> customerOrderDistSql,
-    "region_part_value"    -> regionPartValueSql,
-    "min_cost_supplier"    -> minCostSupplierSql,
-    "supplier_part_counts" -> supplierPartCountsSql,
-    "dominant_ship_suppliers" -> dominantShipSuppliersSql,
-    "returned_item_losses" -> returnedItemLossesSql,
-    "local_supplier_volume" -> localSupplierVolumeSql,
-    "forecast_revenue_uplift" -> forecastRevenueUpliftSql,
-    "nation_trade_volume" -> nationTradeVolumeSql,
-    "customer_rfm" -> customerRfmSql,
-    "part_link_prediction" -> partLinkPredictionSql,
-    "benford_audit"        -> benfordAuditSql,
-    "revenue_bridge"       -> revenueBridgeSql,
-    "revenue_ewma_anomaly" -> revenueEwmaAnomalySql,
-    "km_ship_survival"     -> kmShipSurvivalSql,
-    "parts_abc_class"      -> partsAbcClassSql,
-    "orders_gini"          -> ordersGiniSql,
-    "rfm_segments"         -> rfmSegmentsSql,
-    "window_battery"       -> windowBatterySql,
-    "zorder_orders"        -> zorderOrdersSql,
-    "orders_forecast_snaive" -> ordersForecastSnaiveSql,
-    "revenue_cusum"        -> revenueCusumSql,
-    "revenue_changepoint"  -> revenueChangepointSql,
-    "k_anonymity"          -> kAnonymitySql,
-    "revenue_pareto_share" -> revenueParetoShareSql,
-    "nation_revenue_yoy"   -> nationRevenueYoySql,
-    "orders_recon"         -> ordersReconSql,
-    "shipping_priority"    -> shippingPrioritySql,
-    "promo_revenue"        -> promoRevenueSql,
-    "late_order_priority"  -> lateOrderPrioritySql,
-    "top_supplier"         -> topSupplierSql,
-    "waiting_supplier"     -> waitingSupplierSql,
-    "grouping_sets_orders" -> groupingSetsOrdersSql,
-    "order_backlog_monthly" -> orderBacklogMonthlySql,
-    "supplier_hhi"         -> supplierHhiSql,
-    "revenue_trend_theilsen" -> revenueTrendTheilSenSql,
-    "l_diversity"          -> lDiversitySql,
-    "t_closeness"          -> tClosenessSql,
-    "basket_rules"         -> basketRulesSql,
-    "corr_matrix"          -> corrMatrixSql,
-    "mv_refresh_incremental" -> mvRefreshIncrementalSql,
-    "table_profile"        -> tableProfileSql,
-    "table_profile_approx" -> tableProfileApproxSql,
-    "dq_violations"        -> dqViolationsSql,
-    "bloom_semi_join"      -> bloomSemiJoinSql,
-    "skyline_parts"        -> skylinePartsSql,
-    "fuzzy_join_parts"     -> fuzzyJoinPartsSql,
-    "entity_resolution"    -> entityResolutionSql,
-    "pricing_summary"      -> pricingSummarySql,
-    "distinct_agg"         -> distinctAggSql,
-    "rollup_orders"        -> rollupOrdersSql,
-    "cube_orders"          -> cubeOrdersSql,
-    "stats_agg"            -> statsAggSql,
-    "percentile_prices"    -> percentilePricesSql,
-    "regional_revenue"     -> regionalRevenueSql,
-    "customer_order_stats" -> customerOrderStatsSql,
-    "semi_join_heavy"      -> semiJoinHeavyOrdersSql,
-    "anti_join_idle"       -> antiJoinIdleCustomersSql,
-    "window_top_orders"    -> windowTopOrdersSql,
-    "window_running_spend" -> windowRunningSpendSql,
-    "window_order_gaps"    -> windowOrderGapsSql,
-    "top_parts_revenue"    -> topPartsByRevenueSql,
-    "set_ops_nations"      -> setOpsNationsSql,
-    "distinct_part_kinds"  -> distinctPartKindsSql,
-    "scalar_battery"       -> scalarBatterySql,
-    "sql_above_avg_orders" -> sqlAboveAvgOrdersSql,
-    "part_affinity"        -> partAffinitySql,
-    "part_pagerank"        -> partPagerankSql,
-    "triangle_count"       -> triangleCountSql,
-    "key_skew_report"      -> keySkewReportSql,
-    "approx_distinct_parts" -> approxDistinctPartsSql,
+  val queries: Seq[Query] = Seq(
+    Query.templated("market_share", a => marketShareSqlFor(a.str("nation", ShareNation),
+        a.str("region", ShareRegion), a.str("ptype", SharePartType))) { (s, d, a) =>
+      marketShare(s, d, a.str("nation", ShareNation), a.str("region", ShareRegion),
+          a.str("ptype", SharePartType)) },
+    Query("small_qty_revenue", smallQtyRevenueSql)(smallQtyRevenue),
+    Query.templated("large_volume_customers",
+        a => largeVolumeCustomersSqlFor(a.long("min_qty", LargeQtyThreshold),
+        a.int("top_n", LargeVolTopN))) { (s, d, a) =>
+      largeVolumeCustomers(s, d, a.long("min_qty", LargeQtyThreshold),
+          a.int("top_n", LargeVolTopN)) },
+    Query("disc_revenue_brands", discRevenueBrandsSql)(discRevenueBrands),
+    Query("dormant_high_balance", dormantHighBalanceSql)(dormantHighBalance),
+    Query.templated("part_name_profit",
+        a => partNameProfitSqlFor(a.str("pattern", ProfitNamePattern))) { (s, d, a) =>
+      partNameProfit(s, d, a.str("pattern", ProfitNamePattern)) },
+    Query("customer_order_dist", customerOrderDistSql)(customerOrderDist),
+    Query("region_part_value", regionPartValueSql)(regionPartValue),
+    Query("min_cost_supplier", minCostSupplierSql)(minCostSupplier),
+    Query("supplier_part_counts", supplierPartCountsSql)(supplierPartCounts),
+    Query("dominant_ship_suppliers", dominantShipSuppliersSql)(dominantShipSuppliers),
+    Query("returned_item_losses", returnedItemLossesSql)(returnedItemLosses),
+    Query.templated("local_supplier_volume",
+        a => localSupplierVolumeSqlFor(a.str("region", LocalVolRegion))) { (s, d, a) =>
+      localSupplierVolume(s, d, a.str("region", LocalVolRegion)) },
+    Query("forecast_revenue_uplift", forecastRevenueUpliftSql)(forecastRevenueUplift),
+    Query.templated("nation_trade_volume",
+        a => nationTradeVolumeSqlFor(a.str("nation1", TradeNation1),
+        a.str("nation2", TradeNation2))) { (s, d, a) =>
+      nationTradeVolume(s, d, a.str("nation1", TradeNation1), a.str("nation2", TradeNation2)) },
+    Query("customer_rfm", customerRfmSql)(customerRfm),
+    Query.templated("part_link_prediction",
+        a => partLinkPredictionSqlFor(a.int("top_n", LinkTopN), a.int("top_q", LinkTopQ),
+        a.int("max_basket", AffinityMaxBasket))) { (s, d, a) =>
+      partLinkPrediction(s, d, a.int("top_n", LinkTopN), a.int("top_q", LinkTopQ),
+          a.int("max_basket", AffinityMaxBasket)) },
+    Query("orders_gini", ordersGiniSql)(ordersGini),
+    Query("parts_abc_class", partsAbcClassSql)(partsAbcClass),
+    Query("km_ship_survival", kmShipSurvivalSql)(kmShipSurvival),
+    Query("revenue_ewma_anomaly", revenueEwmaAnomalySql)(revenueEwmaAnomaly),
+    Query("revenue_bridge", revenueBridgeSql)(revenueBridge),
+    Query("benford_audit", benfordAuditSql)(benfordAudit),
+    Query("rfm_segments", rfmSegmentsSql)(rfmSegments),
+    Query("window_battery", windowBatterySql)(windowBattery),
+    Query("zorder_orders", zorderOrdersSql)(zorderOrders),
+    Query("orders_forecast_snaive", ordersForecastSnaiveSql)(ordersForecastSnaive),
+    Query("revenue_cusum", revenueCusumSql)(revenueCusum),
+    Query("revenue_changepoint", revenueChangepointSql)(revenueChangepoint),
+    Query("k_anonymity", kAnonymitySql)(kAnonymity),
+    Query("revenue_pareto_share", revenueParetoShareSql)(revenueParetoShare),
+    Query("nation_revenue_yoy", nationRevenueYoySql)(nationRevenueYoy),
+    Query("orders_recon", ordersReconSql)(ordersRecon),
+    Query.args("shipping_priority", shippingPrioritySql) { (s, d, a) =>
+      shippingPriority(s, d, a.str("segment", ShipSegment)) },
+    Query("promo_revenue", promoRevenueSql)(promoRevenue),
+    Query.templated("late_order_priority",
+        a => lateOrderPrioritySqlFor(a.int("lag_days", LateLagDays))) { (s, d, a) =>
+      lateOrderPriority(s, d, a.int("lag_days", LateLagDays)) },
+    Query("top_supplier", topSupplierSql)(topSupplier),
+    Query.templated("waiting_supplier",
+        a => waitingSupplierSqlFor(a.int("lag_days", LateLagDays))) { (s, d, a) =>
+      waitingSupplier(s, d, a.int("lag_days", LateLagDays)) },
+    Query("grouping_sets_orders", groupingSetsOrdersSql)(groupingSetsOrders),
+    Query("order_backlog_monthly", orderBacklogMonthlySql)(orderBacklogMonthly),
+    Query("supplier_hhi", supplierHhiSql)(supplierHhi),
+    Query("revenue_trend_theilsen", revenueTrendTheilSenSql)(revenueTrendTheilSen),
+    Query("l_diversity", lDiversitySql)(lDiversity),
+    Query("t_closeness", tClosenessSql)(tCloseness),
+    Query.templated("basket_rules", a => basketRulesSqlFor(a.int("top_n", RulesTopN),
+        a.int("max_basket", AffinityMaxBasket))) { (s, d, a) =>
+      basketRules(s, d, a.int("top_n", RulesTopN), a.int("max_basket", AffinityMaxBasket)) },
+    Query("corr_matrix", corrMatrixSql)(corrMatrix),
+    Query("mv_refresh_incremental", mvRefreshIncrementalSql)(mvRefreshIncremental),
+    Query("table_profile", tableProfileSql)(tableProfile),
+    Query("table_profile_approx", tableProfileApproxSql)(tableProfileApprox),
+    Query("dq_violations", dqViolationsSql)(dqViolations),
+    Query("bloom_semi_join", bloomSemiJoinSql)(bloomSemiJoin),
+    Query("skyline_parts", skylinePartsSql)(skylineParts),
+    Query.args("fuzzy_join_parts", fuzzyJoinPartsSql) { (s, d, a) =>
+      fuzzyJoinParts(s, d, a.int("max_dist", FuzzyMaxDist)) },
+    Query.args("entity_resolution", entityResolutionSql) { (s, d, a) =>
+      entityResolution(s, d, a.int("max_dist", FuzzyMaxDist)) },
+    Query("pricing_summary", pricingSummarySql)(pricingSummary),
+    Query("distinct_agg", distinctAggSql)(distinctAgg),
+    Query("rollup_orders", rollupOrdersSql)(rollupOrders),
+    Query("cube_orders", cubeOrdersSql)(cubeOrders),
+    Query("stats_agg", statsAggSql)(statsAgg),
+    Query("percentile_prices", percentilePricesSql)(percentilePrices),
+    Query("regional_revenue", regionalRevenueSql)(regionalRevenue),
+    Query("customer_order_stats", customerOrderStatsSql)(customerOrderStats),
+    Query("semi_join_heavy", semiJoinHeavyOrdersSql)(semiJoinHeavyOrders),
+    Query("anti_join_idle", antiJoinIdleCustomersSql)(antiJoinIdleCustomers),
+    Query("window_top_orders", windowTopOrdersSql)(windowTopOrders),
+    Query("window_running_spend", windowRunningSpendSql)(windowRunningSpend),
+    Query("window_order_gaps", windowOrderGapsSql)(windowOrderGaps),
+    Query("top_parts_revenue", topPartsByRevenueSql)(topPartsByRevenue),
+    Query("set_ops_nations", setOpsNationsSql)(setOpsNations),
+    Query("distinct_part_kinds", distinctPartKindsSql)(distinctPartKinds),
+    Query("scalar_battery", scalarBatterySql)(scalarBattery),
+    Query("approx_distinct_parts", approxDistinctPartsSql)(approxDistinctParts),
+    Query("sql_above_avg_orders", sqlAboveAvgOrdersSql)(sqlAboveAvgOrders),
+    Query.args("part_affinity", partAffinitySql) { (s, d, a) =>
+      partAffinity(s, d, a.int("top_n", AffinityTopN), a.int("max_basket", AffinityMaxBasket)) },
+    Query.args("part_pagerank", partPagerankSql) { (s, d, a) =>
+      partPagerank(s, d, a.int("top_n", PrTopN), a.int("max_basket", AffinityMaxBasket)) },
+    Query.args("triangle_count", triangleCountSql) { (s, d, a) =>
+      triangleCount(s, d, a.int("max_basket", AffinityMaxBasket)) },
+    Query("key_skew_report", keySkewReportSql)(keySkewReport(_, _)),
   )
 }

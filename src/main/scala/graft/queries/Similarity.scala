@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Substrate, Tables}
+import graft.{Query, Substrate, Tables}
+import graft.Query.ArgOps
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (`embedding: array<float>`, 64-dim).
@@ -767,6 +768,8 @@ object Similarity {
        |FROM x JOIN st USING (dim)
        |ORDER BY vec_id, dim""".stripMargin
 
+  private val KnnEdges = "raw"
+
   /** SEMANTIC CLUSTERS: connected components of the kNN graph — the
     * unsupervised "what topical islands does this corpus contain"
     * readout (SemDeDup clusters per prototype; this labels EVERY
@@ -779,7 +782,7 @@ object Similarity {
     * semantics. Oracle: recursive min-reachability closure over the
     * shared kNN edge CTE chain. */
   def knnComponents(spark: SparkSession, sfDir: String,
-                    k: Int = KnnK, edges: String = "raw"): DataFrame =
+                    k: Int = KnnK, edges: String = KnnEdges): DataFrame =
     componentsOver(spark, edgeFrameFor(spark, sfDir, k, edges))
 
   /** [[knnComponents]] over an EXPLICIT directed edge frame (vec_id,
@@ -830,8 +833,6 @@ object Similarity {
        |       count(*) OVER (PARTITION BY cluster_id) AS n_members
        |FROM lab ORDER BY vec_id""".stripMargin
   }
-
-  val knnComponentsSql: String = knnComponentsSqlFor(KnnK, "raw")
 
   /** IVF-PARTITION MODULARITY: how well the coarse quantizer's cells
     * respect the kNN neighborhood structure — per cell, member count,
@@ -1088,7 +1089,7 @@ object Similarity {
   def labelPropagation(spark: SparkSession, sfDir: String,
                        iters: Int = LpIters, k: Int = KnnK,
                        maskMod: Int = LpMaskMod,
-                       edges: String = "raw"): DataFrame =
+                       edges: String = KnnEdges): DataFrame =
     labelPropagationOver(spark,
       edgeFrameFor(spark, sfDir, k, edges).select("vec_id", "neighbor"),
       Tables.embeddings(spark, sfDir), iters, maskMod)
@@ -1260,8 +1261,6 @@ object Similarity {
        |SELECT a AS vec_id, count(*) AS degree
        |FROM ke$nPeels GROUP BY a ORDER BY vec_id""".stripMargin
   }
-
-  val kcoreGraphSql: String = kcoreGraphSqlFor(KnnK, KcoreK, KcorePeels)
 
   // --------------------------------------------------------------------
   // Hard-negative mining (contrastive training pairs)
@@ -2052,9 +2051,6 @@ object Similarity {
        |FROM cbs_rk r JOIN cbs_qt q ON q.cell = r.cell
        |WHERE r.rk <= q.quota
        |ORDER BY r.vec_id""".stripMargin
-
-  lazy val clusterBalancedSampleSql: String =
-    clusterBalancedSampleSqlFor(ClusterSampleAlpha)
 
   /** DuckDB twin of [[annCosineIvfMp]] — the [[ivfChain]] at
     * [[NProbeMp]], same scoring tail as [[annCosineIvfSql]]. */
@@ -3794,8 +3790,6 @@ object Similarity {
        |            AS BIGINT) AS avg_cc_ppm
        |FROM cc GROUP BY 1 ORDER BY 1""".stripMargin
 
-  lazy val knnClusteringCoeffSql: String = knnClusteringCoeffSqlFor(KnnK)
-
   /** RRF smoothing constant — the standard k₀=60 from the original
     * reciprocal-rank-fusion formulation, shared with the oracle. */
   private val RrfK0 = 60
@@ -4109,99 +4103,82 @@ object Similarity {
        |FROM dev CROSS JOIN roll r
        |ORDER BY cell""".stripMargin
 
-  val ingestDriftSql: String = ingestDriftSqlFor(DriftDeltaMod)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ingest_drift" -> ((s, d) => ingestDrift(s, d)),
-    "ingest_drift_replay" -> ((s, d) => ingestDriftReplay(s, d)),
-    "ann_rrf_fusion" -> ((s, d) => annRrfFusion(s, d)),
-    "knn_ppr" -> ((s, d) => knnPpr(s, d)),
-    "knn_clustering_coeff" -> ((s, d) => knnClusteringCoeff(s, d)),
-    "embedding_pca_top" -> ((s, d) => embeddingPcaTop(s, d)),
-    "ann_cosine_topk" -> ((s, d) => bruteForceTopK(s, d)),
-    "matryoshka_recall" -> ((s, d) => matryoshkaRecall(s, d)),
-    "ann_cosine_lsh"  -> ((s, d) => annCosineLsh(s, d)),
-    "ann_cosine_ivf"  -> ((s, d) => annCosineIvf(s, d)),
-    "ann_cosine_ivf_mp" -> ((s, d) => annCosineIvfMp(s, d)),
-    "embedding_quantize" -> ((s, d) => embeddingQuantize(s, d)),
-    "embedding_dim_stats" -> ((s, d) => embeddingDimStats(s, d)),
-    "ann_cosine_topk_q8" -> ((s, d) => quantizedTopK(s, d)),
-    "embedding_centroids" -> ((s, d) => embeddingCentroids(s, d)),
-    "centroid_assign" -> ((s, d) => centroidAssign(s, d)),
-    "embedding_pq" -> ((s, d) => embeddingPq(s, d)),
-    "ann_cosine_pq" -> ((s, d) => annCosinePq(s, d)),
-    "embedding_outliers" -> ((s, d) => embeddingOutliers(s, d)),
-    "ann_cosine_ivfpq" -> ((s, d) => annCosineIvfPq(s, d)),
-    "ann_cosine_pq_rerank" -> ((s, d) => annCosinePqRerank(s, d)),
-    "ann_cosine_ivfpq_rerank" -> ((s, d) => annCosineIvfPqRerank(s, d)),
-    "ann_cosine_ivfpq_res" -> ((s, d) => annCosineIvfPqRes(s, d)),
-    "ann_cosine_ivfpq_batch" -> ((s, d) => annCosineIvfPqBatch(s, d)),
-    "knn_graph" -> ((s, d) => knnGraph(s, d)),
-    "knn_mutual" -> ((s, d) => knnMutual(s, d)),
-    "cluster_balanced_sample" -> ((s, d) => clusterBalancedSample(s, d)),
-    "knn_reciprocity" -> ((s, d) => knnReciprocity(s, d)),
-    "embedding_rp" -> ((s, d) => embeddingRp(s, d)),
-    "label_propagation" -> ((s, d) => labelPropagation(s, d)),
-    "kcore_graph" -> ((s, d) => kcoreGraph(s, d)),
-    "embedding_drift" -> ((s, d) => embeddingDrift(s, d)),
-    "ann_cosine_lsh_mp" -> ((s, d) => annCosineLshMultiprobe(s, d)),
-    "knn_delta" -> ((s, d) => knnDelta(s, d)),
-    "knn_components" -> ((s, d) => knnComponents(s, d)),
-    "ivf_modularity" -> ((s, d) => ivfModularity(s, d)),
-    "ivf_nprobe_curve" -> ((s, d) => ivfNprobeCurve(s, d)),
-    "seed_expansion" -> ((s, d) => seedExpansion(s, d)),
-    "embedding_standardize" -> ((s, d) => embeddingStandardize(s, d)),
-    "hard_negatives" -> ((s, d) => hardNegatives(s, d)),
-    "knn_coherence" -> ((s, d) => knnCoherence(s, d)),
-    "mmr_diversify" -> ((s, d) => mmrDiversify(s, d)),
-    "ann_cosine_filtered" -> ((s, d) => annCosineFiltered(s, d)),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "ingest_drift" -> ingestDriftSql,
-    "ingest_drift_replay" -> ingestDriftSql,
-    "embedding_pca_top" -> embeddingPcaTopSql,
-    "ann_rrf_fusion" -> annRrfFusionSql,
-    "knn_ppr" -> knnPprSql,
-    "knn_clustering_coeff" -> knnClusteringCoeffSql,
-    "ann_cosine_topk" -> bruteForceTopKSql,
-    "matryoshka_recall" -> matryoshkaRecallSql,
-    "embedding_quantize" -> embeddingQuantizeSql,
-    "embedding_dim_stats" -> embeddingDimStatsSql,
-    "ann_cosine_topk_q8" -> quantizedTopKSql,
-    "embedding_centroids" -> embeddingCentroidsSql,
-    "centroid_assign" -> centroidAssignSql,
-    "ann_cosine_lsh" -> annCosineLshSql,
-    "ann_cosine_ivf" -> annCosineIvfSql,
-    "ann_cosine_ivf_mp" -> annCosineIvfMpSql,
-    "embedding_pq" -> embeddingPqSql,
-    "ann_cosine_pq" -> annCosinePqSql,
-    "embedding_outliers" -> embeddingOutliersSql,
-    "ann_cosine_ivfpq" -> annCosineIvfPqSql,
-    "ann_cosine_pq_rerank" -> annCosinePqRerankSql,
-    "ann_cosine_ivfpq_rerank" -> annCosineIvfPqRerankSql,
-    "ann_cosine_ivfpq_res" -> annCosineIvfPqResSql,
+  val queries: Seq[Query] = Seq(
+    Query.templated("ingest_drift",
+        a => ingestDriftSqlFor(a.long("delta_mod", DriftDeltaMod))) { (s, d, a) =>
+      ingestDrift(s, d, a.long("delta_mod", DriftDeltaMod)) },
+    Query.templated("ingest_drift_replay",
+        a => ingestDriftSqlFor(a.long("delta_mod", DriftDeltaMod))) { (s, d, a) =>
+      ingestDriftReplay(s, d, a.long("delta_mod", DriftDeltaMod)) },
+    Query("ann_rrf_fusion", annRrfFusionSql)(annRrfFusion(_, _)),
+    Query("knn_ppr", knnPprSql)(knnPpr),
+    Query.templated("knn_clustering_coeff",
+        a => knnClusteringCoeffSqlFor(a.int("k", KnnK))) { (s, d, a) =>
+      knnClusteringCoeff(s, d, a.int("k", KnnK)) },
+    Query("embedding_pca_top", embeddingPcaTopSql)(embeddingPcaTop(_, _)),
+    Query.args("ann_cosine_topk", bruteForceTopKSql) { (s, d, a) =>
+      bruteForceTopK(s, d, a.int("k", TopK)) },
+    Query("matryoshka_recall", matryoshkaRecallSql)(matryoshkaRecall),
+    Query("ann_cosine_lsh", annCosineLshSql)(annCosineLsh),
+    Query.args("ann_cosine_ivf", annCosineIvfSql) { (s, d, a) =>
+      annCosineIvf(s, d, a.int("n_probe", NProbe)) },
+    Query("ann_cosine_ivf_mp", annCosineIvfMpSql)(annCosineIvfMp),
+    Query("embedding_quantize", embeddingQuantizeSql)(embeddingQuantize),
+    Query("embedding_dim_stats", embeddingDimStatsSql)(embeddingDimStats),
+    Query("ann_cosine_topk_q8", quantizedTopKSql)(quantizedTopK(_, _)),
+    Query("embedding_centroids", embeddingCentroidsSql)(embeddingCentroids),
+    Query("centroid_assign", centroidAssignSql)(centroidAssign),
+    Query("embedding_pq", embeddingPqSql)(embeddingPq),
+    Query.args("ann_cosine_pq", annCosinePqSql) { (s, d, a) =>
+      annCosinePq(s, d, a.int("k", TopK)) },
+    Query.args("embedding_outliers", embeddingOutliersSql) { (s, d, a) =>
+      embeddingOutliers(s, d, a.int("top_n", OutlierTopN)) },
+    Query.args("ann_cosine_ivfpq", annCosineIvfPqSql) { (s, d, a) =>
+      annCosineIvfPq(s, d, a.int("n_probe", NProbe)) },
+    Query.args("ann_cosine_pq_rerank", annCosinePqRerankSql) { (s, d, a) =>
+      annCosinePqRerank(s, d, a.int("k", TopK)) },
+    Query.args("ann_cosine_ivfpq_rerank", annCosineIvfPqRerankSql) { (s, d, a) =>
+      annCosineIvfPqRerank(s, d, a.int("n_probe", NProbeMp)) },
+    Query("ann_cosine_ivfpq_res", annCosineIvfPqResSql)(annCosineIvfPqRes(_, _)),
     // the batch path computes the IDENTICAL result by construction —
     // one oracle string hash-checks both plumbing strategies
-    "ann_cosine_ivfpq_batch" -> annCosineIvfPqResSql,
-    "knn_graph" -> knnGraphSql,
-    "knn_mutual" -> knnMutualSql,
-    "cluster_balanced_sample" -> clusterBalancedSampleSql,
-    "knn_reciprocity" -> knnReciprocitySql,
-    "embedding_rp" -> embeddingRpSql,
-    "label_propagation" -> labelPropagationSql,
-    "kcore_graph" -> kcoreGraphSql,
-    "embedding_drift" -> embeddingDriftSql,
-    "ann_cosine_lsh_mp" -> annCosineLshMultiprobeSql,
-    "knn_delta" -> knnDeltaSql,
-    "knn_components" -> knnComponentsSql,
-    "ivf_modularity" -> ivfModularitySql,
-    "ivf_nprobe_curve" -> ivfNprobeCurveSql,
-    "seed_expansion" -> seedExpansionSql,
-    "embedding_standardize" -> embeddingStandardizeSql,
-    "hard_negatives" -> hardNegativesSql,
-    "knn_coherence" -> knnCoherenceSql,
-    "mmr_diversify" -> mmrDiversifySql,
-    "ann_cosine_filtered" -> annCosineFilteredSql,
+    Query.args("ann_cosine_ivfpq_batch", annCosineIvfPqResSql) { (s, d, a) =>
+      annCosineIvfPqBatch(s, d, a.int("n_probe", NProbeMp), a.long("n_queries", NumQueries)) },
+    Query.args("knn_graph", knnGraphSql) { (s, d, a) =>
+      knnGraph(s, d, a.int("k", KnnK)) },
+    Query.args("knn_mutual", knnMutualSql) { (s, d, a) =>
+      knnMutual(s, d, a.int("k", KnnK)) },
+    Query.templated("cluster_balanced_sample",
+        a => clusterBalancedSampleSqlFor(a.double("alpha", ClusterSampleAlpha))) { (s, d, a) =>
+      clusterBalancedSample(s, d, a.double("alpha", ClusterSampleAlpha)) },
+    Query("knn_reciprocity", knnReciprocitySql)(knnReciprocity(_, _)),
+    Query.args("embedding_rp", embeddingRpSql) { (s, d, a) =>
+      embeddingRp(s, d, a.int("out_dims", RpOutDims)) },
+    Query.templated("label_propagation", a => labelPropagationSqlFor(a.int("iters", LpIters),
+        a.int("k", KnnK), a.int("mask_mod", LpMaskMod), a.str("edges", KnnEdges))) { (s, d, a) =>
+      labelPropagation(s, d, a.int("iters", LpIters), a.int("k", KnnK),
+          a.int("mask_mod", LpMaskMod), a.str("edges", KnnEdges)) },
+    Query.templated("kcore_graph", a => kcoreGraphSqlFor(a.int("k", KnnK),
+        a.int("core_k", KcoreK), a.int("peels", KcorePeels))) { (s, d, a) =>
+      kcoreGraph(s, d, a.int("k", KnnK), a.int("core_k", KcoreK), a.int("peels", KcorePeels)) },
+    Query("embedding_drift", embeddingDriftSql)(embeddingDrift),
+    Query("ann_cosine_lsh_mp", annCosineLshMultiprobeSql)(annCosineLshMultiprobe),
+    Query.args("knn_delta", knnDeltaSql) { (s, d, a) =>
+      knnDelta(s, d, a.int("k", KnnK), a.long("delta_mod", KnnDeltaMod)) },
+    Query.templated("knn_components", a => knnComponentsSqlFor(a.int("k", KnnK),
+        a.str("edges", KnnEdges))) { (s, d, a) =>
+      knnComponents(s, d, a.int("k", KnnK), a.str("edges", KnnEdges)) },
+    Query("ivf_modularity", ivfModularitySql)(ivfModularity),
+    Query("ivf_nprobe_curve", ivfNprobeCurveSql)(ivfNprobeCurve),
+    Query.args("seed_expansion", seedExpansionSql) { (s, d, a) =>
+      seedExpansion(s, d, a.int("max_hops", BfsMaxHops)) },
+    Query("embedding_standardize", embeddingStandardizeSql)(embeddingStandardize),
+    Query.args("hard_negatives", hardNegativesSql) { (s, d, a) =>
+      hardNegatives(s, d, a.int("k", KnnK)) },
+    Query.args("knn_coherence", knnCoherenceSql) { (s, d, a) =>
+      knnCoherence(s, d, a.int("k", KnnK)) },
+    Query("mmr_diversify", mmrDiversifySql)(mmrDiversify),
+    Query.args("ann_cosine_filtered", annCosineFilteredSql) { (s, d, a) =>
+      annCosineFiltered(s, d, a.int("k", TopK)) },
   )
 }

@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Query, Tables}
+import graft.Query.ArgOps
 
 /** Temporal/log-analytics operators: as-of join and typed JSON
   * extraction over `events`, plus deterministic stratified sampling of
@@ -53,6 +54,8 @@ object Temporal {
       .orderBy("event_id")
   }
 
+  private val AsofSalts = 8
+
   /** Skew-resistant AS-OF JOIN: the parallel prefix-scan decomposition of
     * [[asofJoinOrders]]. The single-pass merge carries state in ONE window
     * per user, so a user holding 10% of all events serializes into one fat
@@ -87,7 +90,8 @@ object Temporal {
     * skew profile, at the cost of ~2 small extra aggs — the measured
     * trade is in PERF.md; the single-pass variant stays the default for
     * uniform keys. */
-  def asofJoinOrdersSalted(spark: SparkSession, sfDir: String, salts: Int = 8): DataFrame = {
+  def asofJoinOrdersSalted(spark: SparkSession, sfDir: String,
+                           salts: Int = AsofSalts): DataFrame = {
     require(salts >= 1, s"salts must be >= 1, got $salts")
     val ordersDedup = Tables.orders(spark, sfDir)
       .groupBy(col("o_custkey").as("uid"), col("o_orderdate").as("t"))
@@ -341,8 +345,6 @@ object Temporal {
        |WHERE rk <= $k
        |ORDER BY lang, source, rk""".stripMargin
 
-  val groupSampleSql: String = groupSampleSqlFor(SampleK)
-
   /** Ordered conversion funnel over `events` with a 24 h conversion
     * window: how many users did view → click → purchase IN ORDER, each
     * stage strictly after the previous stage's first occurrence and
@@ -479,6 +481,8 @@ object Temporal {
       |FROM r JOIN c USING (cohort_day)
       |ORDER BY cohort_day, days_since""".stripMargin
 
+  private val RollingHours = 24
+
   /** Per-event trailing-24h activity: at every event, how many events
     * (and how much value) the same user produced in the preceding 24
     * hours INCLUDING this one — the rate-limiting / anomaly-detection
@@ -511,7 +515,7 @@ object Temporal {
     * frame on both engines. Value sums are integer cents
     * (order-independent, exact subtraction before the one divide). */
   def eventsRolling24h(spark: SparkSession, sfDir: String,
-                       windowHours: Int = 24): DataFrame = {
+                       windowHours: Int = RollingHours): DataFrame = {
     require(windowHours > 0, s"windowHours must be positive, got $windowHours")
     val dayUs = windowHours.toLong * 3600 * 1000000
     def grow(upper: Long) = Window.partitionBy("user_id").orderBy(col("ts_us"))
@@ -539,8 +543,6 @@ object Temporal {
        |WINDOW w AS (PARTITION BY user_id ORDER BY ts
        |             RANGE BETWEEN INTERVAL $windowHours HOURS PRECEDING AND CURRENT ROW)
        |ORDER BY event_id""".stripMargin
-
-  val eventsRolling24hSql: String = eventsRolling24hSqlFor(24)
 
   /** Daily event-type pivot: one row per day, one column per event type
     * — the wide-format report table (`pivot` is the reshaping operator
@@ -1180,6 +1182,10 @@ object Temporal {
        |WHERE kind = 1
        |ORDER BY event_id""".stripMargin
 
+  private val MtaWindowDays = 7
+  private val MtaSaltBins = 8
+  private val MtaClicksCap = 0
+
   /** MULTI-TOUCH (LINEAR) ATTRIBUTION: every click of the user inside
     * the 7-day window before (or at) a purchase shares that purchase's
     * credit equally — the companion readout to [[purchaseAttribution]]
@@ -1224,8 +1230,8 @@ object Temporal {
     * still sums to ~1e6 micros per purchase, paid to the cap most
     * recent touches (the standard "last-N-touch linear" model). */
   def multiTouchAttribution(spark: SparkSession, sfDir: String,
-                            windowDays: Int = 7, saltBins: Int = 8,
-                            clicksCap: Int = 0): DataFrame = {
+                            windowDays: Int = MtaWindowDays, saltBins: Int = MtaSaltBins,
+                            clicksCap: Int = MtaClicksCap): DataFrame = {
     require(windowDays > 0, s"windowDays must be positive, got $windowDays")
     require(saltBins > 0, s"saltBins must be positive, got $saltBins")
     require(clicksCap >= 0, s"clicksCap must be nonnegative, got $clicksCap")
@@ -1338,8 +1344,6 @@ object Temporal {
        |FROM c LEFT JOIN cr USING (click_event_id)
        |ORDER BY click_event_id""".stripMargin
   }
-
-  val multiTouchAttributionSql: String = multiTouchAttributionSqlFor(7)
 
   // --------------------------------------------------------------------
   // Robust outliers (median absolute deviation)
@@ -2150,8 +2154,6 @@ object Temporal {
        |                                WHERE user_id IS NOT NULL)
        |ORDER BY cnt DESC, user_id""".stripMargin
 
-  val eventsHeavyHittersSql: String = eventsHeavyHittersSqlFor(HhK)
-
   // --------------------------------------------------------------------
   // Seasonal decomposition (hour-of-day profile + seasonality index)
   // --------------------------------------------------------------------
@@ -2377,89 +2379,59 @@ object Temporal {
       |       count(*) AS n_events
       |FROM events GROUP BY 1 ORDER BY day""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_user_bitmap_daily" -> ((s, d) => eventsUserBitmapDaily(s, d)),
-    "asof_join_native"  -> ((s, d) => asofJoinNative(s, d)),
-    "asof_join_native_fwd" -> ((s, d) => asofJoinNativeFwd(s, d)),
-    "user_growth_daily" -> ((s, d) => userGrowthDaily(s, d)),
-    "events_stickiness" -> ((s, d) => eventsStickiness(s, d)),
-    "events_bot_regularity" -> ((s, d) => eventsBotRegularity(s, d)),
-    "events_autocorr" -> ((s, d) => eventsAutocorr(s, d)),
-    "events_heavy_hitters" -> ((s, d) => eventsHeavyHitters(s, d)),
-    "events_quantiles_by_type" -> ((s, d) => eventsQuantilesByType(s, d)),
-    "user_erasure_audit" -> ((s, d) => userErasureAudit(s, d)),
-    "events_ab_test" -> ((s, d) => eventsAbTest(s, d)),
-    "events_winsorized_stats" -> ((s, d) => eventsWinsorizedStats(s, d)),
-    "user_diversity_simpson" -> ((s, d) => userDiversitySimpson(s, d)),
-    "events_seasonal"   -> ((s, d) => eventsSeasonal(s, d)),
-    "events_seasonal_anomaly" -> ((s, d) => eventsSeasonalAnomaly(s, d)),
-    "scd2_order_status" -> ((s, d) => scd2OrderStatus(s, d)),
-    "events_funnel"     -> ((s, d) => eventsFunnel(s, d)),
-    "asof_join_orders"  -> ((s, d) => asofJoinOrders(s, d)),
-    "asof_join_orders_salted" -> ((s, d) => asofJoinOrdersSalted(s, d)),
-    "json_events"       -> ((s, d) => jsonEvents(s, d)),
-    "stratified_sample" -> ((s, d) => stratifiedSample(s, d)),
-    "split_assign"      -> ((s, d) => splitAssign(s, d)),
-    "event_transitions" -> ((s, d) => eventTransitions(s, d)),
-    "group_sample"      -> ((s, d) => groupSample(s, d)),
-    "user_retention"    -> ((s, d) => userRetention(s, d)),
-    "events_rolling_24h" -> ((s, d) => eventsRolling24h(s, d)),
-    "events_pivot_daily" -> ((s, d) => eventsPivotDaily(s, d)),
-    "events_zscore"     -> ((s, d) => eventsZscore(s, d)),
-    "session_paths"     -> ((s, d) => sessionPaths(s, d)),
-    "events_cms_topk"   -> ((s, d) => eventsCmsTopk(s, d)),
-    "events_value_quantiles" -> ((s, d) => eventsValueQuantiles(s, d)),
-    "events_gap_fill"   -> ((s, d) => eventsGapFill(s, d)),
-    "range_join_bursts" -> ((s, d) => rangeJoinBursts(s, d)),
-    "interval_union"    -> ((s, d) => intervalUnion(s, d)),
-    "events_mad_outliers" -> ((s, d) => eventsMadOutliers(s, d)),
-    "purchase_attribution" -> ((s, d) => purchaseAttribution(s, d)),
-    "multi_touch_attribution" -> ((s, d) => multiTouchAttribution(s, d)),
-    "cohort_ltv"          -> ((s, d) => cohortLtv(s, d)),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "events_user_bitmap_daily" -> eventsUserBitmapDailySql,
+  val queries: Seq[Query] = Seq(
+    Query("events_user_bitmap_daily", eventsUserBitmapDailySql)(eventsUserBitmapDaily),
     // native-operator variant claims row-identity with the composed
     // as-of forms — all three share one oracle, enforced by the hash gate
-    "asof_join_native"  -> asofJoinNativeSql,
-    "asof_join_native_fwd" -> asofJoinNativeFwdSql,
-    "user_growth_daily" -> userGrowthDailySql,
-    "events_stickiness" -> eventsStickinessSql,
-    "events_bot_regularity" -> eventsBotRegularitySql,
-    "events_autocorr" -> eventsAutocorrSql,
-    "events_heavy_hitters" -> eventsHeavyHittersSql,
-    "events_quantiles_by_type" -> eventsQuantilesByTypeSql,
-    "user_erasure_audit" -> userErasureAuditSql,
-    "events_ab_test" -> eventsAbTestSql,
-    "events_winsorized_stats" -> eventsWinsorizedStatsSql,
-    "user_diversity_simpson" -> userDiversitySimpsonSql,
-    "events_seasonal"   -> eventsSeasonalSql,
-    "events_seasonal_anomaly" -> eventsSeasonalAnomalySql,
-    "scd2_order_status" -> scd2OrderStatusSql,
-    "events_funnel"     -> eventsFunnelSql,
-    "asof_join_orders"  -> asofJoinOrdersSql,
+    Query("asof_join_native", asofJoinNativeSql)(asofJoinNative),
+    Query("asof_join_native_fwd", asofJoinNativeFwdSql)(asofJoinNativeFwd),
+    Query("user_growth_daily", userGrowthDailySql)(userGrowthDaily),
+    Query("events_stickiness", eventsStickinessSql)(eventsStickiness),
+    Query("events_bot_regularity", eventsBotRegularitySql)(eventsBotRegularity),
+    Query("events_autocorr", eventsAutocorrSql)(eventsAutocorr),
+    Query.templated("events_heavy_hitters",
+        a => eventsHeavyHittersSqlFor(a.int("k", HhK))) { (s, d, a) =>
+      eventsHeavyHitters(s, d, a.int("k", HhK)) },
+    Query("events_quantiles_by_type", eventsQuantilesByTypeSql)(eventsQuantilesByType),
+    Query("user_erasure_audit", userErasureAuditSql)(userErasureAudit(_, _)),
+    Query("events_ab_test", eventsAbTestSql)(eventsAbTest),
+    Query("events_winsorized_stats", eventsWinsorizedStatsSql)(eventsWinsorizedStats),
+    Query("user_diversity_simpson", userDiversitySimpsonSql)(userDiversitySimpson),
+    Query("events_seasonal", eventsSeasonalSql)(eventsSeasonal),
+    Query("events_seasonal_anomaly", eventsSeasonalAnomalySql)(eventsSeasonalAnomaly),
+    Query("scd2_order_status", scd2OrderStatusSql)(scd2OrderStatus),
+    Query("events_funnel", eventsFunnelSql)(eventsFunnel),
+    Query("asof_join_orders", asofJoinOrdersSql)(asofJoinOrders),
     // same oracle as the single-pass variant BY DESIGN: the decomposition
     // claims row-identical output, and the hash gate enforces it
-    "asof_join_orders_salted" -> asofJoinOrdersSql,
-    "json_events"       -> jsonEventsSql,
-    "stratified_sample" -> stratifiedSampleSql,
-    "split_assign"      -> splitAssignSql,
-    "event_transitions" -> eventTransitionsSql,
-    "group_sample"      -> groupSampleSql,
-    "user_retention"    -> userRetentionSql,
-    "events_rolling_24h" -> eventsRolling24hSql,
-    "events_pivot_daily" -> eventsPivotDailySql,
-    "events_zscore"     -> eventsZscoreSql,
-    "session_paths"     -> sessionPathsSql,
-    "events_cms_topk"   -> eventsCmsTopkSql,
-    "events_value_quantiles" -> eventsValueQuantilesSql,
-    "events_gap_fill"   -> eventsGapFillSql,
-    "range_join_bursts" -> rangeJoinBurstsSql,
-    "interval_union"    -> intervalUnionSql,
-    "events_mad_outliers" -> eventsMadOutliersSql,
-    "purchase_attribution" -> purchaseAttributionSql,
-    "multi_touch_attribution" -> multiTouchAttributionSql,
-    "cohort_ltv"          -> cohortLtvSql,
+    Query.args("asof_join_orders_salted", asofJoinOrdersSql) { (s, d, a) =>
+      asofJoinOrdersSalted(s, d, a.int("salts", AsofSalts)) },
+    Query("json_events", jsonEventsSql)(jsonEvents),
+    Query("stratified_sample", stratifiedSampleSql)(stratifiedSample),
+    Query("split_assign", splitAssignSql)(splitAssign),
+    Query("event_transitions", eventTransitionsSql)(eventTransitions),
+    Query.templated("group_sample", a => groupSampleSqlFor(a.int("k", SampleK))) { (s, d, a) =>
+      groupSample(s, d, a.int("k", SampleK)) },
+    Query("user_retention", userRetentionSql)(userRetention),
+    Query.templated("events_rolling_24h",
+        a => eventsRolling24hSqlFor(a.int("window_hours", RollingHours))) { (s, d, a) =>
+      eventsRolling24h(s, d, a.int("window_hours", RollingHours)) },
+    Query("events_pivot_daily", eventsPivotDailySql)(eventsPivotDaily),
+    Query("events_zscore", eventsZscoreSql)(eventsZscore),
+    Query("session_paths", sessionPathsSql)(sessionPaths),
+    Query.args("events_cms_topk", eventsCmsTopkSql) { (s, d, a) =>
+      eventsCmsTopk(s, d, a.int("top_n", CmsTopN)) },
+    Query("events_value_quantiles", eventsValueQuantilesSql)(eventsValueQuantiles),
+    Query("events_gap_fill", eventsGapFillSql)(eventsGapFill),
+    Query("range_join_bursts", rangeJoinBurstsSql)(rangeJoinBursts),
+    Query("interval_union", intervalUnionSql)(intervalUnion),
+    Query("events_mad_outliers", eventsMadOutliersSql)(eventsMadOutliers),
+    Query("purchase_attribution", purchaseAttributionSql)(purchaseAttribution),
+    Query.templated("multi_touch_attribution",
+        a => multiTouchAttributionSqlFor(a.int("window_days", MtaWindowDays),
+        a.int("clicks_cap", MtaClicksCap))) { (s, d, a) =>
+      multiTouchAttribution(s, d, a.int("window_days", MtaWindowDays),
+          a.int("salt_bins", MtaSaltBins), a.int("clicks_cap", MtaClicksCap)) },
+    Query("cohort_ltv", cohortLtvSql)(cohortLtv),
   )
 }

@@ -2,7 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Substrate, Tables}
+import graft.{Query, Substrate, Tables}
+import graft.Query.ArgOps
 
 /** Text-analysis operators over `documents` — the per-document scoring
   * passes of a training-data pipeline: language ID, quality scoring,
@@ -545,8 +546,10 @@ object TextAnalysis {
     }
   }
 
+  private val PackShardsDerived = 0  // 0 = derived from the corpus size
+
   def sequencePack(spark: SparkSession, sfDir: String,
-                   budget: Int = PackBudget, shards: Int = 0): DataFrame = {
+                   budget: Int = PackBudget, shards: Int = PackShardsDerived): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")
     val nShards =
       if (shards > 0) shards
@@ -958,8 +961,6 @@ object TextAnalysis {
        |       ${Det.rSql("CAST(n_docs AS DOUBLE) / source_docs", 6)} AS share
        |FROM per JOIN tot USING (source)
        |ORDER BY source, bin""".stripMargin
-
-  val tokenHistogramSql: String = tokenHistogramSqlFor(HistBinTokens)
 
   // --------------------------------------------------------------------
   // Per-source vocabulary divergence (mixture diagnostics)
@@ -2240,8 +2241,10 @@ object TextAnalysis {
       * 1e6 + 0.5).cast("long")
   }
 
+  private val DsirTargetLang = "en"
+
   def dsirWeights(spark: SparkSession, sfDir: String,
-                  targetLang: String = "en"): DataFrame = {
+                  targetLang: String = DsirTargetLang): DataFrame = {
     // r14 OPTIMIZATION (guide §1.2 step 1 — don't tokenize twice): the
     // scoring pass previously re-ran the corpus tokenize→bigram→hash
     // explode the histogram pass had already paid (the query's dominant
@@ -2741,8 +2744,10 @@ object TextAnalysis {
         / greatest(col("n_train") + col("v_train"), lit(1L)))) * 1e6 + 0.5))
     .cast("long")
 
+  private val LmTrainLang = "en"
+
   def bigramLmScore(spark: SparkSession, sfDir: String,
-                    trainLang: String = "en"): DataFrame = {
+                    trainLang: String = LmTrainLang): DataFrame = {
     bigramJoined(spark, sfDir, trainLang)
       .withColumn("nll_micros", bigramNllMicros)
       .groupBy("doc_id")
@@ -3343,8 +3348,6 @@ object TextAnalysis {
        |FROM c
        |GROUP BY 1 ORDER BY shard""".stripMargin
 
-  val shardPlanSql: String = shardPlanSqlFor(ShardTokens)
-
   /** Ranks fitted by [[zipfFit]] — shared with the oracle template. */
   private[graft] val ZipfTopN = 100
 
@@ -3693,101 +3696,75 @@ object TextAnalysis {
        |FROM dev CROSS JOIN roll r
        |ORDER BY band""".stripMargin
 
-  val qualityDriftSql: String = qualityDriftSqlFor(QualityDriftDeltaMod)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "shard_plan" -> ((s, d) => shardPlan(s, d)),
-    "quality_drift" -> ((s, d) => qualityDrift(s, d)),
-    "quality_drift_replay" -> ((s, d) => qualityDriftReplay(s, d)),
-    "ngram_novelty_curve" -> ((s, d) => ngramNoveltyCurve(s, d)),
-    "zipf_fit" -> ((s, d) => zipfFit(s, d)),
-    "pack_boundary_curve" -> ((s, d) => packBoundaryCurve(s, d)),
-    "bm25_topk" -> ((s, d) => bm25TopK(s, d)),
-    "quality_agreement" -> ((s, d) => qualityAgreement(s, d)),
-    "dataset_card"     -> ((s, d) => datasetCard(s, d)),
-    "readability"      -> ((s, d) => readability(s, d)),
-    "tokenizer_fertility" -> ((s, d) => tokenizerFertility(s, d)),
-    "lang_id"          -> ((s, d) => langId(s, d)),
-    "text_quality"     -> ((s, d) => textQuality(s, d)),
-    "token_counts"     -> ((s, d) => tokenCounts(s, d)),
-    "doc_fingerprint"  -> ((s, d) => docFingerprint(s, d)),
-    "tfidf_top_terms"  -> ((s, d) => tfidfTopTerms(s, d)),
-    "repetition_score" -> ((s, d) => repetitionScore(s, d)),
-    "quality_gate"     -> ((s, d) => qualityGate(s, d)),
-    "sequence_pack"    -> ((s, d) => sequencePack(s, d)),
-    "contamination_check" -> ((s, d) => contaminationCheck(s, d)),
-    "corpus_stats"     -> ((s, d) => corpusStats(s, d)),
-    "doc_chunk"        -> ((s, d) => docChunk(s, d)),
-    "doc_surprisal"    -> ((s, d) => docSurprisal(s, d)),
-    "mixture_weights"  -> ((s, d) => mixtureWeights(s, d)),
-    "token_histogram"  -> ((s, d) => tokenHistogram(s, d)),
-    "source_divergence" -> ((s, d) => sourceDivergence(s, d)),
-    "quality_percentile_gate" -> ((s, d) => qualityPercentileGate(s, d)),
-    "lang_confusion"   -> ((s, d) => langConfusion(s, d)),
-    "pipeline_export"  -> ((s, d) => pipelineExport(s, d)),
-    "mixture_apply"    -> ((s, d) => mixtureApply(s, d)),
-    "winnow_overlap"   -> ((s, d) => winnowOverlap(s, d)),
-    "token_pmi"        -> ((s, d) => tokenPmi(s, d)),
-    "vocab_growth"     -> ((s, d) => vocabGrowth(s, d)),
-    "bpe_pair_counts"  -> ((s, d) => bpePairCounts(s, d)),
-    "bpe_train"        -> ((s, d) => bpeTrain(s, d)),
-    "bpe_apply"        -> ((s, d) => bpeApply(s, d)),
-    "bpe_vocab"        -> ((s, d) => bpeVocab(s, d)),
-    "gopher_quality"   -> ((s, d) => gopherQuality(s, d)),
-    "pii_scrub"        -> ((s, d) => piiScrub(s, d)),
-    "dsir_weights"     -> ((s, d) => dsirWeights(s, d)),
-    "nb_quality_score" -> ((s, d) => nbQualityScore(s, d)),
-    "quality_calibration" -> ((s, d) => qualityCalibration(s, d)),
-    "quality_survival_curve" -> ((s, d) => qualitySurvivalCurve(s, d)),
-    "lang_source_chi2" -> ((s, d) => langSourceChi2(s, d)),
-    "bigram_lm_score"  -> ((s, d) => bigramLmScore(s, d)),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "lang_id"          -> langIdSql,
-    "text_quality"     -> textQualitySql,
-    "token_counts"     -> tokenCountsSql,
-    "doc_fingerprint"  -> docFingerprintSql,
-    "tfidf_top_terms"  -> tfidfTopTermsSql,
-    "bm25_topk"        -> bm25TopKSql,
-    "pack_boundary_curve" -> packBoundaryCurveSql,
-    "shard_plan"       -> shardPlanSql,
-    "quality_drift"    -> qualityDriftSql,
-    "quality_drift_replay" -> qualityDriftSql,
-    "zipf_fit"         -> zipfFitSql,
-    "ngram_novelty_curve" -> ngramNoveltyCurveSql,
-    "quality_agreement" -> qualityAgreementSql,
-    "repetition_score" -> repetitionScoreSql,
-    "quality_gate"     -> qualityGateSql,
-    "sequence_pack"    -> sequencePackSql,
-    "contamination_check" -> contaminationCheckSql,
-    "corpus_stats"     -> corpusStatsSql,
-    "doc_chunk"        -> docChunkSql,
-    "doc_surprisal"    -> docSurprisalSql,
-    "mixture_weights"  -> mixtureWeightsSql,
-    "token_histogram"  -> tokenHistogramSql,
-    "source_divergence" -> sourceDivergenceSql,
-    "quality_percentile_gate" -> qualityPercentileGateSql,
-    "lang_confusion"   -> langConfusionSql,
-    "pipeline_export"  -> pipelineExportSql,
-    "mixture_apply"    -> mixtureApplySql,
-    "winnow_overlap"   -> winnowOverlapSql,
-    "token_pmi"        -> tokenPmiSql,
-    "vocab_growth"     -> vocabGrowthSql,
-    "bpe_pair_counts"  -> bpePairCountsSql,
-    "bpe_train"        -> bpeTrainSql,
-    "bpe_apply"        -> bpeApplySql,
-    "bpe_vocab"        -> bpeVocabSql,
-    "gopher_quality"   -> gopherQualitySql,
-    "dataset_card"     -> datasetCardSql,
-    "readability"      -> readabilitySql,
-    "tokenizer_fertility" -> tokenizerFertilitySql,
-    "pii_scrub"        -> piiScrubSql,
-    "dsir_weights"     -> dsirWeightsSql,
-    "nb_quality_score" -> nbQualityScoreSql,
-    "quality_calibration" -> qualityCalibrationSql,
-    "quality_survival_curve" -> qualitySurvivalCurveSql,
-    "lang_source_chi2" -> langSourceChi2Sql,
-    "bigram_lm_score"  -> bigramLmScoreSql,
+  val queries: Seq[Query] = Seq(
+    Query.templated("shard_plan",
+        a => shardPlanSqlFor(a.long("shard_tokens", ShardTokens))) { (s, d, a) =>
+      shardPlan(s, d, a.long("shard_tokens", ShardTokens)) },
+    Query.templated("quality_drift",
+        a => qualityDriftSqlFor(a.long("delta_mod", QualityDriftDeltaMod))) { (s, d, a) =>
+      qualityDrift(s, d, a.long("delta_mod", QualityDriftDeltaMod)) },
+    Query.templated("quality_drift_replay",
+        a => qualityDriftSqlFor(a.long("delta_mod", QualityDriftDeltaMod))) { (s, d, a) =>
+      qualityDriftReplay(s, d, a.long("delta_mod", QualityDriftDeltaMod)) },
+    Query("ngram_novelty_curve", ngramNoveltyCurveSql)(ngramNoveltyCurve),
+    Query("zipf_fit", zipfFitSql)(zipfFit),
+    Query("pack_boundary_curve", packBoundaryCurveSql)(packBoundaryCurve),
+    Query("bm25_topk", bm25TopKSql)(bm25TopK),
+    Query("quality_agreement", qualityAgreementSql)(qualityAgreement),
+    Query("dataset_card", datasetCardSql)(datasetCard),
+    Query("readability", readabilitySql)(readability),
+    Query("tokenizer_fertility", tokenizerFertilitySql)(tokenizerFertility(_, _)),
+    Query("lang_id", langIdSql)(langId),
+    Query("text_quality", textQualitySql)(textQuality),
+    Query("token_counts", tokenCountsSql)(tokenCounts),
+    Query("doc_fingerprint", docFingerprintSql)(docFingerprint),
+    Query("tfidf_top_terms", tfidfTopTermsSql)(tfidfTopTerms),
+    Query("repetition_score", repetitionScoreSql)(repetitionScore),
+    Query.args("quality_gate", qualityGateSql) { (s, d, a) =>
+      qualityGate(s, d, a.int("min_tokens", QualityMinTokens),
+          a.double("max_dup_frac", QualityMaxDupFrac)) },
+    Query.args("sequence_pack", sequencePackSql) { (s, d, a) =>
+      sequencePack(s, d, a.int("budget", PackBudget), a.int("shards", PackShardsDerived)) },
+    Query.args("contamination_check", contaminationCheckSql) { (s, d, a) =>
+      contaminationCheck(s, d, a.int("max_df", ContamMaxDf)) },
+    Query("corpus_stats", corpusStatsSql)(corpusStats),
+    Query.args("doc_chunk", docChunkSql) { (s, d, a) =>
+      docChunk(s, d, a.int("budget", ChunkBudget), a.int("overlap", ChunkOverlap)) },
+    Query("doc_surprisal", docSurprisalSql)(docSurprisal),
+    Query.args("mixture_weights", mixtureWeightsSql) { (s, d, a) =>
+      mixtureWeights(s, d, a.double("alpha", MixAlpha)) },
+    Query.templated("token_histogram",
+        a => tokenHistogramSqlFor(a.int("bin_tokens", HistBinTokens))) { (s, d, a) =>
+      tokenHistogram(s, d, a.int("bin_tokens", HistBinTokens)) },
+    Query("source_divergence", sourceDivergenceSql)(sourceDivergence),
+    Query.args("quality_percentile_gate", qualityPercentileGateSql) { (s, d, a) =>
+      qualityPercentileGate(s, d, a.double("drop_pct", GateDropPct)) },
+    Query("lang_confusion", langConfusionSql)(langConfusion),
+    Query("pipeline_export", pipelineExportSql)(pipelineExport),
+    Query.args("mixture_apply", mixtureApplySql) { (s, d, a) =>
+      mixtureApply(s, d, a.double("rate", MixApplyRate)) },
+    Query.args("winnow_overlap", winnowOverlapSql) { (s, d, a) =>
+      winnowOverlap(s, d, a.int("top_n", WinnowTopN)) },
+    Query.args("token_pmi", tokenPmiSql) { (s, d, a) =>
+      tokenPmi(s, d, a.int("top_n", PmiTopN)) },
+    Query("vocab_growth", vocabGrowthSql)(vocabGrowth),
+    Query("bpe_pair_counts", bpePairCountsSql)(bpePairCounts(_, _)),
+    Query.args("bpe_train", bpeTrainSql) { (s, d, a) =>
+      bpeTrain(s, d, a.int("n_merges", BpeMerges)) },
+    Query.args("bpe_apply", bpeApplySql) { (s, d, a) =>
+      bpeApply(s, d, a.int("n_merges", BpeMerges)) },
+    Query.args("bpe_vocab", bpeVocabSql) { (s, d, a) =>
+      bpeVocab(s, d, a.int("n_merges", BpeMerges)) },
+    Query.args("gopher_quality", gopherQualitySql) { (s, d, a) =>
+      gopherQuality(s, d, a.int("min_words", GopherMinWords)) },
+    Query("pii_scrub", piiScrubSql)(piiScrub),
+    Query.args("dsir_weights", dsirWeightsSql) { (s, d, a) =>
+      dsirWeights(s, d, a.str("target_lang", DsirTargetLang)) },
+    Query("nb_quality_score", nbQualityScoreSql)(nbQualityScore),
+    Query("quality_calibration", qualityCalibrationSql)(qualityCalibration),
+    Query("quality_survival_curve", qualitySurvivalCurveSql)(qualitySurvivalCurve),
+    Query("lang_source_chi2", langSourceChi2Sql)(langSourceChi2),
+    Query.args("bigram_lm_score", bigramLmScoreSql) { (s, d, a) =>
+      bigramLmScore(s, d, a.str("train_lang", LmTrainLang)) },
   )
 }

@@ -2,7 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Substrate, Tables}
+import graft.{Query, Substrate, Tables}
+import graft.Query.ArgOps
 
 /** The reference's shipped example jobs (SURVEY.md §2.2 E1-E9), re-expressed
   * as declarative Spark plans over `documents`/`events`.
@@ -38,11 +39,13 @@ object TextJobs {
       .groupBy("word").agg(count(lit(1)).as("cnt"))
       .orderBy("word")
 
+  private val GrepPattern = "error"
+
   /** E3+E4 grep: keep lines (here: docs) matching a pattern
     * case-insensitively, count occurrences of each distinct matching text.
     * Pattern parameterization ≙ GREP_PATTERN env (mapper.py:15); we fix the
     * reference default "error". */
-  def grep(spark: SparkSession, sfDir: String, pattern: String = "error"): DataFrame =
+  def grep(spark: SparkSession, sfDir: String, pattern: String = GrepPattern): DataFrame =
     Tables.documents(spark, sfDir)
       .filter(col("text").rlike("(?i)" + pattern))
       .groupBy(col("text")).agg(count(lit(1)).as("cnt"))
@@ -143,11 +146,13 @@ object TextJobs {
       |GROUP BY GROUPING SETS ((event_type), (k_bucket), (event_type, k_bucket))
       |ORDER BY key, cnt""".stripMargin
 
+  private val BigramsTopN = 100
+
   /** E9 ngram (documentation.md:655-681): adjacent-token bigrams + counts.
     * Array zip of tokens with its own tail — stays inside whole-stage
     * codegen, no window shuffle needed (the window alternative would
     * partition by doc and sort by position; zip_with is strictly cheaper). */
-  def bigrams(spark: SparkSession, sfDir: String, topN: Int = 100): DataFrame = {
+  def bigrams(spark: SparkSession, sfDir: String, topN: Int = BigramsTopN): DataFrame = {
     val toks = Tables.documents(spark, sfDir)
       .select(split(lower(col("text")), "\\W+").as("t"))
       .select(filter(col("t"), x => length(x) > 0).as("t"))
@@ -180,6 +185,8 @@ object TextJobs {
       .orderBy("word")
   }
 
+  private val ResultsLimitN = 20
+
   /** F10 results read + limit (client/client.py:120-142: concatenate the
     * job's `reduce-*.txt` sorted, take the first N lines): write wordcount
     * in the reference's TSV results format, read the results dir back, and
@@ -189,7 +196,7 @@ object TextJobs {
     * key order, planned as TakeOrderedAndProject (top-N per partition +
     * driver merge of N rows — never a full sort or a single-partition
     * funnel). */
-  def resultsLimit(spark: SparkSession, sfDir: String, n: Int = 20): DataFrame = {
+  def resultsLimit(spark: SparkSession, sfDir: String, n: Int = ResultsLimitN): DataFrame = {
     val out = Substrate.sessionDir(spark, "graft_results_", sfDir)
     wordcount(spark, sfDir)
       .select(concat_ws("\t", col("word"), col("cnt")).as("value"))
@@ -264,12 +271,12 @@ object TextJobs {
   }
 
   // --------------------------------------------------------------------
-  // Arg-templated oracle twins (SparkEntry.oracleSqlWithArgs): the exact
+  // Arg-templated oracle twins (`Query.templated` entries): the exact
   // SQL the fixed registry interpolates, with the user argument spliced
-  // in — so a non-default-arg queriesWithArgs run stays hash-checkable
-  // instead of silently escaping the oracle gate (r9 verdict #4). The
-  // fixed-registry entries below CALL these at the registered defaults,
-  // so template and registry cannot desynchronize (ArgsSpec pins it).
+  // in — so a non-default-arg run stays hash-checkable instead of
+  // silently escaping the oracle gate (r9 verdict #4). The registered
+  // oracle IS the template at the registered arguments, so the two
+  // cannot desynchronize.
   // --------------------------------------------------------------------
 
   /** SQL string-literal escape for user-supplied patterns (standard ''
@@ -302,44 +309,31 @@ object TextJobs {
        |)
        |GROUP BY bigram ORDER BY cnt DESC, bigram ASC LIMIT $topN""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "wordcount"          -> ((s, d) => wordcount(s, d)),
-    "wordcount_tsv"      -> ((s, d) => wordcountTsv(s, d)),
-    "results_limit"      -> ((s, d) => resultsLimit(s, d)),
-    "events_csv"         -> ((s, d) => eventsCsv(s, d)),
-    "events_jsonl"       -> ((s, d) => eventsJsonl(s, d)),
-    "events_orc"         -> ((s, d) => eventsOrc(s, d)),
-    // "error" is the reference default (grep/mapper.py:15) but absent from
-    // this corpus's vocabulary; include "scan" so the query is non-vacuous.
-    "grep"               -> ((s, d) => grep(s, d, "(error|scan)")),
-    "inverted_index"     -> ((s, d) => invertedIndex(s, d)),
-    "inverted_index_raw" -> ((s, d) => invertedIndexRaw(s, d)),
-    "multikey_counts"    -> ((s, d) => multiKeyCounts(s, d)),
-    "multikey_flat"      -> ((s, d) => multiKeyFlat(s, d)),
-    "bigrams"            -> ((s, d) => bigrams(s, d)),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "wordcount" ->
+  val queries: Seq[Query] = Seq(
+    Query("wordcount",
       """SELECT word, count(*) AS cnt
         |FROM (SELECT unnest(string_split_regex(lower(text), '\W+')) AS word
         |      FROM documents)
         |WHERE length(word) > 0
-        |GROUP BY word ORDER BY word""".stripMargin,
+        |GROUP BY word ORDER BY word""".stripMargin)(wordcount),
+    // TSV round-trip is lossless → same oracle as wordcount
+    Query("wordcount_tsv",
+      """SELECT word, count(*) AS cnt
+        |FROM (SELECT unnest(string_split_regex(lower(text), '\W+')) AS word
+        |      FROM documents)
+        |WHERE length(word) > 0
+        |GROUP BY word ORDER BY word""".stripMargin)(wordcountTsv),
+    // results read-back is lossless → wordcount oracle, keyed-order LIMIT
+    Query.templated("results_limit",
+        a => resultsLimitSqlFor(a.int("limit", ResultsLimitN))) { (s, d, a) =>
+      resultsLimit(s, d, a.int("limit", ResultsLimitN)) },
     // CSV round-trip is lossless for these types → oracle on the original
     // parquet (cents-integerised so the double sum is order-independent,
     // per the money rule)
-    "events_csv" ->
+    Query("events_csv",
       """SELECT event_type, count(*) AS n_events,
         |       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS value_cents
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // ORC round-trip is lossless (native columnar types) → oracle on the
-    // original parquet, same cents-integerised sum
-    "events_orc" ->
-      """SELECT event_type, count(*) AS n_events,
-        |       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS value_cents,
-        |       min(event_id) AS min_event, max(event_id) AS max_event
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)(eventsCsv),
     // JSONL round-trip is lossless for these columns → oracle on the
     // original parquet; k re-extracted from the embedded props JSON.
     // The cast is GATED on an integer regexp before TRY_CAST: Spark's
@@ -347,7 +341,7 @@ object TextJobs {
     // but DuckDB's TRY_CAST parses '3.5' via double and ROUNDS to 4 — the
     // regexp gate pins both engines to null-unless-integral; TRY_CAST
     // then matches Spark's overflow→null for integers beyond int32.
-    "events_jsonl" ->
+    Query("events_jsonl",
       """SELECT event_type, count(*) AS n_events,
         |       CAST(sum(k) AS BIGINT) AS sum_k,
         |       count(*) FILTER (k IS NULL) AS n_null_k
@@ -355,18 +349,20 @@ object TextJobs {
         |             CASE WHEN regexp_matches(json_extract_string(props, '$.k'), '^[+-]?[0-9]+$')
         |                  THEN TRY_CAST(json_extract_string(props, '$.k') AS INTEGER) END AS k
         |      FROM events)
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // results read-back is lossless → wordcount oracle, keyed-order LIMIT
-    "results_limit" -> resultsLimitSqlFor(20),
-    // TSV round-trip is lossless → same oracle as wordcount
-    "wordcount_tsv" ->
-      """SELECT word, count(*) AS cnt
-        |FROM (SELECT unnest(string_split_regex(lower(text), '\W+')) AS word
-        |      FROM documents)
-        |WHERE length(word) > 0
-        |GROUP BY word ORDER BY word""".stripMargin,
-    "grep" -> grepSqlFor("(error|scan)"),
-    "inverted_index" ->
+        |GROUP BY event_type ORDER BY event_type""".stripMargin)(eventsJsonl),
+    // ORC round-trip is lossless (native columnar types) → oracle on the
+    // original parquet, same cents-integerised sum
+    Query("events_orc",
+      """SELECT event_type, count(*) AS n_events,
+        |       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS value_cents,
+        |       min(event_id) AS min_event, max(event_id) AS max_event
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)(eventsOrc),
+    // "error" is the reference default (grep/mapper.py:15) but absent from
+    // this corpus's vocabulary; include "scan" so the query is non-vacuous.
+    Query.templated("grep", a => grepSqlFor(a.str("pattern", GrepPattern)),
+        registered = Map("pattern" -> "(error|scan)")) { (s, d, a) =>
+      grep(s, d, a.str("pattern", GrepPattern)) },
+    Query("inverted_index",
       """SELECT word,
         |       list_aggregate(list_sort(list(DISTINCT CAST(doc_id AS VARCHAR))), 'string_agg', ',') AS doc_ids,
         |       count(*) AS n_docs
@@ -374,22 +370,23 @@ object TextJobs {
         |             unnest(string_split_regex(lower(text), '\W+')) AS word
         |      FROM documents)
         |WHERE length(word) > 2
-        |GROUP BY word ORDER BY word""".stripMargin,
-    "inverted_index_raw" ->
+        |GROUP BY word ORDER BY word""".stripMargin)(invertedIndex),
+    Query("inverted_index_raw",
       """SELECT word, count(*) AS n_docs
         |FROM (SELECT DISTINCT doc_id,
         |             unnest(string_split_regex(lower(text), '\W+')) AS word
         |      FROM documents)
         |WHERE length(word) > 2
-        |GROUP BY word ORDER BY word""".stripMargin,
-    "multikey_flat" -> multiKeyFlatSql,
-    "multikey_counts" ->
+        |GROUP BY word ORDER BY word""".stripMargin)(invertedIndexRaw),
+    Query("multikey_counts",
       """SELECT event_type, k_bucket, count(*) AS cnt
         |FROM (SELECT event_type,
         |             CAST(json_extract_string(props, '$.k') AS INTEGER) % 10 AS k_bucket
         |      FROM events)
         |GROUP BY GROUPING SETS ((event_type), (k_bucket), (event_type, k_bucket))
-        |ORDER BY event_type ASC NULLS FIRST, k_bucket ASC NULLS FIRST""".stripMargin,
-    "bigrams" -> bigramsSqlFor(100),
+        |ORDER BY event_type ASC NULLS FIRST, k_bucket ASC NULLS FIRST""".stripMargin)(multiKeyCounts),
+    Query("multikey_flat", multiKeyFlatSql)(multiKeyFlat),
+    Query.templated("bigrams", a => bigramsSqlFor(a.int("top_n", BigramsTopN))) { (s, d, a) =>
+      bigrams(s, d, a.int("top_n", BigramsTopN)) },
   )
 }

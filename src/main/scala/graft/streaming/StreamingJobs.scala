@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
-import graft.Tables
+import graft.{Query, Tables}
+import graft.Query.ArgOps
 
 /** Structured Streaming over the stream-shaped `events` table.
   *
@@ -279,9 +280,12 @@ object StreamingJobs {
         (unix_micros(col("ts")) + hkey % jUs).as("arr_us"))
   }
 
+  private val LateDelayMinutes = 60
+  private val JitterMinutes = 180
+
   def eventsLateAudit(spark: SparkSession, sfDir: String,
-                      delayMinutes: Int = 60,
-                      jitterMinutes: Int = 180): DataFrame = {
+                      delayMinutes: Int = LateDelayMinutes,
+                      jitterMinutes: Int = JitterMinutes): DataFrame = {
     require(delayMinutes >= 0,
       s"delayMinutes must be nonnegative, got $delayMinutes")
     lateAuditCore(spark, jitteredArrivals(spark, sfDir, jitterMinutes),
@@ -311,7 +315,7 @@ object StreamingJobs {
     * #5.) Corpus work is exactly one narrow scan; state is |grid|
     * counters. */
   def watermarkDelayCurve(spark: SparkSession, sfDir: String,
-                          jitterMinutes: Int = 180): DataFrame = {
+                          jitterMinutes: Int = JitterMinutes): DataFrame = {
     val hwf = highWatermarkFrame(
       spark, jitteredArrivals(spark, sfDir, jitterMinutes))
       .withColumn("wend", (expr(s"ts_us DIV $HourUs") + 1) * HourUs)
@@ -358,8 +362,6 @@ object StreamingJobs {
        |FROM g ORDER BY delay_minutes""".stripMargin
   }
 
-  val watermarkDelayCurveSql: String = watermarkDelayCurveSqlFor(180)
-
   /** Oracle: the plain global running max over arrival order (DuckDB
     * affords the corpus-wide window at oracle scale) — equality proves
     * the bin decomposition computes the identical prefix. */
@@ -382,8 +384,6 @@ object StreamingJobs {
        |            THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_late
        |FROM r GROUP BY 1 ORDER BY 1""".stripMargin
   }
-
-  val eventsLateAuditSql: String = eventsLateAuditSqlFor(60)
 
   // --------------------------------------------------------------------
   // Custom state: flatMapGroupsWithState sessionizer
@@ -580,44 +580,25 @@ object StreamingJobs {
   private def batchEvents(s: SparkSession, d: String): DataFrame =
     Tables.eventsTs(s, d)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_tumbling_1h" -> ((s, d) =>
-      tumbling1h(batchEvents(s, d)).orderBy("window_start", "event_type")),
-    "events_sliding_6h3h" -> ((s, d) =>
-      sliding6h3h(batchEvents(s, d)).orderBy("window_start")),
-    "events_sessions" -> ((s, d) =>
-      sessions4h(batchEvents(s, d)).orderBy("user_id", "session_start")),
-    "events_dedup" -> ((s, d) =>
-      dedupEvents(batchEvents(s, d)).orderBy("event_id")),
-    "events_error_context" -> ((s, d) =>
-      errorContextJoin(batchEvents(s, d), batchEvents(s, d))
-        .orderBy("err_id", "act_id")),
-    "events_by_segment" -> ((s, d) =>
-      segmentActivity(batchEvents(s, d), Tables.customer(s, d))
-        .orderBy("window_start", "segment")),
-    "events_latest_state" -> ((s, d) =>
-      latestState(batchEvents(s, d)).orderBy("user_id")),
-    "events_late_audit" -> ((s, d) => eventsLateAudit(s, d)),
-    "watermark_delay_curve" -> ((s, d) => watermarkDelayCurve(s, d)),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "events_tumbling_1h" ->
+  val queries: Seq[Query] = Seq(
+    Query("events_tumbling_1h",
       """SELECT date_trunc('hour', ts) AS window_start, event_type,
         |       count(*) AS n_events,
         |       CAST(sum(CAST(round(value*100) AS BIGINT)) AS DOUBLE)/100 AS total_value
-        |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin,
+        |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin) { (s, d) =>
+      tumbling1h(batchEvents(s, d)).orderBy("window_start", "event_type") },
     // sliding: two 3h-aligned window starts per event (epoch-aligned like
     // Spark's window(); make_timestamp keeps the naive-UTC type).
-    "events_sliding_6h3h" ->
+    Query("events_sliding_6h3h",
       """SELECT window_start, count(*) AS n_events, count(DISTINCT user_id) AS n_users
         |FROM (
         |  SELECT make_timestamp(CAST((floor(epoch(ts)/10800) - k) * 10800 * 1000000 AS BIGINT)) AS window_start,
         |         user_id
         |  FROM events, (SELECT unnest([0, 1]) AS k))
-        |GROUP BY window_start ORDER BY window_start""".stripMargin,
+        |GROUP BY window_start ORDER BY window_start""".stripMargin) { (s, d) =>
+      sliding6h3h(batchEvents(s, d)).orderBy("window_start") },
     // sessions: gaps-and-islands with the same >= gap boundary rule
-    "events_sessions" ->
+    Query("events_sessions",
       """WITH o AS (
         |  SELECT user_id, ts,
         |         CASE WHEN lag(ts) OVER w IS NULL
@@ -629,15 +610,17 @@ object StreamingJobs {
         |      FROM o)
         |SELECT user_id, min(ts) AS session_start, max(ts) AS session_last,
         |       count(*) AS n_events
-        |FROM s GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin,
-    "events_dedup" ->
+        |FROM s GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin) { (s, d) =>
+      sessions4h(batchEvents(s, d)).orderBy("user_id", "session_start") },
+    Query("events_dedup",
       """SELECT event_id, min_r.ts AS ts, min_r.event_type AS event_type,
         |       min_r.value AS value
         |FROM (SELECT event_id,
         |             min(struct_pack(ts := ts, value := value, event_type := event_type)) AS min_r
         |      FROM events GROUP BY event_id)
-        |ORDER BY event_id""".stripMargin,
-    "events_error_context" ->
+        |ORDER BY event_id""".stripMargin) { (s, d) =>
+      dedupEvents(batchEvents(s, d)).orderBy("event_id") },
+    Query("events_error_context",
       """SELECT e.event_id AS err_id, e.user_id, e.ts AS err_ts,
         |       a.event_id AS act_id, a.event_type AS action, a.ts AS act_ts
         |FROM events e JOIN events a
@@ -646,14 +629,18 @@ object StreamingJobs {
         | AND e.user_id = a.user_id
         | AND a.ts >= e.ts - INTERVAL 1 HOUR
         | AND a.ts < e.ts
-        |ORDER BY err_id, act_id""".stripMargin,
-    "events_by_segment" ->
+        |ORDER BY err_id, act_id""".stripMargin) { (s, d) =>
+      errorContextJoin(batchEvents(s, d), batchEvents(s, d))
+        .orderBy("err_id", "act_id") },
+    Query("events_by_segment",
       """SELECT date_trunc('hour', e.ts) AS window_start,
         |       c.c_mktsegment AS segment, count(*) AS n_events,
         |       CAST(sum(CAST(round(value*100) AS BIGINT)) AS DOUBLE)/100 AS total_value
         |FROM events e JOIN customer c ON e.user_id = c.c_custkey
-        |GROUP BY 1, 2 ORDER BY window_start, segment""".stripMargin,
-    "events_latest_state" ->
+        |GROUP BY 1, 2 ORDER BY window_start, segment""".stripMargin) { (s, d) =>
+      segmentActivity(batchEvents(s, d), Tables.customer(s, d))
+        .orderBy("window_start", "segment") },
+    Query("events_latest_state",
       """SELECT user_id, ts AS last_ts, event_id AS last_event_id,
         |       event_type AS last_type, value AS last_value, n_events
         |FROM (SELECT user_id, ts, event_id, event_type, value,
@@ -661,8 +648,15 @@ object StreamingJobs {
         |                                ORDER BY ts DESC, event_id DESC) AS rn,
         |             count(*) OVER (PARTITION BY user_id) AS n_events
         |      FROM events)
-        |WHERE rn = 1 ORDER BY user_id""".stripMargin,
-    "events_late_audit" -> eventsLateAuditSql,
-    "watermark_delay_curve" -> watermarkDelayCurveSql,
+        |WHERE rn = 1 ORDER BY user_id""".stripMargin) { (s, d) =>
+      latestState(batchEvents(s, d)).orderBy("user_id") },
+    Query.templated("events_late_audit",
+        a => eventsLateAuditSqlFor(a.int("delay_minutes", LateDelayMinutes),
+        a.int("jitter_minutes", JitterMinutes))) { (s, d, a) =>
+      eventsLateAudit(s, d, a.int("delay_minutes", LateDelayMinutes),
+          a.int("jitter_minutes", JitterMinutes)) },
+    Query.templated("watermark_delay_curve",
+        a => watermarkDelayCurveSqlFor(a.int("jitter_minutes", JitterMinutes))) { (s, d, a) =>
+      watermarkDelayCurve(s, d, a.int("jitter_minutes", JitterMinutes)) },
   )
 }

@@ -153,6 +153,15 @@ class ArgsSpec extends AnyFunSuite {
     assert(full == exact)
   }
 
+  test("ann_cosine_ivfpq_rerank with no args is the registered query (n_probe 8)") {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("qid", "rank", "vec_id").collect().map(_.toString).toSeq
+    val run = SparkEntry.queriesWithArgs("ann_cosine_ivfpq_rerank")
+    val registered = rows(SparkEntry.queries("ann_cosine_ivfpq_rerank")(spark, sf))
+    assert(rows(run(spark, sf, Map.empty)) == registered)
+    assert(rows(run(spark, sf, Map("n_probe" -> "8"))) == registered)
+  }
+
   test("mm_frame_sample honors stride") {
     val run = SparkEntry.queriesWithArgs("mm_frame_sample")
     val s4 = run(spark, sf, Map("stride" -> "4")).collect()

@@ -86,18 +86,4 @@ class TextJobsSpec extends AnyFunSuite {
     // every oracleSql key must exist in queries
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
-
-  test("no query-name collisions across modules (Map ++ would shadow silently)") {
-    val moduleSizes = Seq(
-      queries.TextJobs.queries.size, queries.Relational.queries.size,
-      queries.Dedup.queries.size, queries.Similarity.queries.size,
-      queries.TextAnalysis.queries.size, queries.Multimodal.queries.size,
-      queries.Temporal.queries.size, queries.Functions.queries.size,
-      queries.Curation.queries.size,
-      streaming.StreamingJobs.queries.size,
-      operators.TopKAggregator.queries.size, operators.SkewJoin.queries.size,
-      operators.BucketedJoin.queries.size)
-    assert(SparkEntry.queries.size == moduleSizes.sum,
-      s"expected ${moduleSizes.sum} queries, got ${SparkEntry.queries.size} — a key collides")
-  }
 }
