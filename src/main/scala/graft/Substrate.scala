@@ -6,6 +6,7 @@ import java.nio.file.{DirectoryNotEmptyException, FileAlreadyExistsException,
 import java.util.concurrent.{CompletableFuture, CompletionException,
   ConcurrentHashMap}
 
+import scala.annotation.tailrec
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
@@ -13,11 +14,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** The one policy for on-disk artifacts graft writes per JVM: where each
-  * lives, how it is written once, how it is read back, and how it is
-  * deleted at exit.
+/** The one policy for what graft derives from a corpus per JVM: where
+  * each on-disk artifact lives, how it is written once, how it is read
+  * back, and how it is deleted at exit; and the one at-most-once memo
+  * ([[once]], [[derived]]) for driver-side values.
   *
-  * Two kinds of artifact go through here:
+  * Two kinds of on-disk artifact go through here:
   *  - WRITE-ONCE SINKS ([[materialize]], [[persistedModel]]): a
   *    substrate many consumer queries share — cluster labels, kNN edges,
   *    IVF assignment, the frozen split. The first consumer builds it;
@@ -94,42 +96,39 @@ object Substrate {
     sys.props.get("graft.substrate.dir")
       .orElse(sys.env.get("SPARK_GRAFT_SUBSTRATE_DIR")).filter(_.nonEmpty)
 
-  /** Engine-code fingerprint folded into every sink key: size+mtime of
-    * the class files whose kernels define substrate contents, so a
-    * recompiled engine never reads a previous build's sinks. Any rebuild
-    * of these classes invalidates (touching them is exactly editing the
-    * kernels). */
-  private lazy val codeTag: String = md5Hex(
-    Seq("graft/queries/Dedup.class", "graft/queries/Similarity.class",
-      "graft/queries/Curation.class", "graft/queries/TextAnalysis.class")
-      .flatMap { c =>
-        Option(getClass.getClassLoader.getResource(c)).map { url =>
-          val conn = url.openConnection()
-          s"$c:${conn.getContentLengthLong}:${conn.getLastModified}"
-        }
-      }.mkString, 6)
+  /** `rel:size:mtime` of every file at or under `f`, sorted by path;
+    * `rel` names `f` itself. */
+  private def fileStamps(f: File, rel: String): Seq[String] =
+    if (f.isDirectory)
+      Option(f.listFiles()).toSeq.flatten.sortBy(_.getName)
+        .flatMap(c => fileStamps(c, if (rel.isEmpty) c.getName else rel + "/" + c.getName))
+    else Seq(s"$rel:${f.length}:${f.lastModified}")
+
+  /** Inputs of the engine-code fingerprint: size+mtime of the code source
+    * that holds `graft/` — the jar, or every `.class` under the classes
+    * dir — so a rebuild of ANY engine class (a Relational or BucketedJoin
+    * sink's kernel as much as Dedup's) lands persistent sinks in fresh
+    * dirs. Walked once per JVM. */
+  private[graft] lazy val codeTagInputs: Seq[String] = {
+    val src = new File(getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    if (src.isDirectory) fileStamps(src, "").filter(_.split(':')(0).endsWith(".class"))
+    else fileStamps(src, src.getName)
+  }
+  private lazy val codeTag: String = md5Hex(codeTagInputs.mkString("\n"), 6)
 
   /** Content key of a corpus dir: md5 over the sfDir string, every
     * TABLE file's (relative path, size, mtime), and [[codeTag]]. Only
     * `*.parquet` entries participate — corpus dirs carry non-table files
     * that change per run (ScaleProbe's reuse MANIFEST). A changed corpus
     * or a rebuilt engine lands in a fresh dir, so staleness is
-    * impossible. Memoized per sfDir (corpus dirs are session-immutable). */
-  private val corpusKeyMemo = new ConcurrentHashMap[String, String]()
-  private def corpusContentKey(sfDir: String): String =
-    corpusKeyMemo.computeIfAbsent(sfDir, { _ =>
-      val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-      def walk(f: File, rel: String): Unit =
-        if (f.isDirectory) {
-          val kids = f.listFiles()
-          if (kids != null) kids.sortBy(_.getName)
-            .foreach(c => walk(c, rel + "/" + c.getName))
-        } else entries += s"$rel:${f.length}:${f.lastModified}"
-      val top = new File(sfDir).listFiles()
-      if (top != null) top.filter(_.getName.endsWith(".parquet"))
-        .sortBy(_.getName).foreach(t => walk(t, t.getName))
-      md5Hex(sfDir + "\n" + codeTag + "\n" + entries.mkString("\n"), 8)
-    })
+    * impossible. Walked on every persistent-sink call: a stat per table
+    * file, no memo to go stale. */
+  private def corpusContentKey(sfDir: String): String = {
+    val tables = Option(new File(sfDir).listFiles()).toSeq.flatten
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+    md5Hex(sfDir + "\n" + codeTag + "\n" +
+      tables.flatMap(t => fileStamps(t, t.getName)).mkString("\n"), 8)
+  }
 
   /** A sink's location: (path, persistent?). A session sink is a
     * [[sessionDir]]; a persistent one is never cleaned up. */
@@ -162,42 +161,67 @@ object Substrate {
   }
 
   // --------------------------------------------------------------------
-  // The write-once protocol
+  // At-most-once values: the one memo
   // --------------------------------------------------------------------
 
-  /** Paths whose sink has been (or is being) written this JVM. Values are
-    * futures so at-most-once-per-path holds under concurrent query
-    * construction while the build runs OUTSIDE any map bin lock. */
-  private val sinks = new ConcurrentHashMap[String, CompletableFuture[String]]()
+  /** Keys whose value has been (or is being) computed this JVM. Values
+    * are futures, so a compute runs OUTSIDE any map bin lock: it may run
+    * Spark jobs and call [[once]] for another key. */
+  private val slots = new ConcurrentHashMap[Any, CompletableFuture[Any]]()
 
-  /** Runs `write` for `out` exactly once per JVM: putIfAbsent publishes a
-    * future; losers await it; a failed writer un-publishes so a later
-    * call can retry. A waiter whose writer failed with a NonFatal cause
-    * retries the race for the slot itself instead of failing permanently
-    * on someone else's hiccup; a fatal cause is rethrown, never retried. */
-  private def writeOnce(out: String)(write: => Unit): Unit = {
-    var done = false
-    while (!done) {
-      val fresh = new CompletableFuture[String]()
-      val prior = sinks.putIfAbsent(out, fresh)
-      if (prior == null) {
-        try { write; fresh.complete(out): Unit; done = true }
+  /** `compute`'s value for `key`, computed at most once per JVM:
+    * putIfAbsent publishes a future; losers await it; a failed compute
+    * un-publishes so a later call can retry. A waiter whose winner failed
+    * with a NonFatal cause races for the slot again instead of failing
+    * permanently on someone else's hiccup; a fatal cause is rethrown,
+    * never retried. A compute that calls `once` on its OWN key waits on
+    * itself forever. */
+  @tailrec def once[T](key: Any)(compute: => T): T = {
+    val fresh = new CompletableFuture[Any]()
+    val prior = slots.putIfAbsent(key, fresh)
+    val got: Option[T] =  // None: the winner failed NonFatal; race again
+      if (prior == null)
+        try { val v = compute; fresh.complete(v): Unit; Some(v) }
         catch {
           case t: Throwable =>
             // wake any waiters with the failure instead of deadlocking them
-            sinks.remove(out, fresh)
+            slots.remove(key, fresh)
             fresh.completeExceptionally(t)
             throw t
         }
-      } else {
-        try { prior.join(); done = true }
+      else
+        try Some(prior.join().asInstanceOf[T])
         catch {
-          case e: CompletionException =>
-            if (!NonFatal(e.getCause)) throw e.getCause
+          case e: CompletionException if NonFatal(e.getCause) => None
+          case e: CompletionException => throw e.getCause
         }
-      }
+    got match {
+      case Some(v) => v
+      case None => once(key)(compute)
     }
   }
+
+  /** (modification time, length) of the file or directory at `path`;
+    * None when it cannot be stat'ed. */
+  private def stamp(spark: SparkSession, path: String): Option[(Long, Long)] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    try {
+      val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+      Some((st.getModificationTime, st.getLen))
+    } catch { case _: java.io.IOException => None }
+  }
+
+  /** Per-corpus derived state — a table's schema, a corpus count, a
+    * trained model, a base aggregate: `compute` runs at most once per
+    * (`what`, `sfDir`) and per [[stamp]] of each `$sfDir/<table>.parquet`
+    * in `tables`, the tables it reads. A table rewritten at the same path
+    * changes its stamp, so the next call recomputes from the new data
+    * instead of serving the old value; entries for earlier stamps are
+    * kept (they are small driver-side values and are never read again).
+    * `compute` may call `derived` for another value. */
+  def derived[T](spark: SparkSession, sfDir: String, tables: Seq[String], what: String)
+                (compute: => T): T =
+    once((what, sfDir, tables.map(t => t -> stamp(spark, s"$sfDir/$t.parquet"))))(compute)
 
   /** Schema sidecar EVERY sink carries: reads take their schema from it,
     * so no read starts a parquet footer-inference job, and an EMPTY sink
@@ -231,7 +255,7 @@ object Substrate {
                   layout: Layout = Plain)(df: => DataFrame): DataFrame = {
     val (out, persistent) = sinkPath(spark, prefix, sfDir)
     lazy val table = "graft_b_" + md5Hex(out, 8)
-    writeOnce(out) {
+    once(out) {
       def writeTo(dst: String): Unit = {
         val frame = df
         layout match {

@@ -7,41 +7,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * to a plain FileSourceScan everywhere). See FIXTURES.md §B for schemas.
   */
 object Tables {
-  /** Memoized parquet SCHEMA per table file — metadata only, never data.
-    * Every `spark.read.parquet(path)` call re-runs footer-based schema
+  /** A scan of `$sfDir/<name>.parquet` with its parquet SCHEMA memoized
+    * through [[Substrate.derived]] — metadata only, never data. Every
+    * `spark.read.parquet(path)` call re-runs footer-based schema
     * inference (~0.1-0.2 s of the per-query floor at sf0.1, `Probe
-    * floor`, r14), so the schema is inferred once and passed explicitly
-    * thereafter. An entry holds for the file or directory it was read
-    * from: keyed by path and stamped with the entry's modification time
-    * and length, so a table rewritten at the same path (a sink rebuilt
-    * in place, a fixture regenerated) is read with its new schema. A
-    * failed read is not memoized. */
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, ((Long, Long), org.apache.spark.sql.types.StructType)]()
-
+    * floor`, r14), so the schema is inferred once per stamp of the table
+    * and passed explicitly thereafter: a table rewritten at the same path
+    * (a sink rebuilt in place, a fixture regenerated) is read with its new
+    * schema. A failed read is not memoized. */
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    stamp(spark, path) match {
-      case None => spark.read.parquet(path)
-      case Some(st) =>
-        val cached = schemaCache.get(path)
-        if (cached != null && cached._1 == st) spark.read.schema(cached._2).parquet(path)
-        else {
-          val df = spark.read.parquet(path)
-          schemaCache.put(path, (st, df.schema))
-          df
-        }
+    val schema = Substrate.derived(spark, sfDir, Seq(name), "schema") {
+      spark.read.parquet(path).schema
     }
-  }
-
-  /** (modification time, length) of the file or directory at `path`;
-    * None when it cannot be stat'ed, and the read reports why. */
-  private def stamp(spark: SparkSession, path: String): Option[(Long, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    try {
-      val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
-      Some((st.getModificationTime, st.getLen))
-    } catch { case _: java.io.IOException => None }
+    spark.read.schema(schema).parquet(path)
   }
 
   def region(s: SparkSession, d: String): DataFrame    = apply(s, d, "region")

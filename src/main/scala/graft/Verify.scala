@@ -1,5 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.DataFrame
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. Optional args
   * past (sfDir, outDir) restrict the dump to named queries — local
@@ -40,23 +43,24 @@ object Verify {
     }
     val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => subset.isEmpty || subset(name) }
-      .filter { case _ => argSpecs.isEmpty || subset.nonEmpty }
-      .foreach { case (name, fn) =>
+    // one query result -> `$outDir/$key` as one parquet file, or a _FAILED marker
+    def dump(key: String)(build: => DataFrame): Unit = {
       spark.catalog.clearCache()  // drop the previous query's caches
-      Files.deleteIfExists(Paths.get(s"$outDir/$name._FAILED"))  // stale marker
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      Files.deleteIfExists(Paths.get(s"$outDir/$key._FAILED"))  // stale marker
+      try build.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$key")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] $key failed: ${e.getMessage}")
         // explicit failure marker: a thrown query must surface as `err`
         // in CORRECTNESS, not silently vanish from the report (the r6
         // events_rolling_24h failure was ABSENT rather than red)
-        Files.writeString(Paths.get(s"$outDir/$name._FAILED"),
+        Files.writeString(Paths.get(s"$outDir/$key._FAILED"),
           Option(e.getMessage).getOrElse(e.getClass.getName))
       }
     }
+    SparkEntry.queries
+      .filter { case (name, _) => subset.isEmpty || subset(name) }
+      .filter { case _ => argSpecs.isEmpty || subset.nonEmpty }
+      .foreach { case (name, fn) => dump(name)(fn(spark, sfDir)) }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -71,15 +75,7 @@ object Verify {
     } + "\""
     // name@key=val,... specs: parameterized run + templated oracle
     val argOracles = parsed.map { case (spec, build, oracle, argMap) =>
-      spark.catalog.clearCache()
-      Files.deleteIfExists(Paths.get(s"$outDir/$spec._FAILED"))
-      try build(spark, sfDir, argMap)
-        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$spec")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $spec failed: ${e.getMessage}")
-        Files.writeString(Paths.get(s"$outDir/$spec._FAILED"),
-          Option(e.getMessage).getOrElse(e.getClass.getName))
-      }
+      dump(spec)(build(spark, sfDir, argMap))
       spec -> oracle
     }.toMap
     val json = (SparkEntry.oracleSql ++ argOracles)

@@ -1180,14 +1180,12 @@ object Dedup {
     }
   }
 
-  /** Corpus doc count per dir, memoized (the corpusVecCount pattern —
-    * corpus dirs are session-immutable); feeds [[derivedBandGeometry]]
-    * at query construction. */
-  private val nDocsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  /** Corpus doc count per dir; feeds [[derivedBandGeometry]] at query
+    * construction. */
   private def corpusDocCount(spark: SparkSession, sfDir: String): Long =
-    nDocsMemo.computeIfAbsent(sfDir,
-      _ => Long.box(Tables.documents(spark, sfDir).count())).longValue()
+    Substrate.derived(spark, sfDir, Seq("documents"), "n_docs") {
+      Tables.documents(spark, sfDir).count()
+    }
 
   /** splitmix64 finalizer — the content hash behind OPH slot assignment.
     * Full-width 64-bit avalanche of the 48-bit shingle hash, so slot and

@@ -1640,13 +1640,6 @@ object Relational {
   // Incremental materialized-view maintenance
   // --------------------------------------------------------------------
 
-  /** Memoized base MV per corpus dir (corpus dirs are immutable for a
-    * session — the bpeTrainMerges/pqMemo pattern): (cutoff date string,
-    * base rows (ship_month, returnflag, n_items, cents)). The MV is
-    * |months·flags|-sized model state (~250 rows), driver-safe. */
-  private val mvBaseMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Seq[(String, String, Long, Long)])]()
-
   private val MvDeltaDays = 30
 
   /** INCREMENTAL MV REFRESH: maintain the monthly-revenue materialized
@@ -1677,7 +1670,9 @@ object Relational {
       .groupBy("ship_month", "l_returnflag")
       .agg(count(lit(1)).as("n_items"), sum("c").as("cents"))
     val li = Tables.lineitem(spark, sfDir)
-    val (cutoff, baseRows) = mvBaseMemo.computeIfAbsent(sfDir, _ => {
+    // (cutoff date string, base rows (ship_month, returnflag, n_items,
+    // cents)): |months·flags|-sized model state (~250 rows), driver-safe
+    val (cutoff, baseRows) = Substrate.derived(spark, sfDir, Seq("lineitem"), "mv_base") {
       val maxStr = li.agg(
         date_format(date_sub(max(col("l_shipdate")), MvDeltaDays),
           "yyyy-MM-dd")).head().getString(0)
@@ -1686,7 +1681,7 @@ object Relational {
         li.filter(col("l_shipdate") < lit(cut).cast("timestamp")))
         .as[(String, String, Long, Long)].collect().toSeq
       (cut, base)
-    })
+    }
     val delta = monthAgg(
       li.filter(col("l_shipdate") >= lit(cutoff).cast("timestamp")))
     baseRows.toDF("ship_month", "l_returnflag", "n_items", "cents")

@@ -200,14 +200,12 @@ object Similarity {
     math.min(SigBitsCap, math.max(SigBits, ceilLog2))
   }
 
-  /** Corpus vector count per dir, memoized (the pqMemo pattern — corpus
-    * dirs are session-immutable); feeds [[derivedSigBits]] at query
+  /** Corpus vector count per dir; feeds [[derivedSigBits]] at query
     * construction. */
-  private val nVecsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private def corpusVecCount(spark: SparkSession, sfDir: String): Long =
-    nVecsMemo.computeIfAbsent(sfDir,
-      _ => Long.box(Tables.embeddings(spark, sfDir).count()))
+    Substrate.derived(spark, sfDir, Seq("embeddings"), "n_vecs") {
+      Tables.embeddings(spark, sfDir).count()
+    }
 
   /** Deterministic pseudo-random hyperplane weights in [-1, 1): seeded
     * LCG (numerical-recipes constants), pure function of (table, bit, dim). */
@@ -1713,14 +1711,6 @@ object Similarity {
       .toDF("vec_id", "u")
   }
 
-  /** Trained coarse-quantizer centroids per corpus dir, memoized (the
-    * pqMemo pattern — corpus dirs are session-immutable): the Lloyd
-    * training is deterministic, so re-running it per query
-    * (ann_cosine_ivf / _ivfpq / _ivfpq_rerank / Dedup.semDedup all
-    * need the same model) only re-spent ~40% of each query's cost. */
-  private val ivfCentMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Double]]]()
-
   /** Spherical k-means coarse quantizer: [[derivedIvfCells]](n) cells,
     * [[IvfIters]] Lloyd rounds over a deterministic vec_id-stride
     * sample (~128 vectors/cell — training is O(128·cells²), the
@@ -1732,9 +1722,12 @@ object Similarity {
     * so every hash gate sees the same quantizer a fresh training run
     * would produce — and later sessions skip the Lloyd rounds entirely
     * (the last per-session cost in the substrate freeze after r13
-    * persisted the three sinks). */
+    * persisted the three sinks). Trained once per corpus: the Lloyd
+    * training is deterministic, so re-running it per query
+    * (ann_cosine_ivf / _ivfpq / _ivfpq_rerank / Dedup.semDedup all
+    * need the same model) only re-spent ~40% of each query's cost. */
   private[queries] def ivfCentroids(spark: SparkSession, sfDir: String): Array[Array[Double]] =
-    ivfCentMemo.computeIfAbsent(sfDir, _ => {
+    Substrate.derived(spark, sfDir, Seq("embeddings"), "ivf_centroids") {
       val bytes = Substrate.persistedModel(spark, "graft_ivfcent_", sfDir) {
         val m = trainIvfCentroids(spark, sfDir)
         val bb = java.nio.ByteBuffer.allocate(8 + m.map(8 + _.length * 8).sum)
@@ -1754,7 +1747,7 @@ object Similarity {
         val len = bb.getInt; bb.getInt: Unit
         Array.fill(len)(java.lang.Double.longBitsToDouble(bb.getLong))
       }
-    })
+    }
 
   private def trainIvfCentroids(spark: SparkSession, sfDir: String): Array[Array[Double]] = {
       import spark.implicits._
@@ -2741,26 +2734,23 @@ object Similarity {
     }
   }
 
-  /** Session-wide memoized PQ codebook per corpus dir (the bpeTrainMerges
-    * move: ≤8·256·8 doubles of driver-side model state shared by
-    * [[embeddingPq]] and [[annCosinePq]] under the corpus-dir-immutable-
-    * per-session contract). The training frame is cached ONLY for the
-    * eager count/init/Lloyd phase inside this method and released before
-    * returning — the queries' own lazy passes each scan parquet once, so
-    * no corpus-sized cache outlives the model-state construction (and on
-    * the memo-warm path nothing is cached at all). */
-  private val pqMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Array[Double]]]]()
-
+  /** PQ codebook per corpus: ≤8·256·8 doubles of driver-side model state
+    * shared by [[embeddingPq]] and [[annCosinePq]]. The training frame is
+    * cached ONLY for the eager count/init/Lloyd phase inside the trainer
+    * and released before returning — the queries' own lazy passes each
+    * scan parquet once, so no corpus-sized cache outlives the model-state
+    * construction (and on the memo-warm path nothing is cached at all). */
   private def pqCodebook(spark: SparkSession, sfDir: String): Array[Array[Array[Double]]] =
-    pqMemo.computeIfAbsent(sfDir, _ => trainPqCodebook(spark, pqRaw(spark, sfDir)))
+    Substrate.derived(spark, sfDir, Seq("embeddings"), "pq_codebook") {
+      trainPqCodebook(spark, pqRaw(spark, sfDir))
+    }
 
   /** Residual codebook for [[annCosineIvfPqRes]]: the same trainer over
-    * unit-space coarse-quantizer residuals, memoized under its own key. */
+    * unit-space coarse-quantizer residuals. */
   private def pqResCodebook(spark: SparkSession, sfDir: String): Array[Array[Array[Double]]] =
-    pqMemo.computeIfAbsent(sfDir + "#res",
-      _ => trainPqCodebook(spark, unitResiduals(spark, sfDir)
-        .select(col("vec_id"), col("x"))))
+    Substrate.derived(spark, sfDir, Seq("embeddings"), "pq_res_codebook") {
+      trainPqCodebook(spark, unitResiduals(spark, sfDir).select(col("vec_id"), col("x")))
+    }
 
   /** The Lloyd trainer shared by the raw and residual codebooks; `rawIn`
     * must provide (vec_id, x: Array[Double]). */

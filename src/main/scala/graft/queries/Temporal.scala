@@ -1315,7 +1315,7 @@ object Temporal {
     * a QUALIFY row_number filter on the pair CTE; at cap = 0 the
     * rendered string is byte-identical to the registered oracle
     * (ArgsSpec's template(defaults) pin). */
-  def multiTouchAttributionSqlFor(windowDays: Int, clicksCap: Int = 0): String = {
+  def multiTouchAttributionSqlFor(windowDays: Int, clicksCap: Int): String = {
     val windowUs = windowDays.toLong * 24 * 3600 * 1000000
     val qualify =
       if (clicksCap > 0)

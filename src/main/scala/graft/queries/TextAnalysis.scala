@@ -44,19 +44,16 @@ object TextAnalysis {
     * anti-join broadcasts (no shuffle of the corpus-sized side); above it
     * the hint is dropped and the anti-join shuffles — with AQE free to
     * re-promote to broadcast if runtime stats say the bound was loose. */
-  /** sum(n_chars) per corpus dir, memoized (the bpeMergeMemo/pqMemo
-    * pattern — corpus dirs are immutable for a session): the gate input
-    * is an EAGER driver action, and ungated it re-ran on every mere
+  /** sum(n_chars) is computed once per corpus: the gate input is an
+    * EAGER driver action, and unmemoized it re-ran on every mere
     * CONSTRUCTION of detectContamination/winnowOverlap — including the
     * PlanShapeSpec explain sweep and each Verify/Bench pass. */
-  private val totCharsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Long]()
-
   private[queries] def hotFitsBroadcast(spark: SparkSession, sfDir: String,
                                         maxDf: Int): Boolean = {
-    val totChars = totCharsMemo.computeIfAbsent(sfDir, _ =>
+    val totChars = Substrate.derived(spark, sfDir, Seq("documents"), "tot_chars") {
       Tables.documents(spark, sfDir)
-        .agg(coalesce(sum("n_chars"), lit(0L))).head().getLong(0))
+        .agg(coalesce(sum("n_chars"), lit(0L))).head().getLong(0)
+    }
     val upperBytes = totChars / math.max(1, maxDf) * 32L  // 8B fp + row overhead
     upperBytes <= Dedup.broadcastMaxBytes(spark)
   }
@@ -1725,61 +1722,52 @@ object TextAnalysis {
     * driver-side model state (≤ nMerges rows) — shared by [[bpeTrain]]
     * (which just tabulates it) and [[bpeApply]] (which folds it back
     * over the corpus). */
-  /** Session-wide memo for the learned merge tables: the three tokenizer
-    * queries (train/apply/vocab) each need the SAME ≤nMerges-row model, and
-    * before this memo the bench paid the 20 driver-synced merge rounds
-    * three times (~14 s → ~6 s, r6 verdict item 3). Keyed (sfDir, nMerges)
-    * under the same corpus-dir-immutable-per-session contract as
-    * Substrate.materialize; the value is driver-side model state (≤500
-    * tiny rows), so a plain concurrent map is enough — no Spark storage
+  /** Trained once per (corpus, nMerges): the three tokenizer queries
+    * (train/apply/vocab) each need the SAME ≤nMerges-row model, and
+    * before the memo the bench paid the 20 driver-synced merge rounds
+    * three times (~14 s → ~6 s, r6 verdict item 3). The value is
+    * driver-side model state (≤500 tiny rows) — no Spark storage
     * involved, hence NOT subject to the SPARK_GRAFT_DISABLE_CACHE A/B knob
     * (which toggles measured intra-query frame caches, not model state). */
-  private val bpeMergeMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Seq[(Int, String, String, Long)]]()
-
   private[queries] def bpeTrainMerges(spark: SparkSession, sfDir: String,
                                       nMerges: Int): Seq[(Int, String, String, Long)] =
-    bpeMergeMemo.computeIfAbsent((sfDir, nMerges),
-      _ => bpeTrainMergesUncached(spark, sfDir, nMerges))
-
-  private def bpeTrainMergesUncached(spark: SparkSession, sfDir: String,
-                                     nMerges: Int): Seq[(Int, String, String, Long)] = {
-    require(nMerges > 0 && nMerges <= 500,
-      s"nMerges must be in [1, 500], got $nMerges")
-    val wordFreq = Tables.documents(spark, sfDir)
-      .select(explode(toks(col("text"))).as("tok"))
-      .groupBy("tok").agg(count(lit(1)).as("freq"))
-      .select(regexp_replace(col("tok"), "(.)", " $1 ").as("rep"), col("freq"))
-      .cache() // vocab-sized (see scaladoc) — prevents N corpus re-scans
-    try {
-      val merges = Seq.newBuilder[(Int, String, String, Long)]
-      var wt: DataFrame = wordFreq
-      var r = 1
-      var exhausted = false
-      while (r <= nMerges && !exhausted) {
-        val top = wt
-          .select(col("freq"), split(trim(col("rep")), "  ").as("s"))
-          .filter(size(col("s")) >= 2) // sequence(1,0) would DESCEND in Spark
-          .select(col("freq"), explode(expr(
-            "transform(sequence(1, size(s) - 1), i -> concat(element_at(s, i), ' ', element_at(s, i + 1)))"))
-            .as("pair"))
-          .groupBy("pair").agg(sum("freq").as("n"))
-          .orderBy(col("n").desc, col("pair").asc)
-          .limit(1).collect() // 1 row of model state per round
-        if (top.isEmpty) exhausted = true
-        else {
-          val pair = top(0).getString(0)
-          val n = top(0).getLong(1)
-          val Array(a, b) = pair.split(" ") // symbols are \w+, never spaced
-          merges += ((r, a, b, n))
-          // symbols are [a-z0-9_] so embedding them in the SQL literal is safe
-          wt = wt.withColumn("rep", expr(s"replace(rep, ' $a  $b ', ' $a$b ')"))
-          r += 1
+    Substrate.derived(spark, sfDir, Seq("documents"), s"bpe_merges_$nMerges") {
+      require(nMerges > 0 && nMerges <= 500,
+        s"nMerges must be in [1, 500], got $nMerges")
+      val wordFreq = Tables.documents(spark, sfDir)
+        .select(explode(toks(col("text"))).as("tok"))
+        .groupBy("tok").agg(count(lit(1)).as("freq"))
+        .select(regexp_replace(col("tok"), "(.)", " $1 ").as("rep"), col("freq"))
+        .cache() // vocab-sized (see scaladoc) — prevents N corpus re-scans
+      try {
+        val merges = Seq.newBuilder[(Int, String, String, Long)]
+        var wt: DataFrame = wordFreq
+        var r = 1
+        var exhausted = false
+        while (r <= nMerges && !exhausted) {
+          val top = wt
+            .select(col("freq"), split(trim(col("rep")), "  ").as("s"))
+            .filter(size(col("s")) >= 2) // sequence(1,0) would DESCEND in Spark
+            .select(col("freq"), explode(expr(
+              "transform(sequence(1, size(s) - 1), i -> concat(element_at(s, i), ' ', element_at(s, i + 1)))"))
+              .as("pair"))
+            .groupBy("pair").agg(sum("freq").as("n"))
+            .orderBy(col("n").desc, col("pair").asc)
+            .limit(1).collect() // 1 row of model state per round
+          if (top.isEmpty) exhausted = true
+          else {
+            val pair = top(0).getString(0)
+            val n = top(0).getLong(1)
+            val Array(a, b) = pair.split(" ") // symbols are \w+, never spaced
+            merges += ((r, a, b, n))
+            // symbols are [a-z0-9_] so embedding them in the SQL literal is safe
+            wt = wt.withColumn("rep", expr(s"replace(rep, ' $a  $b ', ' $a$b ')"))
+            r += 1
+          }
         }
-      }
-      merges.result()
-    } finally { wordFreq.unpersist(); () }
-  }
+        merges.result()
+      } finally { wordFreq.unpersist(); () }
+    }
 
   def bpeTrain(spark: SparkSession, sfDir: String,
                nMerges: Int = BpeMerges): DataFrame = {

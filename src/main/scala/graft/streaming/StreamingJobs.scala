@@ -365,7 +365,7 @@ object StreamingJobs {
   /** Oracle: the plain global running max over arrival order (DuckDB
     * affords the corpus-wide window at oracle scale) — equality proves
     * the bin decomposition computes the identical prefix. */
-  def eventsLateAuditSqlFor(delayMinutes: Int, jitterMinutes: Int = 180): String = {
+  def eventsLateAuditSqlFor(delayMinutes: Int, jitterMinutes: Int): String = {
     val dUs = delayMinutes.toLong * 60 * 1000000
     val jUs = jitterMinutes.toLong * 60 * 1000000
     s"""WITH e AS (SELECT event_id, ts, epoch_us(ts) AS ts_us,

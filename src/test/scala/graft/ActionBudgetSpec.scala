@@ -28,4 +28,12 @@ class ActionBudgetSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       ActionBudget.measure(s)(queries.TextAnalysis.nbQualityScore(s, TestSpark.sf))
     assert(spent.jobs == 0)
   }
+
+  test("mv_refresh_incremental: a second builder call in one session launches NO job") {
+    val s = spark.newSession()
+    ActionBudget.measure(s)(queries.Relational.mvRefreshIncremental(s, TestSpark.sf))
+    val spent =
+      ActionBudget.measure(s)(queries.Relational.mvRefreshIncremental(s, TestSpark.sf))
+    assert(spent.jobs == 0)
+  }
 }

@@ -212,6 +212,34 @@ class RelationalSpec extends AnyFunSuite {
     assert(p.contains("LocalTableScan"), "base MV should be local model state")
   }
 
+  test("mv_refresh_incremental: a lineitem rewritten in place refreshes from the new rows") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val sf01 = new java.io.File(sf).getParent + "/sf0.01"
+    val dir = Files.createTempDirectory("graft_mv_rewrite")
+    val fresh = Files.createTempDirectory("graft_mv_fresh")
+    def mv(d: java.nio.file.Path) =
+      queries.Relational.mvRefreshIncremental(spark, d.toString).collect().toSeq
+    try {
+      Files.copy(Paths.get(sf01, "lineitem.parquet"), dir.resolve("lineitem.parquet"))
+      val before = mv(dir)
+      // the 'N' rows as one parquet file, written aside, then copied over
+      // the table at the same path and into a fresh dir
+      val aside = fresh.resolve("aside").toString
+      Tables.lineitem(spark, dir.toString).filter(col("l_returnflag") === "N")
+        .coalesce(1).write.parquet(aside)
+      val part = new java.io.File(aside).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head.toPath
+      Files.copy(part, dir.resolve("lineitem.parquet"), StandardCopyOption.REPLACE_EXISTING)
+      Files.copy(part, fresh.resolve("lineitem.parquet"))
+      val rewritten = mv(dir)
+      assert(rewritten == mv(fresh))
+      assert(rewritten.length < before.length)
+    } finally {
+      Substrate.deleteRecursively(dir.toFile)
+      Substrate.deleteRecursively(fresh.toFile)
+    }
+  }
+
   test("rfm_segments: one row per customer, scores monotone in their dimension") {
     val rows = queries.Relational.rfmSegments(spark, sf).collect()
     val nCust = Tables.orders(spark, sf).select("o_custkey").distinct().count()

@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Substrate]]: every dir a query writes is registered with the one
   * exit cleaner, a persistent bucketed sink re-registers over its files
-  * in a fresh catalog, and the write-once waiter retries a NonFatal
-  * writer failure but rethrows a fatal one. */
+  * in a fresh catalog, the persistent key's code tag covers every engine
+  * class, the at-most-once waiter retries a NonFatal writer failure but
+  * rethrows a fatal one, and a memoized compute may nest another. */
 class SubstrateSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val sf01 = new File(TestSpark.sf).getParent + "/sf0.01"
@@ -119,5 +120,23 @@ class SubstrateSpec extends AnyFunSuite {
     val (w, out) = race("graft_spec_fatal_", fatal)
     assert(w.contains(fatal))
     assert(out == Left(fatal))
+  }
+
+  test("the code tag covers every engine class, Relational's and BucketedJoin's included") {
+    val classes = Substrate.codeTagInputs.map(_.split(':')(0)).toSet
+    assert(classes("graft/queries/Relational.class"))
+    assert(classes("graft/operators/BucketedJoin.class"))
+  }
+
+  test("a derived compute that reads another derived value returns, and runs once") {
+    val what = "spec_nested_" + java.util.UUID.randomUUID()
+    var runs = 0
+    def outer = Substrate.derived(spark, TestSpark.sf, Seq("lineitem"), what) {
+      runs += 1
+      Substrate.derived(spark, TestSpark.sf, Seq("orders"), what + "_inner")(2) + 1
+    }
+    assert(outer == 3)
+    assert(outer == 3)
+    assert(runs == 1)
   }
 }
