@@ -116,28 +116,32 @@ object Substrate {
   }
   private lazy val codeTag: String = md5Hex(codeTagInputs.mkString("\n"), 6)
 
-  /** Content key of a corpus dir: md5 over the sfDir string, every
-    * TABLE file's (relative path, size, mtime), and [[codeTag]]. Only
+  /** Content key of a corpus dir: md5 over the sfDir string, `code`,
+    * and every TABLE file's (relative path, size, mtime). Only
     * `*.parquet` entries participate — corpus dirs carry non-table files
     * that change per run (ScaleProbe's reuse MANIFEST). A changed corpus
-    * or a rebuilt engine lands in a fresh dir, so staleness is
-    * impossible. Walked on every persistent-sink call: a stat per table
-    * file, no memo to go stale. */
-  private def corpusContentKey(sfDir: String): String = {
+    * (or, with `code` = [[codeTag]], a rebuilt engine) lands in a fresh
+    * dir, so staleness is impossible. Walked on every sink call: a stat
+    * per table file, no memo to go stale. */
+  private def corpusContentKey(sfDir: String, code: String): String = {
     val tables = Option(new File(sfDir).listFiles()).toSeq.flatten
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    md5Hex(sfDir + "\n" + codeTag + "\n" +
+    md5Hex(sfDir + "\n" + code + "\n" +
       tables.flatMap(t => fileStamps(t, t.getName)).mkString("\n"), 8)
   }
 
-  /** A sink's location: (path, persistent?). A session sink is a
-    * [[sessionDir]]; a persistent one is never cleaned up. */
+  /** A sink's location: (path, persistent?). Both kinds are named by the
+    * corpus's [[corpusContentKey]], so a table rewritten in place gets a
+    * fresh sink instead of the old one. A session sink is a
+    * [[sessionDir]] and dies with the JVM, so its key leaves out the
+    * [[codeTag]]; a persistent one is never cleaned up. */
   private def sinkPath(spark: SparkSession, prefix: String,
                        sfDir: String): (String, Boolean) =
     substrateRoot match {
       case Some(r) =>
-        (new File(r, prefix + corpusContentKey(sfDir)).getAbsolutePath, true)
-      case None => (sessionDir(spark, prefix, sfDir), false)
+        (new File(r, prefix + corpusContentKey(sfDir, codeTag)).getAbsolutePath, true)
+      case None =>
+        (sessionDir(spark, prefix + corpusContentKey(sfDir, "") + "_", sfDir), false)
     }
 
   /** Build a persistent artifact: run `write` into a `.build.<appId>`
@@ -238,10 +242,8 @@ object Substrate {
       .asInstanceOf[StructType]
 
   /** Write-once materialization: builds `df` and writes it in `layout`,
-    * with its schema sidecar, to the sink for (`prefix`, `sfDir`) exactly
-    * once per JVM, and returns a scan of the sink. Assumes a corpus dir
-    * is immutable for the session's lifetime — the contract every
-    * fixture and production partition layout already satisfies.
+    * with its schema sidecar, to the sink for (`prefix`, `sfDir`, table
+    * stamps) exactly once per JVM, and returns a scan of the sink.
     *
     * A [[Plain]] or [[Partitioned]] read is one parquet scan whose schema
     * comes from the sidecar; no catalog call. [[Partitioned]] repartitions

@@ -22,9 +22,9 @@ import graft.{Query, Substrate, Tables}
   *
   * Both tables are [[graft.Substrate]] sinks with a `Bucketed` layout:
   * the write happens eagerly at DataFrame-construction time, once per
-  * (sfDir, session), and later constructions (Verify, each bench pass,
-  * the PlanShapeSpec sweep) read the same catalog tables — corpus dirs
-  * are immutable for a session. */
+  * (sfDir, table stamps, session), and later constructions (Verify, each
+  * bench pass, the PlanShapeSpec sweep) read the same catalog tables; a
+  * table rewritten in place gets a fresh sink. */
 object BucketedJoin {
 
   private val Buckets = 16

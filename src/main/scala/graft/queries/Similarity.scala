@@ -49,22 +49,53 @@ object Similarity {
       .withColumn("norm", sqrt(dot(col("v"), col("v"))))
 
   /** Exact cosine top-k: broadcast the (small) query set against the
-    * corpus, rank per query. The window partitions by query id — k·|Q|
-    * result rows, never a global sort. */
+    * corpus, rank per query through [[rankByCosine]]. */
   def bruteForceTopK(spark: SparkSession, sfDir: String, k: Int = TopK): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     val all = vecs(spark, sfDir)
     val q = all.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("norm").as("qnorm"))
+    rankByCosine(all.join(broadcast(q), col("vec_id") =!= col("qid")), k)
+  }
+
+  /** The one exact-cosine rank step. Over (qid, vec_id, v, norm, qv,
+    * qnorm, …) pairs it ranks each query's candidates by raw cosine DESC,
+    * vec_id ASC — the tie-break every DuckDB twin's row_number replays —
+    * keeps rank ≤ k and emits (qid, rank, vec_id, `carried`…, cosine),
+    * cosine [[Det.r]]-rounded to 4 places, ordered by (qid, rank). The
+    * window partitions by qid: k·|Q| result rows, never a global sort. */
+  private def rankByCosine(pairs: DataFrame, k: Int, carried: Column*): DataFrame = {
     val w = Window.partitionBy("qid")
       .orderBy(col("cosine_raw").desc, col("vec_id").asc)
-    all.join(broadcast(q), col("vec_id") =!= col("qid"))
+    pairs
       .withColumn("cosine_raw", dot(col("v"), col("qv")) / (col("norm") * col("qnorm")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("vec_id"), Det.r(col("cosine_raw"), 4).as("cosine"))
+      .select((Seq(col("qid"), col("rank"), col("vec_id")) ++ carried :+
+        Det.r(col("cosine_raw"), 4).as("cosine")): _*)
       .orderBy("qid", "rank")
   }
+
+  /** (qid, vec_id, …) rows joined back to the float vectors on both
+    * sides: (v, norm) for vec_id, (qv, qnorm) for qid. */
+  private def withPairVecs(spark: SparkSession, sfDir: String,
+                           pairs: DataFrame): DataFrame = {
+    val all = vecs(spark, sfDir)
+    pairs
+      .join(all, "vec_id")
+      .join(all.select(col("vec_id").as("qid"), col("v").as("qv"),
+        col("norm").as("qnorm")), "qid")
+  }
+
+  /** The exact re-rank tail of every candidate-then-rank ANN query: a
+    * candidate stream (qid, vec_id, carried…) — LSH buckets, IVF cells or
+    * an ADC shortlist — joins the float vectors back on both sides and
+    * goes through [[rankByCosine]]. Only the candidate rows ever meet the
+    * floats, so the cost tracks |candidates|, not n. */
+  private[graft] def exactRerank(spark: SparkSession, sfDir: String,
+                                 cands: DataFrame, k: Int,
+                                 carried: Column*): DataFrame =
+    rankByCosine(withPairVecs(spark, sfDir, cands), k, carried: _*)
 
   val bruteForceTopKSql: String =
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -273,28 +304,9 @@ object Similarity {
     val cands = bucketed.join(broadcast(qb), Seq("t", "sig"))
       .filter(col("vec_id") =!= col("qid"))
       .select("qid", "vec_id").distinct()
-    val w = Window.partitionBy("qid")
-      .orderBy(col("cosine_raw").desc, col("vec_id").asc)
-    cands
-      .join(all, "vec_id")
-      .join(all.select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("norm").as("qnorm")), "qid")
-      .withColumn("cosine_raw", dot(col("v"), col("qv")) / (col("norm") * col("qnorm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .select(col("qid"), col("rank"), col("vec_id"), Det.r(col("cosine_raw"), 4).as("cosine"))
-      .orderBy("qid", "rank")
+    exactRerank(spark, sfDir, cands, TopK)
   }
 
-  /** DuckDB twin of [[annCosineLsh]]. The [[hyperplane]] LCG is 64-bit
-    * wrapping arithmetic, which DuckDB reproduces in HUGEINT with an
-    * explicit mod 2⁶⁴ (the 64×64-bit product peaks below 2¹²⁷, inside
-    * signed HUGEINT); the xor-seed is built in signed BIGINT and shifted
-    * to the unsigned domain. `>>> 11` is integer division by 2¹¹, and
-    * the [-1,1) mapping repeats the Scala op order exactly (each IEEE
-    * op is exactly rounded, so same ops ⇒ same bits). Projections fold
-    * via list_dot_product over the d-ordered weight lists — the same
-    * ascending fold as the JIT'd signature kernel. */
   /** Shared DuckDB fragment: the LCG hyperplane replay (RECURSIVE over
     * dims), norms, and per-(vec, table) signatures — prefixes
     * [[annCosineLshSql]] and [[knnGraphSql]]. Callers open with
@@ -340,14 +352,10 @@ object Similarity {
        |tb AS (SELECT t, b FROM range(0, $NumTables) r1(t), range(0, 24) r2(b), bits
        |       WHERE b < bits.nb)""".stripMargin)
 
-  val annCosineLshSql: String =
-    s"""WITH RECURSIVE
-       |$lshSigChainSql,
-       |qs AS (SELECT vec_id AS qid, t, sig FROM sigs WHERE vec_id < $NumQueries),
-       |cands AS (SELECT DISTINCT qs.qid, s.vec_id
-       |          FROM sigs s JOIN qs ON s.t = qs.t AND s.sig = qs.sig
-       |          WHERE s.vec_id <> qs.qid),
-       |scored AS (
+  /** The LSH twins' [[exactRerank]]: `cands` (qid, vec_id) against the
+    * chain's norm table `n`, through the final SELECT. */
+  private val lshScoredSql: String =
+    s"""scored AS (
        |  SELECT c.qid, c.vec_id,
        |         list_dot_product(a.v, q.v) / (a.norm * q.norm) AS cosine_raw,
        |         row_number() OVER (PARTITION BY c.qid
@@ -357,6 +365,24 @@ object Similarity {
        |               JOIN n q ON c.qid = q.vec_id)
        |SELECT qid, rank, vec_id, CAST(floor(cosine_raw * 10000 + 0.5) AS DOUBLE) / 10000 AS cosine
        |FROM scored WHERE rank <= $TopK ORDER BY qid, rank""".stripMargin
+
+  /** DuckDB twin of [[annCosineLsh]]. The [[hyperplane]] LCG is 64-bit
+    * wrapping arithmetic, which DuckDB reproduces in HUGEINT with an
+    * explicit mod 2⁶⁴ (the 64×64-bit product peaks below 2¹²⁷, inside
+    * signed HUGEINT); the xor-seed is built in signed BIGINT and shifted
+    * to the unsigned domain. `>>> 11` is integer division by 2¹¹, and
+    * the [-1,1) mapping repeats the Scala op order exactly (each IEEE
+    * op is exactly rounded, so same ops ⇒ same bits). Projections fold
+    * via list_dot_product over the d-ordered weight lists — the same
+    * ascending fold as the JIT'd signature kernel. */
+  val annCosineLshSql: String =
+    s"""WITH RECURSIVE
+       |$lshSigChainSql,
+       |qs AS (SELECT vec_id AS qid, t, sig FROM sigs WHERE vec_id < $NumQueries),
+       |cands AS (SELECT DISTINCT qs.qid, s.vec_id
+       |          FROM sigs s JOIN qs ON s.t = qs.t AND s.sig = qs.sig
+       |          WHERE s.vec_id <> qs.qid),
+       |$lshScoredSql""".stripMargin
 
   /** [[annCosineLsh]] with MULTIPROBE: each query probes its own bucket
     * PLUS every bucket at Hamming distance 1 (flip each of the
@@ -368,9 +394,8 @@ object Similarity {
     * a higher floor); cost rises by ≤ (bits+1)× on the QUERY side only
     * — the corpus is neither rescanned nor re-bucketed, and the probe
     * expansion is |Q|·T·(bits+1) rows of model state, still a broadcast.
-    * The exact re-rank stage is IDENTICAL to the base (same window,
-    * same Det rounding), so output rows differ only where multiprobe
-    * actually recovered a neighbor. */
+    * Both paths end in [[exactRerank]], so output rows differ only where
+    * multiprobe actually recovered a neighbor. */
   def annCosineLshMultiprobe(spark: SparkSession, sfDir: String): DataFrame = {
     val all = vecs(spark, sfDir)
     val bucketed = signatures(spark, all)
@@ -383,17 +408,7 @@ object Similarity {
     val cands = bucketed.join(broadcast(qb), Seq("t", "sig"))
       .filter(col("vec_id") =!= col("qid"))
       .select("qid", "vec_id").distinct()
-    val w = Window.partitionBy("qid")
-      .orderBy(col("cosine_raw").desc, col("vec_id").asc)
-    cands
-      .join(all, "vec_id")
-      .join(all.select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("norm").as("qnorm")), "qid")
-      .withColumn("cosine_raw", dot(col("v"), col("qv")) / (col("norm") * col("qnorm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .select(col("qid"), col("rank"), col("vec_id"), Det.r(col("cosine_raw"), 4).as("cosine"))
-      .orderBy("qid", "rank")
+    exactRerank(spark, sfDir, cands, TopK)
   }
 
   val annCosineLshMultiprobeSql: String =
@@ -407,16 +422,7 @@ object Similarity {
        |cands AS (SELECT DISTINCT qp.qid, s.vec_id
        |          FROM sigs s JOIN qp ON s.t = qp.t AND s.sig = qp.sig
        |          WHERE s.vec_id <> qp.qid),
-       |scored AS (
-       |  SELECT c.qid, c.vec_id,
-       |         list_dot_product(a.v, q.v) / (a.norm * q.norm) AS cosine_raw,
-       |         row_number() OVER (PARTITION BY c.qid
-       |                            ORDER BY list_dot_product(a.v, q.v) / (a.norm * q.norm) DESC,
-       |                                     c.vec_id ASC) AS rank
-       |  FROM cands c JOIN n a ON c.vec_id = a.vec_id
-       |               JOIN n q ON c.qid = q.vec_id)
-       |SELECT qid, rank, vec_id, CAST(floor(cosine_raw * 10000 + 0.5) AS DOUBLE) / 10000 AS cosine
-       |FROM scored WHERE rank <= $TopK ORDER BY qid, rank""".stripMargin
+       |$lshScoredSql""".stripMargin
 
   // --------------------------------------------------------------------
   // k-NN graph (all-vectors top-k over LSH candidates)
@@ -599,9 +605,9 @@ object Similarity {
     * each re-paid the full bucket join (probe: 102 + 94 + 86 s; with
     * it, one build + two parquet scans). Edges are n·k rows — bounded,
     * far smaller than the corpus arrays — and the sink is a pure
-    * function of (sfDir, k) under the session-immutable-corpus
-    * contract. */
-  /** The ObjectHashAggregate sort-based fallback triggers at 128 groups
+    * function of (sfDir, k) and the corpus tables' stamps.
+    *
+    * The ObjectHashAggregate sort-based fallback triggers at 128 groups
     * per task — sized for UNBOUNDED buffers (collect_list, the 8 MiB
     * dense bitmaps), not for [[graft.functions.TopKScores]]'s ~100 B
     * O(k) state. Under the default, the edge build's per-partition
@@ -1652,38 +1658,14 @@ object Similarity {
       math.max(IvfMinCells.toLong,
         math.round(math.sqrt(nVecs.toDouble / 2.0)))).toInt
 
-  /** IVF ANN: deterministic spherical k-means coarse quantizer (init =
-    * unit vectors of the first `cells` vec_ids, `IvfIters` = 3 Lloyd
-    * iterations, ties to the lowest cell), then per-query search probes
-    * the NProbe nearest cells and exact-re-ranks only their members —
-    * the classic FAISS IVF topology. `cells` = [[derivedIvfCells]](n).
-    *
-    * Distribution contract: vectors never leave the cluster; each Lloyd
-    * iteration is one distributed assign+reduce, and only the k centroid
-    * rows (k×64 doubles — model state, not data) come back to the driver
-    * to be re-broadcast via a real `sparkContext.broadcast` (NOT the task
-    * closure — at the 65536-cell cap the model is 33 MB, which torrent
-    * broadcast ships once per executor instead of once per task). Lloyd
-    * trains on a deterministic ~128-per-cell sample (O(cells²) work);
-    * the final assignment is one exact O(n·cells) pass. At 100 TB: same
-    * loop, √n cells; per-query search cost = cells + nProbe·n/cells
-    * ≈ O(√n), not O(n).
-    * Fully value-oracled ([[annCosineIvfSql]]) since round 6: the loop
-    * is deterministic arithmetic end-to-end once centroid accumulation
-    * is integerised. SimilaritySpec additionally bounds recall@5 against
-    * the brute-force baseline and ScaleProbe re-measures it at ≥100×. */
-  /** The coarse-quantizer front half of [[annCosineIvf]], extracted so
-    * [[annCosineIvfPq]] can reuse the identical candidate stream: trains
-    * the spherical k-means centroids, assigns every vector, probes each
-    * query's nProbe nearest cells, and returns the DISTINCT (qid, vec_id)
-    * candidate pairs. Cost and distribution contract as documented on
-    * [[annCosineIvf]]. */
-  /** Nearest-centroid probe by max dot product (spherical k-means
-    * assignment) — first-wins on strict `>`, matching the SQL twin's
-    * (score DESC, cell ASC) ranking. In a Serializable holder so task
+  /** The IVF task-side kernels, in a Serializable holder so task
     * closures capture this empty object, not Similarity$ (the
-    * NotSerializableException trap). */
+    * NotSerializableException trap). Every centroid score is the same
+    * ascending-i dot the SQL twin's `list_dot_product(c.c, v.u)` folds. */
   private[queries] object IvfKernel extends Serializable {
+    /** Nearest-centroid probe by max dot product (spherical k-means
+      * assignment) — first-wins on strict `>`, matching the SQL twin's
+      * (score DESC, cell ASC) ranking. */
     def nearestCell(cs: Array[Array[Double]], u: Array[Double]): Int = {
       var best = 0; var bestDot = Double.NegativeInfinity
       var c = 0
@@ -1695,6 +1677,21 @@ object Similarity {
       }
       best
     }
+
+    /** Every centroid's score against `u`, by cell. */
+    def scores(cs: Array[Array[Double]], u: Array[Double]): Array[Double] =
+      cs.map { w =>
+        var s = 0.0; var i = 0
+        while (i < w.length) { s += w(i) * u(i); i += 1 }
+        s
+      }
+
+    /** The `n` best cells as (cell, score), by score DESC then cell ASC —
+      * a query's probe list. */
+    def topCells(cs: Array[Array[Double]], u: Array[Double],
+                 n: Int): Array[(Int, Double)] =
+      scores(cs, u).zipWithIndex.map(_.swap)
+        .sortBy { case (c, s) => (-s, c) }.take(n)
   }
 
   /** Unit-normalized vectors (vec_id, u: Array[Double]), cached for the
@@ -1711,11 +1708,6 @@ object Similarity {
       .toDF("vec_id", "u")
   }
 
-  /** Spherical k-means coarse quantizer: [[derivedIvfCells]](n) cells,
-    * [[IvfIters]] Lloyd rounds over a deterministic vec_id-stride
-    * sample (~128 vectors/cell — training is O(128·cells²), the
-    * standard production IVF build; the final assignment stays exact
-    * over all n). Returns the trained centroid array. */
   /** [[ivfCentroids]] with cross-session persistence: in substrate mode
     * (SPARK_GRAFT_SUBSTRATE_DIR) the trained matrix is stored once per
     * (corpus, engine build) as RAW DOUBLE BITS — bit-exact round trip,
@@ -1749,6 +1741,11 @@ object Similarity {
       }
     }
 
+  /** Spherical k-means coarse quantizer: [[derivedIvfCells]](n) cells,
+    * [[IvfIters]] Lloyd rounds over a deterministic vec_id-stride
+    * sample (~128 vectors/cell — training is O(128·cells²), the
+    * standard production IVF build; the final assignment stays exact
+    * over all n). Returns the trained centroid array. */
   private def trainIvfCentroids(spark: SparkSession, sfDir: String): Array[Array[Double]] = {
       import spark.implicits._
       val unit = unitVecs(spark, sfDir).cache()
@@ -1840,6 +1837,12 @@ object Similarity {
       .toDF("vec_id", "cell")
   }
 
+  /** The coarse-quantizer front half of [[annCosineIvf]], extracted so
+    * [[annCosineIvfPq]] can reuse the identical candidate stream: trains
+    * the spherical k-means centroids, assigns every vector, probes each
+    * query's nProbe nearest cells, and returns the DISTINCT (qid, vec_id)
+    * candidate pairs. Cost and distribution contract as documented on
+    * [[annCosineIvf]]. */
   private[queries] def ivfCandidates(spark: SparkSession, sfDir: String,
                                      nProbe: Int): DataFrame = {
     require(nProbe > 0 && nProbe <= IvfMinCells,
@@ -1858,17 +1861,12 @@ object Similarity {
   private def rankedProbes(spark: SparkSession, sfDir: String,
                            n: Int): DataFrame = {
     import spark.implicits._
+    val kernel = IvfKernel
     val bc = spark.sparkContext.broadcast(ivfCentroids(spark, sfDir))
     unitVecs(spark, sfDir).as[(Long, Array[Double])]
       .filter(_._1 < NumQueries)
       .flatMap { case (qid, u) =>
-        val cs = bc.value
-        val scored = cs.zipWithIndex.map { case (w, c) =>
-          var s = 0.0; var i = 0
-          while (i < w.length) { s += w(i) * u(i); i += 1 }
-          (c, s)
-        }
-        scored.sortBy { case (c, s) => (-s, c) }.take(n)
+        kernel.topCells(bc.value, u, n)
           .zipWithIndex.map { case ((c, _), r) => (qid, c, r + 1) }
       }.toDF("qid", "cell", "rk")
   }
@@ -2045,11 +2043,10 @@ object Similarity {
        |WHERE r.rk <= q.quota
        |ORDER BY r.vec_id""".stripMargin
 
-  /** DuckDB twin of [[annCosineIvfMp]] — the [[ivfChain]] at
-    * [[NProbeMp]], same scoring tail as [[annCosineIvfSql]]. */
-  val annCosineIvfMpSql: String =
-    s"""WITH ${ivfChain(NProbeMp)},
-       |scored AS (
+  /** The IVF twins' [[exactRerank]]: [[ivfChain]]'s `cand` against its
+    * norm table `nv`, through the final SELECT. */
+  private val ivfScoredSql: String =
+    s"""scored AS (
        |  SELECT c.qid, c.vec_id,
        |         list_dot_product(a.v, q.v) / (a.norm * q.norm) AS cosine_raw,
        |         row_number() OVER (PARTITION BY c.qid
@@ -2061,37 +2058,37 @@ object Similarity {
        |       CAST(floor(cosine_raw * 10000 + 0.5) AS DOUBLE) / 10000 AS cosine
        |FROM scored WHERE rank <= $TopK ORDER BY qid, rank""".stripMargin
 
+  /** DuckDB twin of [[annCosineIvfMp]] — the [[ivfChain]] at
+    * [[NProbeMp]], same scoring tail as [[annCosineIvfSql]]. */
+  val annCosineIvfMpSql: String =
+    s"""WITH ${ivfChain(NProbeMp)},
+       |$ivfScoredSql""".stripMargin
+
+  /** IVF ANN: deterministic spherical k-means coarse quantizer (init =
+    * unit vectors of the first `cells` vec_ids, `IvfIters` = 3 Lloyd
+    * iterations, ties to the lowest cell), then per-query search probes
+    * the NProbe nearest cells and exact-re-ranks only their members —
+    * the classic FAISS IVF topology. `cells` = [[derivedIvfCells]](n).
+    *
+    * Distribution contract: vectors never leave the cluster; each Lloyd
+    * iteration is one distributed assign+reduce, and only the k centroid
+    * rows (k×64 doubles — model state, not data) come back to the driver
+    * to be re-broadcast via a real `sparkContext.broadcast` (NOT the task
+    * closure — at the 65536-cell cap the model is 33 MB, which torrent
+    * broadcast ships once per executor instead of once per task). Lloyd
+    * trains on a deterministic ~128-per-cell sample (O(cells²) work);
+    * the final assignment is one exact O(n·cells) pass. At 100 TB: same
+    * loop, √n cells; per-query search cost = cells + nProbe·n/cells
+    * ≈ O(√n), not O(n).
+    * Fully value-oracled ([[annCosineIvfSql]]) since round 6: the loop
+    * is deterministic arithmetic end-to-end once centroid accumulation
+    * is integerised. SimilaritySpec additionally bounds recall@5 against
+    * the brute-force baseline and ScaleProbe re-measures it at ≥100×. */
   def annCosineIvf(spark: SparkSession, sfDir: String,
                    nProbe: Int = NProbe): DataFrame = {
-    val cands = ivfCandidates(spark, sfDir, nProbe)
-    val all = vecs(spark, sfDir)
-    val w = Window.partitionBy("qid")
-      .orderBy(col("cosine_raw").desc, col("vec_id").asc)
-    cands
-      .join(all, "vec_id")
-      .join(all.select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("norm").as("qnorm")), "qid")
-      .withColumn("cosine_raw", dot(col("v"), col("qv")) / (col("norm") * col("qnorm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .select(col("qid"), col("rank"), col("vec_id"), Det.r(col("cosine_raw"), 4).as("cosine"))
-      .orderBy("qid", "rank")
+    exactRerank(spark, sfDir, ivfCandidates(spark, sfDir, nProbe), TopK)
   }
 
-  /** DuckDB twin of [[annCosineIvf]] — the bpe_train move applied to
-    * Lloyd: the `IvfIters` k-means rounds unroll as a MATERIALIZED-CTE
-    * chain (asn/upd/cent per round). Bit-exactness rests on three facts:
-    * (1) every dot product on both engines is the same ascending 64-term
-    * IEEE fold (JIT'd loop ↔ `list_dot_product`), so assignment scores
-    * and tie-breaks (score DESC, cell ASC ≡ strict `>` first-wins)
-    * agree; (2) centroid accumulation is integerised to nanos before the
-    * sum — order-free on both engines — and the mean/renormalise ops
-    * replay the Scala op order exactly (each IEEE op exactly rounded);
-    * (3) `cells` and the training stride derive from `count(*)` with the
-    * same floor/round/integer-division semantics as [[derivedIvfCells]],
-    * so the SQL is valid at ANY corpus size, not just the fixture's.
-    * Cells that lose all training members keep their previous centroid
-    * (LEFT JOIN + COALESCE ≡ the in-place array update). */
   /** The shared IVF DuckDB chain (through the DISTINCT (qid, vec_id)
     * candidate set `cand`) — prefixes [[annCosineIvfSql]],
     * [[annCosineIvfPqSql]] and (at [[NProbeMp]]) the multiprobe twins.
@@ -2170,19 +2167,23 @@ object Similarity {
     * composes with its `fin`/`nv` CTEs, which are nProbe-independent). */
   private[queries] val ivfChainSql: String = ivfChain(NProbe)
 
+  /** DuckDB twin of [[annCosineIvf]] — the bpe_train move applied to
+    * Lloyd: the `IvfIters` k-means rounds unroll as a MATERIALIZED-CTE
+    * chain (asn/upd/cent per round). Bit-exactness rests on three facts:
+    * (1) every dot product on both engines is the same ascending 64-term
+    * IEEE fold (JIT'd loop ↔ `list_dot_product`), so assignment scores
+    * and tie-breaks (score DESC, cell ASC ≡ strict `>` first-wins)
+    * agree; (2) centroid accumulation is integerised to nanos before the
+    * sum — order-free on both engines — and the mean/renormalise ops
+    * replay the Scala op order exactly (each IEEE op exactly rounded);
+    * (3) `cells` and the training stride derive from `count(*)` with the
+    * same floor/round/integer-division semantics as [[derivedIvfCells]],
+    * so the SQL is valid at ANY corpus size, not just the fixture's.
+    * Cells that lose all training members keep their previous centroid
+    * (LEFT JOIN + COALESCE ≡ the in-place array update). */
   val annCosineIvfSql: String =
     s"""WITH $ivfChainSql,
-       |scored AS (
-       |  SELECT c.qid, c.vec_id,
-       |         list_dot_product(a.v, q.v) / (a.norm * q.norm) AS cosine_raw,
-       |         row_number() OVER (PARTITION BY c.qid
-       |            ORDER BY list_dot_product(a.v, q.v) / (a.norm * q.norm) DESC,
-       |                     c.vec_id ASC) AS rank
-       |  FROM cand c JOIN nv a ON c.vec_id = a.vec_id
-       |              JOIN nv q ON c.qid = q.vec_id)
-       |SELECT qid, rank, vec_id,
-       |       CAST(floor(cosine_raw * 10000 + 0.5) AS DOUBLE) / 10000 AS cosine
-       |FROM scored WHERE rank <= $TopK ORDER BY qid, rank""".stripMargin
+       |$ivfScoredSql""".stripMargin
 
   // --------------------------------------------------------------------
   // Embedding quantization (int8 storage path)
@@ -2676,32 +2677,6 @@ object Similarity {
   private val PqK = 256      // centroids per subspace → 8-bit codes (FAISS PQ8x8)
   private val PqIters = 3    // Lloyd rounds (the IvfIters precedent)
 
-  /** Product quantization (Jégou et al., the FAISS `PQ8x8` topology):
-    * split each 64-d vector into 8 contiguous 8-d subvectors, k-means
-    * each subspace to 256 centroids, and encode every vector as 8
-    * single-byte codes — 256 B of float32 becomes 8 B, the compression
-    * that makes a 100 TB embedding store RAM-resident on a modest
-    * cluster (vs [[embeddingQuantize]]'s 4× int8 path, this is 32×).
-    * Emits per vector its 8 codes plus the L2² reconstruction error —
-    * the quality readout that sizes K/M choices.
-    *
-    * Scale shape, mirroring [[annCosineIvf]]: training runs on a
-    * deterministic vec_id-stride sample (~128 vectors per centroid), so
-    * each Lloyd round is one distributed pass over sample×8 subvector
-    * slices folding to ≤ 8·256 rows of integerised model state (the only
-    * driver traffic); the final encode is one exact map over the corpus
-    * with the 2048-centroid codebook (~128 KB) riding in a broadcast.
-    * Nothing corpus-sized shuffles at any n.
-    *
-    * Determinism (the [[annCosineIvfSql]] contract, subspace-keyed):
-    * assignment score = ‖c‖² − 2·c·x per subspace — three ascending
-    * 8-term IEEE folds and two exactly-rounded ops, identical on both
-    * engines, ties broken k-ASC (strict `<` first-wins); centroid
-    * accumulation integerises members to nanos (order-free long sums,
-    * mean replayed exactly); per-subspace errors integerise to micros
-    * before the per-vector long sum, so the error is fold-order-free
-    * too. Empty cells keep their previous centroid (COALESCE ≡ in-place
-    * array update). */
   /** The cached (vec_id, x: Array[Double]) frame both PQ queries map over. */
   private def pqRaw(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
@@ -2711,9 +2686,10 @@ object Similarity {
       .toDF("vec_id", "x")
   }
 
-  /** Stateless holder for the PQ task-side kernel: closures reference
-    * `PqKernel.nearest`, capturing this (empty, serializable) object
-    * instead of the non-serializable Similarity$. */
+  /** Stateless holder for the PQ task-side kernels: closures reference
+    * `PqKernel`, capturing this (empty, serializable) object instead of
+    * the non-serializable Similarity$. A codebook `cb` is indexed
+    * (subspace m)(code k) → the `subDim`-wide centroid. */
   private object PqKernel extends Serializable {
     /** Per-subspace nearest-centroid probe: (code, ‖c‖²−2·c·x) for the
       * subvector at `off` — the bit-identical score both the trainer and
@@ -2731,6 +2707,37 @@ object Similarity {
         k += 1
       }
       (best, bestS)
+    }
+
+    /** A vector's code per subspace: [[nearest]] over each slice. */
+    def encode(cb: Array[Array[Array[Double]]], x: Array[Double],
+               subDim: Int): Array[Int] = {
+      val codes = new Array[Int](cb.length); var m = 0
+      while (m < cb.length) { codes(m) = nearest(cb(m), x, m * subDim)._1; m += 1 }
+      codes
+    }
+
+    /** ⌊d·10⁶ + 0.5⌋ — every ADC term is integerised to micros before
+      * it is summed, so the sums are fold-order-free. */
+    def micros(d: Double): Long = math.floor(d * 1e6 + 0.5).toLong
+
+    /** A query's ADC lookup table: entry (m, k) = [[micros]](q_m·c[m][k]),
+      * the ascending 8-term fold the twins' `lut` CTE replays. */
+    def lut(cb: Array[Array[Array[Double]]], q: Array[Double],
+            subDim: Int): Array[Array[Long]] =
+      Array.tabulate(cb.length) { m =>
+        cb(m).map { w =>
+          var d = 0.0; var i = 0
+          while (i < w.length) { d += w(i) * q(m * subDim + i); i += 1 }
+          micros(d)
+        }
+      }
+
+    /** ADC score of a coded vector: Σₘ tab(m)(codes(m)). */
+    def adc(tab: Array[Array[Long]], codes: Array[Int]): Long = {
+      var s = 0L; var m = 0
+      while (m < codes.length) { s += tab(m)(codes(m)); m += 1 }
+      s
     }
   }
 
@@ -2825,6 +2832,32 @@ object Similarity {
       }.toDF("vec_id", "cell", "x")
   }
 
+  /** Product quantization (Jégou et al., the FAISS `PQ8x8` topology):
+    * split each 64-d vector into 8 contiguous 8-d subvectors, k-means
+    * each subspace to 256 centroids, and encode every vector as 8
+    * single-byte codes — 256 B of float32 becomes 8 B, the compression
+    * that makes a 100 TB embedding store RAM-resident on a modest
+    * cluster (vs [[embeddingQuantize]]'s 4× int8 path, this is 32×).
+    * Emits per vector its 8 codes plus the L2² reconstruction error —
+    * the quality readout that sizes K/M choices.
+    *
+    * Scale shape, mirroring [[annCosineIvf]]: training runs on a
+    * deterministic vec_id-stride sample (~128 vectors per centroid), so
+    * each Lloyd round is one distributed pass over sample×8 subvector
+    * slices folding to ≤ 8·256 rows of integerised model state (the only
+    * driver traffic); the final encode is one exact map over the corpus
+    * with the 2048-centroid codebook (~128 KB) riding in a broadcast.
+    * Nothing corpus-sized shuffles at any n.
+    *
+    * Determinism (the [[annCosineIvfSql]] contract, subspace-keyed):
+    * assignment score = ‖c‖² − 2·c·x per subspace — three ascending
+    * 8-term IEEE folds and two exactly-rounded ops, identical on both
+    * engines, ties broken k-ASC (strict `<` first-wins); centroid
+    * accumulation integerises members to nanos (order-free long sums,
+    * mean replayed exactly); per-subspace errors integerise to micros
+    * before the per-vector long sum, so the error is fold-order-free
+    * too. Empty cells keep their previous centroid (COALESCE ≡ in-place
+    * array update). */
   def embeddingPq(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val nSub = PqSub; val subDim = PqSubDim
@@ -2933,31 +2966,6 @@ object Similarity {
        |       CAST(CAST(sum(err_u) AS BIGINT) AS DOUBLE) / 1e6 AS err
        |FROM enc GROUP BY vec_id ORDER BY vec_id""".stripMargin
 
-  /** PQ search by asymmetric distance computation (ADC): the query keeps
-    * its full vector, every corpus vector is its 8 codes, and the
-    * approximate dot product is 8 table lookups — q·x ≈ Σₘ q_m·c[code_m]
-    * with the per-query lookup table (8×256 entries) built once against
-    * the codebook. The read side of [[embeddingPq]]'s 64× compression:
-    * a full-corpus scored scan that never touches the float vectors.
-    *
-    * Scale shape: codebook ([[pqCodebook]], memoized) + the |Q|·8·256
-    * micros-integerised LUT ride in broadcasts; one pass encodes each
-    * vector (codes only, never materialized) and emits |Q| scored rows
-    * per vector; one shuffle ranks per query. |Q| is bounded (the
-    * [[bruteForceTopK]] contract); at production scale the candidate
-    * stream would come from an IVF coarse filter (IVF-PQ) rather than
-    * the full scan, but the ADC arithmetic is exactly this. Exact
-    * cosine is joined back for the k·|Q| result rows only — the
-    * approximation-quality readout. The per-query LUTs here are built
-    * driver-side from the collected qvecs — correct for the bounded
-    * fixture |Q|; a batch-retrieval workload (|Q| ≫ 10) must use
-    * [[annCosineIvfPqBatch]], whose LUTs are executor-built and never
-    * collected.
-    *
-    * Determinism: LUT entries integerise to micros (⌊·1e6+0.5⌋) before
-    * the 8-term long sum — fold-order-free — and ranking ties break
-    * vec_id ASC; the exact-cosine column reuses the [[bruteForceTopK]]
-    * double fold. */
   /** (qid, vec_id, score_u) → (qid, rank, vec_id, score_u), rank 1..k per
     * qid by (score_u DESC, vec_id ASC), via the native
     * [[graft.functions.TopKScores]] `TypedImperativeAggregate` — O(k)
@@ -2983,11 +2991,26 @@ object Similarity {
         col("sv.vec_id").as("vec_id"), col("sv.score_u").as("score_u"))
   }
 
+  /** The ADC score `score_u` read out under `name`: micros back to a
+    * double. */
+  private def adcReadout(name: String): Column =
+    (col("score_u").cast("double") / 1e6).as(name)
+
+  /** The ADC result tail of [[annCosinePq]] and [[annCosineIvfPq]]: the
+    * scored stream's [[topKScored]] ranks plus the exact cosine of each
+    * result row. */
+  private def adcTopK(spark: SparkSession, sfDir: String,
+                      scored: DataFrame, k: Int): DataFrame =
+    withPairVecs(spark, sfDir, topKScored(spark, scored, k))
+      .select(col("qid"), col("rank"), col("vec_id"), adcReadout("adc_dot"),
+        Det.r(dot(col("v"), col("qv")) / (col("norm") * col("qnorm")), 4).as("cosine"))
+      .orderBy("qid", "rank")
+
   /** The full-corpus ADC-scored stream (qid, vec_id, score_u) shared by
     * [[annCosinePq]] and [[annCosinePqRerank]]. */
   private def pqAdcScored(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val nSub = PqSub; val subDim = PqSubDim; val nQ = NumQueries
+    val subDim = PqSubDim; val nQ = NumQueries
     val kernel = PqKernel
     // uncached: the qvecs collect pushes its vec_id filter to parquet and
     // the ADC scan is one lazy pass — caching here would materialize the
@@ -2996,44 +3019,46 @@ object Similarity {
     val cent = pqCodebook(spark, sfDir)
     val qvecs = raw.filter(col("vec_id") < nQ)
       .as[(Long, Array[Double])].collect().sortBy(_._1)
-    val lut: Array[(Long, Array[Array[Long]])] = qvecs.map { case (qid, qx) =>
-      qid -> Array.tabulate(nSub) { m =>
-        cent(m).map { w =>
-          var dotAcc = 0.0; var i = 0
-          while (i < w.length) { dotAcc += w(i) * qx(m * subDim + i); i += 1 }
-          math.floor(dotAcc * 1e6 + 0.5).toLong
-        }
-      }
-    }
+    val lut = qvecs.map { case (qid, qx) => qid -> kernel.lut(cent, qx, subDim) }
     val bcCent = spark.sparkContext.broadcast(cent)
     val bcLut = spark.sparkContext.broadcast(lut)
     raw.as[(Long, Array[Double])]
       .flatMap { case (id, x) =>
-        val codes = new Array[Int](nSub)
-        var m = 0
-        while (m < nSub) {
-          codes(m) = kernel.nearest(bcCent.value(m), x, m * subDim)._1; m += 1
-        }
+        val codes = kernel.encode(bcCent.value, x, subDim)
         bcLut.value.iterator.collect {
-          case (qid, tab) if qid != id =>
-            var s = 0L; var mm = 0
-            while (mm < nSub) { s += tab(mm)(codes(mm)); mm += 1 }
-            (qid, id, s)
+          case (qid, tab) if qid != id => (qid, id, kernel.adc(tab, codes))
         }
       }.toDF("qid", "vec_id", "score_u")
   }
 
+  /** PQ search by asymmetric distance computation (ADC): the query keeps
+    * its full vector, every corpus vector is its 8 codes, and the
+    * approximate dot product is 8 table lookups — q·x ≈ Σₘ q_m·c[code_m]
+    * with the per-query lookup table (8×256 entries) built once against
+    * the codebook. The read side of [[embeddingPq]]'s 64× compression:
+    * a full-corpus scored scan that never touches the float vectors.
+    *
+    * Scale shape: codebook ([[pqCodebook]], memoized) + the |Q|·8·256
+    * micros-integerised LUT ride in broadcasts; one pass encodes each
+    * vector (codes only, never materialized) and emits |Q| scored rows
+    * per vector; one shuffle ranks per query. |Q| is bounded (the
+    * [[bruteForceTopK]] contract); at production scale the candidate
+    * stream would come from an IVF coarse filter (IVF-PQ) rather than
+    * the full scan, but the ADC arithmetic is exactly this. Exact
+    * cosine is joined back for the k·|Q| result rows only — the
+    * approximation-quality readout. The per-query LUTs here are built
+    * driver-side from the collected qvecs — correct for the bounded
+    * fixture |Q|; a batch-retrieval workload (|Q| ≫ 10) must use
+    * [[annCosineIvfPqBatch]], whose LUTs are executor-built and never
+    * collected.
+    *
+    * Determinism: LUT entries integerise to micros (⌊·1e6+0.5⌋) before
+    * the 8-term long sum — fold-order-free — and ranking ties break
+    * vec_id ASC; the exact-cosine column reuses the [[bruteForceTopK]]
+    * double fold. */
   def annCosinePq(spark: SparkSession, sfDir: String, k: Int = TopK): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val all = vecs(spark, sfDir)
-    topKScored(spark, pqAdcScored(spark, sfDir), k)
-      .join(all.select(col("vec_id"), col("v"), col("norm")), "vec_id")
-      .join(all.select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("norm").as("qnorm")), "qid")
-      .select(col("qid"), col("rank"), col("vec_id"),
-        (col("score_u").cast("double") / 1e6).as("adc_dot"),
-        Det.r(dot(col("v"), col("qv")) / (col("norm") * col("qnorm")), 4).as("cosine"))
-      .orderBy("qid", "rank")
+    adcTopK(spark, sfDir, pqAdcScored(spark, sfDir), k)
   }
 
   /** How many ADC-ranked candidates the re-rank stage keeps per query,
@@ -3042,6 +3067,14 @@ object Similarity {
     * top-5 members sit within ADC top-~20 on this corpus) while the
     * re-rank still touches only |Q|·8k corpus vectors. */
   private val RerankFactor = 8
+
+  /** The ADC re-rank tail: the scored stream's top-(RerankFactor·k)
+    * shortlist by ADC score goes through [[exactRerank]], carrying the
+    * ADC score as `readout`. */
+  private def adcRerank(spark: SparkSession, sfDir: String, scored: DataFrame,
+                        k: Int, readout: String): DataFrame =
+    exactRerank(spark, sfDir,
+      topKScored(spark, scored, k * RerankFactor).drop("rank"), k, adcReadout(readout))
 
   /** [[annCosinePq]] + an exact re-rank stage — the production PQ search
     * shape (FAISS `IVFPQ,Refine`): ADC shortlists top-(8k) per query
@@ -3057,22 +3090,7 @@ object Similarity {
     * fold on both engines), ties vec_id ASC. */
   def annCosinePqRerank(spark: SparkSession, sfDir: String, k: Int = TopK): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val shortlist = topKScored(spark, pqAdcScored(spark, sfDir), k * RerankFactor)
-      .drop("rank")
-    val all = vecs(spark, sfDir)
-    val w = Window.partitionBy("qid")
-      .orderBy(col("cosine_raw").desc, col("vec_id").asc)
-    shortlist
-      .join(all.select(col("vec_id"), col("v"), col("norm")), "vec_id")
-      .join(all.select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("norm").as("qnorm")), "qid")
-      .withColumn("cosine_raw", dot(col("v"), col("qv")) / (col("norm") * col("qnorm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("vec_id"),
-        (col("score_u").cast("double") / 1e6).as("adc_dot"),
-        Det.r(col("cosine_raw"), 4).as("cosine"))
-      .orderBy("qid", "rank")
+    adcRerank(spark, sfDir, pqAdcScored(spark, sfDir), k, "adc_dot")
   }
 
   /** Shared DuckDB fragment: [[pqChainSql]]'s `enc` joined against the
@@ -3097,12 +3115,10 @@ object Similarity {
        |  FROM scored),
        |nv AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e)""".stripMargin
 
-  /** DuckDB twin of [[annCosinePq]] — the shared [[pqChainSql]] plus the
-    * LUT join replayed relationally. */
-  val annCosinePqSql: String =
-    s"""WITH $pqChainSql,
-       |$pqAdcRankedSql
-       |SELECT r.qid, CAST(r.rank AS INT) AS rank, r.vec_id,
+  /** The ADC twins' final SELECT ([[adcTopK]]): the `ranked` stream's
+    * top-k with the exact cosine read out from `nv`. */
+  private val adcSelectSql: String =
+    s"""SELECT r.qid, CAST(r.rank AS INT) AS rank, r.vec_id,
        |       CAST(r.score_u AS DOUBLE) / 1e6 AS adc_dot,
        |       CAST(floor(list_dot_product(a.v, q.v) / (a.norm * q.norm) * 10000 + 0.5)
        |            AS DOUBLE) / 10000 AS cosine
@@ -3112,12 +3128,10 @@ object Similarity {
        |WHERE r.rank <= $TopK
        |ORDER BY qid, rank""".stripMargin
 
-  /** DuckDB twin of [[annCosinePqRerank]] — ADC shortlist to 8k, exact
-    * cosine over the shortlist only, re-rank by cosine. */
-  val annCosinePqRerankSql: String =
-    s"""WITH $pqChainSql,
-       |$pqAdcRankedSql,
-       |rr AS (
+  /** The ADC re-rank twins' [[adcRerank]]: the `ranked` shortlist
+    * re-ranked by exact cosine (`rr`), through the final SELECT. */
+  private val adcRerankSql: String =
+    s"""rr AS (
        |  SELECT r.qid, r.vec_id, r.score_u,
        |         list_dot_product(a.v, q.v) / (a.norm * q.norm) AS cosine_raw,
        |         row_number() OVER (PARTITION BY r.qid
@@ -3134,6 +3148,46 @@ object Similarity {
        |WHERE rank <= $TopK
        |ORDER BY qid, rank""".stripMargin
 
+  /** DuckDB twin of [[annCosinePq]] — the shared [[pqChainSql]] plus the
+    * LUT join replayed relationally. */
+  val annCosinePqSql: String =
+    s"""WITH $pqChainSql,
+       |$pqAdcRankedSql
+       |$adcSelectSql""".stripMargin
+
+  /** DuckDB twin of [[annCosinePqRerank]] — ADC shortlist to 8k, exact
+    * cosine over the shortlist only, re-rank by cosine. */
+  val annCosinePqRerankSql: String =
+    s"""WITH $pqChainSql,
+       |$pqAdcRankedSql,
+       |$adcRerankSql""".stripMargin
+
+  /** The candidate-restricted ADC-scored stream (qid, vec_id, score_u)
+    * shared by [[annCosineIvfPq]] and [[annCosineIvfPqRerank]].
+    * Driver-LUT plumbing (fine at fixture |Q|) — batch retrieval goes
+    * through [[annCosineIvfPqBatch]]. */
+  private def ivfPqScored(spark: SparkSession, sfDir: String,
+                          nProbe: Int): DataFrame = {
+    import spark.implicits._
+    val subDim = PqSubDim; val nQ = NumQueries
+    val kernel = PqKernel
+    val cands = ivfCandidates(spark, sfDir, nProbe)
+    val raw = pqRaw(spark, sfDir)
+    val cent = pqCodebook(spark, sfDir)
+    val qvecs = raw.filter(col("vec_id") < nQ)
+      .as[(Long, Array[Double])].collect().sortBy(_._1)
+    val lut = qvecs.map { case (qid, qx) => qid -> kernel.lut(cent, qx, subDim) }.toMap
+    val bcCent = spark.sparkContext.broadcast(cent)
+    val bcLut = spark.sparkContext.broadcast(lut)
+    val codes = raw.as[(Long, Array[Double])]
+      .map { case (id, x) => (id, kernel.encode(bcCent.value, x, subDim)) }
+      .toDF("vec_id", "codes")
+    cands.join(codes, "vec_id")
+      .as[(Long, Long, Array[Int])]  // (vec_id, qid, codes) — join-key first
+      .map { case (vid, qid, cs) => (qid, vid, kernel.adc(bcLut.value(qid), cs)) }
+      .toDF("qid", "vec_id", "score_u")
+  }
+
   /** IVF-PQ — the production ANN composition (FAISS `IVF,PQ8x8`):
     * [[ivfCandidates]] prunes the corpus to each query's nProbe coarse
     * cells (O(nProbe·n/cells) candidates ≈ O(√n) at derived cell
@@ -3146,61 +3200,9 @@ object Similarity {
     * Determinism: candidate set is [[annCosineIvf]]'s (hash-gated),
     * scoring is [[annCosinePq]]'s micros-integerised LUT sums, ties
     * vec_id ASC — every stage already proven hash-exact, composed. */
-  /** The candidate-restricted ADC-scored stream (qid, vec_id, score_u)
-    * shared by [[annCosineIvfPq]] and [[annCosineIvfPqRerank]].
-    * Driver-LUT plumbing (fine at fixture |Q|) — batch retrieval goes
-    * through [[annCosineIvfPqBatch]]. */
-  private def ivfPqScored(spark: SparkSession, sfDir: String,
-                          nProbe: Int): DataFrame = {
-    import spark.implicits._
-    val nSub = PqSub; val subDim = PqSubDim; val nQ = NumQueries
-    val kernel = PqKernel
-    val cands = ivfCandidates(spark, sfDir, nProbe)
-    val raw = pqRaw(spark, sfDir)
-    val cent = pqCodebook(spark, sfDir)
-    val qvecs = raw.filter(col("vec_id") < nQ)
-      .as[(Long, Array[Double])].collect().sortBy(_._1)
-    val lut: Map[Long, Array[Array[Long]]] = qvecs.map { case (qid, qx) =>
-      qid -> Array.tabulate(nSub) { m =>
-        cent(m).map { w =>
-          var dotAcc = 0.0; var i = 0
-          while (i < w.length) { dotAcc += w(i) * qx(m * subDim + i); i += 1 }
-          math.floor(dotAcc * 1e6 + 0.5).toLong
-        }
-      }
-    }.toMap
-    val bcCent = spark.sparkContext.broadcast(cent)
-    val bcLut = spark.sparkContext.broadcast(lut)
-    val codes = raw.as[(Long, Array[Double])]
-      .map { case (id, x) =>
-        val cs = new Array[Int](nSub); var m = 0
-        while (m < nSub) {
-          cs(m) = kernel.nearest(bcCent.value(m), x, m * subDim)._1; m += 1
-        }
-        (id, cs)
-      }.toDF("vec_id", "codes")
-    cands.join(codes, "vec_id")
-      .as[(Long, Long, Array[Int])]  // (vec_id, qid, codes) — join-key first
-      .map { case (vid, qid, cs) =>
-        val tab = bcLut.value(qid)
-        var s = 0L; var m = 0
-        while (m < nSub) { s += tab(m)(cs(m)); m += 1 }
-        (qid, vid, s)
-      }.toDF("qid", "vec_id", "score_u")
-  }
-
   def annCosineIvfPq(spark: SparkSession, sfDir: String,
-                     nProbe: Int = NProbe): DataFrame = {
-    val all = vecs(spark, sfDir)
-    topKScored(spark, ivfPqScored(spark, sfDir, nProbe), TopK)
-      .join(all.select(col("vec_id"), col("v"), col("norm")), "vec_id")
-      .join(all.select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("norm").as("qnorm")), "qid")
-      .select(col("qid"), col("rank"), col("vec_id"),
-        (col("score_u").cast("double") / 1e6).as("adc_dot"),
-        Det.r(dot(col("v"), col("qv")) / (col("norm") * col("qnorm")), 4).as("cosine"))
-      .orderBy("qid", "rank")
-  }
+                     nProbe: Int = NProbe): DataFrame =
+    adcTopK(spark, sfDir, ivfPqScored(spark, sfDir, nProbe), TopK)
 
   /** [[annCosineIvfPq]] + the exact re-rank stage — the full production
     * composition (FAISS `IVF…,PQ8x8,Refine`): coarse cells prune the
@@ -3216,24 +3218,8 @@ object Similarity {
     * Determinism: composed from three hash-exact stages, ties vec_id
     * ASC at both ranks. */
   def annCosineIvfPqRerank(spark: SparkSession, sfDir: String,
-                           nProbe: Int = NProbeMp): DataFrame = {
-    val shortlist = topKScored(spark, ivfPqScored(spark, sfDir, nProbe),
-      TopK * RerankFactor).drop("rank")
-    val all = vecs(spark, sfDir)
-    val w = Window.partitionBy("qid")
-      .orderBy(col("cosine_raw").desc, col("vec_id").asc)
-    shortlist
-      .join(all.select(col("vec_id"), col("v"), col("norm")), "vec_id")
-      .join(all.select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("norm").as("qnorm")), "qid")
-      .withColumn("cosine_raw", dot(col("v"), col("qv")) / (col("norm") * col("qnorm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .select(col("qid"), col("rank"), col("vec_id"),
-        (col("score_u").cast("double") / 1e6).as("adc_dot"),
-        Det.r(col("cosine_raw"), 4).as("cosine"))
-      .orderBy("qid", "rank")
-  }
+                           nProbe: Int = NProbeMp): DataFrame =
+    adcRerank(spark, sfDir, ivfPqScored(spark, sfDir, nProbe), TopK, "adc_dot")
 
   /** Shared DuckDB fragment: [[ivfChainSql]]'s `cand` scored through the
     * `p_`-prefixed PQ chain into the candidate-restricted ADC-ranked
@@ -3263,15 +3249,7 @@ object Similarity {
     s"""WITH $ivfChainSql,
        |${pqChain("p_")},
        |$ivfPqAdcRankedSql
-       |SELECT r.qid, CAST(r.rank AS INT) AS rank, r.vec_id,
-       |       CAST(r.score_u AS DOUBLE) / 1e6 AS adc_dot,
-       |       CAST(floor(list_dot_product(a.v, q.v) / (a.norm * q.norm) * 10000 + 0.5)
-       |            AS DOUBLE) / 10000 AS cosine
-       |FROM ranked r
-       |JOIN nv a ON a.vec_id = r.vec_id
-       |JOIN nv q ON q.vec_id = r.qid
-       |WHERE r.rank <= $TopK
-       |ORDER BY qid, rank""".stripMargin
+       |$adcSelectSql""".stripMargin
 
   /** DuckDB twin of [[annCosineIvfPqRerank]] — [[ivfChain]] at the
     * multiprobe [[NProbeMp]]. */
@@ -3279,22 +3257,7 @@ object Similarity {
     s"""WITH ${ivfChain(NProbeMp)},
        |${pqChain("p_")},
        |$ivfPqAdcRankedSql,
-       |rr AS (
-       |  SELECT r.qid, r.vec_id, r.score_u,
-       |         list_dot_product(a.v, q.v) / (a.norm * q.norm) AS cosine_raw,
-       |         row_number() OVER (PARTITION BY r.qid
-       |            ORDER BY list_dot_product(a.v, q.v) / (a.norm * q.norm) DESC,
-       |                     r.vec_id ASC) AS rank
-       |  FROM ranked r
-       |  JOIN nv a ON a.vec_id = r.vec_id
-       |  JOIN nv q ON q.vec_id = r.qid
-       |  WHERE r.rank <= ${TopK * RerankFactor})
-       |SELECT qid, CAST(rank AS INT) AS rank, vec_id,
-       |       CAST(score_u AS DOUBLE) / 1e6 AS adc_dot,
-       |       CAST(floor(cosine_raw * 10000 + 0.5) AS DOUBLE) / 10000 AS cosine
-       |FROM rr
-       |WHERE rank <= $TopK
-       |ORDER BY qid, rank""".stripMargin
+       |$adcRerankSql""".stripMargin
 
   /** RESIDUAL IVF-PQ with exact re-rank — FAISS's actual `IVFx,PQ8`
     * memory layout (IVFADC, Jégou et al. 2011 §IV-A): PQ encodes the
@@ -3330,64 +3293,29 @@ object Similarity {
   def annCosineIvfPqRes(spark: SparkSession, sfDir: String,
                         nProbe: Int = NProbeMp): DataFrame = {
     import spark.implicits._
-    val nSub = PqSub; val subDim = PqSubDim; val nQ = NumQueries
+    val subDim = PqSubDim; val nQ = NumQueries
     val kernel = PqKernel
     val cands = ivfCandidates(spark, sfDir, nProbe)
     val coarse = ivfCentroids(spark, sfDir)
     val cb = pqResCodebook(spark, sfDir)
     val qvecs = unitVecs(spark, sfDir).as[(Long, Array[Double])]
       .filter(_._1 < nQ).collect().sortBy(_._1)
-    val lut: Map[Long, Array[Array[Long]]] = qvecs.map { case (qid, qu) =>
-      qid -> Array.tabulate(nSub) { m =>
-        cb(m).map { w =>
-          var d = 0.0; var i = 0
-          while (i < w.length) { d += w(i) * qu(m * subDim + i); i += 1 }
-          math.floor(d * 1e6 + 0.5).toLong
-        }
-      }
-    }.toMap
-    val off: Map[Long, Array[Long]] = qvecs.map { case (qid, qu) =>
-      qid -> coarse.map { c =>
-        var d = 0.0; var i = 0
-        while (i < c.length) { d += c(i) * qu(i); i += 1 }
-        math.floor(d * 1e6 + 0.5).toLong
-      }
+    val lut = qvecs.map { case (qid, qu) => qid -> kernel.lut(cb, qu, subDim) }.toMap
+    val off = qvecs.map { case (qid, qu) =>
+      qid -> IvfKernel.scores(coarse, qu).map(kernel.micros)
     }.toMap
     val bcCb = spark.sparkContext.broadcast(cb)
     val bcLut = spark.sparkContext.broadcast(lut)
     val bcOff = spark.sparkContext.broadcast(off)
     val codes = unitResiduals(spark, sfDir).as[(Long, Int, Array[Double])]
-      .map { case (id, cell, r) =>
-        val cs = new Array[Int](nSub); var m = 0
-        while (m < nSub) {
-          cs(m) = kernel.nearest(bcCb.value(m), r, m * subDim)._1; m += 1
-        }
-        (id, cell, cs)
-      }.toDF("vec_id", "cell", "codes")
+      .map { case (id, cell, r) => (id, cell, kernel.encode(bcCb.value, r, subDim)) }
+      .toDF("vec_id", "cell", "codes")
     val scored = cands.join(codes, "vec_id")
       .as[(Long, Long, Int, Array[Int])]  // (vec_id, qid, cell, codes)
       .map { case (vid, qid, cell, cs) =>
-        val tab = bcLut.value(qid)
-        var s = bcOff.value(qid)(cell)
-        var m = 0
-        while (m < nSub) { s += tab(m)(cs(m)); m += 1 }
-        (qid, vid, s)
+        (qid, vid, bcOff.value(qid)(cell) + kernel.adc(bcLut.value(qid), cs))
       }.toDF("qid", "vec_id", "score_u")
-    val shortlist = topKScored(spark, scored, TopK * RerankFactor).drop("rank")
-    val all = vecs(spark, sfDir)
-    val w = Window.partitionBy("qid")
-      .orderBy(col("cosine_raw").desc, col("vec_id").asc)
-    shortlist
-      .join(all.select(col("vec_id"), col("v"), col("norm")), "vec_id")
-      .join(all.select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("norm").as("qnorm")), "qid")
-      .withColumn("cosine_raw", dot(col("v"), col("qv")) / (col("norm") * col("qnorm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .select(col("qid"), col("rank"), col("vec_id"),
-        (col("score_u").cast("double") / 1e6).as("adc_cos"),
-        Det.r(col("cosine_raw"), 4).as("cosine"))
-      .orderBy("qid", "rank")
+    adcRerank(spark, sfDir, scored, TopK, "adc_cos")
   }
 
   /** BATCH-RETRIEVAL IVF-PQ — [[annCosineIvfPqRes]]'s exact semantics
@@ -3427,49 +3355,25 @@ object Similarity {
     import spark.implicits._
     val nSub = PqSub; val subDim = PqSubDim; val nK = PqK; val nQ = nQueries
     val kernel = PqKernel
+    val ivf = IvfKernel
     val bcCent = spark.sparkContext.broadcast(ivfCentroids(spark, sfDir))
     val bcCb = spark.sparkContext.broadcast(pqResCodebook(spark, sfDir))
     val qframe = unitVecs(spark, sfDir).as[(Long, Array[Double])]
       .filter(_._1 < nQ)
-    // executor-built LUTs: flat (m, k) -> floor(dot(c_mk, q_m)·1e6 + .5),
-    // stride 256 (entries past a short codebook stay 0, never referenced)
+    // executor-built LUTs, flattened at stride 256: (m, k) -> m·256 + k
+    // (entries past a short codebook stay 0, never referenced)
     val luts = qframe.map { case (qid, qu) =>
-      val flat = new Array[Long](nSub * nK)
-      var m = 0
-      while (m < nSub) {
-        val cs = bcCb.value(m); var k = 0
-        while (k < cs.length) {
-          val w = cs(k); var d = 0.0; var i = 0
-          while (i < w.length) { d += w(i) * qu(m * subDim + i); i += 1 }
-          flat(m * nK + k) = math.floor(d * 1e6 + 0.5).toLong
-          k += 1
-        }
-        m += 1
-      }
-      (qid, flat)
+      (qid, kernel.lut(bcCb.value, qu, subDim).flatMap(_.padTo(nK, 0L)))
     }.toDF("qid", "lut")
-    // probe rows carry the coarse offset: the identical centroid dot
-    // (same ascending-i fold) the probe ranking itself computes —
-    // ties cell ASC, exactly ivfCandidates' order
+    // probe rows carry the coarse offset: the identical centroid score
+    // the probe ranking itself computes — exactly ivfCandidates' order
     val probes = qframe.flatMap { case (qid, u) =>
-      val cs = bcCent.value
-      val scored = cs.zipWithIndex.map { case (w, c) =>
-        var s = 0.0; var i = 0
-        while (i < w.length) { s += w(i) * u(i); i += 1 }
-        (c, s)
-      }
-      scored.sortBy { case (c, s) => (-s, c) }.take(nProbe)
-        .map { case (c, s) => (qid, c, math.floor(s * 1e6 + 0.5).toLong) }
+      ivf.topCells(bcCent.value, u, nProbe)
+        .map { case (c, s) => (qid, c, kernel.micros(s)) }
     }.toDF("qid", "cell", "off_u")
-    // residual codes: the _res path's encode map, verbatim
     val codes = unitResiduals(spark, sfDir).as[(Long, Int, Array[Double])]
-      .map { case (id, _, r) =>
-        val csArr = new Array[Int](nSub); var m = 0
-        while (m < nSub) {
-          csArr(m) = kernel.nearest(bcCb.value(m), r, m * subDim)._1; m += 1
-        }
-        (id, csArr)
-      }.toDF("vec_id", "codes")
+      .map { case (id, _, r) => (id, kernel.encode(bcCb.value, r, subDim)) }
+      .toDF("vec_id", "codes")
     val cands = ivfAssigned(spark, sfDir)
       .join(broadcast(probes), "cell")
       .filter(col("vec_id") =!= col("qid"))
@@ -3484,21 +3388,7 @@ object Similarity {
       .join(codes, "vec_id")
       .join(luts, "qid")
       .select(col("qid"), col("vec_id"), adc.as("score_u"))
-    val shortlist = topKScored(spark, scored, TopK * RerankFactor).drop("rank")
-    val all = vecs(spark, sfDir)
-    val w = Window.partitionBy("qid")
-      .orderBy(col("cosine_raw").desc, col("vec_id").asc)
-    shortlist
-      .join(all.select(col("vec_id"), col("v"), col("norm")), "vec_id")
-      .join(all.select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("norm").as("qnorm")), "qid")
-      .withColumn("cosine_raw", dot(col("v"), col("qv")) / (col("norm") * col("qnorm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .select(col("qid"), col("rank"), col("vec_id"),
-        (col("score_u").cast("double") / 1e6).as("adc_cos"),
-        Det.r(col("cosine_raw"), 4).as("cosine"))
-      .orderBy("qid", "rank")
+    adcRerank(spark, sfDir, scored, TopK, "adc_cos")
   }
 
   /** DuckDB twin of [[annCosineIvfPqRes]] — [[ivfChain]] at [[NProbeMp]],

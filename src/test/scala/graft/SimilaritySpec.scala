@@ -23,6 +23,21 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
+  test("exact re-rank tail: k rows, ranks 1..k, exact ties broken vec_id ASC, cosine to 4 places") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_rerank_tail").toString
+    try {
+      // query 0 = e0; vec 1 and vec 2 tie exactly at 1/sqrt(2) and straddle k = 2
+      Seq((0L, Array(1f, 0f, 0f)), (1L, Array(1f, 1f, 0f)), (2L, Array(1f, 0f, 1f)),
+        (3L, Array(1f, 0.1f, 0f)), (4L, Array(0f, 1f, 0f)), (5L, Array(1f, 2f, 0f)))
+        .toDF("vec_id", "embedding").write.parquet(s"$dir/embeddings.parquet")
+      val cands = Seq(2L, 5L, 1L, 4L, 3L).map(v => (0L, v, s"c$v")).toDF("qid", "vec_id", "src")
+      val out = queries.Similarity.exactRerank(spark, dir, cands, 2, col("src"))
+      assert(out.columns.toSeq == Seq("qid", "rank", "vec_id", "src", "cosine"))
+      val rows = out.as[(Long, Int, Long, String, Double)].collect().toSeq
+      assert(rows == Seq((0L, 1, 3L, "c3", 0.995), (0L, 2, 1L, "c1", 0.7071)))
+    } finally Substrate.deleteRecursively(new java.io.File(dir))
+  }
+
   test("LSH recall@5 >= 0.7 vs brute force (sign-LSH, 32 tables x 6 bits)") {
     val truth = queries.Similarity.bruteForceTopK(spark, sf)
       .select("qid", "vec_id").as[(Long, Long)].collect().toSet

@@ -9,7 +9,8 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Substrate]]: every dir a query writes is registered with the one
-  * exit cleaner, a persistent bucketed sink re-registers over its files
+  * exit cleaner, a session sink follows a table rewritten in place, a
+  * persistent bucketed sink re-registers over its files
   * in a fresh catalog, the persistent key's code tag covers every engine
   * class, the at-most-once waiter retries a NonFatal writer failure but
   * rethrows a fatal one, and a memoized compute may nest another. */
@@ -43,6 +44,36 @@ class SubstrateSpec extends AnyFunSuite {
     val keyed = entries(tmp).filter(p => new File(p).getName.contains(app))
     assert(keyed.subsetOf(Substrate.exitCleanupDirs),
       s"session-keyed dirs outside the cleaner: ${keyed -- Substrate.exitCleanupDirs}")
+  }
+
+  test("a session sink over a table rewritten in place is rebuilt from the new rows") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import org.apache.spark.sql.functions.col
+    val dir = Files.createTempDirectory("graft_sink_rewrite")
+    val fresh = Files.createTempDirectory("graft_sink_fresh")
+    def orders(d: java.nio.file.Path) =
+      operators.BucketedJoin.bucketedJoinOrders(spark, d.toString).collect().toSeq
+    try {
+      Seq("lineitem", "orders").foreach(t =>
+        Files.copy(Paths.get(sf01, s"$t.parquet"), dir.resolve(s"$t.parquet")))
+      Files.copy(Paths.get(sf01, "orders.parquet"), fresh.resolve("orders.parquet"))
+      val before = orders(dir)
+      // the 'N' rows as one parquet file, written aside, then copied over
+      // the table at the same path and into a fresh dir
+      val aside = fresh.resolve("aside").toString
+      Tables.lineitem(spark, dir.toString).filter(col("l_returnflag") === "N")
+        .coalesce(1).write.parquet(aside)
+      val part = new File(aside).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head.toPath
+      Files.copy(part, dir.resolve("lineitem.parquet"), StandardCopyOption.REPLACE_EXISTING)
+      Files.copy(part, fresh.resolve("lineitem.parquet"))
+      val rewritten = orders(dir)
+      assert(rewritten == orders(fresh))
+      assert(rewritten != before)
+    } finally {
+      Substrate.deleteRecursively(dir.toFile)
+      Substrate.deleteRecursively(fresh.toFile)
+    }
   }
 
   test("persistent bucketed sink: a dropped catalog table re-registers over the same files") {
