@@ -24,9 +24,10 @@ import scala.util.control.NonFatal
   *    and exec3 follow a clearCache (exec3 is the warm floor).
   *  - `plans <outDir> <sfDir> [query...]`: `explain("formatted")` per
   *    query (every registered query when none is named) to
-  *    `<outDir>/<query>.txt`; a query whose construction throws writes
-  *    `<query>._ERROR` with the message instead, so a sweep cannot
-  *    silently skip one.
+  *    `<outDir>/<query>.txt`, with RDD call sites masked to
+  *    `<File>.scala:<line>` so moving code is no plan diff; a query
+  *    whose construction throws writes `<query>._ERROR` with the
+  *    message instead, so a sweep cannot silently skip one.
   *  - `audit <sfDir>`: plan-hygiene sweep over every registered query —
   *    parquet scans per table, cached scans and exchanges in the physical
   *    plan; the quick way to spot a table scanned N times or a shuffle
@@ -100,12 +101,14 @@ object Probe {
     val names =
       if (args.length > 2) args.drop(2).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
+    val callSite = raw"(\w+\.scala):\d+".r
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       try {
         val plan = SparkEntry.queries(name)(spark, sfDir)
           .queryExecution.explainString(FormattedMode)
-        Files.write(Paths.get(outDir, s"$name.txt"), plan.getBytes(UTF_8))
+        Files.write(Paths.get(outDir, s"$name.txt"),
+          callSite.replaceAllIn(plan, "$1:<line>").getBytes(UTF_8))
       } catch {
         case NonFatal(e) =>
           Files.write(Paths.get(outDir, s"$name._ERROR"),

@@ -28,121 +28,33 @@ object ScaleProbe {
     "part", "query", "row", "scan", "slow", "small", "sort", "spark",
     "stream", "table", "the", "value", "vector", "window")
 
-  /** Queries that read only documents/embeddings (the LLM-pipeline family).
-    * ProbeCoverageSpec asserts every registered query appears in exactly
-    * one of these lists (or the dual-input entries below); [[selection]]
-    * rejects an `only` name that is in none of them. */
-  private[graft] val DocQueries = Seq(
-    "wordcount", "exact_dedup", "para_dedup", "para_dedup_stats",
-    "substring_dedup", "pipeline_funnel",
-    "simhash_dedup", "minhash_lsh_dedup", "dedup_gate_replay",
-    "quality_drift", "quality_drift_replay",
-    "ngram_jaccard_dedup", "dedup_clusters", "dedup_delta", "doc_fingerprint",
-    "repetition_score", "quality_gate", "sequence_pack", "split_assign",
-    "contamination_check", "corpus_stats", "dataset_card", "lang_id",
-    "leakage_safe_split", "split_balance_audit",
-    "semantic_decontamination", "semantic_decontamination_delta",
-    "ingest_drift", "ingest_drift_replay", "decont_gate_replay",
-    "readability", "text_quality", "tokenizer_fertility",
-    "token_counts", "tfidf_top_terms", "bigrams",
-    "doc_chunk", "doc_surprisal", "dedup_canonical", "embedding_quantize",
-    "mixture_weights", "ann_cosine_topk_q8", "group_sample",
-    "cluster_balanced_sample",
-    "token_histogram", "source_divergence", "embedding_centroids",
-    "quality_percentile_gate", "centroid_assign", "dup_pair_sources",
-    "embedding_dim_stats",
-    "lang_confusion", "pipeline_export", "mixture_apply",
-    "ann_cosine_topk", "ann_cosine_lsh", "ann_cosine_ivf",
-    "embedding_cosine_dedup", "embedding_dedup_lsh",
-    "crossmodal_retrieval",
-    "mm_features", "mm_frame_sample", "mm_fusion", "mm_integrity",
-    "winnow_overlap", "token_pmi", "vocab_growth", "bpe_pair_counts",
-    "bpe_train", "bpe_apply", "bpe_vocab",
-    "mm_resize", "dedup_stats", "grep", "inverted_index",
-    "inverted_index_raw",
-    "wordcount_tsv", "results_limit", "stratified_sample",
-    "corpus_shuffle", "token_budget_sample", "embedding_pq",
-    "ann_cosine_pq", "embedding_outliers", "ann_cosine_ivfpq",
-    "ann_cosine_pq_rerank", "ann_cosine_ivfpq_rerank",
-    "ann_cosine_ivfpq_res", "ann_cosine_ivfpq_batch",
-    "knn_graph", "knn_mutual", "knn_reciprocity", "semdedup", "gopher_quality", "pii_scrub",
-    "dsir_weights", "nb_quality_score", "bigram_lm_score", "embedding_rp",
-    "label_propagation",
-    "hard_negatives", "knn_coherence", "mmr_diversify", "weighted_sample_pps",
-    "ann_cosine_filtered", "kcore_graph", "embedding_drift",
-    "bm25_topk", "ann_cosine_lsh_mp", "ann_cosine_ivf_mp", "knn_delta",
-    "matryoshka_recall", "seed_expansion",
-    "mm_dedup", "mm_near_dedup", "quality_agreement", "knn_components",
-    "containment_pairs", "embedding_standardize",
-    "containment_pairs_sketch", "containment_sketch_coverage",
-    "ivf_modularity", "ivf_nprobe_curve",
-    "quality_calibration", "quality_survival_curve", "dup_cluster_size_dist",
-    "dedup_method_agreement", "lang_source_chi2", "dedup_threshold_curve",
-    "pack_boundary_curve", "shard_plan", "embedding_pca_top", "zipf_fit",
-    "ann_rrf_fusion", "knn_ppr", "ngram_novelty_curve",
-    "knn_clustering_coeff", "dedup_consensus")
+  /** The relational fixture tables: every table but documents,
+    * embeddings and events. */
+  private val RelTables =
+    Set("customer", "lineitem", "nation", "orders", "part", "region", "supplier")
 
-  /** Queries that read only events — probed when nEvents > 0.
-    * multikey_counts/multikey_flat live here (not DocQueries): the E8
-    * url_analyzer shape reads events.props — the 500k family sweep
-    * caught them failing on a docs-only corpus. */
-  private[graft] val EventQueries = Seq(
-    "multikey_counts", "multikey_flat",
-    "events_funnel", "event_transitions", "events_sessions",
-    "events_tumbling_1h", "events_sliding_6h3h", "events_dedup",
-    "events_error_context", "json_events", "user_retention",
-    "events_rolling_24h", "events_pivot_daily", "events_zscore",
-    "session_paths", "events_csv", "events_jsonl", "events_orc",
-    "events_cms_topk", "events_value_quantiles",
-    "events_gap_fill", "range_join_bursts", "interval_union",
-    "events_mad_outliers", "purchase_attribution", "cohort_ltv",
-    "events_seasonal", "events_seasonal_anomaly", "events_heavy_hitters", "multi_touch_attribution",
-    "events_quantiles_by_type", "events_ab_test",
-    "events_winsorized_stats", "user_diversity_simpson",
-    "user_growth_daily", "events_late_audit", "watermark_delay_curve",
-    "events_stickiness", "events_bot_regularity", "events_autocorr",
-    "events_latest_state", "events_user_bitmap_daily")
+  /** The tables a DuckDB twin reads: the names after FROM and JOIN, with
+    * string literals stripped first. */
+  private[graft] def tablesRead(sql: String): Set[String] = {
+    val code = "'[^']*'".r.replaceAllIn(sql, "''")
+    raw"(?i)\b(?:FROM|JOIN)\s+(\w+)".r.findAllMatchIn(code)
+      .map(_.group(1).toLowerCase(java.util.Locale.ROOT)).toSet
+  }
 
-  /** Queries that read only the TPC-H-ish tables — probed when
-    * relScale > 0 (Audit-verified table usage; asof_join_orders is out
-    * because it also reads events). */
-  private[graft] val RelQueries = Seq(
-    "pricing_summary", "regional_revenue", "customer_order_stats",
-    "top_parts_revenue", "semi_join_heavy", "anti_join_idle",
-    "window_top_orders", "window_running_spend", "window_order_gaps",
-    "salted_join_stats", "stats_agg", "percentile_prices", "distinct_agg",
-    "distinct_part_kinds", "set_ops_nations", "rollup_orders",
-    "cube_orders", "scalar_battery", "string_battery", "array_battery",
-    "agg_custom_topk", "approx_distinct_parts", "bucketed_join_orders",
-    "sql_above_avg_orders", "part_affinity", "key_skew_report",
-    "part_pagerank", "triangle_count", "fuzzy_join_parts",
-    "entity_resolution",
-    "bloom_semi_join", "skyline_parts", "table_profile",
-    "table_profile_approx",
-    "scd2_order_status", "mv_refresh_incremental", "rfm_segments",
-    "window_battery", "corr_matrix", "zorder_orders",
-    "orders_forecast_snaive", "revenue_cusum", "revenue_changepoint",
-    "k_anonymity",
-    "basket_rules", "revenue_pareto_share", "nation_revenue_yoy",
-    "orders_recon", "l_diversity", "t_closeness",
-    "shipping_priority", "promo_revenue", "late_order_priority",
-    "top_supplier", "waiting_supplier", "grouping_sets_orders",
-    "order_backlog_monthly", "supplier_hhi", "revenue_trend_theilsen",
-    "benford_audit", "revenue_bridge", "revenue_ewma_anomaly",
-    "km_ship_survival", "parts_abc_class", "orders_gini",
-    "market_share", "small_qty_revenue", "large_volume_customers",
-    "disc_revenue_brands", "dormant_high_balance", "part_link_prediction",
-    "part_name_profit",
-    "customer_order_dist", "region_part_value", "min_cost_supplier",
-    "supplier_part_counts", "dominant_ship_suppliers",
-    "returned_item_losses", "local_supplier_volume",
-    "forecast_revenue_uplift", "nation_trade_volume", "customer_rfm")
-
-  /** Queries needing BOTH events and the relational tables. */
-  private[graft] val DualInputQueries = Seq(
-    "asof_join_orders", "asof_join_orders_salted", "events_by_segment",
-    "dq_violations", "asof_join_native", "asof_join_native_fwd",
-    "user_erasure_audit")
+  /** A registered query's probe family, from the fixture tables its
+    * DuckDB twin reads: `events` only → "events", relational tables only
+    * → "rel", both → "dual", neither (documents/embeddings) → "docs".
+    * The registry is the one list: a new query is probed in the family
+    * its twin implies. */
+  private[graft] def familyOf(name: String): String = {
+    val t = tablesRead(SparkEntry.oracleSql(name))
+    (t("events"), t.exists(RelTables)) match {
+      case (false, false) => "docs"
+      case (true, false) => "events"
+      case (false, true) => "rel"
+      case (true, true) => "dual"
+    }
+  }
 
   /** Pseudo-queries: probe legs that `only` can name but that are not
     * registered queries. */
@@ -152,21 +64,23 @@ object ScaleProbe {
 
   /** The registered queries the probe runs for an `only` filter (empty =
     * every enabled family). Fails, naming the name, on an `only` entry
-    * that is neither a listed query nor a pseudo-query, and, naming the
-    * parameter, on a listed query whose family this corpus does not
+    * that is neither a registered query nor a pseudo-query, and, naming
+    * the parameter, on a query whose family ([[familyOf]]) this corpus does not
     * synthesize (events need nEvents > 0, relational tables
     * relScale > 0) — never drops a name silently. */
   private[graft] def selection(only: Set[String], nEvents: Long,
                                relScale: Int): Seq[String] = {
-    val families = Seq(
-      DocQueries -> Nil,
-      EventQueries -> Seq("nEvents" -> (nEvents > 0)),
-      RelQueries -> Seq("relScale" -> (relScale > 0)),
-      DualInputQueries -> Seq("nEvents" -> (nEvents > 0), "relScale" -> (relScale > 0)))
-    val unknown = only -- families.flatMap(_._1) -- PseudoQueries
+    val unknown = only -- SparkEntry.oracleSql.keySet -- PseudoQueries
     require(unknown.isEmpty,
       s"unknown probe queries: ${unknown.toSeq.sorted.mkString(",")}")
-    families.flatMap { case (qs, needs) =>
+    val byFamily = SparkEntry.oracleSql.keys.toSeq.sorted.groupBy(familyOf)
+    Seq(
+      "docs" -> Nil,
+      "events" -> Seq("nEvents" -> (nEvents > 0)),
+      "rel" -> Seq("relScale" -> (relScale > 0)),
+      "dual" -> Seq("nEvents" -> (nEvents > 0), "relScale" -> (relScale > 0))
+    ).flatMap { case (family, needs) =>
+      val qs = byFamily.getOrElse(family, Nil)
       val missing = needs.collect { case (param, false) => param }
       val asked = qs.filter(only)
       require(missing.isEmpty || asked.isEmpty,

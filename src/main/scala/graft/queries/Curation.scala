@@ -268,7 +268,7 @@ object Curation {
       Substrate.Bucketed(32, "doc_id"))(
       Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("lang"), col("source"),
-          md5(trim(regexp_replace(lower(col("text")), "\\W+", " "))).as("ch"),
+          TextAnalysis.contentHash(col("text")).as("ch"),
           size(TextAnalysis.toks(col("text"))).cast("long").as("n_tokens"))
         .withColumn("b", Temporal.bucketCol(col("ch")))
         .withColumn("split",
@@ -322,7 +322,7 @@ object Curation {
   val leakageSafeSplitSql: String =
     s"""WITH h AS (
        |  SELECT doc_id,
-       |         md5(trim(regexp_replace(lower(text), '\\W+', ' ', 'g'))) AS ch,
+       |         ${TextAnalysis.contentHashSql} AS ch,
        |         CAST(len(list_filter(string_split_regex(lower(text), '\\W+'),
        |                              x -> length(x) > 0)) AS BIGINT) AS n_tokens
        |  FROM documents),
@@ -399,7 +399,7 @@ object Curation {
        |         n_tokens
        |  FROM (SELECT lang,
        |               CAST(CAST('0x' || substr(md5(
-       |                 md5(trim(regexp_replace(lower(text), '\\W+', ' ', 'g')))
+       |                 ${TextAnalysis.contentHashSql}
        |               ), 1, 15) AS UBIGINT) % 100 AS INTEGER) AS b,
        |               CAST(len(list_filter(string_split_regex(lower(text), '\\W+'),
        |                                    x -> length(x) > 0)) AS BIGINT) AS n_tokens
@@ -506,16 +506,16 @@ object Curation {
       .limit(SemDecontTopN)
   }
 
-  /** DuckDB twin of [[semanticDecontamination]] — composes the
-    * [[Similarity.ivfChainSql]] assignment (`fin`/`nv`, the semdedup
-    * pattern) with the [[leakageSafeSplit]] content-hash split CTEs
-    * (renamed `sdh`/`sda` — the chain's own `tr` / `cand` names are
-    * taken) and the cross-split within-cell pair join. */
-  def semanticDecontaminationSqlFor(tau: Double): String =
-    s"""WITH ${Similarity.ivfChainSql},
+  /** The [[Similarity.ivfChainSql]] assignment (`fin`/`nv`) joined to
+    * the [[leakageSafeSplit]] content-hash split (its CTEs renamed
+    * `sdh`/`sda` — the chain's own `tr` / `cand` names are taken): `sd`
+    * is every doc's (doc_id, split, n_tokens, cell, v, norm), the input
+    * of the decontamination twins' cross-split within-cell pair join. */
+  private def splitCellCtes: String =
+    s"""${Similarity.ivfChainSql},
        |sdh AS (
        |  SELECT doc_id,
-       |         md5(trim(regexp_replace(lower(text), '\\W+', ' ', 'g'))) AS ch,
+       |         ${TextAnalysis.contentHashSql} AS ch,
        |         CAST(len(list_filter(string_split_regex(lower(text), '\\W+'),
        |                              x -> length(x) > 0)) AS BIGINT) AS n_tokens
        |  FROM documents),
@@ -530,7 +530,12 @@ object Curation {
        |sd AS (SELECT a.doc_id, a.split, a.n_tokens, f.cell, n.v, n.norm
        |       FROM sda a
        |       JOIN fin f ON a.doc_id = f.vec_id
-       |       JOIN nv n ON n.vec_id = a.doc_id),
+       |       JOIN nv n ON n.vec_id = a.doc_id)""".stripMargin
+
+  /** DuckDB twin of [[semanticDecontamination]] — [[splitCellCtes]]
+    * and the cross-split within-cell pair join. */
+  def semanticDecontaminationSqlFor(tau: Double): String =
+    s"""WITH $splitCellCtes,
        |sde AS (SELECT * FROM sd WHERE split <> 'train'),
        |sdt AS (SELECT doc_id AS train_doc, cell, v, norm
        |        FROM sd WHERE split = 'train'),
@@ -683,25 +688,7 @@ object Curation {
     * both the delta-gate oracle (adds the rollup + top-N) and the
     * replay oracle (emits the raw ledger). */
   private def decontDeltaCtes(tau: Double, deltaMod: Long): String =
-    s"""${Similarity.ivfChainSql},
-       |sdh AS (
-       |  SELECT doc_id,
-       |         md5(trim(regexp_replace(lower(text), '\\W+', ' ', 'g'))) AS ch,
-       |         CAST(len(list_filter(string_split_regex(lower(text), '\\W+'),
-       |                              x -> length(x) > 0)) AS BIGINT) AS n_tokens
-       |  FROM documents),
-       |sda AS (
-       |  SELECT doc_id, n_tokens,
-       |         CASE WHEN b < 5 THEN 'test'
-       |              WHEN b < 10 THEN 'val' ELSE 'train' END AS split
-       |  FROM (SELECT sdh.*,
-       |               CAST(CAST('0x' || substr(md5(ch), 1, 15) AS UBIGINT)
-       |                    % 100 AS INTEGER) AS b
-       |        FROM sdh)),
-       |sd AS (SELECT a.doc_id, a.split, a.n_tokens, f.cell, n.v, n.norm
-       |       FROM sda a
-       |       JOIN fin f ON a.doc_id = f.vec_id
-       |       JOIN nv n ON n.vec_id = a.doc_id),
+    s"""$splitCellCtes,
        |sde AS (SELECT doc_id AS eval_doc, cell, v, norm
        |        FROM sd WHERE split <> 'train'),
        |shard AS (SELECT doc_id AS train_doc, n_tokens, cell, v, norm

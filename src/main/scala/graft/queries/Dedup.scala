@@ -114,14 +114,7 @@ object Dedup {
         val md = java.security.MessageDigest.getInstance("MD5")
         it.map { case (id, sh) =>
           val set = new java.util.TreeSet[java.lang.Long]()
-          sh.foreach { s =>
-            md.reset()
-            val d = md.digest(s.getBytes("UTF-8"))
-            var h = 0L
-            var k = 0
-            while (k < 6) { h = (h << 8) | (d(k) & 0xFFL); k += 1 }
-            set.add(h)
-          }
+          sh.foreach(s => set.add(DupKernel.md5Prefix48(md.digest(s.getBytes("UTF-8")))))
           val arr = new Array[Long](set.size)
           var i = 0
           set.forEach { v => arr(i) = v; i += 1 }
@@ -143,6 +136,85 @@ object Dedup {
       |                s -> CAST(CAST('0x' || substr(md5(s), 1, 12) AS UBIGINT) AS BIGINT)))) AS hs
       |       FROM sh WHERE len(sh) > 0)""".stripMargin
 
+  /** Task-side kernels of the near-dup family, in a `Serializable`
+    * holder (the [[Similarity]] `PqKernel` pattern) so a task closure
+    * that calls one never captures `Dedup$`. */
+  private[graft] object DupKernel extends Serializable {
+    /** SimHash width: 12 hex chars of md5, positive in a signed 64-bit
+      * long on both engines. */
+    val SimBits = 48
+
+    /** The 48-bit hash of a gram: the first 6 bytes of its md5 digest,
+      * big-endian — the oracles' `substr(md5(x), 1, 12)` read as hex. */
+    def md5Prefix48(d: Array[Byte]): Long = {
+      var h = 0L
+      var k = 0
+      while (k < 6) { h = (h << 8) | (d(k) & 0xFFL); k += 1 }
+      h
+    }
+
+    /** The [[SimBits]]-bit SimHash vote over `n` grams, gram i's md5
+      * digest being `digest(i)`: bit b is set iff MORE than half of the
+      * grams' [[md5Prefix48]] hashes set it (a count of exactly n/2
+      * clears it — the oracles' `b * 2 > n`). No grams, no signature:
+      * sig = 0 would pair every blank doc with every other at hamming 0
+      * (an O(blank²) explosion on real crawl data), and the oracles'
+      * unnest emits no row for it either. */
+    def simhash(n: Int)(digest: Int => Array[Byte]): Option[Long] =
+      if (n <= 0) None
+      else {
+        val bitCounts = new Array[Long](SimBits)
+        var i = 0
+        while (i < n) {
+          val h = md5Prefix48(digest(i))
+          var b = 0
+          while (b < SimBits) { bitCounts(b) += (h >> b) & 1L; b += 1 }
+          i += 1
+        }
+        var sig = 0L
+        var b = 0
+        while (b < SimBits) { if (bitCounts(b) * 2 > n) sig |= 1L << b; b += 1 }
+        Some(sig)
+      }
+
+    /** Exact Jaccard of two sorted distinct hash arrays at threshold `t`:
+      * a two-pointer merge counts the intersection c, the RAW ratio
+      * c / (|x| + |y| − c) is tested against t (the same int/int IEEE
+      * division in both engines, and the quantity the prefix/length
+      * filters are necessary conditions FOR — testing the rounded value
+      * would admit raw j slightly below t that a candidate filter
+      * legitimately pruned), and a passing pair returns (c, the ratio
+      * rounded half-up to 6 places — Det discipline). */
+    def jaccard(x: Array[Long], y: Array[Long], t: Double): Option[(Int, Double)] = {
+      var i = 0; var j = 0; var c = 0
+      while (i < x.length && j < y.length) {
+        if (x(i) == y(j)) { c += 1; i += 1; j += 1 }
+        else if (x(i) < y(j)) i += 1
+        else j += 1
+      }
+      val raw = c.toDouble / (x.length + y.length - c)
+      if (raw >= t) Some((c, math.floor(raw * 1000000 + 0.5) / 1000000)) else None
+    }
+
+    /** A MinHash band value: the 31-polynomial fold of the `rows`
+      * signature rows starting at `off`. */
+    def bandHash(sig: Array[Long], off: Int, rows: Int): Long = {
+      var bh = 1125899906842597L
+      var r = 0
+      while (r < rows) { bh = bh * 31 + sig(off + r); r += 1 }
+      bh
+    }
+  }
+
+  /** AllPairs LENGTH FILTER: j(A,B) ≥ t forces min(|A|,|B|) ≥ t·max
+    * (intersection ≤ min, union ≥ max), so size-mismatched candidates
+    * are pruned before the verify join. Exact integer form with
+    * ⌊t·10⁴⌋ scaling: min ≥ t·max ⇒ min·10⁴ ≥ t·10⁴·max ≥ ⌊t·10⁴⌋·max,
+    * so the filter stays a NECESSARY condition (never drops a true pair)
+    * for any t, not just multiples of 0.1. */
+  private def lengthOk(na: Column, nb: Column, t: Double): Column =
+    least(na, nb) * 10000L >= greatest(na, nb) * math.floor(t * 10000).toLong
+
   private val VerifyChunkPairs = 5_000_000L  // candidate pairs per verify slice
 
   /** `graft.verify.broadcastMaxBytes` from the session conf (default
@@ -153,13 +225,8 @@ object Dedup {
       .map(_.toLong).getOrElse(512L << 20)
 
   /** Exact verification over hashed shingle sets: join each candidate
-    * pair to both hash arrays, count the intersection with a two-pointer
-    * merge (arrays are sorted), filter on the RAW jaccard (the same
-    * int/int IEEE division in both engines, and the quantity the prefix/
-    * length filters are necessary conditions FOR — filtering the rounded
-    * value would admit raw-j slightly below t that the candidate filters
-    * legitimately pruned), and emit the 6-dp-rounded value (Det
-    * discipline).
+    * pair to both hash arrays and keep what [[DupKernel.jaccard]] admits
+    * at `t`, with its intersection count and rounded jaccard.
     *
     * Memory shape (what made the 50× adversarial probe fail before): the
     * naive double sort-merge join ships BOTH hash arrays with every
@@ -197,17 +264,7 @@ object Dedup {
       .as[(Long, Long, Seq[Long], Seq[Long])]
       .mapPartitions { it =>
         it.flatMap { case (a, b, ha, hb) =>
-          val x = ha.toArray; val y = hb.toArray
-          var i = 0; var j = 0; var c = 0
-          while (i < x.length && j < y.length) {
-            if (x(i) == y(j)) { c += 1; i += 1; j += 1 }
-            else if (x(i) < y(j)) i += 1
-            else j += 1
-          }
-          val raw = c.toDouble / (x.length + y.length - c)
-          if (raw >= t)
-            Some((a, b, c, math.floor(raw * 1000000 + 0.5) / 1000000))
-          else None
+          DupKernel.jaccard(ha.toArray, hb.toArray, t).map { case (c, j) => (a, b, c, j) }
         }
       }.toDF("doc_a", "doc_b", "n_common", "jaccard")
     def joined(c: DataFrame, bc: Boolean): DataFrame = {
@@ -244,7 +301,7 @@ object Dedup {
   def exactDedup(spark: SparkSession, sfDir: String): DataFrame = {
     val hashed = Tables.documents(spark, sfDir)
       .select(col("doc_id"),
-        md5(trim(regexp_replace(lower(col("text")), "\\W+", " "))).as("content_hash"))
+        TextAnalysis.contentHash(col("text")).as("content_hash"))
     val groups = hashed.groupBy("content_hash")
       .agg(min("doc_id").as("canonical_id"), count(lit(1)).as("n_copies"))
     hashed.join(groups, "content_hash")
@@ -255,14 +312,14 @@ object Dedup {
   }
 
   val exactDedupSql: String =
-    """WITH h AS (SELECT doc_id,
-      |                  md5(trim(regexp_replace(lower(text), '\W+', ' ', 'g'))) AS content_hash
-      |           FROM documents),
-      |     g AS (SELECT content_hash, min(doc_id) AS canonical_id, count(*) AS n_copies
-      |           FROM h GROUP BY content_hash)
-      |SELECT doc_id, h.content_hash, doc_id = canonical_id AS is_canonical, n_copies
-      |FROM h JOIN g ON h.content_hash = g.content_hash
-      |ORDER BY doc_id""".stripMargin
+    s"""WITH h AS (SELECT doc_id,
+       |                  ${TextAnalysis.contentHashSql} AS content_hash
+       |           FROM documents),
+       |     g AS (SELECT content_hash, min(doc_id) AS canonical_id, count(*) AS n_copies
+       |           FROM h GROUP BY content_hash)
+       |SELECT doc_id, h.content_hash, doc_id = canonical_id AS is_canonical, n_copies
+       |FROM h JOIN g ON h.content_hash = g.content_hash
+       |ORDER BY doc_id""".stripMargin
 
   // --------------------------------------------------------------------
   // Paragraph-granularity exact dedup (CCNet/Gopher-style)
@@ -539,7 +596,7 @@ object Dedup {
         col("n_tokens").cast("long").as("n_toks"),
         TextAnalysis.qualityKeep().as("keep"))
       .withColumn("ch",
-        md5(trim(regexp_replace(lower(col("text")), "\\W+", " "))))
+        TextAnalysis.contentHash(col("text")))
       .withColumn("keep_id", min(when(col("keep"), col("doc_id")))
         .over(Window.partitionBy("ch")))
       .withColumn("canon", col("keep") && col("doc_id") === col("keep_id"))
@@ -593,7 +650,7 @@ object Dedup {
        |kept AS (SELECT b.* FROM b JOIN rb USING (doc_id)
        |         WHERE rb.n_tokens >= ${TextAnalysis.QualityMinTokens} AND rb.dup_bigram_frac <= ${TextAnalysis.QualityMaxDupFrac}),
        |h AS (SELECT doc_id, t, n_toks,
-       |             md5(trim(regexp_replace(lower(text), '\\W+', ' ', 'g'))) AS ch
+       |             ${TextAnalysis.contentHashSql} AS ch
        |      FROM kept),
        |canon AS (SELECT ch, min(doc_id) AS keep_id FROM h GROUP BY ch),
        |s2 AS (SELECT h.* FROM h JOIN canon ON h.ch = canon.ch AND h.doc_id = canon.keep_id),
@@ -665,15 +722,10 @@ object Dedup {
       .withColumn("r", row_number().over(w))
       .filter(col("r") <= col("n") - ceil(col("n") * t) + 1)
       .select("doc_id", "n", "h", "r")
-    // AllPairs LENGTH FILTER: j(A,B) ≥ t forces min(|A|,|B|) ≥ t·max
-    // (intersection ≤ min, union ≥ max) — prunes size-mismatched
-    // candidates before the expensive verify join. Exact integer form
-    // with floor(t·10⁴) scaling: min ≥ t·max ⇒ min·10⁴ ≥ t·10⁴·max ≥
-    // ⌊t·10⁴⌋·max, so the filter stays a NECESSARY condition (never
-    // drops a true pair) for any t, not just multiples of 0.1. Matters
-    // most when shingle frequencies are uniform (no rare prefix shingles
-    // to discriminate): on a synthetic worst-case corpus this cut
-    // candidates ~5× and verify time with them.
+    // AllPairs LENGTH FILTER ([[lengthOk]]): matters most when shingle
+    // frequencies are uniform (no rare prefix shingles to discriminate):
+    // on a synthetic worst-case corpus it cut candidates ~5× and verify
+    // time with them.
     //
     // PPJOIN POSITIONAL FILTER (Xiao et al., WWW'08): r is each hash's
     // rank in its doc's FULL (f, h)-sorted list — a total order shared by
@@ -692,8 +744,7 @@ object Dedup {
     val tScaled = math.floor(t * 10000).toLong
     prefixes.as("a").join(prefixes.as("b"),
         col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id") &&
-          least(col("a.n"), col("b.n")) * 10000L >=
-            greatest(col("a.n"), col("b.n")) * tScaled &&
+          lengthOk(col("a.n"), col("b.n"), t) &&
           (lit(1L) + least(col("a.n") - col("a.r"), col("b.n") - col("b.r"))) *
             lit(10000L + tScaled) >= lit(tScaled) * (col("a.n") + col("b.n")))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
@@ -1290,10 +1341,7 @@ object Dedup {
             }
           }
           (0 until NumBands).iterator.map { b =>
-            var bh = 1125899906842597L
-            var r = 0
-            while (r < BandRows) { bh = bh * 31 + dense(b * BandRows + r); r += 1 }
-            (id, b, bh, hs.size)
+            (id, b, DupKernel.bandHash(dense, b * BandRows, BandRows), hs.size)
           }
         }
       }
@@ -1318,10 +1366,7 @@ object Dedup {
               }
             }
             (0 until bN).iterator.map { b =>
-              var bh = 1125899906842597L
-              var r = 0
-              while (r < rN) { bh = bh * 31 + mins(b * rN + r); r += 1 }
-              (id, b, bh, hs.size)
+              (id, b, DupKernel.bandHash(mins, b * rN, rN), hs.size)
             }
           }
         }
@@ -1339,8 +1384,7 @@ object Dedup {
     bandRows.as("x").join(bandRows.as("y"),
         col("x.band") === col("y.band") && col("x.bv") === col("y.bv") &&
           col("x.doc_id") < col("y.doc_id") &&
-          least(col("x.n"), col("y.n")) * 10000L >=
-            greatest(col("x.n"), col("y.n")) * 8000L)
+          lengthOk(col("x.n"), col("y.n"), MinhashThreshold))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
   }
@@ -1490,8 +1534,7 @@ object Dedup {
     val touched = incBands
       .select(pmod(col("bv"), lit(GatePartitions)).as("pb"))
       .distinct().collect().map(_.getLong(0)).toSeq
-    val lenOk = least(col("n_in"), col("n_o")) * 10000L >=
-      greatest(col("n_in"), col("n_o")) * 8000L
+    val lenOk = lengthOk(col("n_in"), col("n_o"), MinhashThreshold)
     val candBase = probeSide(incBands)
       .join(baseIndex.filter(col("pb").isin(touched: _*)), Seq("band", "bv"))
       .filter(lenOk).select("in_doc", "other_doc")
@@ -1521,16 +1564,7 @@ object Dedup {
       .as[(Long, Long, Seq[Long], Seq[Long])]
       .mapPartitions { it =>
         it.flatMap { case (a, b, ha, hb) =>
-          val x = ha.toArray; val y = hb.toArray
-          var i = 0; var j = 0; var c = 0
-          while (i < x.length && j < y.length) {
-            if (x(i) == y(j)) { c += 1; i += 1; j += 1 }
-            else if (x(i) < y(j)) i += 1
-            else j += 1
-          }
-          val raw = c.toDouble / (x.length + y.length - c)
-          if (raw >= t) Some((a, b, math.floor(raw * 1000000 + 0.5) / 1000000))
-          else None
+          DupKernel.jaccard(ha.toArray, hb.toArray, t).map { case (_, j) => (a, b, j) }
         }
       }.toDF("in_doc", "other_doc", "jaccard")
     val wBest = Window.partitionBy("in_doc")
@@ -1615,7 +1649,6 @@ object Dedup {
   // SimHash
   // --------------------------------------------------------------------
 
-  private val SimBits = 48  // 12 hex chars of md5 → positive in signed i64 on both engines
   private val HotBucketBound = 1024  // per-task candidate bound: 1024² popcounts ≈ ms
 
   /** 48-bit SimHash per doc + Hamming-≤3 near-dup pairs.
@@ -1662,38 +1695,9 @@ object Dedup {
         val md = java.security.MessageDigest.getInstance("MD5")
         it.flatMap { case (id, text) =>
           val toks = text.toLowerCase(java.util.Locale.ROOT)
-            .split("\\W+").iterator.filter(_.nonEmpty)
-          val bitCounts = new Array[Long](SimBits)
-          var n = 0L
-          toks.foreach { tok =>
-            md.reset()
-            val d = md.digest(tok.getBytes("UTF-8"))
-            // first 12 hex chars == first 6 bytes, big-endian
-            var h = 0L
-            var k = 0
-            while (k < 6) { h = (h << 8) | (d(k) & 0xFFL); k += 1 }
-            var b = 0
-            while (b < SimBits) {
-              bitCounts(b) += (h >> b) & 1L
-              b += 1
-            }
-            n += 1
-          }
-          // Zero-token docs have no content to hash: emit NOTHING, exactly
-          // like the oracle's unnest (no token rows -> no sig row). Emitting
-          // sig=0 instead would pair every blank doc with every other at
-          // hamming 0 — an O(blank²) explosion on real crawl data — and
-          // diverge from the DuckDB twin.
-          if (n == 0) Iterator.empty
-          else {
-            var sig = 0L
-            var b = 0
-            while (b < SimBits) {
-              if (bitCounts(b) * 2 > n) sig |= (1L << b)
-              b += 1
-            }
-            Iterator.single((id, sig))
-          }
+            .split("\\W+").filter(_.nonEmpty)
+          DupKernel.simhash(toks.length)(i => md.digest(toks(i).getBytes("UTF-8")))
+            .map(sig => (id, sig))
         }
       }.toDF("doc_id", "simhash")
   }
@@ -1799,9 +1803,9 @@ object Dedup {
     * identical to the Spark kernel bit-for-bit (same \W+ tokenizer, same
     * first-12-hex-chars-of-md5 token hash, same majority vote). */
   private val simhashSigCtes: String = {
-    val bitSumSql = (0 until SimBits).map(b =>
+    val bitSumSql = (0 until DupKernel.SimBits).map(b =>
       s"sum((h >> $b) & 1) AS b$b").mkString(",\n                  ")
-    val simhashSql = (0 until SimBits).map(b =>
+    val simhashSql = (0 until DupKernel.SimBits).map(b =>
       s"(CASE WHEN b$b * 2 > n_tok THEN ${1L << b} ELSE 0 END)").mkString(" + ")
     s"""t AS (SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\\W+'),
        |                          x -> length(x) > 0)) AS tok
@@ -1844,50 +1848,6 @@ object Dedup {
   // Duplicate-cluster resolution (connected components)
   // --------------------------------------------------------------------
 
-  /** Dup-cluster resolution — the step every dedup pipeline needs AFTER
-    * pair generation: near-dup pairs are edges of an undirected graph;
-    * transitively-connected docs form one cluster; keep the minimum
-    * doc_id per cluster, drop the rest. Pairs come from [[simhashDedup]]
-    * (provable recall at hamming ≤ 3, so the edge set equals the
-    * brute-force oracle's).
-    *
-    * Two paths, switched on edge count — the same optimization
-    * production CC implementations make (GraphFrames, the VLDB
-    * "CC in MapReduce" line): near-dup edge sets are a tiny fraction of
-    * the corpus (dup density, not n), so:
-    *  - **edges ≤ localCcMaxEdges** (default 10M ≈ 160 MB): ONE
-    *    executor-side union-find task over the coalesced edge list —
-    *    O(E α(E)) sequential, but E is small by construction; no loop,
-    *    no per-round job overhead. This is `mapPartitions` on an
-    *    executor, NOT a driver collect.
-    *  - **above**: alternating LARGE-STAR / SMALL-STAR rounds (Kiveris
-    *    et al., "Connected Components in MapReduce and Beyond", SoCC
-    *    2014). Large-star points every larger neighbor of u at
-    *    m = min(Γ(u) ∪ {u}); small-star folds each node's smaller
-    *    neighborhood onto its minimum. Both preserve connectivity, both
-    *    strictly shrink the potential function, and the edge set
-    *    CONTRACTS as it converges (O(log n) rounds; in practice ~3-5) —
-    *    unlike min-label propagation, which keeps the full edge set
-    *    alive every round and re-densifies it through the neighbor
-    *    join (the 50× probe measured 429 s there, dominated by exactly
-    *    that). Convergence = two consecutive rounds with identical
-    *    (count, hash-sum) signature, followed by an explicit
-    *    star-forest VALIDATION (every child has exactly one parent, no
-    *    parent is a child) so a signature collision can fail loudly
-    *    instead of mislabeling.
-    *
-    * Round results persist via `localCheckpoint` by default (fast, but
-    * lineage pins to executor storage — an executor loss mid-loop kills
-    * the job). Set `graft.cc.reliableCheckpoint=true` to use reliable
-    * `checkpoint` instead (HDFS-backed via the session checkpoint dir):
-    * survives executor loss at the cost of one distributed write per
-    * round — the right trade on a 1000-executor 100 TB run, where a
-    * multi-hour job WILL lose executors.
-    *
-    * Only edge-touching docs enter either path: singletons (the
-    * overwhelming mass at 100 TB) never shuffle. Both paths produce the
-    * identical labeling (DedupSpec runs both, plus the reliable-
-    * checkpoint variant). */
   /** Pure union-find over an edge list → (node, component-min) labels.
     * Path compression + union by attachment toward the smaller root id —
     * parent pointers only ever decrease, so every root is its
@@ -1947,11 +1907,61 @@ object Dedup {
       .distinct()
   }
 
+  /** Dup-cluster resolution — the step every dedup pipeline needs AFTER
+    * pair generation: near-dup pairs are edges of an undirected graph;
+    * transitively-connected docs form one cluster; keep the minimum
+    * doc_id per cluster, drop the rest. Pairs come from [[simhashDedup]]
+    * (provable recall at hamming ≤ 3, so the edge set equals the
+    * brute-force oracle's).
+    *
+    * Two paths, switched on edge count — the same optimization
+    * production CC implementations make (GraphFrames, the VLDB
+    * "CC in MapReduce" line): near-dup edge sets are a tiny fraction of
+    * the corpus (dup density, not n), so:
+    *  - **edges ≤ localCcMaxEdges** (default 10M ≈ 160 MB): ONE
+    *    executor-side union-find task over the coalesced edge list —
+    *    O(E α(E)) sequential, but E is small by construction; no loop,
+    *    no per-round job overhead. This is `mapPartitions` on an
+    *    executor, NOT a driver collect.
+    *  - **above**: alternating LARGE-STAR / SMALL-STAR rounds (Kiveris
+    *    et al., "Connected Components in MapReduce and Beyond", SoCC
+    *    2014). Large-star points every larger neighbor of u at
+    *    m = min(Γ(u) ∪ {u}); small-star folds each node's smaller
+    *    neighborhood onto its minimum. Both preserve connectivity, both
+    *    strictly shrink the potential function, and the edge set
+    *    CONTRACTS as it converges (O(log n) rounds; in practice ~3-5) —
+    *    unlike min-label propagation, which keeps the full edge set
+    *    alive every round and re-densifies it through the neighbor
+    *    join (the 50× probe measured 429 s there, dominated by exactly
+    *    that). Convergence = two consecutive rounds with identical
+    *    (count, hash-sum) signature, followed by an explicit
+    *    star-forest VALIDATION (every child has exactly one parent, no
+    *    parent is a child) so a signature collision can fail loudly
+    *    instead of mislabeling.
+    *
+    * Round results persist via `localCheckpoint` by default (fast, but
+    * lineage pins to executor storage — an executor loss mid-loop kills
+    * the job). Set `graft.cc.reliableCheckpoint=true` to use reliable
+    * `checkpoint` instead (HDFS-backed via the session checkpoint dir):
+    * survives executor loss at the cost of one distributed write per
+    * round — the right trade on a 1000-executor 100 TB run, where a
+    * multi-hour job WILL lose executors.
+    *
+    * Only edge-touching docs enter either path: singletons (the
+    * overwhelming mass at 100 TB) never shuffle. Both paths produce the
+    * identical labeling (DedupSpec runs both, plus the reliable-
+    * checkpoint variant). */
   def dedupClusters(spark: SparkSession, sfDir: String,
-                    localCcMaxEdges: Long = 10_000_000L): DataFrame = {
-    val labels = ccLabelsOf(spark,
+                    localCcMaxEdges: Long = 10_000_000L): DataFrame =
+    keepList(ccLabelsOf(spark,
       simhashPairs(spark, sfDir).select(col("doc_a"), col("doc_b")),
-      localCcMaxEdges)
+      localCcMaxEdges))
+
+  /** The cluster tail: component labels `(doc_id, comp)` → one row per
+    * labeled doc with its cluster's canonical (min) id, whether it is
+    * that canonical, and the cluster size — [[dedupClusters]]' output
+    * contract, shared by [[dedupConsensus]]. */
+  private def keepList(labels: DataFrame): DataFrame = {
     val sizes = labels.groupBy("comp").agg(count(lit(1)).as("n_members"))
     labels.join(sizes, "comp")
       .select(col("doc_id"), col("comp").as("canonical_id"),
@@ -2033,8 +2043,6 @@ object Dedup {
     labels
   }
 
-  /** Oracle: recursive transitive closure over the same simhash pairs,
-    * min reachable id per doc (tiny at sf0.01 — 40 edges). */
   /** CONSENSUS DEDUP CLUSTERS — the high-precision ensemble mode: a
     * pair is an edge only when BOTH probabilistic layers flag it
     * (MinHash Jaccard ≥ 0.8 AND SimHash Hamming ≤ 3), then connected
@@ -2049,19 +2057,45 @@ object Dedup {
   def dedupConsensus(spark: SparkSession, sfDir: String): DataFrame = {
     val mh = minhashLshDedup(spark, sfDir).select("doc_a", "doc_b")
     val sh = simhashPairs(spark, sfDir).select("doc_a", "doc_b")
-    val labels = ccLabelsOf(spark, mh.join(sh, Seq("doc_a", "doc_b")))
-    val sizes = labels.groupBy("comp").agg(count(lit(1)).as("n_members"))
-    labels.join(sizes, "comp")
-      .select(col("doc_id"), col("comp").as("canonical_id"),
-        (col("doc_id") === col("comp")).as("keep"), col("n_members"))
-      .orderBy("doc_id")
+    keepList(ccLabelsOf(spark, mh.join(sh, Seq("doc_a", "doc_b"))))
   }
 
-  /** Oracle: both layers by their exact definitions (the
-    * [[dedupMethodAgreementSql]] twins), intersected, then the
-    * [[dedupClustersSql]] recursive-CC labeling. */
-  val dedupConsensusSql: String =
-    s"""WITH RECURSIVE $shinglesSqlCte,
+  /** DuckDB connected components over an undirected pair CTE
+    * `p(doc_a, doc_b)`: `e` symmetrizes it, `reach` is the recursive
+    * transitive closure (the query needs `WITH RECURSIVE`), and
+    * `lab(doc_id, <label>)` is each edge-touching doc's minimum
+    * reachable id — [[ccLabelsOf]]'s labeling by definition. */
+  private def ccLabelSql(label: String): String =
+    s"""e AS (SELECT doc_a AS src, doc_b AS dst FROM p
+       |      UNION ALL SELECT doc_b, doc_a FROM p),
+       |reach(doc_id, m) AS (
+       |  SELECT DISTINCT src, src FROM e
+       |  UNION
+       |  SELECT e.src, r.m FROM e JOIN reach r ON e.dst = r.doc_id),
+       |lab AS (SELECT doc_id, min(m) AS $label FROM reach GROUP BY doc_id)""".stripMargin
+
+  /** [[ccLabelSql]] over the brute-force simhash pairs (Hamming ≤ 3 over
+    * [[simhashSigCtes]]) — the oracle side of [[dedupClusters]]' labels,
+    * for every twin that reads them. */
+  private def simhashClusterSql(label: String): String =
+    s"""$simhashSigCtes,
+       |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+       |      FROM sig a JOIN sig b ON a.doc_id < b.doc_id
+       |      WHERE bit_count(xor(a.simhash, b.simhash)) <= 3),
+       |${ccLabelSql(label)}""".stripMargin
+
+  /** DuckDB twin of [[keepList]] over `lab(doc_id, canonical_id)`. */
+  private val keepListSql: String =
+    """SELECT doc_id, canonical_id, doc_id = canonical_id AS keep,
+      |       count(*) OVER (PARTITION BY canonical_id) AS n_members
+      |FROM lab ORDER BY doc_id""".stripMargin
+
+  /** Both near-dup layers by their exact definitions: `mhp` = exact
+    * Jaccard ≥ 0.8 over the shingle-hash sets, `shp` = Hamming ≤ 3 over
+    * the simhash signatures (the per-query hash gates prove the LSH
+    * implementations equal these). */
+  private val layerPairCtes: String =
+    s"""$shinglesSqlCte,
        |$shingleHashSqlCte,
        |$simhashSigCtes,
        |mhp AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -2071,35 +2105,22 @@ object Dedup {
        |              >= 0.8),
        |shp AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
        |        FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-       |        WHERE bit_count(xor(a.simhash, b.simhash)) <= 3),
+       |        WHERE bit_count(xor(a.simhash, b.simhash)) <= 3)""".stripMargin
+
+  /** Oracle: both layers ([[layerPairCtes]]), intersected, then the
+    * [[dedupClustersSql]] recursive-CC labeling. */
+  val dedupConsensusSql: String =
+    s"""WITH RECURSIVE $layerPairCtes,
        |p AS (SELECT m.doc_a, m.doc_b FROM mhp m
        |      JOIN shp s ON s.doc_a = m.doc_a AND s.doc_b = m.doc_b),
-       |e AS (SELECT doc_a AS src, doc_b AS dst FROM p
-       |      UNION ALL SELECT doc_b, doc_a FROM p),
-       |reach(doc_id, m) AS (
-       |  SELECT DISTINCT src, src FROM e
-       |  UNION
-       |  SELECT e.src, r.m FROM e JOIN reach r ON e.dst = r.doc_id),
-       |lab AS (SELECT doc_id, min(m) AS canonical_id FROM reach GROUP BY doc_id)
-       |SELECT doc_id, canonical_id, doc_id = canonical_id AS keep,
-       |       count(*) OVER (PARTITION BY canonical_id) AS n_members
-       |FROM lab ORDER BY doc_id""".stripMargin
+       |${ccLabelSql("canonical_id")}
+       |$keepListSql""".stripMargin
 
+  /** Oracle: recursive transitive closure over the same simhash pairs,
+    * min reachable id per doc (tiny at sf0.01 — 40 edges). */
   val dedupClustersSql: String =
-    s"""WITH RECURSIVE $simhashSigCtes,
-       |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |      FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-       |      WHERE bit_count(xor(a.simhash, b.simhash)) <= 3),
-       |e AS (SELECT doc_a AS src, doc_b AS dst FROM p
-       |      UNION ALL SELECT doc_b, doc_a FROM p),
-       |reach(doc_id, m) AS (
-       |  SELECT DISTINCT src, src FROM e
-       |  UNION
-       |  SELECT e.src, r.m FROM e JOIN reach r ON e.dst = r.doc_id),
-       |lab AS (SELECT doc_id, min(m) AS canonical_id FROM reach GROUP BY doc_id)
-       |SELECT doc_id, canonical_id, doc_id = canonical_id AS keep,
-       |       count(*) OVER (PARTITION BY canonical_id) AS n_members
-       |FROM lab ORDER BY doc_id""".stripMargin
+    s"""WITH RECURSIVE ${simhashClusterSql("canonical_id")}
+       |$keepListSql""".stripMargin
 
   // --------------------------------------------------------------------
   // Materialized cluster intermediate (write-once pipeline composition)
@@ -2213,17 +2234,7 @@ object Dedup {
     * canonicals must reproduce exactly what recomputing from scratch
     * would say about the new shard. */
   val dedupDeltaSql: String =
-    s"""WITH RECURSIVE $simhashSigCtes,
-       |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |      FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-       |      WHERE bit_count(xor(a.simhash, b.simhash)) <= 3),
-       |e AS (SELECT doc_a AS src, doc_b AS dst FROM p
-       |      UNION ALL SELECT doc_b, doc_a FROM p),
-       |reach(doc_id, m) AS (
-       |  SELECT DISTINCT src, src FROM e
-       |  UNION
-       |  SELECT e.src, r.m FROM e JOIN reach r ON e.dst = r.doc_id),
-       |lab AS (SELECT doc_id, min(m) AS canonical_id FROM reach GROUP BY doc_id),
+    s"""WITH RECURSIVE ${simhashClusterSql("canonical_id")},
        |cb AS (SELECT canonical_id,
        |              max(CASE WHEN doc_id % $DeltaMod <> $DeltaRes THEN 1 ELSE 0 END) AS hb
        |       FROM lab GROUP BY canonical_id),
@@ -2276,17 +2287,7 @@ object Dedup {
     * subquery (same literal expression as text_quality's oracle, so the
     * ranking keys agree exactly — r4-rounded on both sides). */
   val dedupCanonicalSql: String =
-    s"""WITH RECURSIVE $simhashSigCtes,
-       |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |      FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-       |      WHERE bit_count(xor(a.simhash, b.simhash)) <= 3),
-       |e AS (SELECT doc_a AS src, doc_b AS dst FROM p
-       |      UNION ALL SELECT doc_b, doc_a FROM p),
-       |reach(doc_id, m) AS (
-       |  SELECT DISTINCT src, src FROM e
-       |  UNION
-       |  SELECT e.src, r.m FROM e JOIN reach r ON e.dst = r.doc_id),
-       |lab AS (SELECT doc_id, min(m) AS cluster_id FROM reach GROUP BY doc_id),
+    s"""WITH RECURSIVE ${simhashClusterSql("cluster_id")},
        |q AS (SELECT doc_id, quality_score
        |      FROM (${TextAnalysis.textQualitySql}))
        |SELECT l.doc_id, l.cluster_id, q.quality_score,
@@ -2333,19 +2334,9 @@ object Dedup {
   /** Oracle: the exact-dedup hash groups plus the recursive-CTE
     * clustering, aggregated to the same six metrics. */
   val dedupStatsSql: String =
-    s"""WITH RECURSIVE $simhashSigCtes,
-       |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |      FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-       |      WHERE bit_count(xor(a.simhash, b.simhash)) <= 3),
-       |e AS (SELECT doc_a AS src, doc_b AS dst FROM p
-       |      UNION ALL SELECT doc_b, doc_a FROM p),
-       |reach(doc_id, m) AS (
-       |  SELECT DISTINCT src, src FROM e
-       |  UNION
-       |  SELECT e.src, r.m FROM e JOIN reach r ON e.dst = r.doc_id),
-       |lab AS (SELECT doc_id, min(m) AS cluster_id FROM reach GROUP BY doc_id),
+    s"""WITH RECURSIVE ${simhashClusterSql("cluster_id")},
        |h AS (SELECT doc_id,
-       |             md5(trim(regexp_replace(lower(text), '\\W+', ' ', 'g'))) AS ch
+       |             ${TextAnalysis.contentHashSql} AS ch
        |      FROM documents),
        |g AS (SELECT ch, min(doc_id) AS canon, count(*) AS n_copies
        |      FROM h GROUP BY ch)
@@ -2407,17 +2398,7 @@ object Dedup {
   /** Oracle: the [[dedupClustersSql]] recursive closure, cluster sizes
     * from the canonical rows, the identical bit-length banding. */
   val dupClusterSizeDistSql: String =
-    s"""WITH RECURSIVE $simhashSigCtes,
-       |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |      FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-       |      WHERE bit_count(xor(a.simhash, b.simhash)) <= 3),
-       |e AS (SELECT doc_a AS src, doc_b AS dst FROM p
-       |      UNION ALL SELECT doc_b, doc_a FROM p),
-       |reach(doc_id, m) AS (
-       |  SELECT DISTINCT src, src FROM e
-       |  UNION
-       |  SELECT e.src, r.m FROM e JOIN reach r ON e.dst = r.doc_id),
-       |lab AS (SELECT doc_id, min(m) AS cluster_id FROM reach GROUP BY doc_id),
+    s"""WITH RECURSIVE ${simhashClusterSql("cluster_id")},
        |cs AS (SELECT cluster_id, count(*) AS n_members FROM lab GROUP BY 1),
        |bands AS (SELECT CAST(length(bin(n_members)) AS INT) AS band,
        |                 count(*) AS n_clusters,
@@ -2490,17 +2471,7 @@ object Dedup {
     val po = s"(both_dup + neither) / $n"
     val pe = s"((both_dup + minhash_only) / $n) * ((both_dup + simhash_only) / $n)" +
       s" + ((neither + simhash_only) / $n) * ((neither + minhash_only) / $n)"
-    s"""WITH $shinglesSqlCte,
-       |$shingleHashSqlCte,
-       |$simhashSigCtes,
-       |mhp AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |        FROM hv a JOIN hv b ON a.doc_id < b.doc_id
-       |        WHERE CAST(len(list_intersect(a.hs, b.hs)) AS DOUBLE)
-       |              / (len(a.hs) + len(b.hs) - len(list_intersect(a.hs, b.hs)))
-       |              >= 0.8),
-       |shp AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |        FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-       |        WHERE bit_count(xor(a.simhash, b.simhash)) <= 3),
+    s"""WITH $layerPairCtes,
        |mhd AS (SELECT DISTINCT doc_id FROM
        |        (SELECT doc_a AS doc_id FROM mhp
        |         UNION ALL SELECT doc_b FROM mhp)),

@@ -346,27 +346,12 @@ object Multimodal {
       val md = java.security.MessageDigest.getInstance("MD5")
       it.flatMap { a =>
         val p = a.payload
-        val n = p.length - 3
-        // < 4 bytes: no 4-gram to vote with — emit nothing (the
-        // zero-token simhash rule: sig=0 would pair all tiny assets)
-        if (n <= 0) Iterator.empty
-        else {
-          val bitCounts = new Array[Long](48)
-          var i = 0
-          while (i < n) {
-            md.reset()
-            md.update(p, i, 4)
-            val d = md.digest()
-            var h = 0L; var k = 0
-            while (k < 6) { h = (h << 8) | (d(k) & 0xFFL); k += 1 }
-            var b = 0
-            while (b < 48) { bitCounts(b) += (h >> b) & 1L; b += 1 }
-            i += 1
-          }
-          var sig = 0L; var b = 0
-          while (b < 48) { if (bitCounts(b) * 2 > n) sig |= 1L << b; b += 1 }
-          Iterator.single((a.doc_id, a.modality, sig))
-        }
+        // < 4 bytes: no 4-gram to vote with — the vote emits nothing
+        // (sig=0 would pair all tiny assets)
+        Dedup.DupKernel.simhash(math.max(p.length - 3, 0)) { i =>
+          md.update(p, i, 4)
+          md.digest()
+        }.map(sig => (a.doc_id, a.modality, sig))
       }
     }.toDF("doc_id", "modality", "simhash")
     Dedup.bandedHammingPairs(sigs, sigs,
@@ -378,9 +363,9 @@ object Multimodal {
   /** DuckDB twin of [[mmNearDedup]] — byte k of the ASCII payload ==
     * ascii char k, so the 4-gram md5 votes replay over substr(text). */
   val mmNearDedupSql: String = {
-    val bitSumSql = (0 until 48).map(b =>
+    val bitSumSql = (0 until Dedup.DupKernel.SimBits).map(b =>
       s"sum((h >> $b) & 1) AS b$b").mkString(",\n      |             ")
-    val simhashSql = (0 until 48).map(b =>
+    val simhashSql = (0 until Dedup.DupKernel.SimBits).map(b =>
       s"(CASE WHEN b$b * 2 > n_g THEN ${1L << b} ELSE 0 END)").mkString(" + ")
     s"""WITH g AS (
        |  SELECT doc_id, unnest(list_transform(range(1, length(text) - 2),

@@ -20,6 +20,21 @@ object TextAnalysis {
   private[queries] def toks(c: Column): Column =
     filter(split(lower(c), "\\W+"), t => length(t) > 0)
 
+  /** Normalized text: lower-cased, every `\W+` run one space, trimmed —
+    * what the k-gram fingerprints read. */
+  private[queries] def normText(c: Column): Column =
+    trim(regexp_replace(lower(c), "\\W+", " "))
+
+  /** Content hash: md5 of [[normText]] — the exact-dedup and split key. */
+  private[queries] def contentHash(c: Column): Column = md5(normText(c))
+
+  /** DuckDB twin of [[normText]] over `text`. */
+  private[queries] val normTextSql: String =
+    "trim(regexp_replace(lower(text), '\\W+', ' ', 'g'))"
+
+  /** DuckDB twin of [[contentHash]] over `text`. */
+  private[queries] val contentHashSql: String = s"md5($normTextSql)"
+
   /** Cache toggle for A/B measurement: SPARK_GRAFT_DISABLE_CACHE=1 turns
     * the measured intra-query caches into pass-throughs so ScaleProbe can
     * price cache-vs-recompute at any corpus size (evidence in PERF.md —
@@ -692,7 +707,7 @@ object TextAnalysis {
     import spark.implicits._
     Tables.documents(spark, sfDir)
       .select(col("doc_id"),
-        trim(regexp_replace(lower(col("text")), "\\W+", " ")).as("ns"))
+        normText(col("text")).as("ns"))
       .as[(Long, String)]
   }
 
@@ -736,7 +751,7 @@ object TextAnalysis {
        |                                    i -> $terms)
        |                ELSE CAST([] AS BIGINT[]) END AS hs
        |    FROM (SELECT doc_id,
-       |                 trim(regexp_replace(lower(text), '\\W+', ' ', 'g')) AS ns
+       |                 $normTextSql AS ns
        |          FROM documents)))
        |ORDER BY doc_id""".stripMargin
   }
@@ -1041,7 +1056,7 @@ object TextAnalysis {
     * vocabulary (measured 0.99 mean "contamination" on this corpus —
     * useless), while an 8-token verbatim run is real leakage evidence.
     * The hash is the engine-portable first-12-hex-of-md5 construction
-    * shared with simhash. */
+    * shared with simhash ([[Dedup.DupKernel.md5Prefix48]]). */
   private def tokenShinglePairs(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     Tables.documents(spark, sfDir)
@@ -1057,12 +1072,7 @@ object TextAnalysis {
             val sb = new java.lang.StringBuilder(toks(i))
             var j = 1
             while (j < ContamGram) { sb.append(' ').append(toks(i + j)); j += 1 }
-            md.reset()
-            val d = md.digest(sb.toString.getBytes("UTF-8"))
-            var h = 0L
-            var k = 0
-            while (k < 6) { h = (h << 8) | (d(k) & 0xFFL); k += 1 }
-            seen.add(h)
+            seen.add(Dedup.DupKernel.md5Prefix48(md.digest(sb.toString.getBytes("UTF-8"))))
             i += 1
           }
           val out = new Array[(Long, Long)](seen.size)
@@ -1442,7 +1452,7 @@ object TextAnalysis {
        |                                  i -> $terms)
        |              ELSE CAST([] AS BIGINT[]) END AS hs
        |  FROM (SELECT doc_id,
-       |               trim(regexp_replace(lower(text), '\\W+', ' ', 'g')) AS ns
+       |               $normTextSql AS ns
        |        FROM documents)),
        |fpl AS (
        |  SELECT doc_id,
@@ -3491,7 +3501,7 @@ object TextAnalysis {
       s"CAST(ascii(substr(ns, i+$j, 1)) AS BIGINT) * ${pows(j)}")
       .mkString(" + ")
     s"""WITH nd AS (SELECT doc_id,
-       |                   trim(regexp_replace(lower(text), '\\W+', ' ', 'g'))
+       |                   $normTextSql
        |                     AS ns
        |            FROM documents),
        |hl AS (SELECT doc_id,

@@ -55,6 +55,30 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
+  test("jaccard kernel: keeps raw == t, drops raw < t, rounds half-up to 6 places") {
+    val k = queries.Dedup.DupKernel
+    // 4 / (5 + 4 - 4) is exactly 0.8: kept at t = 0.8
+    assert(k.jaccard(Array(1L, 2, 3, 4, 5), Array(1L, 2, 3, 4), 0.8) == Some((4, 0.8)))
+    // 3 / (3 + 4 - 3) = 0.75 < 0.8: dropped
+    assert(k.jaccard(Array(1L, 2, 3), Array(1L, 2, 3, 4), 0.8).isEmpty)
+    // 1 / 128 = 0.0078125: the 7th place is an exact tie, rounded up
+    assert(k.jaccard(Array(64L), (1L to 128L).toArray, 0.0) == Some((1, 0.007813)))
+  }
+
+  test("simhash vote: no grams emit no signature; a bit set by exactly n/2 grams is clear") {
+    val k = queries.Dedup.DupKernel
+    assert(k.simhash(0)(_ => fail("a zero-gram doc digests nothing")).isEmpty)
+    // only the first 6 digest bytes count, big-endian: byte 5 holds bits 0-7
+    def d(low: Int): Array[Byte] = Array[Byte](0, 0, 0, 0, 0, low.toByte, -1, -1)
+    // two grams, 0b11 and 0b01: bit 0 set by both, bit 1 by exactly half
+    assert(k.simhash(2)(i => d(if (i == 0) 3 else 1)) == Some(1L))
+    // three grams, 0b11 twice and 0b01: bit 1 now has the majority
+    assert(k.simhash(3)(i => d(if (i == 2) 1 else 3)) == Some(3L))
+    // byte 0's high bit is the signature's top bit, bit SimBits - 1
+    assert(k.simhash(1)(_ => Array[Byte](-128, 0, 0, 0, 0, 0)) ==
+      Some(1L << (k.SimBits - 1)))
+  }
+
   test("embedding cosine dedup: symmetric-free pairs, cosine in [-1,1]") {
     val rows = queries.Dedup.embeddingCosineDups(spark, sf).collect()
     rows.foreach { r =>

@@ -57,12 +57,17 @@ class EntryPointSpec extends AnyFunSuite {
   test("Probe plans writes one formatted plan per named query and nothing else") {
     val out: Path = Files.createTempDirectory("graft_plans")
     try {
-      Probe.run(spark, Array("plans", out.toString, TestSpark.sf, "wordcount", "grep"))
+      Probe.run(spark, Array("plans", out.toString, TestSpark.sf, "wordcount", "grep",
+        "dedup_clusters"))
       val written = Files.list(out)
       val names = try written.iterator.asScala.map(_.getFileName.toString).toSet
         finally written.close()
-      assert(names == Set("wordcount.txt", "grep.txt"))
+      assert(names == Set("wordcount.txt", "grep.txt", "dedup_clusters.txt"))
       assert(Files.readString(out.resolve("wordcount.txt")).contains("Physical Plan"))
+      // a checkpointed RDD's call site is masked: moving code is no plan diff
+      val clusters = Files.readString(out.resolve("dedup_clusters.txt"))
+      assert(clusters.contains("localCheckpoint at Dedup.scala:<line>"), clusters)
+      assert(raw"\.scala:\d".r.findFirstIn(clusters).isEmpty, clusters)
     } finally {
       val all = Files.walk(out)
       try all.iterator.asScala.toSeq.reverse.foreach(p => Files.delete(p))

@@ -2,24 +2,23 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Every registered query must be reachable by ScaleProbe: a query
-  * absent from every probe family list could never be probed, and
-  * PERF.md's "probed at N×" claims would quietly stop covering it.
-  * This pins the lists to the registry in both directions, and pins
-  * that the `only` filter names what it cannot run instead of dropping
-  * it. */
+/** Every registered query must be reachable by ScaleProbe: its family
+  * is derived from the tables its DuckDB twin reads, so no hand list can
+  * drift from the registry. This pins the derivation on known queries
+  * and family sizes, and pins that the `only` filter names what it
+  * cannot run instead of dropping it. */
 class ProbeCoverageSpec extends AnyFunSuite {
-  test("every registered query appears in exactly one ScaleProbe family") {
-    val all = ScaleProbe.DocQueries ++ ScaleProbe.EventQueries ++
-      ScaleProbe.RelQueries ++ ScaleProbe.DualInputQueries
-    assert(all.distinct.size == all.size,
-      s"duplicated across probe families: ${all.diff(all.distinct).distinct}")
-    val registered = SparkEntry.queries.keySet
-    val probed = all.toSet
-    assert((registered -- probed).isEmpty,
-      s"registered but never probed: ${(registered -- probed).toSeq.sorted}")
-    assert((probed -- registered).isEmpty,
-      s"probe lists name unknown queries: ${(probed -- registered).toSeq.sorted}")
+  test("a query's probe family follows the fixture tables its twin reads") {
+    assert(ScaleProbe.familyOf("wordcount") == "docs")
+    assert(ScaleProbe.familyOf("multikey_counts") == "events")
+    assert(ScaleProbe.familyOf("pricing_summary") == "rel")
+    assert(ScaleProbe.familyOf("asof_join_orders") == "dual")
+    // string literals are stripped: 'from'/'join' inside one names no table
+    assert(ScaleProbe.tablesRead(
+      "SELECT 'x FROM events' AS s FROM documents d JOIN orders o ON true") ==
+      Set("documents", "orders"))
+    assert(ScaleProbe.selection(Set.empty, 0L, 0).size == 138)
+    assert(ScaleProbe.selection(Set.empty, 1L, 1).size == 269)
   }
 
   test("selection fails by name on an only entry that is no listed or pseudo query") {
@@ -44,6 +43,7 @@ class ProbeCoverageSpec extends AnyFunSuite {
     assert(ScaleProbe.selection(Set("asof_join_orders", "events_funnel"), 1000L, 1)
       .toSet == Set("asof_join_orders", "events_funnel"))
     // no filter: exactly the enabled families, nothing to reject
-    assert(ScaleProbe.selection(Set.empty, 0L, 0) == ScaleProbe.DocQueries)
+    assert(ScaleProbe.selection(Set.empty, 0L, 0).map(ScaleProbe.familyOf).toSet ==
+      Set("docs"))
   }
 }
