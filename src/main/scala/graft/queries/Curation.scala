@@ -157,11 +157,12 @@ object Curation {
     * The global cumsum is DECOMPOSED exactly like [[tokenBudgetSample]],
     * but the carry histogram here is GLOBAL (sampling crosses sources),
     * so the per-bucket totals (≤ 4096 rows — 3 hex chars of md5, bounded
-    * regardless of corpus size) collect to the driver for the prefix
-    * scan and broadcast back — the [[Temporal.eventsValueQuantiles]]
-    * model-state pattern. The within-bucket window partitions on bucket:
-    * no SinglePartition funnel; per-task sort is |corpus|/4096. `total`
-    * is inlined as a literal from the same bounded collect. */
+    * regardless of corpus size) collect through [[Hist.bounded]] for the
+    * driver carry fold ([[Hist.carries]]) and broadcast back — the
+    * [[Temporal.eventsValueQuantiles]] model-state pattern. The
+    * within-bucket window partitions on bucket: no SinglePartition
+    * funnel; per-task sort is |corpus|/4096. `total` is inlined as a
+    * literal from the same bounded collect. */
   def weightedSamplePps(spark: SparkSession, sfDir: String,
                         k: Long = PpsK): DataFrame = {
     import spark.implicits._
@@ -173,15 +174,15 @@ object Curation {
         shuffleKey(col("doc_id")).as("skey"),
         conv(substring(md, 1, 3), 16, 10).cast("int").as("bucket"))
     // ≤ 4096 rows of model state, independent of corpus size
-    val hist = base.groupBy("bucket").agg(sum("w").as("bw"))
-      .collect().map(r => (r.getAs[Int]("bucket"), r.getAs[Long]("bw")))
+    val hist = Hist.bounded(base.groupBy("bucket").agg(sum("w").as("bw")),
+        "weighted_sample_pps")
+      .map(r => (r.getAs[Int]("bucket"), r.getAs[Long]("bw")))
       .sortBy(_._1)
-    val total = hist.map(_._2).sum
+    val (cumBefore, total) = Hist.carries(hist.map(_._2), 0L)(_ + _)
     if (total <= 0)
       return Seq.empty[(Long, String, Long, Long)]
         .toDF("doc_id", "source", "n_chars", "times_picked")
-    val cumBefore = hist.map(_._1).zip(hist.scanLeft(0L)(_ + _._2))
-    val carry = cumBefore.toSeq.toDF("bucket", "cum_before")
+    val carry = hist.map(_._1).zip(cumBefore).toSeq.toDF("bucket", "cum_before")
     val wIn = Window.partitionBy("bucket")
       .orderBy(col("skey").asc, col("doc_id").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -970,6 +970,46 @@ object Dedup {
     * sketch estimate dips below admission is vanishingly rare). */
   private val SketchTEstScaled = 5000L
 
+  /** The rare-sketch postings both containment-sketch queries read, over
+    * the shingle-hash corpus `hv`: `post` (doc_id, h) per shingle,
+    * `rareH` the hashes of df ≤ maxDf, `skRare` each doc's rare bottom-k
+    * sketch hashes and `kRare` (doc_id, k_rare) per covered doc. */
+  private final case class RareSketch(hv: DataFrame, post: DataFrame,
+                                      rareH: DataFrame, skRare: DataFrame,
+                                      kRare: DataFrame)
+
+  private def rareSketch(spark: SparkSession, sfDir: String, k: Int,
+                         maxDf: Int): RareSketch = {
+    val hv = corpusShingleHashes(spark, sfDir)
+    val post = hv.select(col("doc_id"), explode(col("hs")).as("h"))
+    val rareH = post.groupBy("h").agg(count(lit(1)).as("df"))
+      .filter(col("df") <= maxDf).select("h")
+    // bottom-k sketch: hs is sorted ascending, so the k smallest hashes
+    // are a prefix slice (O(1) per doc, identical on the oracle side)
+    val skRare = hv.select(col("doc_id"), explode(slice(col("hs"), 1, k)).as("h"))
+      .join(rareH, "h")
+    RareSketch(hv, post, rareH, skRare,
+      skRare.groupBy("doc_id").agg(count(lit(1)).as("k_rare")))
+  }
+
+  /** The coverage verdict `regime` over `n_docs` and `n_covered`:
+    * `empty`, `ok` (coverage ≥ [[CoverageOkT]]) or `df_saturated`. */
+  private def coverageRegime: Column =
+    when(col("n_docs") === 0, "empty")
+      .when(col("n_covered").cast("double") / col("n_docs") >= CoverageOkT, "ok")
+      .otherwise("df_saturated").as("regime")
+
+  /** DuckDB twin of [[rareSketch]]: `hv`, then `post`, `rare` and `skr`. */
+  private val rareSketchSqlCtes: String =
+    s"""$shinglesSqlCte,
+       |$shingleHashSqlCte,
+       |post AS (SELECT doc_id, unnest(hs) AS h FROM hv),
+       |rare AS (SELECT h FROM post GROUP BY h
+       |         HAVING count(*) <= $ContainMaxDf),
+       |skr AS (SELECT s.doc_id, s.h
+       |        FROM (SELECT doc_id, unnest(hs[1:$SketchK]) AS h FROM hv) s
+       |        JOIN rare USING (h))""".stripMargin
+
   /** BOUNDED containment pairs — the scale path for the
     * [[containmentPairs]] geometry (quote/excerpt detection). Same
     * output contract (directed (contained, container) rows with the
@@ -1019,16 +1059,8 @@ object Dedup {
                              maxDf: Int = ContainMaxDf): DataFrame = {
     require(t > 0 && t <= 1, s"need 0 < t <= 1, got $t")
     require(k > 0, s"need k > 0, got $k")
-    val hv = corpusShingleHashes(spark, sfDir)
-    val post = hv.select(col("doc_id"), explode(col("hs")).as("h"))
-    val rareH = post.groupBy("h").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDf).select("h")
-    // bottom-k sketch: hs is sorted ascending, so the k smallest hashes
-    // are a prefix slice (O(1) per doc, identical on the oracle side)
-    val skRare = hv.select(col("doc_id"), explode(slice(col("hs"), 1, k)).as("h"))
-      .join(rareH, "h")
+    val RareSketch(hv, post, rareH, skRare, kRare) = rareSketch(spark, sfDir, k, maxDf)
     val postRare = post.join(rareH, "h")
-    val kRare = skRare.groupBy("doc_id").agg(count(lit(1)).as("k_rare"))
     val est = skRare.select(col("h"), col("doc_id").as("contained"))
       .join(postRare.select(col("h"), col("doc_id").as("container")), "h")
       .filter(col("contained") =!= col("container"))
@@ -1044,11 +1076,7 @@ object Dedup {
     // computed from frames this query already built (1-row broadcast)
     val tot = hv.agg(count(lit(1)).as("n_docs"))
     val cov = kRare.agg(count(lit(1)).as("n_covered"))
-    val covRaw = col("n_covered").cast("double") / col("n_docs")
-    val regime = tot.crossJoin(cov).select(
-      when(col("n_docs") === 0, "empty")
-        .when(covRaw >= CoverageOkT, "ok")
-        .otherwise("df_saturated").as("regime"))
+    val regime = tot.crossJoin(cov).select(coverageRegime)
     surv
       .join(hv.select(col("doc_id").as("contained"), col("hs").as("ha")), "contained")
       .join(hv.select(col("doc_id").as("container"), col("hs").as("hb")), "container")
@@ -1069,14 +1097,7 @@ object Dedup {
     * same integer cross-multiplied admission, the verify the same full
     * list intersection. */
   val containmentPairsSketchSql: String =
-    s"""WITH $shinglesSqlCte,
-       |$shingleHashSqlCte,
-       |post AS (SELECT doc_id, unnest(hs) AS h FROM hv),
-       |rare AS (SELECT h FROM post GROUP BY h
-       |         HAVING count(*) <= $ContainMaxDf),
-       |skr AS (SELECT s.doc_id, s.h
-       |        FROM (SELECT doc_id, unnest(hs[1:$SketchK]) AS h FROM hv) s
-       |        JOIN rare USING (h)),
+    s"""WITH $rareSketchSqlCtes,
        |postr AS (SELECT p.doc_id, p.h FROM post p JOIN rare USING (h)),
        |krare AS (SELECT doc_id, count(*) AS k_rare FROM skr GROUP BY doc_id),
        |est AS (SELECT a.doc_id AS contained, b.doc_id AS container,
@@ -1128,13 +1149,7 @@ object Dedup {
   def containmentSketchCoverage(spark: SparkSession, sfDir: String,
                                 k: Int = SketchK,
                                 maxDf: Int = ContainMaxDf): DataFrame = {
-    val hv = corpusShingleHashes(spark, sfDir)
-    val post = hv.select(col("doc_id"), explode(col("hs")).as("h"))
-    val rareH = post.groupBy("h").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDf).select("h")
-    val skRare = hv.select(col("doc_id"), explode(slice(col("hs"), 1, k)).as("h"))
-      .join(rareH, "h")
-    val kRare = skRare.groupBy("doc_id").agg(count(lit(1)).as("k_rare"))
+    val RareSketch(hv, _, _, _, kRare) = rareSketch(spark, sfDir, k, maxDf)
     val tot = hv.agg(count(lit(1)).as("n_docs"))
     val cov = kRare.agg(count(lit(1)).as("n_covered"),
       coalesce(sum("k_rare"), lit(0L)).as("sum_k_rare"))
@@ -1147,20 +1162,11 @@ object Dedup {
       Det.r(when(col("n_covered") > 0,
           col("sum_k_rare").cast("double") / col("n_covered"))
         .otherwise(lit(0.0)), 4).as("avg_k_rare"),
-      when(col("n_docs") === 0, "empty")
-        .when(covRaw >= CoverageOkT, "ok")
-        .otherwise("df_saturated").as("regime"))
+      coverageRegime)
   }
 
   val containmentSketchCoverageSql: String =
-    s"""WITH $shinglesSqlCte,
-       |$shingleHashSqlCte,
-       |post AS (SELECT doc_id, unnest(hs) AS h FROM hv),
-       |rare AS (SELECT h FROM post GROUP BY h
-       |         HAVING count(*) <= $ContainMaxDf),
-       |skr AS (SELECT s.doc_id, s.h
-       |        FROM (SELECT doc_id, unnest(hs[1:$SketchK]) AS h FROM hv) s
-       |        JOIN rare USING (h)),
+    s"""WITH $rareSketchSqlCtes,
        |kr AS (SELECT doc_id, count(*) AS k_rare FROM skr GROUP BY doc_id),
        |tot AS (SELECT count(*) AS n_docs FROM hv),
        |cov AS (SELECT count(*) AS n_covered,

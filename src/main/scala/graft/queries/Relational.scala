@@ -1108,11 +1108,10 @@ object Relational {
       .sortBy(-_._1)
     if (bySize.isEmpty)
       return Seq.empty[(Long, Int, Double)].toDF("p_partkey", "p_size", "price")
-    val suffix = bySize.scanLeft((Int.MaxValue, Long.MaxValue)) {
-      case ((_, acc), (s, mn)) => (s, math.min(acc, mn))
-    }.drop(1) // B(s) in size-desc order
-    val frontier = suffix.zip(Long.MaxValue +: suffix.map(_._2)).map {
-      case ((s, b), bNext) => (s, b, bNext) // bNext = B over strictly larger sizes
+    // bNext = B over strictly larger sizes: the carry of a min-fold
+    val (bNext, _) = Hist.carries(bySize.map(_._2), Long.MaxValue)(math.min)
+    val frontier = bySize.zip(bNext).map {
+      case ((s, mn), bn) => (s, math.min(bn, mn), bn) // (s, B(s), B(s+1))
     }
     parts.join(broadcast(frontier.toSeq.toDF("p_size", "b", "b_next")), "p_size")
       .filter(col("cents") === col("b") && col("b_next") > col("cents"))
@@ -1919,11 +1918,9 @@ object Relational {
       .sortBy(v => -v._1)
     val n = hist.map(_._2).sum
     val totCents = hist.map(_._3).sum
-    val cums = hist.scanLeft(0L)(_ + _._2)
     // empty orders: no rows, as the oracle's n > 0 guard
     val rows = (if (n == 0) Nil else Seq(0.10, 0.01)).map { p =>
-      val want = math.ceil(p * n).toLong
-      val cut = hist(hist.indices.find(i => cums(i + 1) >= want).get)._1
+      val cut = hist(Hist.nearestRank(hist.map(_._2), p).index)._1
       val top = hist.filter(b => !b._4 && b._1 >= cut)
       val (s, k) = (top.map(_._3).sum, top.map(_._2).sum)
       (p, cut * 100, k, math.floor(s.toDouble / totCents * 1e6 + 0.5) / 1e6,
@@ -3497,10 +3494,6 @@ object Relational {
        |            ELSE CAST(lnsum AS BIGINT) END AS ln_surv_micro
        |FROM run ORDER BY t_days""".stripMargin
 
-  /** Bin count for the revenue-ordered prefix decomposition in
-    * [[partsAbcClass]] — per-bin sum frame ≤ 64k rows of model state. */
-  private val AbcBins = 65536L
-
   /** ABC INVENTORY CLASSIFICATION — the warehouse's 80/15/5 rule: rank
     * parts by revenue, class A = parts whose inclusive cumulative share
     * stays within 80 % of total revenue, B to 95 %, C the tail; report
@@ -3509,37 +3502,25 @@ object Relational {
     * 20·cum ≤ 19·tot on cents) — no float share at the decision point.
     *
     * The cumulative sum runs over a CORPUS-SIZED total order (|parts|),
-    * so it does NOT use a global window: parts bin by revenue span
-    * (≤ [[AbcBins]] bins, descending), per-bin sums are a bounded frame
-    * ([[Hist.bounded]]) carry-folded on the driver and broadcast back,
-    * and the within-bin inclusive cumsum partitions by bin (the
-    * highWatermarkFrame discipline — ties in revenue land in the same
-    * bin, ordered (r DESC, partkey)). Final shape: 3 rows. */
+    * so it does NOT use a global window: [[Hist.prefixScan]] over parts
+    * binned by revenue span, descending — ties in revenue land in the
+    * same bin, ordered (r DESC, partkey), and the within-bin cumsum is
+    * inclusive. Final shape: 3 rows. */
   def partsAbcClass(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val pr = Tables.lineitem(spark, sfDir)
       .groupBy(col("l_partkey"))
       .agg(sum(cents(col("l_extendedprice"))).as("r"))
-    val span = pr.agg(min("r"), max("r")).head()
-    if (span.isNullAt(1))
+    val span = Hist.span(pr, "r")
+    if (span.isEmpty)
       return Seq.empty[(String, Long, Double, Long)]
         .toDF("abc_class", "n_parts", "revenue", "share_ppm")
-    val (lo, hi) = (span.getLong(0), span.getLong(1))
-    val binW = math.max(1L, (hi - lo) / AbcBins + 1)
-    val binned = pr.withColumn("bin", expr(s"($hi - r) DIV $binW"))
-    val binSum = Hist.bounded(
-      binned.groupBy("bin").agg(sum("r").as("s")), "parts_abc_class")
-      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val carries = Seq.newBuilder[(Long, Long)]
-    var run = 0L
-    binSum.foreach { case (b, s) => carries += ((b, run)); run += s }
-    val tot = run
-    val carryDf = carries.result().toDF("bin", "carry")
-    val wBin = org.apache.spark.sql.expressions.Window
-      .partitionBy("bin").orderBy(col("r").desc, col("l_partkey"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    binned.join(broadcast(carryDf), Seq("bin"))
-      .withColumn("cum", sum("r").over(wBin) + col("carry"))
+    val (cum, tot) = Hist.prefixScan(pr.withColumn("bin", span.get.desc("r")),
+        sum("r").as("s"), "parts_abc_class",
+        Seq(col("r").desc, col("l_partkey")), "cum") { w =>
+      sum("r").over(w.rowsBetween(Window.unboundedPreceding, 0))
+    }
+    cum
       .withColumn("abc_class",
         when(col("cum") * 5 <= lit(tot) * 4, "A")
           .when(col("cum") * 20 <= lit(tot) * 19, "B")
@@ -3580,12 +3561,12 @@ object Relational {
     * / (n·Σx) over spend sorted ascending (ties broken on custkey).
     * Zero-order customers count with x = 0 — excluding them understates
     * inequality. The global rank i runs over a CORPUS-SIZED order, so
-    * it is assigned WITHOUT a global window: customers bin by spend
-    * span, per-bin counts are a bounded frame carry-folded on the
-    * driver, and within-bin row_number partitions by bin (ties in x
-    * share a bin). Σ i·xᵢ accumulates in DECIMAL(38,0) (i·x alone can
-    * pass 2⁶³); the final G is one double division on exact integers,
-    * micro-rounded. Output: one row. */
+    * it is assigned WITHOUT a global window: a [[Hist.prefixScan]] of
+    * per-bin counts over customers binned by spend span, with a
+    * within-bin row_number (ties in x share a bin). Σ i·xᵢ accumulates
+    * in DECIMAL(38,0) (i·x alone can pass 2⁶³); the final G is one
+    * double division on exact integers, micro-rounded. Output: one
+    * row. */
   def ordersGini(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val spend = Tables.customer(spark, sfDir)
@@ -3593,25 +3574,14 @@ object Relational {
         col("c_custkey") === col("o_custkey"), "left")
       .groupBy(col("c_custkey"))
       .agg(coalesce(sum(cents(col("o_totalprice"))), lit(0L)).as("x"))
-    val span = spend.agg(min("x"), max("x")).head()
-    if (span.isNullAt(0))
+    val span = Hist.span(spend, "x")
+    if (span.isEmpty)
       return Seq.empty[(Long, Double, java.lang.Double)]
         .toDF("n_customers", "total_spend", "gini")
-    val (lo, hi) = (span.getLong(0), span.getLong(1))
-    val binW = math.max(1L, (hi - lo) / AbcBins + 1)
-    val binned = spend.withColumn("bin", expr(s"(x - $lo) DIV $binW"))
-    val binCnt = Hist.bounded(
-      binned.groupBy("bin").agg(count(lit(1)).as("m")), "orders_gini")
-      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val carries = Seq.newBuilder[(Long, Long)]
-    var run = 0L
-    binCnt.foreach { case (b, m) => carries += ((b, run)); run += m }
-    val n = run
-    val carryDf = carries.result().toDF("bin", "carry")
-    val wBin = org.apache.spark.sql.expressions.Window
-      .partitionBy("bin").orderBy(col("x"), col("c_custkey"))
-    val sums = binned.join(broadcast(carryDf), Seq("bin"))
-      .withColumn("i", row_number().over(wBin) + col("carry"))
+    val (ranked, n) = Hist.prefixScan(spend.withColumn("bin", span.get.asc("x")),
+        count(lit(1)).as("m"), "orders_gini", Seq(col("x"), col("c_custkey")),
+        "i")(w => row_number().over(w))
+    val sums = ranked
       .agg(sum(col("i").cast("decimal(38,0)") * col("x")).as("six"),
         sum("x").as("sx"))
     val num = (lit(2).cast("decimal(38,0)") * col("six") -
@@ -4551,16 +4521,13 @@ object Relational {
         datediff(lit(mxRow.get(0)).cast("date"), col("last_order").cast("date"))
           .cast("long"))
       .drop("last_order"))
-    // r14 OPTIMIZATION (guide §1.2 step 1 — fewer passes): the three
-    // chained [[globalRank]] calls each ran TWO driver actions (metric
-    // span, bin histogram) against the progressively-windowed frame, so
-    // axis F's actions re-executed axis R's join+window and axis M's
-    // re-ran both — 7 actions with cumulative recomputation. All three
-    // metrics live on `base` BEFORE any ranking, so ONE aggregate takes
-    // every span plus n, and ONE packed-key histogram pass (axis·2^16 +
-    // bin; bin < 2^16 by the binW construction) takes all three bin
-    // counts. Carry folds and within-bin windows are unchanged — the
-    // rank arithmetic is bit-identical to the chained form.
+    // Three ranks, two actions: all three metrics live on `base` BEFORE
+    // any ranking, so ONE aggregate takes every span plus n, and ONE
+    // packed-key histogram pass (axis·ScanBins + bin; bin < ScanBins by
+    // the Span construction) takes all three bin counts. Three chained
+    // prefix scans would run each axis's span and histogram actions
+    // against the previous axes' join+window — 7 actions with
+    // cumulative recomputation.
     val spanRow = base.agg(count(lit(1)),
       min("recency_days"), max("recency_days"),
       min("frequency"), max("frequency"),
@@ -4575,32 +4542,23 @@ object Relational {
     }
     val binned = axes.zip(bounds).foldLeft(base) {
       case (df, ((metric, asc, _, ax), (lo, hi))) =>
-        val binW = math.max(1L, (hi - lo) / AbcBins + 1)
-        val bcol = if (asc) s"(($metric) - ($lo)) DIV $binW"
-                   else s"(($hi) - ($metric)) DIV $binW"
-        df.withColumn(s"_bin_$ax", expr(bcol))
+        val span = Hist.Span(lo, hi)
+        df.withColumn(s"_bin_$ax", if (asc) span.asc(metric) else span.desc(metric))
     }
     val hist = Hist.bounded(
       binned.select(explode(array(axes.map { case (_, _, _, ax) =>
-          col(s"_bin_$ax") + lit(ax * 65536L) }: _*)).as("pb"))
+          col(s"_bin_$ax") + lit(ax * Hist.ScanBins) }: _*)).as("pb"))
         .groupBy("pb").agg(count(lit(1)).as("c")),
       "customer_rfm RFM")
       .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     val ranked = axes.foldLeft(binned) {
       case (df, (metric, asc, out, ax)) =>
-        var run = 0L
-        val carries = Seq.newBuilder[(Long, Long)]
-        hist.filter(_._1 / 65536L == ax).foreach { case (pb, c) =>
-          carries += ((pb % 65536L, run)); run += c
-        }
-        val wBin = org.apache.spark.sql.expressions.Window
-          .partitionBy(s"_bin_$ax")
-          .orderBy(if (asc) col(metric).asc else col(metric).desc,
-            col("o_custkey").asc)
-        df.join(broadcast(carries.result().toDF(s"_bin_$ax", s"_carry_$ax")),
-            Seq(s"_bin_$ax"))
-          .withColumn(out, row_number().over(wBin).cast("long") +
-            col(s"_carry_$ax"))
+        val cells = hist.filter(_._1 / Hist.ScanBins == ax)
+        val (before, _) = Hist.carries(cells.map(_._2), 0L)(_ + _)
+        Hist.joinCarries(df, s"_bin_$ax", s"_carry_$ax",
+            cells.map(_._1 % Hist.ScanBins).zip(before).toSeq,
+            Seq(if (asc) col(metric).asc else col(metric).desc,
+              col("o_custkey").asc), out)(w => row_number().over(w).cast("long"))
           .drop(s"_bin_$ax", s"_carry_$ax")
     }
     // exact ntile(5) from the global rank: first n%5 buckets take

@@ -3852,45 +3852,20 @@ object Similarity {
     driftLedger(spark, sfDir, shard)
   }
 
-  /** The drift ledger tail shared by [[ingestDrift]] and the LIVE twin
-    * [[ingestDriftBatch]]: given the cumulative per-cell shard counts,
-    * join them against the frozen corpus distribution (the persisted
-    * [[ivfAssigned]] sink) and emit the per-cell ppm/TV readout. Empty
-    * corpus or empty shard → zero rows (TV undefined) on both paths. */
+  /** The [[Hist.driftLedger]] of [[ingestDrift]] and the LIVE twin
+    * [[ingestDriftBatch]]: the cumulative per-cell shard counts against
+    * the frozen corpus distribution (the persisted [[ivfAssigned]]
+    * sink). Empty corpus or empty shard → zero rows (TV undefined) on
+    * both paths. */
   private def driftLedger(spark: SparkSession, sfDir: String,
                           shard: DataFrame): DataFrame = {
     import spark.implicits._
     val asg = ivfAssigned(spark, sfDir)
-    val nc = asg.count()
-    val nsRow = shard.agg(sum("n_shard")).head()
-    val ns = if (nsRow.isNullAt(0)) 0L else nsRow.getLong(0)
-    if (nc == 0 || ns == 0)
-      return Seq.empty[(Long, Long, Long, Long, Long, Long)]
+    Hist.driftLedger(asg.groupBy("cell").agg(count(lit(1)).as("n_corpus")),
+        asg.count(), shard, "cell", col("cell").cast("long").as("cell"))
+      .getOrElse(Seq.empty[(Long, Long, Long, Long, Long, Long)]
         .toDF("cell", "n_corpus", "n_shard", "corpus_ppm", "shard_ppm",
-          "tv_ppm")
-    val corpus = asg.groupBy("cell").agg(count(lit(1)).as("n_corpus"))
-    val led = corpus.join(shard, Seq("cell"), "left")
-      .na.fill(0L, Seq("n_shard"))
-      .withColumn("dev",
-        abs(col("n_shard").cast("decimal(38,0)") * nc
-          - col("n_corpus").cast("decimal(38,0)") * ns))
-    val sdevRow = led.agg(sum("dev")).head()
-    // exact-integer half-up: Σ|dev| reaches nc·ns·2 at a fully-drifted
-    // corpus, past the 2⁵³ double mantissa at ≥~1e9-row shards — the
-    // BigInt form matches the oracle's HUGEINT numerator at any scale
-    val sdev = BigInt(sdevRow.getDecimal(0).toBigInteger)
-    val tv = Det.halfUpDiv(sdev * 1000000L, BigInt(nc) * ns * 2)
-    // per-cell ppm shares: same two-floor discipline in long arithmetic
-    // (n·2e6 + nc stays long-exact to ~4.6e12 rows per cell — orders of
-    // magnitude past the 100 TB embedding count)
-    led.select(col("cell").cast("long").as("cell"),
-        col("n_corpus"), col("n_shard"),
-        expr(s"(n_corpus * 2000000 + ${nc}L) DIV ${2 * nc}L")
-          .as("corpus_ppm"),
-        expr(s"(n_shard * 2000000 + ${ns}L) DIV ${2 * ns}L")
-          .as("shard_ppm"),
-        lit(tv).as("tv_ppm"))
-      .orderBy("cell")
+          "tv_ppm"))
   }
 
   /** THE LIVE DRIFT MONITOR — the foreachBatch body pairing
@@ -3924,11 +3899,9 @@ object Similarity {
       .withColumn("nt", sqrt(dot(col("v"), col("v"))))
       .select(col("vec_id"),
         cellArgminCol(cents, col("v"), col("nt")).as("cell"))
-    val batchCounts = placed.groupBy("cell").agg(count(lit(1)).as("n"))
-      .as[(Int, Long)].collect()  // ≤ |cells| rows of model state
-    val merged = batchCounts.foldLeft(prior) { case (m, (c, n)) =>
-      m.updated(c, m.getOrElse(c, 0L) + n)
-    }
+    val merged = Hist.foldCounts(prior,
+      placed.groupBy("cell").agg(count(lit(1)).as("n"))
+        .as[(Int, Long)].collect())  // ≤ |cells| rows of model state
     val shard = merged.toSeq.toDF("cell", "n_shard")
     (merged, driftLedger(spark, sfDir, broadcast(shard)))
   }
@@ -3948,40 +3921,12 @@ object Similarity {
     ingestDriftBatch(spark, sfDir, incoming)._2
   }
 
-  /** DuckDB twin — the chain's `fin` cell assignment, two grouped
-    * counts, HUGEINT deviation numerators, and EXACT-INTEGER half-up
-    * divisions throughout: floor(a/b + 1/2) == (2a + b) // (2b) on
-    * HUGEINT, mirroring [[Det.halfUpDiv]] / the Spark DIV forms — no
-    * probability ever touches a double, so the last ppm digit agrees
-    * cross-engine past 2⁵³-magnitude products. */
+  /** DuckDB twin — the chain's `fin` cell assignment, then the
+    * [[Hist.driftLedgerSql]] ledger per cell. */
   def ingestDriftSqlFor(deltaMod: Long): String =
     s"""WITH $ivfChainSql,
-       |corpus AS (SELECT cell, count(*) AS n_corpus FROM fin GROUP BY 1),
-       |shard AS (SELECT cell, count(*) AS n_shard FROM fin
-       |          WHERE vec_id % $deltaMod = ${deltaMod - 1} GROUP BY 1),
-       |tot AS (SELECT CAST(count(*) AS BIGINT) AS nc,
-       |               CAST(sum(CASE WHEN vec_id % $deltaMod = ${deltaMod - 1}
-       |                             THEN 1 ELSE 0 END) AS BIGINT) AS ns
-       |        FROM fin),
-       |led AS (SELECT CAST(c.cell AS BIGINT) AS cell, c.n_corpus,
-       |               CAST(coalesce(s.n_shard, 0) AS BIGINT) AS n_shard
-       |        FROM corpus c LEFT JOIN shard s USING (cell)),
-       |dev AS (SELECT l.cell, l.n_corpus, l.n_shard, t.nc, t.ns,
-       |               abs(CAST(l.n_shard AS HUGEINT) * t.nc
-       |                   - CAST(l.n_corpus AS HUGEINT) * t.ns) AS d
-       |        FROM led l, tot t WHERE t.nc > 0 AND t.ns > 0),
-       |roll AS (SELECT CAST(
-       |           (2 * sum(d) * 1000000 + 2 * CAST(max(nc) AS HUGEINT) * max(ns))
-       |           // (4 * CAST(max(nc) AS HUGEINT) * max(ns)) AS BIGINT) AS tv_ppm
-       |         FROM dev)
-       |SELECT cell, CAST(n_corpus AS BIGINT) AS n_corpus, n_shard,
-       |       CAST((CAST(n_corpus AS HUGEINT) * 2000000 + nc)
-       |            // (2 * CAST(nc AS HUGEINT)) AS BIGINT) AS corpus_ppm,
-       |       CAST((CAST(n_shard AS HUGEINT) * 2000000 + ns)
-       |            // (2 * CAST(ns AS HUGEINT)) AS BIGINT) AS shard_ppm,
-       |       r.tv_ppm
-       |FROM dev CROSS JOIN roll r
-       |ORDER BY cell""".stripMargin
+       |${Hist.driftLedgerSql("fin", "vec_id", "cell",
+         "CAST(c.cell AS BIGINT) AS cell", "", deltaMod)}""".stripMargin
 
   val queries: Seq[Query] = Seq(
     Query.templated("ingest_drift",

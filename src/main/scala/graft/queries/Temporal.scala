@@ -798,12 +798,11 @@ object Temporal {
     val ev = Tables.events(spark, sfDir).select(col("value"))
       .filter(col("value").isNotNull && !isnan(col("value")) &&
         abs(col("value")) < lit(Double.PositiveInfinity))
-    val s = ev.agg(min("value").as("mn"), max("value").as("mx"),
-      count("value").as("n")).head()
+    val s = ev.agg(min("value").as("mn"), max("value").as("mx")).head()
     if (s.isNullAt(0))
       return Seq.empty[(Double, Long, Int, Double)]
         .toDF("p", "rank_target", "bin", "est")
-    val (mn, mx, n) = (s.getDouble(0), s.getDouble(1), s.getLong(2))
+    val (mn, mx) = (s.getDouble(0), s.getDouble(1))
     // clamp on DOUBLES before the int cast: a denormal-tiny range makes
     // the ratio huge-but-finite, and the ANSI cast would throw before
     // an int-typed least could save it (the salted as-of join precedent)
@@ -817,16 +816,14 @@ object Temporal {
         .groupBy("bin").agg(count(lit(1)).as("cnt")), "events_value_quantiles")
       .map(r => (r.getAs[Int]("bin"), r.getAs[Long]("cnt")))
       .sortBy(_._1)
-    val cums = hist.scanLeft(0L)(_ + _._2)  // cum_before per hist index
     val width = (mx - mn) / QBins
     val rows = QPs.map { p =>
-      val r = math.ceil(p * n).toLong
-      val i = hist.indices.find(i => cums(i) < r && r <= cums(i) + hist(i)._2).get
-      val (bin, cnt) = hist(i)
+      val cut = Hist.nearestRank(hist.map(_._2), p)
+      val (bin, cnt) = hist(cut.index)
       val est =
         if (mx == mn) mn
-        else mn + (bin + (r - cums(i)).toDouble / cnt) * width
-      (p, r, bin, est)
+        else mn + (bin + (cut.rank - cut.before).toDouble / cnt) * width
+      (p, cut.rank, bin, est)
     }
     rows.toDF("p", "rank_target", "bin", "est").orderBy("p")
   }
@@ -1807,12 +1804,7 @@ object Temporal {
       return Seq.empty[(Long, Double, Double, Double, Double, Double, Double)]
         .toDF("n", "p01", "p99", "mean_raw", "mean_wins",
           "std_raw", "std_wins")
-    val n = hist.map(_._2).sum
-    val cums = hist.scanLeft(0L)(_ + _._2)
-    def cut(p: Double): Long = {
-      val r = math.ceil(p * n).toLong
-      hist(hist.indices.find(i => cums(i + 1) >= r).get)._1
-    }
+    def cut(p: Double): Long = hist(Hist.nearestRank(hist.map(_._2), p).index)._1
     val (lo, hi) = (cut(0.01), cut(0.99))
     val w = greatest(least(col("c"), lit(hi)), lit(lo))
     val g = ev.agg(count(lit(1)).as("n"),
@@ -2054,12 +2046,9 @@ object Temporal {
         r.getAs[Long]("cnt")))
     val rows = hist.groupBy(_._1).toSeq.flatMap { case (t, cells) =>
       val sorted = cells.sortBy(_._2)
-      val n = sorted.map(_._3).sum
-      val cums = sorted.scanLeft(0L)(_ + _._3)
       GroupQPs.map { p =>
-        val r = math.ceil(p * n).toLong
-        val i = sorted.indices.find(i => cums(i + 1) >= r).get
-        (t, p, r, sorted(i)._2.toDouble / 100)
+        val cut = Hist.nearestRank(sorted.map(_._3), p)
+        (t, p, cut.rank, sorted(cut.index)._2.toDouble / 100)
       }
     }
     rows.toDF("event_type", "p", "rank_target", "value")

@@ -58,8 +58,8 @@ object TextAnalysis {
     * (`graft.verify.broadcastMaxBytes`, default 512 MB): under it the
     * anti-join broadcasts (no shuffle of the corpus-sized side); above it
     * the hint is dropped and the anti-join shuffles — with AQE free to
-    * re-promote to broadcast if runtime stats say the bound was loose. */
-  /** sum(n_chars) is computed once per corpus: the gate input is an
+    * re-promote to broadcast if runtime stats say the bound was loose.
+    * sum(n_chars) is computed once per corpus: the gate input is an
     * EAGER driver action, and unmemoized it re-ran on every mere
     * CONSTRUCTION of detectContamination/winnowOverlap — including the
     * PlanShapeSpec explain sweep and each Verify/Bench pass. */
@@ -532,17 +532,6 @@ object TextAnalysis {
       math.max(PackShards.toLong,
         (nDocs + PackDocsPerShard - 1) / PackDocsPerShard)).toInt
 
-  /** Sequence packing — the batching step between filtering and training:
-    * greedily pack documents (in doc_id order) into fixed-budget token
-    * sequences. Packing is inherently sequential, so it runs SHARDED, the
-    * way production packers do: shard = doc_id % shards (a pure function,
-    * so the layout is deterministic and engine-reproducible — unlike
-    * range-partition boundaries, which depend on sampling), greedy
-    * first-fit within each shard's doc_id order. The shard count is
-    * derived from the corpus size ([[derivedPackShards]]; one
-    * metadata-cheap parquet row-count action) unless pinned via the args
-    * channel. Each group is one `flatMapGroups` stream; docs longer than
-    * the budget get a sequence of their own. */
   /** Pure greedy first-fit fold over one shard's (doc_id, n_tokens) in
     * doc_id order → (doc_id, seq, pos, n_tokens). Shared by the query and
     * PropertiesSpec. */
@@ -560,6 +549,17 @@ object TextAnalysis {
 
   private val PackShardsDerived = 0  // 0 = derived from the corpus size
 
+  /** Sequence packing — the batching step between filtering and training:
+    * greedily pack documents (in doc_id order) into fixed-budget token
+    * sequences. Packing is inherently sequential, so it runs SHARDED, the
+    * way production packers do: shard = doc_id % shards (a pure function,
+    * so the layout is deterministic and engine-reproducible — unlike
+    * range-partition boundaries, which depend on sampling), greedy
+    * first-fit within each shard's doc_id order. The shard count is
+    * derived from the corpus size ([[derivedPackShards]]; one
+    * metadata-cheap parquet row-count action) unless pinned via the args
+    * channel. Each group is one `flatMapGroups` stream; docs longer than
+    * the budget get a sequence of their own. */
   def sequencePack(spark: SparkSession, sfDir: String,
                    budget: Int = PackBudget, shards: Int = PackShardsDerived): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")
@@ -639,20 +639,6 @@ object TextAnalysis {
                       // rolling step ≤ ·31 ≈ 9.8e17 — exact i64 even for
                       // the largest Unicode code point
 
-  /** Document fingerprinting à la winnowing (MOSS): polynomial rolling
-    * hash over 8-char k-grams of the normalized text, then per-window
-    * minima, deduplicated. Output: fingerprint count + min/max as a
-    * compact identity summary (two docs sharing n-gram content share
-    * fingerprints).
-    *
-    * The hash/winnow pass is a JIT'd `mapPartitions` kernel — a TRUE
-    * rolling hash, O(1) per position (h' = (h − c·Bᵏ⁻¹)·B + c_new, exact
-    * int64: |h| ≤ 7e12, ·B ≤ 2.3e14). The previous Column formulation ran
-    * interpreted `transform` lambdas with 8 `substring` calls per k-gram
-    * plus a `slice` allocation per window — 26 s of the sf0.1 bench; the
-    * kernel does the identical arithmetic in ~0.4 s. Same justification
-    * as the shingle/simhash/LSH kernels: hot per-char inner loops are
-    * where mapPartitions beats interpreted higher-order functions. */
   /** Rolling k-gram hashes of a normalized string (exact int64, O(1) per
     * position: h' = (h − c·Bᵏ⁻¹)·B + c_new). Iterates CODE POINTS, not
     * UTF-16 code units: DuckDB's `substr`/`ascii` are code-point-based, so
@@ -711,6 +697,20 @@ object TextAnalysis {
       .as[(Long, String)]
   }
 
+  /** Document fingerprinting à la winnowing (MOSS): polynomial rolling
+    * hash over 8-char k-grams of the normalized text, then per-window
+    * minima, deduplicated. Output: fingerprint count + min/max as a
+    * compact identity summary (two docs sharing n-gram content share
+    * fingerprints).
+    *
+    * The hash/winnow pass is a JIT'd `mapPartitions` kernel — a TRUE
+    * rolling hash, O(1) per position (h' = (h − c·Bᵏ⁻¹)·B + c_new, exact
+    * int64: |h| ≤ 7e12, ·B ≤ 2.3e14). The previous Column formulation ran
+    * interpreted `transform` lambdas with 8 `substring` calls per k-gram
+    * plus a `slice` allocation per window — 26 s of the sf0.1 bench; the
+    * kernel does the identical arithmetic in ~0.4 s. Same justification
+    * as the shingle/simhash/LSH kernels: hot per-char inner loops are
+    * where mapPartitions beats interpreted higher-order functions. */
   def docFingerprint(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     normalized(spark, sfDir)
@@ -1700,45 +1700,16 @@ object TextAnalysis {
 
   private val BpeMerges = 20
 
-  /** The iterative BPE trainer [[bpePairCounts]] is step one of: N merge
-    * rounds, each taking the current most-frequent adjacent symbol pair
-    * (tie-break: pair text) and rewriting every word's symbol sequence by
-    * leftmost non-overlapping replacement — Sennrich-style training over
-    * word TYPES weighted by occurrence count. Emits one row per merge:
-    * (merge_rank, sym_a, sym_b, n_occurrences).
-    *
-    * Scale shape: the corpus is scanned ONCE, folding to the word-type
-    * frequency frame — VOCAB-sized (Heaps law: ~1M types at 100 TB), not
-    * corpus-sized, which is what makes the `.cache()` on it legitimate
-    * under CLAUDE.md invariant 4 (without it every one of the N rounds
-    * re-scans the corpus; with it each round is a small agg over ≤1M
-    * rows). Each round is one distributed pair-count agg (map-side
-    * combined, alphabet²-bounded cells) plus a 1-ROW collect of the
-    * argmax — model state, the same sanctioned driver round-trip as IVF's
-    * Lloyd iterations; the merge rewrite is a codegen'd builtin
-    * `replace`.
-    *
-    * DETERMINISM ACROSS ENGINES hinges on the symbol encoding: a word is
-    * stored as every symbol wrapped in single spaces (`"hello"` →
-    * `" h  e  l  l  o "`), so merging (a,b) is EXACTLY
-    * `replace(rep, ' a  b ', ' ab ')` — both java.lang.String.replace
-    * and DuckDB replace() scan left-to-right non-overlapping, each match
-    * consumes only its own symbols' delimiters (neighbors keep theirs),
-    * and a pattern can never match inside a longer symbol because the
-    * wrapping spaces act as boundaries. The DuckDB twin unrolls the N
-    * rounds as a MATERIALIZED-CTE chain (materialization keeps the
-    * doubly-referenced per-round frames linear, not exponential). */
   /** The training loop itself, returning the learned merge table as
     * driver-side model state (≤ nMerges rows) — shared by [[bpeTrain]]
-    * (which just tabulates it) and [[bpeApply]] (which folds it back
-    * over the corpus). */
-  /** Trained once per (corpus, nMerges): the three tokenizer queries
-    * (train/apply/vocab) each need the SAME ≤nMerges-row model, and
-    * before the memo the bench paid the 20 driver-synced merge rounds
-    * three times (~14 s → ~6 s, r6 verdict item 3). The value is
-    * driver-side model state (≤500 tiny rows) — no Spark storage
-    * involved, hence NOT subject to the SPARK_GRAFT_DISABLE_CACHE A/B knob
-    * (which toggles measured intra-query frame caches, not model state). */
+    * (which just tabulates it) and [[bpeMerged]] (which folds it back
+    * over the corpus). Trained once per (corpus, nMerges): the tokenizer
+    * queries each need the SAME ≤nMerges-row model, and before the memo
+    * the bench paid the 20 driver-synced merge rounds three times (~14 s
+    * → ~6 s, r6 verdict item 3). The value is driver-side model state
+    * (≤500 tiny rows) — no Spark storage involved, hence NOT subject to
+    * the SPARK_GRAFT_DISABLE_CACHE A/B knob (which toggles measured
+    * intra-query frame caches, not model state). */
   private[queries] def bpeTrainMerges(spark: SparkSession, sfDir: String,
                                       nMerges: Int): Seq[(Int, String, String, Long)] =
     Substrate.derived(spark, sfDir, Seq("documents"), s"bpe_merges_$nMerges") {
@@ -1747,8 +1718,8 @@ object TextAnalysis {
       val wordFreq = Tables.documents(spark, sfDir)
         .select(explode(toks(col("text"))).as("tok"))
         .groupBy("tok").agg(count(lit(1)).as("freq"))
-        .select(regexp_replace(col("tok"), "(.)", " $1 ").as("rep"), col("freq"))
-        .cache() // vocab-sized (see scaladoc) — prevents N corpus re-scans
+        .select(bpeSpaced.as("rep"), col("freq"))
+        .cache() // vocab-sized (see bpeTrain) — prevents N corpus re-scans
       try {
         val merges = Seq.newBuilder[(Int, String, String, Long)]
         var wt: DataFrame = wordFreq
@@ -1779,6 +1750,46 @@ object TextAnalysis {
       } finally { wordFreq.unpersist(); () }
     }
 
+  /** `tok` as BPE symbols, each wrapped in single spaces (`"hello"` →
+    * `" h  e  l  l  o "`; see [[bpeTrain]]). */
+  private def bpeSpaced: Column = regexp_replace(col("tok"), "(.)", " $1 ")
+
+  /** `tok` after the learned merges: [[bpeSpaced]] folded through each
+    * merge of [[bpeTrainMerges]] as a codegen'd `replace`. */
+  private def bpeMerged(spark: SparkSession, sfDir: String,
+                        nMerges: Int): Column =
+    bpeTrainMerges(spark, sfDir, nMerges).foldLeft(bpeSpaced) {
+      case (c, (_, a, b, _)) => replace(c, lit(s" $a  $b "), lit(s" $a$b "))
+    }
+
+  /** The iterative BPE trainer [[bpePairCounts]] is step one of: N merge
+    * rounds, each taking the current most-frequent adjacent symbol pair
+    * (tie-break: pair text) and rewriting every word's symbol sequence by
+    * leftmost non-overlapping replacement — Sennrich-style training over
+    * word TYPES weighted by occurrence count. Emits one row per merge:
+    * (merge_rank, sym_a, sym_b, n_occurrences).
+    *
+    * Scale shape: the corpus is scanned ONCE, folding to the word-type
+    * frequency frame — VOCAB-sized (Heaps law: ~1M types at 100 TB), not
+    * corpus-sized, which is what makes the `.cache()` on it legitimate
+    * under CLAUDE.md invariant 4 (without it every one of the N rounds
+    * re-scans the corpus; with it each round is a small agg over ≤1M
+    * rows). Each round is one distributed pair-count agg (map-side
+    * combined, alphabet²-bounded cells) plus a 1-ROW collect of the
+    * argmax — model state, the same sanctioned driver round-trip as IVF's
+    * Lloyd iterations; the merge rewrite is a codegen'd builtin
+    * `replace`.
+    *
+    * DETERMINISM ACROSS ENGINES hinges on the symbol encoding: a word is
+    * stored as every symbol wrapped in single spaces (`"hello"` →
+    * `" h  e  l  l  o "`), so merging (a,b) is EXACTLY
+    * `replace(rep, ' a  b ', ' ab ')` — both java.lang.String.replace
+    * and DuckDB replace() scan left-to-right non-overlapping, each match
+    * consumes only its own symbols' delimiters (neighbors keep theirs),
+    * and a pattern can never match inside a longer symbol because the
+    * wrapping spaces act as boundaries. The DuckDB twin unrolls the N
+    * rounds as a MATERIALIZED-CTE chain (materialization keeps the
+    * doubly-referenced per-round frames linear, not exponential). */
   def bpeTrain(spark: SparkSession, sfDir: String,
                nMerges: Int = BpeMerges): DataFrame = {
     import spark.implicits._
@@ -1805,10 +1816,7 @@ object TextAnalysis {
     * (1 row each). */
   def bpeApply(spark: SparkSession, sfDir: String,
                nMerges: Int = BpeMerges): DataFrame = {
-    val merges = bpeTrainMerges(spark, sfDir, nMerges)
-    val rep = merges.foldLeft(regexp_replace(col("tok"), "(.)", " $1 ")) {
-      case (c, (_, a, b, _)) => replace(c, lit(s" $a  $b "), lit(s" $a$b "))
-    }
+    val rep = bpeMerged(spark, sfDir, nMerges)
     Tables.documents(spark, sfDir)
       .select(col("doc_id"), explode(toks(col("text"))).as("tok"))
       .select(col("doc_id"), length(col("tok")).as("len"),
@@ -1837,10 +1845,7 @@ object TextAnalysis {
     * is |langs|-bounded. Nothing shuffles but the partial aggs. */
   def tokenizerFertility(spark: SparkSession, sfDir: String,
                          nMerges: Int = BpeMerges): DataFrame = {
-    val merges = bpeTrainMerges(spark, sfDir, nMerges)
-    val rep = merges.foldLeft(regexp_replace(col("tok"), "(.)", " $1 ")) {
-      case (c, (_, a, b, _)) => replace(c, lit(s" $a  $b "), lit(s" $a$b "))
-    }
+    val rep = bpeMerged(spark, sfDir, nMerges)
     Tables.documents(spark, sfDir)
       .select(col("lang"), explode(toks(col("text"))).as("tok"))
       .select(col("lang"), length(col("tok")).as("len"),
@@ -1859,26 +1864,19 @@ object TextAnalysis {
 
   /** DuckDB twin of [[tokenizerFertility]] — [[bpeApplySql]]'s unrolled
     * merge chain, keyed by lang instead of doc_id. */
-  val tokenizerFertilitySql: String = {
-    val nested = (1 to BpeMerges).foldLeft(
-      "regexp_replace(tok, '(.)', ' \\1 ', 'g')") { (acc, r) =>
-      s"replace($acc, ' ' || replace(b$r.pair, ' ', '  ') || ' ', " +
-        s"' ' || replace(b$r.pair, ' ', '') || ' ')"
-    }
-    val crosses = (1 to BpeMerges).map(r => s"CROSS JOIN best$r b$r").mkString(" ")
+  val tokenizerFertilitySql: String =
     s"""WITH ${bpeCtes(BpeMerges)}
        |SELECT lang, count(*) AS n_words,
-       |       CAST(sum(len(string_split(trim($nested), '  '))) AS BIGINT) AS n_syms,
+       |       CAST(sum(len(string_split(trim($bpeNestedSql), '  '))) AS BIGINT) AS n_syms,
        |       ${Det.rSql(
-            s"CAST(sum(len(string_split(trim($nested), '  '))) AS DOUBLE) / count(*)", 6)} AS fertility,
+            s"CAST(sum(len(string_split(trim($bpeNestedSql), '  '))) AS DOUBLE) / count(*)", 6)} AS fertility,
        |       ${Det.rSql(
-            s"CAST(sum(length(tok)) AS DOUBLE) / sum(len(string_split(trim($nested), '  ')))", 6)} AS chars_per_sym
+            s"CAST(sum(length(tok)) AS DOUBLE) / sum(len(string_split(trim($bpeNestedSql), '  ')))", 6)} AS chars_per_sym
        |FROM (SELECT lang, unnest(list_filter(string_split_regex(lower(text), '\\W+'),
        |                                      x -> length(x) > 0)) AS tok
        |      FROM documents) d
-       |$crosses
+       |$bpeCrossesSql
        |GROUP BY lang ORDER BY lang""".stripMargin
-  }
 
   /** TOKENIZER VOCABULARY — the third leg of the tokenizer story
     * (train → apply → vocab): the post-merge symbol inventory with
@@ -1896,10 +1894,7 @@ object TextAnalysis {
     * small agg. */
   def bpeVocab(spark: SparkSession, sfDir: String,
                nMerges: Int = BpeMerges): DataFrame = {
-    val merges = bpeTrainMerges(spark, sfDir, nMerges)
-    val rep = merges.foldLeft(regexp_replace(col("tok"), "(.)", " $1 ")) {
-      case (c, (_, a, b, _)) => replace(c, lit(s" $a  $b "), lit(s" $a$b "))
-    }
+    val rep = bpeMerged(spark, sfDir, nMerges)
     Tables.documents(spark, sfDir)
       .select(explode(toks(col("text"))).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("freq"))
@@ -1944,6 +1939,18 @@ object TextAnalysis {
     ctes.result().mkString(",\n")
   }
 
+  /** DuckDB twin of [[bpeMerged]] at the default [[BpeMerges]]: the
+    * nested replace fold over `tok`, reading round r's best pair from
+    * `b<r>`, which [[bpeCrossesSql]] cross-joins in as a 1-row scalar. */
+  private lazy val bpeNestedSql: String = (1 to BpeMerges).foldLeft(
+    "regexp_replace(tok, '(.)', ' \\1 ', 'g')") { (acc, r) =>
+    s"replace($acc, ' ' || replace(b$r.pair, ' ', '  ') || ' ', " +
+      s"' ' || replace(b$r.pair, ' ', '') || ' ')"
+  }
+
+  private lazy val bpeCrossesSql: String =
+    (1 to BpeMerges).map(r => s"CROSS JOIN best$r b$r").mkString(" ")
+
   /** Unrolled-CTE DuckDB twin of [[bpeTrain]] at the default
     * [[BpeMerges]]. */
   val bpeTrainSql: String = {
@@ -1959,25 +1966,18 @@ object TextAnalysis {
   /** DuckDB twin of [[bpeApply]]: the same training chain, then the
     * nested replace fold applied per token occurrence with the 1-row
     * best CTEs cross-joined in as scalars. */
-  val bpeApplySql: String = {
-    val nested = (1 to BpeMerges).foldLeft(
-      "regexp_replace(tok, '(.)', ' \\1 ', 'g')") { (acc, r) =>
-      s"replace($acc, ' ' || replace(b$r.pair, ' ', '  ') || ' ', " +
-        s"' ' || replace(b$r.pair, ' ', '') || ' ')"
-    }
-    val crosses = (1 to BpeMerges).map(r => s"CROSS JOIN best$r b$r").mkString(" ")
+  val bpeApplySql: String =
     s"""WITH ${bpeCtes(BpeMerges)}
        |SELECT doc_id, count(*) AS n_tokens,
        |       CAST(sum(length(tok)) AS BIGINT) AS n_chars,
-       |       CAST(sum(len(string_split(trim($nested), '  '))) AS BIGINT) AS n_bpe_symbols,
+       |       CAST(sum(len(string_split(trim($bpeNestedSql), '  '))) AS BIGINT) AS n_bpe_symbols,
        |       ${Det.rSql(
-            s"CAST(sum(len(string_split(trim($nested), '  '))) AS DOUBLE) / count(*)", 6)} AS syms_per_token
+            s"CAST(sum(len(string_split(trim($bpeNestedSql), '  '))) AS DOUBLE) / count(*)", 6)} AS syms_per_token
        |FROM (SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\\W+'),
        |                                        x -> length(x) > 0)) AS tok
        |      FROM documents) d
-       |$crosses
+       |$bpeCrossesSql
        |GROUP BY doc_id ORDER BY doc_id""".stripMargin
-  }
 
   /** DuckDB twin of [[bpeVocab]]: the same training chain; wt20 (the
     * post-merge word-type frame) already holds every word's final symbol
@@ -2158,32 +2158,6 @@ object TextAnalysis {
   private def tokBucketSql(c: String): String =
     s"CAST(CAST('0x' || substr(md5($c), 1, 8) AS UBIGINT) AS BIGINT) % $HashBuckets"
 
-  /** DSIR importance-resampling weights (Xie et al. 2023,
-    * arXiv:2302.03169): per-doc log importance weight
-    * sum_f [ln p_target(h(f)) − ln p_raw(h(f))] over the paper's feature
-    * set — hashed word UNIGRAMS AND BIGRAMS — under bag-of-features
-    * models with add-one smoothing. This is the data-selection step that
-    * reweights a raw crawl toward a target distribution (here: the
-    * `targetLang` slice stands in for the target domain, the whole
-    * corpus is the raw distribution). Bigrams carry most of the signal
-    * on shared-vocabulary corpora: measured on the fixture, the en/rest
-    * mean-weight gap is 0.003 with unigrams alone vs 0.036 with
-    * uni+bigrams (languages share 100% of the token vocabulary and
-    * differ only in co-occurrence patterns).
-    *
-    * Scale: ONE scan tokenizes the corpus into [[dsirPerDocCounts]]'s
-    * per-(doc, lang, bucket) fold; the histogram (BOTH class counts, B
-    * rows of model state) and the per-doc scoring join against the
-    * broadcast B-row weight table both read that one exchange. At 100 TB
-    * the corpus is scanned and tokenized once, and the shuffles are the
-    * fold (≤ distinct buckets per doc, map-side combined) and the B-row
-    * histogram — never a cached corpus-sized stream (the [[docSurprisal]]
-    * argument).
-    *
-    * Determinism: per-bucket log-ratio integerised to micros BEFORE the
-    * per-doc integer sum ([[Det]] discipline); the double divisions are
-    * identical IEEE ops on both engines, leaving only the ~1e-9/bucket
-    * libm-ulp boundary risk over [[HashBuckets]] buckets. */
   /** The DSIR feature stream (uni+bigram hashed buckets per doc). */
   private def dsirTok(spark: SparkSession, sfDir: String): DataFrame =
     Tables.documents(spark, sfDir)
@@ -2241,6 +2215,32 @@ object TextAnalysis {
 
   private val DsirTargetLang = "en"
 
+  /** DSIR importance-resampling weights (Xie et al. 2023,
+    * arXiv:2302.03169): per-doc log importance weight
+    * sum_f [ln p_target(h(f)) − ln p_raw(h(f))] over the paper's feature
+    * set — hashed word UNIGRAMS AND BIGRAMS — under bag-of-features
+    * models with add-one smoothing. This is the data-selection step that
+    * reweights a raw crawl toward a target distribution (here: the
+    * `targetLang` slice stands in for the target domain, the whole
+    * corpus is the raw distribution). Bigrams carry most of the signal
+    * on shared-vocabulary corpora: measured on the fixture, the en/rest
+    * mean-weight gap is 0.003 with unigrams alone vs 0.036 with
+    * uni+bigrams (languages share 100% of the token vocabulary and
+    * differ only in co-occurrence patterns).
+    *
+    * Scale: ONE scan tokenizes the corpus into [[dsirPerDocCounts]]'s
+    * per-(doc, lang, bucket) fold; the histogram (BOTH class counts, B
+    * rows of model state) and the per-doc scoring join against the
+    * broadcast B-row weight table both read that one exchange. At 100 TB
+    * the corpus is scanned and tokenized once, and the shuffles are the
+    * fold (≤ distinct buckets per doc, map-side combined) and the B-row
+    * histogram — never a cached corpus-sized stream (the [[docSurprisal]]
+    * argument).
+    *
+    * Determinism: per-bucket log-ratio integerised to micros BEFORE the
+    * per-doc integer sum ([[Det]] discipline); the double divisions are
+    * identical IEEE ops on both engines, leaving only the ~1e-9/bucket
+    * libm-ulp boundary risk over [[HashBuckets]] buckets. */
   def dsirWeights(spark: SparkSession, sfDir: String,
                   targetLang: String = DsirTargetLang): DataFrame = {
     // r14 OPTIMIZATION (guide §1.2 step 1 — don't tokenize twice): the
@@ -2292,40 +2292,6 @@ object TextAnalysis {
        |       ${Det.rSql("CAST(logw_micros AS DOUBLE) / 1e6 / n_feats", 6)} AS avg_logw
        |FROM g ORDER BY doc_id""".stripMargin
 
-  /** Hashed-feature Naive-Bayes quality classifier — the "train a cheap
-    * linear filter on rule labels, apply it at scale" shape every
-    * production pipeline uses (GPT-3's LR-vs-WebText filter, LLaMA's
-    * Wikipedia-reference classifier; fastText is the usual
-    * implementation). Training labels are the [[gopherQuality]] rule
-    * verdicts computed INLINE in the same scan (a pure function of the
-    * text — no doc_id join ships labels around); features are
-    * [[HashBuckets]] hashed unigrams; the model is per-bucket
-    * log P(b|pass) − log P(b|fail) with add-one smoothing plus a class
-    * log-prior. Verdict: nb_micros > 0.
-    *
-    * Features are hashed unigrams PLUS four discretized meta-features
-    * per doc ("len:" log-length bucket, "mwl:" mean-word-length floor,
-    * "alf:" alpha-ratio decile, "stp:" capped stop-hit count) — the
-    * fastText-style move: a bag-of-words model is length-blind, but the
-    * dominant quality rules ARE length/shape rules, so the shape enters
-    * as features (measured on the fixture: unigrams alone agree with the
-    * rule labels at 0.74 ≈ the 0.734 majority base rate; with the meta
-    * features the classifier actually learns the rules). All meta
-    * buckets discretize ALREADY-deterministic values (r4-rounded ratios,
-    * integer counts), so the feature strings are cross-engine exact.
-    *
-    * Scale: the [[dsirWeights]] shape — ONE scan labels and tokenizes
-    * the corpus into [[nbPerDocCounts]]'s per-(doc, pass, bucket) fold,
-    * and all three legs read that one exchange: the B-row histogram
-    * trains the weights, the 2-long class prior counts the `len:`
-    * features, and the per-doc score joins the broadcast weight table.
-    * At 100 TB the fold trades three extra full corpus scans and
-    * tokenizations for one shuffle of per-(doc, bucket) counts.
-    * Determinism: all log terms integerised to micros before any sum.
-    *
-    * Self-labeled-and-self-scored on the fixture, the classifier is a
-    * SMOOTHED reconstruction of its labels (TextAnalysisSpec pins the
-    * agreement floor); the production use trains here, scores elsewhere. */
   /** The NB labeled feature stream (hashed unigrams + meta features)
     * folded ONCE into per-(doc, pass, bucket, is_len) occurrence counts
     * `n` — the [[dsirPerDocCounts]] pattern. Every labeled row with a
@@ -2386,6 +2352,40 @@ object TextAnalysis {
       * 1e6 + 0.5).cast("long")
   }
 
+  /** Hashed-feature Naive-Bayes quality classifier — the "train a cheap
+    * linear filter on rule labels, apply it at scale" shape every
+    * production pipeline uses (GPT-3's LR-vs-WebText filter, LLaMA's
+    * Wikipedia-reference classifier; fastText is the usual
+    * implementation). Training labels are the [[gopherQuality]] rule
+    * verdicts computed INLINE in the same scan (a pure function of the
+    * text — no doc_id join ships labels around); features are
+    * [[HashBuckets]] hashed unigrams; the model is per-bucket
+    * log P(b|pass) − log P(b|fail) with add-one smoothing plus a class
+    * log-prior. Verdict: nb_micros > 0.
+    *
+    * Features are hashed unigrams PLUS four discretized meta-features
+    * per doc ("len:" log-length bucket, "mwl:" mean-word-length floor,
+    * "alf:" alpha-ratio decile, "stp:" capped stop-hit count) — the
+    * fastText-style move: a bag-of-words model is length-blind, but the
+    * dominant quality rules ARE length/shape rules, so the shape enters
+    * as features (measured on the fixture: unigrams alone agree with the
+    * rule labels at 0.74 ≈ the 0.734 majority base rate; with the meta
+    * features the classifier actually learns the rules). All meta
+    * buckets discretize ALREADY-deterministic values (r4-rounded ratios,
+    * integer counts), so the feature strings are cross-engine exact.
+    *
+    * Scale: the [[dsirWeights]] shape — ONE scan labels and tokenizes
+    * the corpus into [[nbPerDocCounts]]'s per-(doc, pass, bucket) fold,
+    * and all three legs read that one exchange: the B-row histogram
+    * trains the weights, the 2-long class prior counts the `len:`
+    * features, and the per-doc score joins the broadcast weight table.
+    * At 100 TB the fold trades three extra full corpus scans and
+    * tokenizations for one shuffle of per-(doc, bucket) counts.
+    * Determinism: all log terms integerised to micros before any sum.
+    *
+    * Self-labeled-and-self-scored on the fixture, the classifier is a
+    * SMOOTHED reconstruction of its labels (TextAnalysisSpec pins the
+    * agreement floor); the production use trains here, scores elsewhere. */
   def nbQualityScore(spark: SparkSession, sfDir: String): DataFrame =
     nbScored(spark, sfDir)
       .withColumn("nb_pass", col("nb_micros") > 0)
@@ -2418,7 +2418,6 @@ object TextAnalysis {
         .select("doc_id", "n_feats", "nb_micros")
     }
 
-  /** DuckDB twin of [[nbQualityScore]]. */
   /** The shared NB DuckDB chain (gopher labels → hashed features →
     * per-bucket weights → per-doc score `g` + prior `pr`) — prefixes
     * [[nbQualityScoreSql]] and [[qualityCalibrationSql]]. */
@@ -2452,6 +2451,7 @@ object TextAnalysis {
        |             CAST(sum(lw_micros) AS BIGINT) AS ratio_micros
        |      FROM tk JOIN w USING (b) GROUP BY doc_id)""".stripMargin
 
+  /** DuckDB twin of [[nbQualityScore]]. */
   val nbQualityScoreSql: String =
     s"""WITH $nbChainCtes
        |SELECT doc_id, n_feats, prior_micros + ratio_micros AS nb_micros,
@@ -2689,21 +2689,6 @@ object TextAnalysis {
     * double, removing one libm call from the cross-engine surface. */
   private val Ln04 = math.log(0.4)
 
-  /** Bigram-LM document scoring with stupid backoff (Brants et al. 2007)
-    * — the CCNet/KenLM perplexity-filter shape: train an n-gram LM on the
-    * target slice (`trainLang`), score EVERY doc's token stream under it;
-    * out-of-domain docs surface as high avg negative log-likelihood.
-    * Completes the LM-scoring ladder: [[docSurprisal]] is the unigram
-    * rung (self-trained), this is the conditional rung (target-trained,
-    * out-of-vocabulary mass handled by backoff: p = c12/c1 when the
-    * bigram was seen, else 0.4 · (c2+1)/(N+V) add-one unigram backoff).
-    *
-    * Scale: the model tables (c12/c1/c2) are train-slice aggregates —
-    * they join the scoring stream on token keys (sort-merge; AQE
-    * broadcasts them when the target domain is small, the common case);
-    * the scoring stream itself is one scan, no corpus-sized state.
-    * Determinism: per-position nll integerised to micros pre-sum; the
-    * backoff constant is the shared literal [[Ln04]]. */
   /** The bigram stream joined against the model tables — the count
     * tuple (c12, c1, c2, n_train, v_train) behind every per-position
     * [[bigramNllMicros]] value. private[graft]: PropertiesSpec
@@ -2744,6 +2729,21 @@ object TextAnalysis {
 
   private val LmTrainLang = "en"
 
+  /** Bigram-LM document scoring with stupid backoff (Brants et al. 2007)
+    * — the CCNet/KenLM perplexity-filter shape: train an n-gram LM on the
+    * target slice (`trainLang`), score EVERY doc's token stream under it;
+    * out-of-domain docs surface as high avg negative log-likelihood.
+    * Completes the LM-scoring ladder: [[docSurprisal]] is the unigram
+    * rung (self-trained), this is the conditional rung (target-trained,
+    * out-of-vocabulary mass handled by backoff: p = c12/c1 when the
+    * bigram was seen, else 0.4 · (c2+1)/(N+V) add-one unigram backoff).
+    *
+    * Scale: the model tables (c12/c1/c2) are train-slice aggregates —
+    * they join the scoring stream on token keys (sort-merge; AQE
+    * broadcasts them when the target domain is small, the common case);
+    * the scoring stream itself is one scan, no corpus-sized state.
+    * Determinism: per-position nll integerised to micros pre-sum; the
+    * backoff constant is the shared literal [[Ln04]]. */
   def bigramLmScore(spark: SparkSession, sfDir: String,
                     trainLang: String = LmTrainLang): DataFrame = {
     bigramJoined(spark, sfDir, trainLang)
@@ -2979,12 +2979,11 @@ object TextAnalysis {
     val nDocs = a.getAs[Long]("n_docs")
     if (nDocs == 0)
       return Seq.empty[(String, Double)].toDF("metric", "value")
-    val hist = base.groupBy("n_chars").agg(count(lit(1)).as("cnt"))
-      .collect().map(r => (r.getAs[Long]("n_chars"), r.getAs[Long]("cnt")))
+    val hist = Hist.bounded(base.groupBy("n_chars").agg(count(lit(1)).as("cnt")),
+        "dataset_card")
+      .map(r => (r.getAs[Long]("n_chars"), r.getAs[Long]("cnt")))
       .sortBy(_._1)
-    val cums = hist.scanLeft(0L)(_ + _._2)
-    val p50 = hist(hist.indices.find(i =>
-      cums(i + 1) >= math.ceil(0.5 * nDocs).toLong).get)._1
+    val p50 = hist(Hist.nearestRank(hist.map(_._2), 0.5).index)._1
     val gate = qualityGateFrame(docs).agg(
       count(lit(1)).as("nq"),
       coalesce(sum(when(col("keep"), 1L).otherwise(0L)), lit(0L)).as("nk")).head()
@@ -3140,10 +3139,26 @@ object TextAnalysis {
     * oracle template so both engines walk the identical grid. */
   private[queries] val PackCtxGrid: Seq[Int] = Seq(128, 256, 512, 1024)
 
-  /** Bin count for the doc-order prefix-sum decomposition (the
-    * [[graft.streaming.StreamingJobs]] highWatermarkFrame discipline):
-    * per-bin token-sum frame ≤ 64k rows — bounded model state. */
-  private val PackCurveBins = 65536L
+  /** Documents (doc_id, nt) with `start`, each doc's token offset in
+    * the doc_id-ordered stream: an exclusive running sum of nt through
+    * [[Hist.prefixScan]] (`what` names the query). Cached: the (doc_id,
+    * nt) frame is NARROW (16 B/row — 4 MB at the 250k-doc probe) and read
+    * by three jobs (span, bin sums, main pass); without it each
+    * re-tokenizes the corpus. Measured at 250k docs, warm corpus: 11.5 s
+    * uncached → 9.2 s cached (A/B via SPARK_GRAFT_DISABLE_CACHE; the
+    * regex tokenize is ~2 extra scans). */
+  private def docStarts(spark: SparkSession, sfDir: String,
+                        what: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val docs = maybeCache(Tables.documents(spark, sfDir)
+      .select(col("doc_id"), size(toks(col("text"))).cast("long").as("nt")))
+    val span = Hist.span(docs, "doc_id").getOrElse(Hist.Span(0L, 0L))
+    Hist.prefixScan(docs.withColumn("bin", span.asc("doc_id")),
+        sum("nt").as("s"), what, Seq(col("doc_id")), "start") { w =>
+      coalesce(sum("nt").over(w.rowsBetween(Window.unboundedPreceding, -1)),
+        lit(0L))
+    }._1
+  }
 
   /** PACKING BOUNDARY CURVE — the context-length tuning table for
     * GPT-style concat-then-chunk packing: lay every document's tokens
@@ -3157,44 +3172,16 @@ object TextAnalysis {
     *
     * Scale shape: the document start offsets are a prefix sum over a
     * corpus-sized total order, computed WITHOUT a SinglePartition
-    * window — docs bin by doc_id span (≤ [[PackCurveBins]] bins), the
-    * per-bin token sums are a bounded frame ([[Hist.bounded]]) folded
-    * into carry-ins on the driver and broadcast back, and the within-bin
-    * cumsum partitions by bin (the highWatermarkFrame discipline). The
+    * window — [[Hist.prefixScan]] over docs binned by doc_id span (≤
+    * [[Hist.ScanBins]] bins): bounded per-bin token sums, driver carry
+    * fold, broadcast back, within-bin cumsum partitioned by bin. The
     * ctx grid is ONE conditional agg + explode — never a crossJoin(grid)
     * against the corpus (the watermark_delay_curve lesson). The final
     * frame is |grid| rows, gated on n_docs > 0 so an empty corpus emits
     * zero rows. All-integer end to end (token counts, `div` boundaries,
     * ppm via ⌊x+0.5⌋). */
   def packBoundaryCurve(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // cached: the (doc_id, nt) frame is NARROW (16 B/row — 4 MB at the
-    // 250k-doc probe) and read by three jobs (span, bin sums, main
-    // pass); without it each re-tokenizes the corpus. Measured at 250k
-    // docs, warm corpus: 11.5 s uncached → 9.2 s cached (A/B via
-    // SPARK_GRAFT_DISABLE_CACHE; the regex tokenize is ~2 extra scans).
-    val docs = maybeCache(Tables.documents(spark, sfDir)
-      .select(col("doc_id"), size(toks(col("text"))).cast("long").as("nt")))
-    // doc_id span: 2 longs of model state
-    val span = docs.agg(min("doc_id"), max("doc_id")).head()
-    val (lo, binW) =
-      if (span.isNullAt(0)) (0L, 1L)
-      else (span.getLong(0),
-        math.max(1L, (span.getLong(1) - span.getLong(0)) / PackCurveBins + 1))
-    val binned = docs.withColumn("bin", expr(s"(doc_id - $lo) DIV $binW"))
-    val binSum = Hist.bounded(
-      binned.groupBy("bin").agg(sum("nt").as("s")), "pack_boundary_curve")
-      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val carries = Seq.newBuilder[(Long, Long)]
-    var run = 0L
-    binSum.foreach { case (b, s) => carries += ((b, run)); run += s }
-    import spark.implicits._
-    val carryDf = carries.result().toDF("bin", "carry")
-    val wBin = Window.partitionBy("bin").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val withStart = binned
-      .join(broadcast(carryDf), Seq("bin"))
-      .withColumn("start", coalesce(sum("nt").over(wBin), lit(0L)) + col("carry"))
+    val withStart = docStarts(spark, sfDir, "pack_boundary_curve")
       .withColumn("end_m1", col("start") + col("nt") - 1)
     val cutCols = PackCtxGrid.map { c =>
       sum(when(col("nt") > 0 &&
@@ -3285,36 +3272,14 @@ object TextAnalysis {
     * partitioning or task order).
     *
     * Scale shape: identical to [[packBoundaryCurve]] — the start
-    * offsets are the span-binned prefix-sum decomposition (≤64k-row
-    * bounded bin frame, driver carry fold, broadcast back; NO
-    * SinglePartition window), then one groupBy(shard) agg. Output is
+    * offsets are [[docStarts]]' prefix scan (NO SinglePartition
+    * window), then one groupBy(shard) agg. Output is
     * O(total_tokens / [[ShardTokens]]) rows — a distributed frame, not
     * driver state. All-integer end to end. */
   def shardPlan(spark: SparkSession, sfDir: String,
                 shardTokens: Long = ShardTokens): DataFrame = {
     require(shardTokens > 0, s"shardTokens must be positive, got $shardTokens")
-    import org.apache.spark.sql.expressions.Window
-    val docs = maybeCache(Tables.documents(spark, sfDir)
-      .select(col("doc_id"), size(toks(col("text"))).cast("long").as("nt")))
-    val span = docs.agg(min("doc_id"), max("doc_id")).head()
-    val (lo, binW) =
-      if (span.isNullAt(0)) (0L, 1L)
-      else (span.getLong(0),
-        math.max(1L, (span.getLong(1) - span.getLong(0)) / PackCurveBins + 1))
-    val binned = docs.withColumn("bin", expr(s"(doc_id - $lo) DIV $binW"))
-    val binSum = Hist.bounded(
-      binned.groupBy("bin").agg(sum("nt").as("s")), "shard_plan")
-      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val carries = Seq.newBuilder[(Long, Long)]
-    var run = 0L
-    binSum.foreach { case (b, s) => carries += ((b, run)); run += s }
-    import spark.implicits._
-    val carryDf = carries.result().toDF("bin", "carry")
-    val wBin = Window.partitionBy("bin").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    binned
-      .join(broadcast(carryDf), Seq("bin"))
-      .withColumn("start", coalesce(sum("nt").over(wBin), lit(0L)) + col("carry"))
+    docStarts(spark, sfDir, "shard_plan")
       .withColumn("shard", expr(s"start DIV $shardTokens"))
       .groupBy("shard")
       .agg(count(lit(1)).as("n_docs"),
@@ -3589,35 +3554,21 @@ object TextAnalysis {
       bandCountsOf(qualityScoredFrame(Tables.documents(spark, sfDir)))
         .withColumnRenamed("n", "n_corpus"))
 
-  /** Shared ledger tail of [[qualityDrift]] and [[qualityDriftBatch]] —
-    * the [[graft.queries.Similarity.ingestDrift]] shape on score bands. */
+  /** The [[Hist.driftLedger]] of [[qualityDrift]] and
+    * [[qualityDriftBatch]]: the [[graft.queries.Similarity.ingestDrift]]
+    * ledger on score bands, against the frozen corpus histogram. */
   private def qualityDriftLedger(spark: SparkSession, sfDir: String,
                                  shard: DataFrame): DataFrame = {
     import spark.implicits._
     val corpus = corpusQualityBands(spark, sfDir)
     val ncRow = corpus.agg(sum("n_corpus")).head()
-    val nc = if (ncRow.isNullAt(0)) 0L else ncRow.getLong(0)
-    val nsRow = shard.agg(sum("n_shard")).head()
-    val ns = if (nsRow.isNullAt(0)) 0L else nsRow.getLong(0)
-    if (nc == 0 || ns == 0)
-      return Seq.empty[(Long, Double, Long, Long, Long, Long, Long)]
-        .toDF("band", "band_lo", "n_corpus", "n_shard", "corpus_ppm",
-          "shard_ppm", "tv_ppm")
-    val led = corpus.join(shard, Seq("band"), "left")
-      .na.fill(0L, Seq("n_shard"))
-      .withColumn("dev",
-        abs(col("n_shard").cast("decimal(38,0)") * nc
-          - col("n_corpus").cast("decimal(38,0)") * ns))
-    val sdev = BigInt(led.agg(sum("dev")).head().getDecimal(0).toBigInteger)
-    val tv = Det.halfUpDiv(sdev * 1000000L, BigInt(nc) * ns * 2)
-    led.select(col("band"),
+    Hist.driftLedger(corpus, if (ncRow.isNullAt(0)) 0L else ncRow.getLong(0),
+        shard, "band", col("band"),
         ((col("band") * lit(QualityBandUnits)).cast("double") / lit(10000.0))
-          .as("band_lo"),
-        col("n_corpus"), col("n_shard"),
-        expr(s"(n_corpus * 2000000 + ${nc}L) DIV ${2 * nc}L").as("corpus_ppm"),
-        expr(s"(n_shard * 2000000 + ${ns}L) DIV ${2 * ns}L").as("shard_ppm"),
-        lit(tv).as("tv_ppm"))
-      .orderBy("band")
+          .as("band_lo"))
+      .getOrElse(Seq.empty[(Long, Double, Long, Long, Long, Long, Long)]
+        .toDF("band", "band_lo", "n_corpus", "n_shard", "corpus_ppm",
+          "shard_ppm", "tv_ppm"))
   }
 
   /** THE LIVE QUALITY MONITOR — the foreachBatch body completing the
@@ -3636,10 +3587,7 @@ object TextAnalysis {
     import spark.implicits._
     val scored = qualityScoredFrame(
       incoming.select(col("doc_id"), lit("").as("source"), col("text")))
-    val batchCounts = bandCountsOf(scored).as[(Long, Long)].collect()
-    val merged = batchCounts.foldLeft(prior) { case (m, (b, n)) =>
-      m.updated(b, m.getOrElse(b, 0L) + n)
-    }
+    val merged = Hist.foldCounts(prior, bandCountsOf(scored).as[(Long, Long)].collect())
     val shard = merged.toSeq.toDF("band", "n_shard")
     (merged, qualityDriftLedger(spark, sfDir, broadcast(shard)))
   }
@@ -3658,41 +3606,16 @@ object TextAnalysis {
   }
 
   /** DuckDB twin — the shared `qsc` quality CTE, banded, then the
-    * ingest_drift oracle discipline verbatim (HUGEINT deviation
-    * numerators, exact-integer half-up divisions). */
+    * [[Hist.driftLedgerSql]] ledger per band. */
   def qualityDriftSqlFor(deltaMod: Long): String =
     s"""WITH $qualityScoredSqlCte,
        |qb AS (SELECT doc_id,
        |              CAST(floor(quality_score * 10000 + 0.5) AS BIGINT)
        |                // $QualityBandUnits AS band
        |       FROM qsc),
-       |corpus AS (SELECT band, count(*) AS n_corpus FROM qb GROUP BY 1),
-       |shard AS (SELECT band, count(*) AS n_shard FROM qb
-       |          WHERE doc_id % $deltaMod = ${deltaMod - 1} GROUP BY 1),
-       |tot AS (SELECT CAST(count(*) AS BIGINT) AS nc,
-       |               CAST(sum(CASE WHEN doc_id % $deltaMod = ${deltaMod - 1}
-       |                             THEN 1 ELSE 0 END) AS BIGINT) AS ns
-       |        FROM qb),
-       |led AS (SELECT c.band, c.n_corpus,
-       |               CAST(coalesce(s.n_shard, 0) AS BIGINT) AS n_shard
-       |        FROM corpus c LEFT JOIN shard s USING (band)),
-       |dev AS (SELECT l.band, l.n_corpus, l.n_shard, t.nc, t.ns,
-       |               abs(CAST(l.n_shard AS HUGEINT) * t.nc
-       |                   - CAST(l.n_corpus AS HUGEINT) * t.ns) AS d
-       |        FROM led l, tot t WHERE t.nc > 0 AND t.ns > 0),
-       |roll AS (SELECT CAST(
-       |           (2 * sum(d) * 1000000 + 2 * CAST(max(nc) AS HUGEINT) * max(ns))
-       |           // (4 * CAST(max(nc) AS HUGEINT) * max(ns)) AS BIGINT) AS tv_ppm
-       |         FROM dev)
-       |SELECT band, CAST(band * $QualityBandUnits AS DOUBLE) / 10000 AS band_lo,
-       |       CAST(n_corpus AS BIGINT) AS n_corpus, n_shard,
-       |       CAST((CAST(n_corpus AS HUGEINT) * 2000000 + nc)
-       |            // (2 * CAST(nc AS HUGEINT)) AS BIGINT) AS corpus_ppm,
-       |       CAST((CAST(n_shard AS HUGEINT) * 2000000 + ns)
-       |            // (2 * CAST(ns AS HUGEINT)) AS BIGINT) AS shard_ppm,
-       |       r.tv_ppm
-       |FROM dev CROSS JOIN roll r
-       |ORDER BY band""".stripMargin
+       |${Hist.driftLedgerSql("qb", "doc_id", "band", "c.band",
+         s"CAST(band * $QualityBandUnits AS DOUBLE) / 10000 AS band_lo,\n       ",
+         deltaMod)}""".stripMargin
 
   val queries: Seq[Query] = Seq(
     Query.templated("shard_plan",

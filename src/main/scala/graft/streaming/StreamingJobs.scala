@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
 import graft.{Query, Tables}
+import graft.queries.Hist
 import graft.Query.ArgOps
 
 /** Structured Streaming over the stream-shaped `events` table.
@@ -174,10 +175,36 @@ object StreamingJobs {
   // Watermark late-data accounting
   // --------------------------------------------------------------------
 
-  /** Bin count for the arrival-order prefix decomposition: the per-bin
-    * max frame is ≤ this many rows — bounded model state at any corpus
-    * size (collected through [[graft.queries.Hist.bounded]]). */
-  private val LateAuditBins = 65536L
+  /** The distributed prefix-max substrate shared by [[lateAuditCore]]
+    * and [[watermarkDelayCurve]]: per row of `evIn` (event_id, ts,
+    * arr_us), the high-watermark `hw` = max(ts) over all strictly
+    * earlier arrivals (null for the first), plus `ts_us`. Scale shape
+    * as documented on [[lateAuditCore]]. The first bin has no carry, so
+    * the carries join LEFT after the within-bin window and `hw` is the
+    * `greatest` of the two (null only for the first arrival). */
+  private def highWatermarkFrame(spark: SparkSession,
+                                 evIn: DataFrame): DataFrame = {
+    val ev = evIn.select(col("event_id"), col("ts"), col("arr_us"),
+      unix_micros(col("ts")).as("ts_us"))
+    // arrival span: 2 longs of model state (the asofJoinOrdersSalted move)
+    val span = Hist.span(ev, "arr_us").getOrElse(Hist.Span(0L, 0L))
+    val binned = ev.withColumn("bin", span.asc("arr_us"))
+    // bounded carry frame: per-bin max ts, prefix-folded on the driver
+    val binMax = Hist.bounded(
+      binned.groupBy("bin").agg(max("ts_us").as("m")), "events_late_audit")
+      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+    val (before, _) = Hist.carries(binMax.map(_._2), Long.MinValue)(math.max)
+    import spark.implicits._
+    val carryDf = binMax.map(_._1).zip(before).drop(1).toSeq.toDF("bin", "carry")
+    val wBin = Window.partitionBy("bin").orderBy("arr_us", "event_id")
+      .rowsBetween(Window.unboundedPreceding, -1)
+    binned
+      .withColumn("lmax", max("ts_us").over(wBin))
+      .join(broadcast(carryDf), Seq("bin"), "left")
+      .withColumn("hw", greatest(col("lmax"), col("carry")))
+  }
+
+  private val HourUs = 3600L * 1000000
 
   /** WATERMARK LATE-DATA ACCOUNTING — the one readout every production
     * stream exports (r9 verdict #3/#8): per 1-hour tumbling window, how
@@ -196,55 +223,17 @@ object StreamingJobs {
     * (StreamingSpec proves exactly that).
     *
     * Scale shape — a distributed prefix-max, NOT a global window: rows
-    * bin by arrival time, bin width derived from the arrival span so
-    * there are ≤ [[LateAuditBins]] bins (arrivals are time-uniform for
-    * a steady stream; a pathologically bursty clock concentrates bins
-    * the same way it concentrates any time-keyed partition); the
-    * per-bin max-ts frame is bounded model state (one grouped agg,
-    * collected via the occupancy-guarded [[graft.queries.Hist.bounded]]);
+    * bin by arrival time, [[Hist.Span]] over the arrival span so there
+    * are ≤ [[Hist.ScanBins]] bins (arrivals are time-uniform for a
+    * steady stream; a pathologically bursty clock concentrates bins the
+    * same way it concentrates any time-keyed partition); the per-bin
+    * max-ts frame is bounded model state (one grouped agg, collected via
+    * the occupancy-guarded [[Hist.bounded]]);
     * the cross-bin carry-in prefix is a driver fold over that bounded
     * frame, broadcast back; the within-bin prefix is a window
     * PARTITIONED BY bin — every corpus-sized structure stays
     * distributed, and each task sorts one bin, never the stream. Final
     * shape is one grouped agg on the hour. All-integer µs end to end. */
-  /** The distributed prefix-max substrate shared by [[lateAuditCore]]
-    * and [[watermarkDelayCurve]]: per row of `evIn` (event_id, ts,
-    * arr_us), the high-watermark `hw` = max(ts) over all strictly
-    * earlier arrivals (null for the first), plus `ts_us`. Scale shape
-    * as documented on [[lateAuditCore]]. */
-  private def highWatermarkFrame(spark: SparkSession,
-                                 evIn: DataFrame): DataFrame = {
-    val ev = evIn.select(col("event_id"), col("ts"), col("arr_us"),
-      unix_micros(col("ts")).as("ts_us"))
-    // arrival span: 2 longs of model state (the asofJoinOrdersSalted move)
-    val span = ev.agg(min("arr_us"), max("arr_us")).head()
-    val (lo, binW) =
-      if (span.isNullAt(0)) (0L, 1L)
-      else (span.getLong(0),
-        math.max(1L, (span.getLong(1) - span.getLong(0)) / LateAuditBins + 1))
-    val binned = ev.withColumn("bin", expr(s"(arr_us - $lo) DIV $binW"))
-    // bounded carry frame: per-bin max ts, prefix-folded on the driver
-    val binMax = graft.queries.Hist.bounded(
-      binned.groupBy("bin").agg(max("ts_us").as("m")), "events_late_audit")
-      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val carries = Seq.newBuilder[(Long, Long)]
-    var run = Long.MinValue
-    binMax.foreach { case (b, m) =>
-      if (run != Long.MinValue) carries += ((b, run))
-      run = math.max(run, m)
-    }
-    import spark.implicits._
-    val carryDf = carries.result().toDF("bin", "carry")
-    val wBin = Window.partitionBy("bin").orderBy("arr_us", "event_id")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    binned
-      .withColumn("lmax", max("ts_us").over(wBin))
-      .join(broadcast(carryDf), Seq("bin"), "left")
-      .withColumn("hw", greatest(col("lmax"), col("carry")))
-  }
-
-  private val HourUs = 3600L * 1000000
-
   private[graft] def lateAuditCore(spark: SparkSession, evIn: DataFrame,
                                    delayUs: Long): DataFrame =
     highWatermarkFrame(spark, evIn)
@@ -256,16 +245,6 @@ object StreamingJobs {
         sum(when(col("late"), 1L).otherwise(0L)).as("n_late"))
       .orderBy("window_start")
 
-  /** The registered audit replays the batch corpus through a SIMULATED
-    * transport: arrival = event time + a deterministic per-event delay,
-    * `md5(event_id) % jitter` (the fixture's event_ids are time-ordered,
-    * so replaying them as the arrival clock would make every row
-    * on-time and the audit vacuous; real streams are late because of
-    * transport jitter, which this models with the repo's portable md5
-    * idiom — same value on both engines). With the 3 h default jitter
-    * and the 1 h watermark delay, ~1/3 of fixture rows land late: the
-    * audit output is the (windows × lateness) table a capacity planner
-    * reads to size the watermark delay. */
   /** The simulated-transport arrival frame shared by [[eventsLateAudit]]
     * and [[watermarkDelayCurve]]. */
   private def jitteredArrivals(spark: SparkSession, sfDir: String,
@@ -283,6 +262,16 @@ object StreamingJobs {
   private val LateDelayMinutes = 60
   private val JitterMinutes = 180
 
+  /** The registered audit replays the batch corpus through a SIMULATED
+    * transport: arrival = event time + a deterministic per-event delay,
+    * `md5(event_id) % jitter` (the fixture's event_ids are time-ordered,
+    * so replaying them as the arrival clock would make every row
+    * on-time and the audit vacuous; real streams are late because of
+    * transport jitter, which this models with the repo's portable md5
+    * idiom — same value on both engines). With the 3 h default jitter
+    * and the 1 h watermark delay, ~1/3 of fixture rows land late: the
+    * audit output is the (windows × lateness) table a capacity planner
+    * reads to size the watermark delay. */
   def eventsLateAudit(spark: SparkSession, sfDir: String,
                       delayMinutes: Int = LateDelayMinutes,
                       jitterMinutes: Int = JitterMinutes): DataFrame = {

@@ -12,13 +12,16 @@ import org.scalatest.funsuite.AnyFunSuite
 class EntryPointSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  private def sourcesContaining(needle: String): Set[String] = {
+  private def sourcesWhere(matches: String => Boolean): Set[String] = {
     val files = Files.walk(Paths.get("src/main/scala"))
     try files.iterator.asScala
-      .filter(p => p.toString.endsWith(".scala") && Files.readString(p).contains(needle))
+      .filter(p => p.toString.endsWith(".scala") && matches(Files.readString(p)))
       .map(_.getFileName.toString).toSet
     finally files.close()
   }
+
+  private def sourcesContaining(needle: String): Set[String] =
+    sourcesWhere(_.contains(needle))
 
   test("src/main defines main only in Bench, Verify and Probe") {
     assert(sourcesContaining("def main(") == Set("Bench.scala", "Verify.scala", "Probe.scala"))
@@ -33,6 +36,12 @@ class EntryPointSpec extends AnyFunSuite {
     assert(sourcesContaining("applicationId") == Set("Substrate.scala"))
     // ScaleProbe's generated corpus must outlive the JVM for reuse
     assert(sourcesContaining("java.io.tmpdir") == Set("Substrate.scala", "ScaleProbe.scala"))
+  }
+
+  test("src/main folds histogram carries and derives a scan bin width only in Hist") {
+    assert(sourcesContaining("scanLeft(") == Set("Hist.scala"))
+    val binWidth = raw"/\s*\w*Bins\s*\+\s*1\b".r
+    assert(sourcesWhere(binWidth.findFirstIn(_).isDefined) == Set("Hist.scala"))
   }
 
   test("SPARK_GRAFT_CPUS: an integer is the core count, anything else fails by name") {

@@ -1,0 +1,125 @@
+package graft
+
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.queries.Hist
+
+/** The driver-walked histogram helpers against literal left-to-right
+  * folds: the distributed prefix scan in both directions and in its
+  * exclusive, inclusive and rank forms, and the nearest-rank cut. */
+class HistSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+
+  /** (id, v) rows with ties on v; over the 0..1e6 span a bin is 16 wide,
+    * so 500000 and 500003 share a bin while 5 and 20 do not. */
+  private val rows = Seq((1L, 5L), (2L, 7L), (3L, 7L), (4L, 20L),
+    (5L, 500000L), (6L, 500003L), (7L, 500003L), (8L, 999999L),
+    (9L, 1000000L), (10L, 7L), (11L, 0L))
+
+  private sealed trait Form
+  private case object Exclusive extends Form
+  private case object Inclusive extends Form
+  private case object Rank extends Form
+  private val forms = Seq(Exclusive, Inclusive, Rank)
+
+  /** Hist.prefixScan over `data` ordered by (v, id), v descending when
+    * `desc`: id → scanned value, and the fold of every bin. */
+  private def scan(data: Seq[(Long, Long)], desc: Boolean,
+                   form: Form): (Map[Long, Long], Long) = {
+    val s = spark
+    import s.implicits._
+    val df = data.toDF("id", "v")
+    val span = Hist.span(df, "v").getOrElse(Hist.Span(0L, 0L))
+    val binned = df.withColumn("bin", if (desc) span.desc("v") else span.asc("v"))
+    val order = Seq(if (desc) col("v").desc else col("v").asc, col("id"))
+    val fold: Column = if (form == Rank) count(lit(1)).as("m") else sum("v").as("s")
+    val running: WindowSpec => Column = form match {
+      case Exclusive => w => coalesce(
+        sum("v").over(w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
+      case Inclusive => w => sum("v").over(w.rowsBetween(Window.unboundedPreceding, 0))
+      case Rank => w => row_number().over(w).cast("long")
+    }
+    val (out, total) = Hist.prefixScan(binned, fold, "hist_spec", order, "out")(running)
+    (out.select("id", "out").as[(Long, Long)].collect().toMap, total)
+  }
+
+  /** The same scan as one left-to-right fold over the sorted rows. */
+  private def literal(data: Seq[(Long, Long)], desc: Boolean,
+                      form: Form): (Map[Long, Long], Long) = {
+    val sorted = data.sortBy { case (id, v) => (if (desc) -v else v, id) }
+    var sum = 0L
+    var rank = 0L
+    val out = sorted.map { case (id, v) =>
+      val before = sum
+      sum += v
+      rank += 1
+      id -> (form match {
+        case Exclusive => before
+        case Inclusive => sum
+        case Rank => rank
+      })
+    }
+    (out.toMap, if (form == Rank) rank else sum)
+  }
+
+  test("prefix scan: a wide span puts several values, and every tie, in one bin") {
+    val span = Hist.Span(0L, 1000000L)
+    assert(span.width == 16)
+    assert(Hist.Span(3L, 3L).width == 1)
+    val s = spark
+    import s.implicits._
+    val bins = rows.toDF("id", "v").select(col("id"), span.asc("v").as("b"))
+      .as[(Long, Long)].collect().toMap
+    assert(bins(5L) == bins(6L) && bins(6L) == bins(7L))
+    assert(bins(2L) == bins(3L) && bins(1L) == bins(2L))
+    assert(bins(1L) != bins(4L))
+  }
+
+  test("prefix scan == literal fold: both directions, exclusive / inclusive / rank, with ties") {
+    for (desc <- Seq(false, true); form <- forms)
+      assert(scan(rows, desc, form) == literal(rows, desc, form), s"desc=$desc $form")
+  }
+
+  test("prefix scan with lo == hi: one bin, the within-bin order alone") {
+    val flat = Seq((3L, 42L), (1L, 42L), (2L, 42L))
+    for (desc <- Seq(false, true); form <- forms)
+      assert(scan(flat, desc, form) == literal(flat, desc, form), s"desc=$desc $form")
+  }
+
+  test("prefix scan over an empty frame: no span, no rows, zero total") {
+    val s = spark
+    import s.implicits._
+    assert(Hist.span(Seq.empty[(Long, Long)].toDF("id", "v"), "v").isEmpty)
+    for (desc <- Seq(false, true); form <- forms)
+      assert(scan(Seq.empty, desc, form) == ((Map.empty[Long, Long], 0L)))
+  }
+
+  test("carry fold: each cell carries the fold of the cells before it") {
+    assert(Hist.carries(Vector(3L, 1L, 4L), 0L)(_ + _) == ((Vector(0L, 3L, 4L), 8L)))
+    assert(Hist.carries(Vector(3L, 1L, 4L), Long.MinValue)(math.max) ==
+      ((Vector(Long.MinValue, 3L, 3L), 4L)))
+    assert(Hist.carries(Vector.empty[Long], 0L)(_ + _) == ((Vector.empty[Long], 0L)))
+  }
+
+  test("nearest-rank cut: ⌈p·n⌉ on a cumulative boundary and inside a cell") {
+    val counts = Vector(2L, 3L, 5L) // cumulative 2, 5, 10
+    // p·n lands exactly on a boundary: the cell that reaches it
+    assert(Hist.nearestRank(counts, 0.2) == Hist.Cut(0, 2L, 0L))
+    assert(Hist.nearestRank(counts, 0.5) == Hist.Cut(1, 5L, 2L))
+    assert(Hist.nearestRank(counts, 1.0) == Hist.Cut(2, 10L, 5L))
+    // fractional p·n rounds up: 2.1 → 3, 5.5 → 6, 0.1 → 1
+    assert(Hist.nearestRank(counts, 0.21) == Hist.Cut(1, 3L, 2L))
+    assert(Hist.nearestRank(counts, 0.55) == Hist.Cut(2, 6L, 5L))
+    assert(Hist.nearestRank(counts, 0.01) == Hist.Cut(0, 1L, 0L))
+    // against the literal definition: the smallest cell whose running count reaches the rank
+    for (p <- Seq(0.01, 0.1, 0.25, 0.3, 0.5, 0.7, 0.9, 0.99, 1.0)) {
+      val want = math.ceil(p * 10).toLong
+      var run = 0L
+      val i = counts.indexWhere { c => run += c; run >= want }
+      assert(Hist.nearestRank(counts, p).index == i, s"p=$p")
+    }
+  }
+}
