@@ -1772,7 +1772,7 @@ object TextAnalysis {
     * Scale shape: the corpus is scanned ONCE, folding to the word-type
     * frequency frame — VOCAB-sized (Heaps law: ~1M types at 100 TB), not
     * corpus-sized, which is what makes the `.cache()` on it legitimate
-    * under CLAUDE.md invariant 4 (without it every one of the N rounds
+    * under the no-corpus-sized-cache rule (without it every one of the N rounds
     * re-scans the corpus; with it each round is a small agg over ≤1M
     * rows). Each round is one distributed pair-count agg (map-side
     * combined, alphabet²-bounded cells) plus a 1-ROW collect of the
