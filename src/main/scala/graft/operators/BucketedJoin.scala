@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Query, Substrate, Tables}
+import graft.queries.Det
 
 /** Write-time co-located join: bucket BOTH fact tables by the join key at
   * write time (`bucketBy` + `sortBy`), so every later join on that key
@@ -37,7 +38,7 @@ object BucketedJoin {
       Substrate.Bucketed(Buckets, "l_orderkey"))(
       Tables.lineitem(spark, sfDir)
         .select(col("l_orderkey"),
-          round(col("l_extendedprice") * 100).cast("long").as("price_c")))
+          Det.cents(col("l_extendedprice")).as("price_c")))
     val ord = Substrate.materialize(spark, "graft_ord_bkt_", sfDir,
       Substrate.Bucketed(Buckets, "o_orderkey"))(
       Tables.orders(spark, sfDir)

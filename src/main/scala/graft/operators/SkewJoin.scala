@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Query, Tables}
+import graft.queries.Det
 
 /** Skew-mitigation join: salt the skewed (big) side into `salt` sub-keys
   * and replicate the matching rows of the small side once per sub-key, so
@@ -40,7 +41,7 @@ object SkewJoin {
   def saltedJoinStats(spark: SparkSession, sfDir: String): DataFrame = {
     val orders = Tables.orders(spark, sfDir)
       .select(col("o_custkey"),
-        (round(col("o_totalprice") * 100)).cast("long").as("price_c"))
+        Det.cents(col("o_totalprice")).as("price_c"))
     val cust = Tables.customer(spark, sfDir).select("c_custkey", "c_mktsegment")
     saltedInnerJoin(orders, cust, "o_custkey", "c_custkey", 8)
       .groupBy("c_mktsegment")

@@ -224,31 +224,6 @@ object Curation {
   // Leakage-safe holdout split (content-keyed, with straddle audit)
   // --------------------------------------------------------------------
 
-  /** Leakage-safe train/val/test split: the assignment is keyed on the
-    * CONTENT hash ([[Dedup.exactDedup]]'s md5 over normalized text), not
-    * the row id — so byte-identical duplicates co-assign BY CONSTRUCTION
-    * and no exact-dup cluster can straddle train and eval. This is the
-    * hole in [[Temporal.splitAssign]]-style id-keyed splits: a web
-    * corpus carries the same page under many doc_ids, and an id-keyed
-    * split quietly places copies of a test document into train — the
-    * classic eval-contamination bug. Emits the per-split composition
-    * readout (docs, distinct contents, dup mass, token total, doc
-    * share) plus `leaked_clusters` — content clusters observed in >1
-    * split — COMPUTED from the assignment rather than asserted, so the
-    * readout itself proves the guarantee (CurationSpec additionally
-    * pins a fixture where the id-keyed split DOES straddle a dup pair
-    * and this one does not).
-    *
-    * Scale shape: one scan computes (16-byte content hash, token count)
-    * per doc; the split is a pure function of the hash (no join back to
-    * an assignment table). Both aggregates shuffle on the content hash
-    * — `leaked` directly, the per-split distinct-count via the (split,
-    * ch) expand — carrying 16-byte keys + a long, never the text. The
-    * two scalar frames (corpus total, leak count) are 1-row broadcasts.
-    * Distinct counts are exact by oracle contract; the 100 TB audit
-    * variant swaps HLL exactly as [[Relational.tableProfile]] documents.
-    * Empty corpus: zero rows on both engines (the keyless scalars cross
-    * an empty per-split aggregate). */
   /** Content-hash split assignment shared by [[leakageSafeSplit]],
     * [[splitBalanceAudit]], and the decontamination tier:
     * (doc_id, lang, source, ch, n_tokens, split) with the 5/5/90
@@ -298,6 +273,31 @@ object Curation {
         .select(col("cell"), col("split"), col("doc_id").as("eval_doc"),
           col("n_tokens"), col("v").as("xe"), col("norm").as("ne")))
 
+  /** Leakage-safe train/val/test split: the assignment is keyed on the
+    * CONTENT hash ([[Dedup.exactDedup]]'s md5 over normalized text), not
+    * the row id — so byte-identical duplicates co-assign BY CONSTRUCTION
+    * and no exact-dup cluster can straddle train and eval. This is the
+    * hole in [[Temporal.splitAssign]]-style id-keyed splits: a web
+    * corpus carries the same page under many doc_ids, and an id-keyed
+    * split quietly places copies of a test document into train — the
+    * classic eval-contamination bug. Emits the per-split composition
+    * readout (docs, distinct contents, dup mass, token total, doc
+    * share) plus `leaked_clusters` — content clusters observed in >1
+    * split — COMPUTED from the assignment rather than asserted, so the
+    * readout itself proves the guarantee (CurationSpec additionally
+    * pins a fixture where the id-keyed split DOES straddle a dup pair
+    * and this one does not).
+    *
+    * Scale shape: one scan computes (16-byte content hash, token count)
+    * per doc; the split is a pure function of the hash (no join back to
+    * an assignment table). Both aggregates shuffle on the content hash
+    * — `leaked` directly, the per-split distinct-count via the (split,
+    * ch) expand — carrying 16-byte keys + a long, never the text. The
+    * two scalar frames (corpus total, leak count) are 1-row broadcasts.
+    * Distinct counts are exact by oracle contract; the 100 TB audit
+    * variant swaps HLL exactly as [[Relational.tableProfile]] documents.
+    * Empty corpus: zero rows on both engines (the keyless scalars cross
+    * an empty per-split aggregate). */
   def leakageSafeSplit(spark: SparkSession, sfDir: String): DataFrame = {
     val a = splitAssigned(spark, sfDir)
     val tot = a.agg(count(lit(1)).as("n_total"))

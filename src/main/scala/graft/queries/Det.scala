@@ -13,6 +13,11 @@ import org.apache.spark.sql.functions._
   * inputs → identical outputs on every engine.
   */
 object Det {
+  /** 2-dp money (and 2-dp fractions: discount 0.07 → 7) as an exact
+    * integer: round(x·100) as long — sums of these are fold-order-free
+    * on both engines. */
+  def cents(c: Column): Column = round(c * 100).cast("long")
+
   def r(c: Column, scale: Int): Column = {
     val p = math.pow(10, scale)
     floor(c * p + 0.5).cast("double") / p

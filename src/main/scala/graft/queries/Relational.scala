@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Query, Substrate, Tables}
 import graft.Query.ArgOps
+import Det.cents
 
 /** Relational core over the star-schema fixtures.
   *
@@ -38,10 +39,11 @@ import graft.Query.ArgOps
   */
 object Relational {
 
-  /** round(x*100) as long — exact for the fixtures' 2-dp money doubles. */
-  private def cents(c: Column): Column = round(c * 100).cast("long")
-  /** discount/tax are 2-dp fractions (0.07) → integer percent. */
-  private def pct(c: Column): Column = round(c * 100).cast("long")
+  /** Net line revenue in cents·percent (×10⁴ dollars):
+    * cents(l_extendedprice)·(100 − discount%), TPC-H's
+    * `extendedprice·(1 − discount)` in exact integers. */
+  private def netRevE4: Column =
+    cents(col("l_extendedprice")) * (lit(100) - cents(col("l_discount")))
 
   // --------------------------------------------------------------------
   // Aggregation
@@ -65,8 +67,8 @@ object Relational {
         col("l_returnflag"), col("l_linestatus"),
         col("l_quantity").cast("long").as("qty"),
         cents(col("l_extendedprice")).as("price_c"),
-        pct(col("l_discount")).as("disc_p"),
-        pct(col("l_tax")).as("tax_p"))
+        cents(col("l_discount")).as("disc_p"),
+        cents(col("l_tax")).as("tax_p"))
       .groupBy("l_returnflag", "l_linestatus")
       .agg(
         sum("qty").as("sum_qty"),
@@ -277,8 +279,7 @@ object Relational {
   def regionalRevenue(spark: SparkSession, sfDir: String): DataFrame = {
     val li = Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey"), col("l_suppkey"),
-        (cents(col("l_extendedprice")) * (lit(100) - pct(col("l_discount"))))
-          .as("rev_e4"))
+        netRevE4.as("rev_e4"))
     val ord = Tables.orders(spark, sfDir)
       // written as year()==1998 on purpose: graft.plans.YearPredicateRewrite
       // turns it into the pushable half-open range (verified to reach
@@ -454,8 +455,7 @@ object Relational {
   def topPartsByRevenue(spark: SparkSession, sfDir: String): DataFrame = {
     val li = Tables.lineitem(spark, sfDir)
       .select(col("l_partkey"),
-        (cents(col("l_extendedprice")) * (lit(100) - pct(col("l_discount"))))
-          .as("rev_e4"))
+        netRevE4.as("rev_e4"))
       .groupBy("l_partkey")
       .agg((sum(col("rev_e4").cast("decimal(38,0)")).cast("double") / 10000).as("revenue"),
         count(lit(1)).as("n_lines"))
@@ -740,33 +740,6 @@ object Relational {
   private val PrIters = 5
   private val PrTopN = 50
 
-  /** PageRank over the part co-purchase graph — link-analysis authority
-    * scoring, the algorithm a crawl-curation pipeline runs to weight
-    * page quality before corpus selection (here over the fixture's
-    * natural graph: parts are nodes, an edge joins parts bought in the
-    * same order, baskets capped like [[partAffinity]] so one mega-order
-    * can't densify the graph quadratically). [[PrIters]] damped rounds
-    * (d = 0.85), then the top-[[PrTopN]] authorities.
-    *
-    * ALL-INTEGER recurrence — the property that makes an iterative
-    * fixpoint hash-gateable at all (the Lloyd/BPE move, applied to
-    * graphs): ranks live in micro-units (r₀ = 1e6), each round is
-    * r' = 150000 + (85 · Σ_{q→p} (r(q) div deg(q))) div 100 with
-    * integer division on both engines — no float ever enters, so
-    * fold order cannot matter anywhere. The div-truncation mass loss
-    * is part of the operator's defined semantics (documented, tiny:
-    * < deg per node per round).
-    *
-    * Scale shape: Pregel-without-Pregel — each round is one
-    * edges⋈ranks shuffle on src, one grouped sum on dst, one
-    * nodes-left-join; edge and rank frames are |edges|/|parts|-sized
-    * and PARTITION-stable across rounds (same join keys). The loop
-    * invariants (edges/deg/nodes) are cached — measured at relScale=10
-    * (PERF.md): uncached 28.4 s → cached 23.2 s, the gap small because
-    * ReuseExchange already dedups the repeated subtrees within the one
-    * lazy plan. Nothing collects to the driver — the loop builds one
-    * lazy [[PrIters]]-deep plan (at 100+ rounds you would checkpoint
-    * lineage every ~10; at 5 the plan is shallow). */
   /** Weighted capped co-purchase edge set (u < v — baskets are sorted,
     * so i < j orders the pair; w = number of distinct orders containing
     * both): the ONE SHARED substrate of the whole graph family
@@ -812,6 +785,33 @@ object Relational {
     coPurchaseWeightedEdgesMaterialized(spark, sfDir, maxBasket)
       .select("u", "v")
 
+  /** PageRank over the part co-purchase graph — link-analysis authority
+    * scoring, the algorithm a crawl-curation pipeline runs to weight
+    * page quality before corpus selection (here over the fixture's
+    * natural graph: parts are nodes, an edge joins parts bought in the
+    * same order, baskets capped like [[partAffinity]] so one mega-order
+    * can't densify the graph quadratically). [[PrIters]] damped rounds
+    * (d = 0.85), then the top-[[PrTopN]] authorities.
+    *
+    * ALL-INTEGER recurrence — the property that makes an iterative
+    * fixpoint hash-gateable at all (the Lloyd/BPE move, applied to
+    * graphs): ranks live in micro-units (r₀ = 1e6), each round is
+    * r' = 150000 + (85 · Σ_{q→p} (r(q) div deg(q))) div 100 with
+    * integer division on both engines — no float ever enters, so
+    * fold order cannot matter anywhere. The div-truncation mass loss
+    * is part of the operator's defined semantics (documented, tiny:
+    * < deg per node per round).
+    *
+    * Scale shape: Pregel-without-Pregel — each round is one
+    * edges⋈ranks shuffle on src, one grouped sum on dst, one
+    * nodes-left-join; edge and rank frames are |edges|/|parts|-sized
+    * and PARTITION-stable across rounds (same join keys). The loop
+    * invariants (edges/deg/nodes) are cached — measured at relScale=10
+    * (PERF.md): uncached 28.4 s → cached 23.2 s, the gap small because
+    * ReuseExchange already dedups the repeated subtrees within the one
+    * lazy plan. Nothing collects to the driver — the loop builds one
+    * lazy [[PrIters]]-deep plan (at 100+ rounds you would checkpoint
+    * lineage every ~10; at 5 the plan is shallow). */
   def partPagerank(spark: SparkSession, sfDir: String,
                    topN: Int = PrTopN,
                    maxBasket: Int = AffinityMaxBasket): DataFrame = {
@@ -1087,9 +1087,9 @@ object Relational {
     * B(s+1) > p (a same-priced strictly-larger part would dominate;
     * an equal (p, s) twin does not — no strict edge). B comes from a
     * per-size min-price agg — ≤ |distinct sizes| rows at ANY corpus
-    * size — suffix-minned by a window over that bounded frame and
-    * broadcast back: one grouped agg + one broadcast join, no global
-    * sort, no pair join. (Both-dimensions-continuous skylines bucket
+    * size — collected through [[Hist.bounded]], suffix-minned on the
+    * driver and broadcast back: one grouped agg + one broadcast join,
+    * no global sort, no pair join. (Both-dimensions-continuous skylines bucket
     * the first dimension and carry prefix maxes — the
     * [[graft.queries.Curation.weightedSamplePps]] histogram move; here
     * the integer size axis IS the bounded bucket set.) Cents integers
@@ -1098,14 +1098,14 @@ object Relational {
     import spark.implicits._
     val parts = Tables.part(spark, sfDir)
       .select(col("p_partkey"), col("p_size"),
-        round(col("p_retailprice") * 100).cast("long").as("cents"))
+        cents(col("p_retailprice")).as("cents"))
     // bounded model state: one (size, min price) row per distinct size
     // (integer axis; TPC-H: ≤ 50) — suffix-minned on the driver, the
     // eventsValueQuantiles pattern (a window over the frame would plan
     // the SinglePartition funnel PlanShapeSpec bans)
-    val bySize = parts.groupBy("p_size").agg(min("cents").as("mn"))
-      .collect().map(r => (r.getAs[Int]("p_size"), r.getAs[Long]("mn")))
-      .sortBy(-_._1)
+    val bySize = Hist.bounded(parts.groupBy("p_size").agg(min("cents").as("mn")),
+        "skyline_parts")
+      .map(r => (r.getAs[Int]("p_size"), r.getAs[Long]("mn"))).sortBy(-_._1)
     if (bySize.isEmpty)
       return Seq.empty[(Long, Int, Double)].toDF("p_partkey", "p_size", "price")
     // bNext = B over strictly larger sizes: the carry of a min-fold
@@ -1168,7 +1168,7 @@ object Relational {
       .select(col("o_orderkey"))
     val fact = Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey"), col("l_returnflag"),
-        round(col("l_extendedprice") * 100).cast("long").as("cents"))
+        cents(col("l_extendedprice")).as("cents"))
     val nKeys = dim.count() // one cheap agg; also sizes the filter
     val pruned =
       if (nKeys == 0) fact.filter(lit(false))
@@ -1355,29 +1355,12 @@ object Relational {
   // Data-quality: one-pass column profiling + constraint checks
   // --------------------------------------------------------------------
 
-  /** TABLE PROFILE: per-column null count, exact distinct count, and
-    * canonically-rendered min/max over `orders` in ONE scan — the
-    * column-profiling pass every ingestion pipeline runs before trusting
-    * a new drop (the Deequ/Great-Expectations "profile" surface).
-    *
-    * Shape: a single wide agg row (count + 4 stats × 6 columns, all
-    * partial/map-side combining) unpivoted by `stack` into one row per
-    * column — output is |columns|-sized model state regardless of corpus
-    * size. The exact `count(DISTINCT c)` per column makes Catalyst plan
-    * an expand×6 (one pass over the data, 6× rows into the partial
-    * aggs); that is the price of oracle-exact distincts — at 100 TB swap
-    * in approx_count_distinct (HLL, one expand-free pass; the sketch
-    * discipline [[approxDistinctParts]] already demonstrates) and keep
-    * this exact path for audit reruns. Min/max render per type (ints as
-    * digits, money as cents, timestamps via one fixed format) so the
-    * strings are engine-portable.
-    */
   /** The profiled `orders` columns with their canonical min/max
     * renderings — shared by the exact and approx profile legs so the
     * two can never drift. */
   private val ProfileCols: Seq[(String, Column => Column)] = {
     val asStr   = (c: Column) => c.cast("string")
-    val asCents = (c: Column) => round(c * 100).cast("long").cast("string")
+    val asCents = (c: Column) => cents(c).cast("string")
     val asTs    = (c: Column) => date_format(c, "yyyy-MM-dd HH:mm:ss")
     Seq(
       "o_orderkey" -> asStr, "o_custkey" -> asStr, "o_orderstatus" -> asStr,
@@ -1394,7 +1377,24 @@ object Relational {
     ("o_orderdate", "strftime(%s, '%%Y-%%m-%%d %%H:%%M:%%S')"),
     ("o_orderpriority", "CAST(%s AS VARCHAR)"))
 
-  /** r13 OPTIMIZATION (guide §1.2 step 2 — per-task work; probe table in
+  /** TABLE PROFILE: per-column null count, exact distinct count, and
+    * canonically-rendered min/max over `orders` in ONE scan — the
+    * column-profiling pass every ingestion pipeline runs before trusting
+    * a new drop (the Deequ/Great-Expectations "profile" surface).
+    *
+    * Shape: a single wide agg row (count + 4 stats × 6 columns, all
+    * partial/map-side combining) unpivoted by `stack` into one row per
+    * column — output is |columns|-sized model state regardless of corpus
+    * size. The exact `count(DISTINCT c)` per column makes Catalyst plan
+    * an expand×6 (one pass over the data, 6× rows into the partial
+    * aggs); that is the price of oracle-exact distincts — at 100 TB swap
+    * in approx_count_distinct (HLL, one expand-free pass; the sketch
+    * discipline [[approxDistinctParts]] already demonstrates) and keep
+    * this exact path for audit reruns. Min/max render per type (ints as
+    * digits, money as cents, timestamps via one fixed format) so the
+    * strings are engine-portable.
+    *
+    * r13 OPTIMIZATION (guide §1.2 step 2 — per-task work; probe table in
     * OPTIMIZATION_r13.md §3): min/max buffers inside the multi-distinct Expand
     * aggregate force the whole aggregate onto the sort-based path
     * (5.4 s at sf0.1); with the Expand aggregate carrying ONLY counts +
@@ -1665,7 +1665,7 @@ object Relational {
     def monthAgg(df: DataFrame): DataFrame = df
       .select(date_format(col("l_shipdate"), "yyyy-MM").as("ship_month"),
         col("l_returnflag"),
-        round(col("l_extendedprice") * 100).cast("long").as("c"))
+        cents(col("l_extendedprice")).as("c"))
       .groupBy("ship_month", "l_returnflag")
       .agg(count(lit(1)).as("n_items"), sum("c").as("cents"))
     val li = Tables.lineitem(spark, sfDir)
@@ -1790,8 +1790,8 @@ object Relational {
       .groupBy(date_format(col("l_shipdate"), "yyyy-MM").as("month"),
         col("s_nationkey").as("nation"))
       .agg(count(lit(1)).as("n_lines"),
-        sum((cents(col("l_extendedprice")) * (lit(100) - pct(col("l_discount")))
-          * (lit(100) + pct(col("l_tax")))).cast("decimal(38,0)")).as("shipped_u"))
+        sum((netRevE4 * (lit(100) + cents(col("l_tax")))).cast("decimal(38,0)"))
+          .as("shipped_u"))
     billed.join(shipped, Seq("month", "nation"), "full_outer")
       .select(col("month"), col("nation"),
         coalesce(col("n_orders"), lit(0L)).as("n_orders"),
@@ -1840,6 +1840,24 @@ object Relational {
   // Seasonal-naive forecast backtest
   // --------------------------------------------------------------------
 
+  /** The daily revenue series (day, c): orders per epoch day
+    * (`datediff(o_orderdate, 1970-01-01)` — weekday is day % 7 on both
+    * engines) with the exact cents sum `c`. One corpus scan into a
+    * |days|-bounded frame — calendar-sized at any corpus size. Shared by
+    * the forecast, CUSUM, changepoint and EWMA-anomaly queries. */
+  private def dailyRevenue(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.orders(spark, sfDir)
+      .groupBy(datediff(col("o_orderdate").cast("date"),
+        lit("1970-01-01").cast("date")).as("day"))
+      .agg(sum(cents(col("o_totalprice"))).as("c"))
+
+  /** DuckDB twin of [[dailyRevenue]]: the `d` CTE its oracles open with. */
+  private val dailyRevenueSql: String =
+    """d AS (SELECT CAST(date_diff('day', DATE '1970-01-01',
+      |                  CAST(o_orderdate AS DATE)) AS INTEGER) AS day,
+      |                  sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS c
+      |           FROM orders GROUP BY 1)""".stripMargin
+
   /** SEASONAL-NAIVE FORECAST BACKTEST: forecast each day's revenue as
     * the value seven days earlier and report the per-weekday MAE — the
     * baseline every demand-forecasting pipeline must beat, evaluated
@@ -1852,11 +1870,7 @@ object Relational {
     * frame is calendar-sized, never corpus-sized) and a ≤ 7-row agg.
     * MAE sums exact cents; one double division + [[Det.r]] at the end. */
   def ordersForecastSnaive(spark: SparkSession, sfDir: String): DataFrame = {
-    val epochDay = datediff(col("o_orderdate").cast("date"),
-      lit("1970-01-01").cast("date"))
-    val daily = Tables.orders(spark, sfDir)
-      .groupBy(epochDay.as("day"))
-      .agg(sum(cents(col("o_totalprice"))).as("c"))
+    val daily = dailyRevenue(spark, sfDir)
     val prior = daily.select((col("day") + 7).as("day"), col("c").as("c7"))
     daily.join(broadcast(prior), "day")
       .groupBy((col("day") % 7).as("weekday"))
@@ -1867,10 +1881,7 @@ object Relational {
   }
 
   val ordersForecastSnaiveSql: String =
-    s"""WITH d AS (SELECT CAST(date_diff('day', DATE '1970-01-01',
-       |                  CAST(o_orderdate AS DATE)) AS INTEGER) AS day,
-       |                  sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS c
-       |           FROM orders GROUP BY 1)
+    s"""WITH $dailyRevenueSql
        |SELECT a.day % 7 AS weekday, count(*) AS n_days,
        |       ${Det.rSql(
           "CAST(sum(abs(a.c - b.c)) AS DOUBLE) / count(*) / 100", 2)} AS mae
@@ -2164,21 +2175,17 @@ object Relational {
     * order-free; a float cumsum would be engine-order-dependent:
     * DuckDB's running windows use segment trees, not left-to-right
     * folds). The series is the |days|-bounded daily frame — calendar-
-    * sized model state (the skyline/quantile-histogram precedent), so
-    * the scan+agg distributes and only the ≤ few-thousand-point
-    * recursion runs on the driver; the oracle replays the identity with
+    * sized model state (the skyline/quantile-histogram precedent)
+    * collected through the occupancy-guarded [[Hist.bounded]], so the
+    * scan+agg distributes and only the ≤ few-thousand-point recursion
+    * runs on the driver; the oracle replays the identity with
     * exact-int windows. The alarm bar 4·sqrt(n·Σc²−(Σc)²) (= 4σ·n in
     * C units) derives from exact decimal moments with one
     * rounding-path-identical double conversion per engine. */
   def revenueCusum(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val epochDay = datediff(col("o_orderdate").cast("date"),
-      lit("1970-01-01").cast("date"))
-    val daily = Tables.orders(spark, sfDir)
-      .groupBy(epochDay.as("day"))
-      .agg(sum(cents(col("o_totalprice"))).as("c"))
-      .collect().map(r => (r.getAs[Int]("day"), r.getAs[Long]("c")))
-      .sortBy(_._1)
+    val daily = Hist.bounded(dailyRevenue(spark, sfDir), "revenue_cusum")
+      .map(r => (r.getAs[Int]("day"), r.getAs[Long]("c"))).sortBy(_._1)
     if (daily.isEmpty)
       return Seq.empty[(Int, Double, Double, Boolean)]
         .toDF("day", "revenue", "cusum", "alarm")
@@ -2202,10 +2209,7 @@ object Relational {
   }
 
   val revenueCusumSql: String =
-    s"""WITH d AS (SELECT CAST(date_diff('day', DATE '1970-01-01',
-       |                  CAST(o_orderdate AS DATE)) AS INTEGER) AS day,
-       |                  sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS c
-       |           FROM orders GROUP BY 1),
+    s"""WITH $dailyRevenueSql,
        |m AS (SELECT count(*) AS n, sum(c) AS s1,
        |             sum(CAST(c AS DECIMAL(38,0)) * c) AS s2
        |      FROM d),
@@ -2257,12 +2261,7 @@ object Relational {
     * calendar-bounded at any corpus size. */
   def revenueChangepoint(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val epochDay = datediff(col("o_orderdate").cast("date"),
-      lit("1970-01-01").cast("date"))
-    val daily = Hist.bounded(
-      Tables.orders(spark, sfDir)
-        .groupBy(epochDay.as("day"))
-        .agg(sum(cents(col("o_totalprice"))).as("c")), "revenue_changepoint")
+    val daily = Hist.bounded(dailyRevenue(spark, sfDir), "revenue_changepoint")
       .map(r => (r.getAs[Int]("day"), r.getAs[Long]("c"))).sortBy(_._1)
     val n = daily.length
     val empty = Seq.empty[(Int, Long, Long, Double, Double, Double)]
@@ -2299,10 +2298,7 @@ object Relational {
   /** Oracle: the identical exact-integer argmax as a DECIMAL(38)
     * cross-multiplied anti-join over the bounded daily frame. */
   val revenueChangepointSql: String =
-    s"""WITH d AS (SELECT CAST(date_diff('day', DATE '1970-01-01',
-       |                  CAST(o_orderdate AS DATE)) AS INTEGER) AS day,
-       |                  sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS c
-       |           FROM orders GROUP BY 1),
+    s"""WITH $dailyRevenueSql,
        |m AS (SELECT count(*) AS n, sum(c) AS t FROM d),
        |cc AS (SELECT day,
        |              row_number() OVER (ORDER BY day) AS k,
@@ -2509,10 +2505,10 @@ object Relational {
     * (the sanctioned SinglePartition shape) unpivoted by stack. */
   def corrMatrix(spark: SparkSession, sfDir: String): DataFrame = {
     val cols = Seq(
-      "qty" -> round(col("l_quantity") * 100).cast("long"),
-      "price" -> round(col("l_extendedprice") * 100).cast("long"),
-      "disc" -> round(col("l_discount") * 100).cast("long"),
-      "tax" -> round(col("l_tax") * 100).cast("long"))
+      "qty" -> cents(col("l_quantity")),
+      "price" -> cents(col("l_extendedprice")),
+      "disc" -> cents(col("l_discount")),
+      "tax" -> cents(col("l_tax")))
     val pairs = for {
       i <- cols.indices; j <- cols.indices if i < j
     } yield (cols(i)._1, cols(j)._1)
@@ -2622,7 +2618,7 @@ object Relational {
       .groupBy(col("o_custkey"))
       .agg(max("o_orderdate").as("last_d"),
         count(lit(1)).as("f_orders"),
-        sum(round(col("o_totalprice") * 100).cast("long")).as("cents"))
+        sum(cents(col("o_totalprice"))).as("cents"))
       .select(col("o_custkey"),
         datediff(lit(maxRow.get(0)).cast("date"),
           col("last_d").cast("date")).cast("long").as("r_days"),
@@ -2741,8 +2737,7 @@ object Relational {
     val li = Tables.lineitem(spark, sfDir)
       .filter(col("l_shipdate") > cut)
       .select(col("l_orderkey"),
-        (cents(col("l_extendedprice")) * (lit(100) - pct(col("l_discount"))))
-          .cast("decimal(38,0)").as("rev_e4"))
+        netRevE4.cast("decimal(38,0)").as("rev_e4"))
     ord.join(cust, col("o_custkey") === col("c_custkey"))
       .join(li, col("o_orderkey") === col("l_orderkey"))
       .groupBy(col("o_orderkey"),
@@ -2783,8 +2778,7 @@ object Relational {
       .select(col("p_partkey"), (col("p_type") === "PROMO").as("is_promo"))
     Tables.lineitem(spark, sfDir)
       .select(col("l_partkey"), year(col("l_shipdate")).as("yr"),
-        (cents(col("l_extendedprice")) * (lit(100) - pct(col("l_discount"))))
-          .cast("decimal(38,0)").as("rev_e4"))
+        netRevE4.cast("decimal(38,0)").as("rev_e4"))
       .join(broadcast(flag), col("l_partkey") === col("p_partkey"))
       .groupBy("yr")
       .agg(count(lit(1)).as("n_lines"),
@@ -2812,13 +2806,6 @@ object Relational {
           "* 100 / CAST(sum(rev_e4) AS DOUBLE)", 4)} AS promo_pct
        |FROM l GROUP BY yr ORDER BY yr""".stripMargin
 
-  /** LATE-ORDER PRIORITY COUNT (TPC-H Q4 shape, adapted — the fixtures
-    * carry no commit/receipt dates, so "late" = any line shipped more
-    * than 90 days after the order date): orders placed in 1997 with at
-    * least one late line, counted per priority. The EXISTS is a LEFT
-    * SEMI join on the order key with the ship-lag inequality as the
-    * extra join predicate — one equi-shuffle, the semi short-circuits
-    * per probe row, no fact×fact blowup and no distinct needed. */
   /** Shared "late" ship-lag default (days) — the Scala default AND the
     * value interpolated into both oracle strings, so changing it cannot
     * desynchronize engine and oracle (the $AttributionWindowUs
@@ -2827,6 +2814,13 @@ object Relational {
     * object captures it uninitialized (CLAUDE.md trap). */
   private[graft] val LateLagDays = 90
 
+  /** LATE-ORDER PRIORITY COUNT (TPC-H Q4 shape, adapted — the fixtures
+    * carry no commit/receipt dates, so "late" = any line shipped more
+    * than 90 days after the order date): orders placed in 1997 with at
+    * least one late line, counted per priority. The EXISTS is a LEFT
+    * SEMI join on the order key with the ship-lag inequality as the
+    * extra join predicate — one equi-shuffle, the semi short-circuits
+    * per probe row, no fact×fact blowup and no distinct needed. */
   def lateOrderPriority(spark: SparkSession, sfDir: String,
                         lagDays: Int = LateLagDays): DataFrame = {
     require(lagDays >= 0, s"lagDays must be nonnegative, got $lagDays")
@@ -2869,8 +2863,7 @@ object Relational {
       .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp") &&
         col("l_shipdate") < lit("1998-01-01").cast("timestamp"))
       .groupBy(col("l_suppkey"))
-      .agg(sum((cents(col("l_extendedprice")) * (lit(100) - pct(col("l_discount"))))
-        .cast("decimal(38,0)")).as("rev_e4"))
+      .agg(sum(netRevE4.cast("decimal(38,0)")).as("rev_e4"))
     val mx = rev.agg(max("rev_e4").as("max_e4"))
     rev.crossJoin(broadcast(mx))
       .filter(col("rev_e4") === col("max_e4"))
@@ -3307,10 +3300,7 @@ object Relational {
     * 16-day history alert. At 100 TB the only fact-sized work is the
     * initial scan+agg; everything after is |days| ≤ ~10⁴ rows. */
   def revenueEwmaAnomaly(spark: SparkSession, sfDir: String): DataFrame = {
-    val daily = Tables.orders(spark, sfDir)
-      .groupBy(datediff(col("o_orderdate").cast("date"),
-        lit("1970-01-01").cast("date")).as("day"))
-      .agg(sum(cents(col("o_totalprice"))).as("c"))
+    val daily = dailyRevenue(spark, sfDir)
     val bounds = daily.agg(min("day").as("lo"), max("day").as("hi"))
     val cal = bounds
       .select(explode(sequence(col("lo"), col("hi"))).as("day"))
@@ -3642,8 +3632,7 @@ object Relational {
     Args.lit("ptype", ptype)
     val li = Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
-        (cents(col("l_extendedprice")) * (lit(100) - pct(col("l_discount"))))
-          .as("rev_e4"))
+        netRevE4.as("rev_e4"))
     val ord = Tables.orders(spark, sfDir)
       .select(col("o_orderkey"), col("o_custkey"),
         year(col("o_orderdate")).as("o_year"))
@@ -3830,8 +3819,7 @@ object Relational {
         col("p_size").between(20, 35) && col("qty").between(20, 30))
     Tables.lineitem(spark, sfDir)
       .select(col("l_partkey"), col("l_quantity").cast("long").as("qty"),
-        (cents(col("l_extendedprice")) * (lit(100) - pct(col("l_discount"))))
-          .as("rev_e4"))
+        netRevE4.as("rev_e4"))
       .join(broadcast(pt), col("l_partkey") === col("p_partkey"))
       .filter(branch)
       .agg(count(lit(1)).as("n_items"),
@@ -3927,8 +3915,7 @@ object Relational {
       .select("s_suppkey", "nation")
     Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
-        (cents(col("l_extendedprice")) * (lit(100) - pct(col("l_discount"))))
-          .as("rev_e4"))
+        netRevE4.as("rev_e4"))
       .join(broadcast(pt), col("l_partkey") === col("p_partkey"))
       .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
       .join(Tables.orders(spark, sfDir)
@@ -4021,8 +4008,7 @@ object Relational {
       .select("s_suppkey")
     val pv = Tables.lineitem(spark, sfDir)
       .select(col("l_partkey"), col("l_suppkey"),
-        (cents(col("l_extendedprice")) * (lit(100) - pct(col("l_discount"))))
-          .as("rev_e4"))
+        netRevE4.as("rev_e4"))
       .join(rsupp, col("l_suppkey") === col("s_suppkey"))
       .groupBy(col("l_partkey").as("p_partkey"))
       .agg(sum(col("rev_e4").cast("decimal(38,0)")).as("value_e4"))
@@ -4248,8 +4234,7 @@ object Relational {
     val li = Tables.lineitem(spark, sfDir)
       .filter(col("l_returnflag") === "R")
       .select(col("l_orderkey"),
-        (cents(col("l_extendedprice")) * (lit(100) - pct(col("l_discount"))))
-          .as("rev_e4"))
+        netRevE4.as("rev_e4"))
     val perCust = li.join(ord, col("l_orderkey") === col("o_orderkey"))
       .groupBy("o_custkey")
       .agg(sum(col("rev_e4").cast("decimal(38,0)")).as("rev"),
@@ -4315,8 +4300,7 @@ object Relational {
       .select("o_orderkey", "o_custkey")
     val li = Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey"), col("l_suppkey"),
-        (cents(col("l_extendedprice")) * (lit(100) - pct(col("l_discount"))))
-          .as("rev_e4"))
+        netRevE4.as("rev_e4"))
     val cust = Tables.customer(spark, sfDir)
       .select("c_custkey", "c_nationkey")
       .join(broadcast(natR), col("c_nationkey") === col("n_nationkey"))
@@ -4371,7 +4355,7 @@ object Relational {
       .filter(col("l_discount") >= 0.05 && col("l_discount") <= 0.07 &&
         col("l_quantity") < 24)
       .groupBy(year(col("l_shipdate")).as("ship_year"))
-      .agg(sum((cents(col("l_extendedprice")) * pct(col("l_discount")))
+      .agg(sum((cents(col("l_extendedprice")) * cents(col("l_discount")))
           .cast("decimal(38,0)")).as("up"),
         count(lit(1)).as("n_items"))
       .select(col("ship_year"),
@@ -4426,8 +4410,7 @@ object Relational {
         col("l_shipdate") < lit(TradeShipEnd).cast("timestamp"))
       .select(col("l_orderkey"), col("l_suppkey"),
         year(col("l_shipdate")).as("ship_year"),
-        (cents(col("l_extendedprice")) * (lit(100) - pct(col("l_discount"))))
-          .as("rev_e4"))
+        netRevE4.as("rev_e4"))
     li.join(supp, col("l_suppkey") === col("s_suppkey"))
       .join(Tables.orders(spark, sfDir).select("o_orderkey", "o_custkey"),
         col("l_orderkey") === col("o_orderkey"))

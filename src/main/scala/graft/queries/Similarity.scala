@@ -2677,7 +2677,8 @@ object Similarity {
   private val PqK = 256      // centroids per subspace → 8-bit codes (FAISS PQ8x8)
   private val PqIters = 3    // Lloyd rounds (the IvfIters precedent)
 
-  /** The cached (vec_id, x: Array[Double]) frame both PQ queries map over. */
+  /** The (vec_id, x: Array[Double]) frame the PQ trainer and
+    * [[embeddingPq]] map over. */
   private def pqRaw(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     vecs(spark, sfDir)
@@ -2721,23 +2722,23 @@ object Similarity {
       * it is summed, so the sums are fold-order-free. */
     def micros(d: Double): Long = math.floor(d * 1e6 + 0.5).toLong
 
-    /** A query's ADC lookup table: entry (m, k) = [[micros]](q_m·c[m][k]),
-      * the ascending 8-term fold the twins' `lut` CTE replays. */
+    /** A query's ADC lookup table flattened at stride `nK`: entry
+      * m·nK + k = [[micros]](q_m·c[m][k]), the ascending 8-term fold the
+      * twins' `lut` CTE replays. Entries past a short codebook stay 0
+      * and are never referenced. */
     def lut(cb: Array[Array[Array[Double]]], q: Array[Double],
-            subDim: Int): Array[Array[Long]] =
-      Array.tabulate(cb.length) { m =>
-        cb(m).map { w =>
-          var d = 0.0; var i = 0
+            subDim: Int, nK: Int): Array[Long] = {
+      val tab = new Array[Long](cb.length * nK); var m = 0
+      while (m < cb.length) {
+        var k = 0
+        while (k < cb(m).length) {
+          val w = cb(m)(k); var d = 0.0; var i = 0
           while (i < w.length) { d += w(i) * q(m * subDim + i); i += 1 }
-          micros(d)
+          tab(m * nK + k) = micros(d); k += 1
         }
+        m += 1
       }
-
-    /** ADC score of a coded vector: Σₘ tab(m)(codes(m)). */
-    def adc(tab: Array[Array[Long]], codes: Array[Int]): Long = {
-      var s = 0L; var m = 0
-      while (m < codes.length) { s += tab(m)(codes(m)); m += 1 }
-      s
+      tab
     }
   }
 
@@ -2756,7 +2757,7 @@ object Similarity {
     * unit-space coarse-quantizer residuals. */
   private def pqResCodebook(spark: SparkSession, sfDir: String): Array[Array[Array[Double]]] =
     Substrate.derived(spark, sfDir, Seq("embeddings"), "pq_res_codebook") {
-      trainPqCodebook(spark, unitResiduals(spark, sfDir).select(col("vec_id"), col("x")))
+      trainPqCodebook(spark, unitResiduals(spark, sfDir))
     }
 
   /** The Lloyd trainer shared by the raw and residual codebooks; `rawIn`
@@ -2810,7 +2811,7 @@ object Similarity {
       } finally { raw.unpersist(); () }
   }
 
-  /** Unit-space coarse-quantizer residuals (vec_id, cell, x = u − c_cell)
+  /** Unit-space coarse-quantizer residuals (vec_id, x = u − c_cell)
     * — the input both [[pqResCodebook]] trains on and
     * [[annCosineIvfPqRes]] encodes. One map over [[unitVecs]] with the
     * memoized centroids in a broadcast; the assignment is the same
@@ -2828,8 +2829,8 @@ object Similarity {
         val r = new Array[Double](u.length)
         var i = 0
         while (i < u.length) { r(i) = u(i) - c(i); i += 1 }
-        (id, cell, r)
-      }.toDF("vec_id", "cell", "x")
+        (id, r)
+      }.toDF("vec_id", "x")
   }
 
   /** Product quantization (Jégou et al., the FAISS `PQ8x8` topology):
@@ -3006,29 +3007,73 @@ object Similarity {
         Det.r(dot(col("v"), col("qv")) / (col("norm") * col("qnorm")), 4).as("cosine"))
       .orderBy("qid", "rank")
 
-  /** The full-corpus ADC-scored stream (qid, vec_id, score_u) shared by
-    * [[annCosinePq]] and [[annCosinePqRerank]]. */
-  private def pqAdcScored(spark: SparkSession, sfDir: String): DataFrame = {
+  /** Per-query ADC lookup tables (qid, lut) of a query frame (qid, x),
+    * built IN EXECUTORS: one map with the codebook in a broadcast, each
+    * table [[PqKernel.lut]]'s 8×256 micros array (2 KB per query) — a
+    * DataFrame column, never collected. */
+  private def adcLuts(spark: SparkSession, queries: DataFrame,
+                      cb: Array[Array[Array[Double]]]): DataFrame = {
     import spark.implicits._
-    val subDim = PqSubDim; val nQ = NumQueries
+    val subDim = PqSubDim; val nK = PqK
     val kernel = PqKernel
-    // uncached: the qvecs collect pushes its vec_id filter to parquet and
-    // the ADC scan is one lazy pass — caching here would materialize the
-    // whole corpus for a |Q|-row collect on the memo-warm path
-    val raw = pqRaw(spark, sfDir)
-    val cent = pqCodebook(spark, sfDir)
-    val qvecs = raw.filter(col("vec_id") < nQ)
-      .as[(Long, Array[Double])].collect().sortBy(_._1)
-    val lut = qvecs.map { case (qid, qx) => qid -> kernel.lut(cent, qx, subDim) }
-    val bcCent = spark.sparkContext.broadcast(cent)
-    val bcLut = spark.sparkContext.broadcast(lut)
-    raw.as[(Long, Array[Double])]
-      .flatMap { case (id, x) =>
-        val codes = kernel.encode(bcCent.value, x, subDim)
-        bcLut.value.iterator.collect {
-          case (qid, tab) if qid != id => (qid, id, kernel.adc(tab, codes))
-        }
-      }.toDF("qid", "vec_id", "score_u")
+    val bc = spark.sparkContext.broadcast(cb)
+    queries.as[(Long, Array[Double])]
+      .map { case (qid, q) => (qid, kernel.lut(bc.value, q, subDim, nK)) }
+      .toDF("qid", "lut")
+  }
+
+  /** The code frame (vec_id, codes) of a vector frame (vec_id, x): one
+    * [[PqKernel.encode]] map with the codebook in a broadcast. */
+  private def pqCodes(spark: SparkSession, vecs: DataFrame,
+                      cb: Array[Array[Array[Double]]]): DataFrame = {
+    import spark.implicits._
+    val subDim = PqSubDim
+    val kernel = PqKernel
+    val bc = spark.sparkContext.broadcast(cb)
+    vecs.as[(Long, Array[Double])]
+      .map { case (id, x) => (id, kernel.encode(bc.value, x, subDim)) }
+      .toDF("vec_id", "codes")
+  }
+
+  /** THE asymmetric-distance scorer of every PQ-coded ANN query: a
+    * candidate frame (qid, vec_id) with an optional `off_u` coarse
+    * offset, joined to its code frame ([[pqCodes]]) and LUT frame
+    * ([[adcLuts]]) and projected IMMEDIATELY to narrow (qid, vec_id,
+    * score_u) rows. score_u = off_u (or 0) + Σₘ lut[m·256 + codes[m]]:
+    * 8 codegen `element_at` lookups over micros-integerised entries, so
+    * the long sum is fold-order-free. The wide LUT array crosses one
+    * exchange at most (its own |Q|-row frame) and leaves in the join's
+    * projection — never a pair-cardinality shuffle (the r8 trap). No
+    * |Q|-sized state touches the driver. */
+  private def adcScored(cands: DataFrame, codes: DataFrame,
+                        luts: DataFrame): DataFrame = {
+    val nK = PqK
+    val off = if (cands.columns.contains("off_u")) col("off_u") else lit(0L)
+    val score = (0 until PqSub).foldLeft(off) { (acc, m) =>
+      acc + element_at(col("lut"), lit(m * nK) + element_at(col("codes"), m + 1) + 1)
+    }
+    cands.join(codes, "vec_id").join(luts, "qid")
+      .select(col("qid"), col("vec_id"), score.as("score_u"))
+  }
+
+  /** The raw-space ADC stream (qid, vec_id, score_u) of a candidate
+    * frame: [[pqCodebook]] codes and query LUTs through [[adcScored]].
+    * Shared by the PQ and IVF-PQ queries. */
+  private def pqAdcScored(spark: SparkSession, sfDir: String,
+                          cands: DataFrame): DataFrame = {
+    val raw = vecs(spark, sfDir).select("vec_id", "v")
+    val cb = pqCodebook(spark, sfDir)
+    adcScored(cands, pqCodes(spark, raw, cb),
+      adcLuts(spark, raw.filter(col("vec_id") < NumQueries), cb))
+  }
+
+  /** Every (query, corpus vector) pair but the query itself — the
+    * full-scan candidate frame of [[annCosinePq]]: the corpus ids
+    * crossed with the broadcast |Q| query ids. */
+  private def allCandidates(spark: SparkSession, sfDir: String): DataFrame = {
+    val ids = vecs(spark, sfDir).select("vec_id")
+    val qids = ids.filter(col("vec_id") < NumQueries).select(col("vec_id").as("qid"))
+    ids.join(broadcast(qids), col("vec_id") =!= col("qid"))
   }
 
   /** PQ search by asymmetric distance computation (ADC): the query keeps
@@ -3038,19 +3083,15 @@ object Similarity {
     * the codebook. The read side of [[embeddingPq]]'s 64× compression:
     * a full-corpus scored scan that never touches the float vectors.
     *
-    * Scale shape: codebook ([[pqCodebook]], memoized) + the |Q|·8·256
-    * micros-integerised LUT ride in broadcasts; one pass encodes each
-    * vector (codes only, never materialized) and emits |Q| scored rows
-    * per vector; one shuffle ranks per query. |Q| is bounded (the
-    * [[bruteForceTopK]] contract); at production scale the candidate
-    * stream would come from an IVF coarse filter (IVF-PQ) rather than
-    * the full scan, but the ADC arithmetic is exactly this. Exact
-    * cosine is joined back for the k·|Q| result rows only — the
-    * approximation-quality readout. The per-query LUTs here are built
-    * driver-side from the collected qvecs — correct for the bounded
-    * fixture |Q|; a batch-retrieval workload (|Q| ≫ 10) must use
-    * [[annCosineIvfPqBatch]], whose LUTs are executor-built and never
-    * collected.
+    * Scale shape: the codebook ([[pqCodebook]], memoized) rides in a
+    * broadcast; one pass encodes each vector (codes only, never
+    * materialized), the per-query LUTs are built in executors, and
+    * [[adcScored]] scores every (query, vector) pair; one shuffle ranks
+    * per query. |Q| is bounded (the [[bruteForceTopK]] contract); at
+    * production scale the candidate stream comes from an IVF coarse
+    * filter ([[annCosineIvfPq]]) rather than the full scan, but the ADC
+    * arithmetic is exactly this. Exact cosine is joined back for the
+    * k·|Q| result rows only — the approximation-quality readout.
     *
     * Determinism: LUT entries integerise to micros (⌊·1e6+0.5⌋) before
     * the 8-term long sum — fold-order-free — and ranking ties break
@@ -3058,7 +3099,7 @@ object Similarity {
     * double fold. */
   def annCosinePq(spark: SparkSession, sfDir: String, k: Int = TopK): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    adcTopK(spark, sfDir, pqAdcScored(spark, sfDir), k)
+    adcTopK(spark, sfDir, pqAdcScored(spark, sfDir, allCandidates(spark, sfDir)), k)
   }
 
   /** How many ADC-ranked candidates the re-rank stage keeps per query,
@@ -3090,7 +3131,8 @@ object Similarity {
     * fold on both engines), ties vec_id ASC. */
   def annCosinePqRerank(spark: SparkSession, sfDir: String, k: Int = TopK): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    adcRerank(spark, sfDir, pqAdcScored(spark, sfDir), k, "adc_dot")
+    adcRerank(spark, sfDir, pqAdcScored(spark, sfDir, allCandidates(spark, sfDir)),
+      k, "adc_dot")
   }
 
   /** Shared DuckDB fragment: [[pqChainSql]]'s `enc` joined against the
@@ -3162,32 +3204,6 @@ object Similarity {
        |$pqAdcRankedSql,
        |$adcRerankSql""".stripMargin
 
-  /** The candidate-restricted ADC-scored stream (qid, vec_id, score_u)
-    * shared by [[annCosineIvfPq]] and [[annCosineIvfPqRerank]].
-    * Driver-LUT plumbing (fine at fixture |Q|) — batch retrieval goes
-    * through [[annCosineIvfPqBatch]]. */
-  private def ivfPqScored(spark: SparkSession, sfDir: String,
-                          nProbe: Int): DataFrame = {
-    import spark.implicits._
-    val subDim = PqSubDim; val nQ = NumQueries
-    val kernel = PqKernel
-    val cands = ivfCandidates(spark, sfDir, nProbe)
-    val raw = pqRaw(spark, sfDir)
-    val cent = pqCodebook(spark, sfDir)
-    val qvecs = raw.filter(col("vec_id") < nQ)
-      .as[(Long, Array[Double])].collect().sortBy(_._1)
-    val lut = qvecs.map { case (qid, qx) => qid -> kernel.lut(cent, qx, subDim) }.toMap
-    val bcCent = spark.sparkContext.broadcast(cent)
-    val bcLut = spark.sparkContext.broadcast(lut)
-    val codes = raw.as[(Long, Array[Double])]
-      .map { case (id, x) => (id, kernel.encode(bcCent.value, x, subDim)) }
-      .toDF("vec_id", "codes")
-    cands.join(codes, "vec_id")
-      .as[(Long, Long, Array[Int])]  // (vec_id, qid, codes) — join-key first
-      .map { case (vid, qid, cs) => (qid, vid, kernel.adc(bcLut.value(qid), cs)) }
-      .toDF("qid", "vec_id", "score_u")
-  }
-
   /** IVF-PQ — the production ANN composition (FAISS `IVF,PQ8x8`):
     * [[ivfCandidates]] prunes the corpus to each query's nProbe coarse
     * cells (O(nProbe·n/cells) candidates ≈ O(√n) at derived cell
@@ -3202,7 +3218,8 @@ object Similarity {
     * vec_id ASC — every stage already proven hash-exact, composed. */
   def annCosineIvfPq(spark: SparkSession, sfDir: String,
                      nProbe: Int = NProbe): DataFrame =
-    adcTopK(spark, sfDir, ivfPqScored(spark, sfDir, nProbe), TopK)
+    adcTopK(spark, sfDir, pqAdcScored(spark, sfDir, ivfCandidates(spark, sfDir, nProbe)),
+      TopK)
 
   /** [[annCosineIvfPq]] + the exact re-rank stage — the full production
     * composition (FAISS `IVF…,PQ8x8,Refine`): coarse cells prune the
@@ -3219,7 +3236,8 @@ object Similarity {
     * ASC at both ranks. */
   def annCosineIvfPqRerank(spark: SparkSession, sfDir: String,
                            nProbe: Int = NProbeMp): DataFrame =
-    adcRerank(spark, sfDir, ivfPqScored(spark, sfDir, nProbe), TopK, "adc_dot")
+    adcRerank(spark, sfDir, pqAdcScored(spark, sfDir, ivfCandidates(spark, sfDir, nProbe)),
+      TopK, "adc_dot")
 
   /** Shared DuckDB fragment: [[ivfChainSql]]'s `cand` scored through the
     * `p_`-prefixed PQ chain into the candidate-restricted ADC-ranked
@@ -3277,75 +3295,39 @@ object Similarity {
     * directly estimates the cosine: u_q·u = u_q·c_cell + u_q·r ≈
     * off(q, cell) + Σₘ LUT_q[m][code_m].
     *
-    * Scale shape = [[annCosineIvfPqRerank]] plus one |Q|·cells offset
-    * table riding the broadcast beside the |Q|·8·256 LUT (both model
-    * state; at 65536 cells and 10 queries that is 5 MB): candidates
-    * from the multiprobe coarse quantizer, ADC from 8-byte codes + two
-    * table lookups, floats fetched for the |Q|·8k shortlist only. Both
-    * tables are driver-built from collected qvecs — bounded at fixture
-    * |Q|; batch retrieval (|Q| ≫ 10) uses [[annCosineIvfPqBatch]]'s
-    * executor-built, never-collected equivalents (same hash).
+    * Scale shape = [[annCosineIvfPqRerank]]: candidates from the
+    * multiprobe coarse quantizer, ADC from 8-byte codes plus the coarse
+    * offset, floats fetched for the |Q|·8k shortlist only. This is
+    * [[annCosineIvfPqBatch]] at the fixture's [[NumQueries]] queries —
+    * one builder serves both registry names.
     * Determinism: off/LUT entries integerise to micros before the
     * order-free long sum; the encode replays the oracle's `r_enc` CTE
     * (same ‖c‖²−2c·x fold, ties k-ASC); residuals are exact IEEE
     * subtractions of hash-proven inputs (uv, cent, fin all oracle-
     * shared with ann_cosine_ivf). */
   def annCosineIvfPqRes(spark: SparkSession, sfDir: String,
-                        nProbe: Int = NProbeMp): DataFrame = {
-    import spark.implicits._
-    val subDim = PqSubDim; val nQ = NumQueries
-    val kernel = PqKernel
-    val cands = ivfCandidates(spark, sfDir, nProbe)
-    val coarse = ivfCentroids(spark, sfDir)
-    val cb = pqResCodebook(spark, sfDir)
-    val qvecs = unitVecs(spark, sfDir).as[(Long, Array[Double])]
-      .filter(_._1 < nQ).collect().sortBy(_._1)
-    val lut = qvecs.map { case (qid, qu) => qid -> kernel.lut(cb, qu, subDim) }.toMap
-    val off = qvecs.map { case (qid, qu) =>
-      qid -> IvfKernel.scores(coarse, qu).map(kernel.micros)
-    }.toMap
-    val bcCb = spark.sparkContext.broadcast(cb)
-    val bcLut = spark.sparkContext.broadcast(lut)
-    val bcOff = spark.sparkContext.broadcast(off)
-    val codes = unitResiduals(spark, sfDir).as[(Long, Int, Array[Double])]
-      .map { case (id, cell, r) => (id, cell, kernel.encode(bcCb.value, r, subDim)) }
-      .toDF("vec_id", "cell", "codes")
-    val scored = cands.join(codes, "vec_id")
-      .as[(Long, Long, Int, Array[Int])]  // (vec_id, qid, cell, codes)
-      .map { case (vid, qid, cell, cs) =>
-        (qid, vid, bcOff.value(qid)(cell) + kernel.adc(bcLut.value(qid), cs))
-      }.toDF("qid", "vec_id", "score_u")
-    adcRerank(spark, sfDir, scored, TopK, "adc_cos")
-  }
+                        nProbe: Int = NProbeMp): DataFrame =
+    annCosineIvfPqBatch(spark, sfDir, nProbe, NumQueries)
 
-  /** BATCH-RETRIEVAL IVF-PQ — [[annCosineIvfPqRes]]'s exact semantics
-    * (same candidates, same micros-integerised ADC arithmetic, same
-    * re-rank: the SAME oracle hash-checks both), re-plumbed so that NO
-    * |Q|-scaled structure ever touches the driver (r9 verdict #5 — the
-    * three fixture-|Q| paths above build per-query LUTs driver-side
-    * over collected query vectors, which serializes a batch-retrieval
-    * workload at |Q| ≫ 10):
+  /** BATCH-RETRIEVAL IVF-PQ — [[annCosineIvfPqRes]] over the first
+    * `nQueries` vectors as queries, with NO |Q|-scaled structure on the
+    * driver:
     *
-    *  - per-query 8×256 LUTs are built IN EXECUTORS (one map over the
-    *    query frame with the codebook in a broadcast) and live as a
-    *    DataFrame column — 2 KB per query, shuffled once on qid, never
-    *    collected;
-    *  - per-(query, probed-cell) coarse offsets ride the probe rows —
-    *    they are the SAME dots the probe selection already computes, so
-    *    the |Q|·cells off table the `_res` path broadcasts disappears;
-    *  - ADC scoring is the codes⋈(qid-keyed LUT) join projected
-    *    IMMEDIATELY to narrow (qid, vec_id, score_u) rows — the wide
-    *    LUT array crosses exactly one exchange (its own |Q|-row frame;
-    *    the r8 array-through-pair-shuffle trap), and the 8 table
-    *    lookups are codegen `element_at`s, not a typed map.
+    *  - per-query 8×256 LUTs are built IN EXECUTORS ([[adcLuts]]) —
+    *    2 KB per query, shuffled once on qid, never collected;
+    *  - per-(query, probed-cell) coarse offsets ride the probe rows as
+    *    `off_u` — they are the SAME dots the probe selection already
+    *    computes, so no |Q|·cells offset table exists anywhere;
+    *  - [[adcScored]] joins codes and LUTs onto the candidates and
+    *    projects to narrow (qid, vec_id, score_u) rows in the join
+    *    output itself.
     *
     * Driver state is O(codebook + centroids) — independent of |Q| and
     * n. The one |Q|-proportional transfer left is the (qid, cell,
     * off_u) probe broadcast, 24 B/query·nprobe (at |Q|=100k ≈ 20 MB;
     * past broadcast range it becomes a shuffle join on cell — the
-    * documented switch). ScaleProbe's `ann_batch` point runs |Q|=100k
-    * queries through this path and pins equality to the driver-LUT
-    * path at a |Q| both can afford. */
+    * documented switch). ScaleProbe's `ann_batch_bulk` point runs
+    * |Q| = 100k queries through this path. */
   def annCosineIvfPqBatch(spark: SparkSession, sfDir: String,
                           nProbe: Int = NProbeMp,
                           nQueries: Long = NumQueries): DataFrame = {
@@ -3353,41 +3335,25 @@ object Similarity {
       s"nProbe must be in 1..$IvfMinCells, got $nProbe")
     require(nQueries > 0, s"nQueries must be positive, got $nQueries")
     import spark.implicits._
-    val nSub = PqSub; val subDim = PqSubDim; val nK = PqK; val nQ = nQueries
+    val nQ = nQueries
     val kernel = PqKernel
     val ivf = IvfKernel
     val bcCent = spark.sparkContext.broadcast(ivfCentroids(spark, sfDir))
-    val bcCb = spark.sparkContext.broadcast(pqResCodebook(spark, sfDir))
+    val cb = pqResCodebook(spark, sfDir)
     val qframe = unitVecs(spark, sfDir).as[(Long, Array[Double])]
       .filter(_._1 < nQ)
-    // executor-built LUTs, flattened at stride 256: (m, k) -> m·256 + k
-    // (entries past a short codebook stay 0, never referenced)
-    val luts = qframe.map { case (qid, qu) =>
-      (qid, kernel.lut(bcCb.value, qu, subDim).flatMap(_.padTo(nK, 0L)))
-    }.toDF("qid", "lut")
     // probe rows carry the coarse offset: the identical centroid score
     // the probe ranking itself computes — exactly ivfCandidates' order
     val probes = qframe.flatMap { case (qid, u) =>
       ivf.topCells(bcCent.value, u, nProbe)
         .map { case (c, s) => (qid, c, kernel.micros(s)) }
     }.toDF("qid", "cell", "off_u")
-    val codes = unitResiduals(spark, sfDir).as[(Long, Int, Array[Double])]
-      .map { case (id, _, r) => (id, kernel.encode(bcCb.value, r, subDim)) }
-      .toDF("vec_id", "codes")
     val cands = ivfAssigned(spark, sfDir)
       .join(broadcast(probes), "cell")
       .filter(col("vec_id") =!= col("qid"))
       .select("qid", "vec_id", "off_u")
-    // ADC: 8 codegen element_at lookups; project to narrow rows in the
-    // join output itself — the lut array never leaves this operator
-    val adc = (0 until nSub).foldLeft(col("off_u")) { (acc, m) =>
-      acc + element_at(col("lut"),
-        lit(m * nK) + element_at(col("codes"), m + 1) + 1)
-    }
-    val scored = cands
-      .join(codes, "vec_id")
-      .join(luts, "qid")
-      .select(col("qid"), col("vec_id"), adc.as("score_u"))
+    val scored = adcScored(cands, pqCodes(spark, unitResiduals(spark, sfDir), cb),
+      adcLuts(spark, qframe.toDF(), cb))
     adcRerank(spark, sfDir, scored, TopK, "adc_cos")
   }
 

@@ -228,13 +228,6 @@ object Temporal {
       |WHERE h < frac * 1152921504606846976
       |ORDER BY doc_id""".stripMargin
 
-  /** Deterministic train/val/test assignment — the held-out-split step of
-    * a training pipeline. Same md5-gate idiom as [[stratifiedSample]]:
-    * bucket = hash(doc_id) mod 100 → test (<5) / val (<10) / train. A
-    * pure function of the id: reproducible across runs, engines, and
-    * repartitioning, and docs keep their split when the corpus grows
-    * (the property that matters for contamination control — a doc never
-    * migrates from test into train on re-ingestion). */
   /** The split hash-bucket as a reusable Column (md5 of the id, first 15
     * hex chars, mod 100) — shared with contamination_check so both sides
     * of the audit agree on the split by construction. */
@@ -246,6 +239,13 @@ object Temporal {
   def bucketSql(id: String): String =
     s"CAST(CAST('0x' || substr(md5(CAST($id AS VARCHAR)), 1, 15) AS UBIGINT) % 100 AS INTEGER)"
 
+  /** Deterministic train/val/test assignment — the held-out-split step of
+    * a training pipeline. Same md5-gate idiom as [[stratifiedSample]]:
+    * bucket = hash(doc_id) mod 100 → test (<5) / val (<10) / train. A
+    * pure function of the id: reproducible across runs, engines, and
+    * repartitioning, and docs keep their split when the corpus grows
+    * (the property that matters for contamination control — a doc never
+    * migrates from test into train on re-ingestion). */
   def splitAssign(spark: SparkSession, sfDir: String): DataFrame =
     Tables.documents(spark, sfDir)
       .withColumn("bucket", bucketCol(col("doc_id")))
@@ -525,7 +525,7 @@ object Temporal {
     Tables.eventsTs(spark, sfDir)
       .select(col("event_id"), col("user_id"), col("ts"), col("value"),
         unix_micros(col("ts")).as("ts_us"))
-      .withColumn("cents", round(col("value") * 100).cast("long"))
+      .withColumn("cents", Det.cents(col("value")))
       .withColumn("n_24h",
         count(lit(1)).over(wLe) - count(lit(1)).over(wLt))
       .withColumn("val_24h",
@@ -585,7 +585,7 @@ object Temporal {
   def eventsZscore(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.eventsTs(spark, sfDir)
       .select(col("event_id"), col("user_id"), col("event_type"),
-        round(col("value") * 100).cast("long").as("c"))
+        Det.cents(col("value")).as("c"))
     // cast BEFORE the multiply: c*c in LongType wraps silently past
     // |value| ≈ $30.4M (c ≈ 3e9 cents); the decimal product is exact and
     // matches the oracle's decimal multiply instead of diverging
@@ -952,7 +952,7 @@ object Temporal {
         expr(s"t1 DIV $BurstWindowUs"))).as("bin"))
     val pt = ev.filter(col("event_type") === "purchase")
       .select(col("ts_us").as("p_ts"),
-        round(col("value") * 100).cast("long").as("cents"),
+        Det.cents(col("value")).as("cents"),
         expr(s"ts_us DIV $BurstWindowUs").as("bin"))
     val hits = pt.join(ivBins, "bin")
       .filter(col("p_ts") >= col("t0") && col("p_ts") < col("t1"))
@@ -1068,7 +1068,7 @@ object Temporal {
     val ev = Tables.eventsTs(spark, sfDir)
       .select(col("user_id"), col("event_type"), col("ts"),
         to_date(col("ts")).as("day"),
-        round(col("value") * 100).cast("long").as("cents"))
+        Det.cents(col("value")).as("cents"))
     val cohorts = ev.groupBy("user_id").agg(min("day").as("cohort_day"))
     val cells = ev.filter(col("event_type") === "purchase")
       .join(cohorts, "user_id")
@@ -1362,7 +1362,7 @@ object Temporal {
   def eventsMadOutliers(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.eventsTs(spark, sfDir)
       .select(col("event_id"), col("user_id"),
-        round(col("value") * 100).cast("long").as("c"))
+        Det.cents(col("value")).as("c"))
     val wv = Window.partitionBy("user_id").orderBy(col("c").asc, col("event_id").asc)
     val n = ev.groupBy("user_id").agg(count(lit(1)).as("n"))
     val med = ev.withColumn("rk", row_number().over(wv))
@@ -1795,7 +1795,7 @@ object Temporal {
     val ev = Tables.eventsTs(spark, sfDir)
       .filter(col("value").isNotNull && !isnan(col("value")) &&
         abs(col("value")) < lit(Double.PositiveInfinity))
-      .select(round(col("value") * 100).cast("long").as("c"))
+      .select(Det.cents(col("value")).as("c"))
     val hist = Hist.bounded(ev.groupBy("c").agg(count(lit(1)).as("cnt")),
         "events_winsorized_stats")
       .map(r => (r.getAs[Long]("c"), r.getAs[Long]("cnt")))
@@ -1887,7 +1887,7 @@ object Temporal {
       .filter(col("user_id").isNotNull)
       .groupBy(col("user_id"))
       .agg(coalesce(sum(when(col("event_type") === "purchase",
-        round(col("value") * 100).cast("long"))), lit(0L)).as("c"))
+        Det.cents(col("value")))), lit(0L)).as("c"))
       .select(col("user_id") % 2 === 0, col("c")).toDF("treat", "c")
     val g = perUser.agg(
       count(when(!col("treat"), 1)).as("n_c"),
@@ -2039,7 +2039,7 @@ object Temporal {
         .filter(col("value").isNotNull && !isnan(col("value")) &&
           abs(col("value")) < lit(Double.PositiveInfinity))
         .select(col("event_type"),
-          round(col("value") * 100).cast("long").as("c"))
+          Det.cents(col("value")).as("c"))
         .groupBy("event_type", "c").agg(count(lit(1)).as("cnt")),
         "events_quantiles_by_type")
       .map(r => (r.getAs[String]("event_type"), r.getAs[Long]("c"),
@@ -2147,19 +2147,6 @@ object Temporal {
   // Seasonal decomposition (hour-of-day profile + seasonality index)
   // --------------------------------------------------------------------
 
-  /** HOUR-OF-DAY SEASONALITY: per (event_type, hour) the event count,
-    * mean value, and a seasonality index (that hour's share of the
-    * type's traffic vs a flat 1/24 baseline — idx 2.0 = "this hour runs
-    * at twice the type's average rate"). The capacity-planning /
-    * anomaly-baseline readout every event pipeline keeps: residuals
-    * against `n/idx` are the deseasonalized series.
-    *
-    * One corpus scan into a (event_type, hour) grouped agg — the output
-    * frame is ≤ 24·|types| rows, bounded model state at ANY corpus
-    * size. The per-type totals come from a window over THAT bounded
-    * frame (partitioned on event_type — a shuffle of ≤120 rows), never
-    * a second corpus scan. Cents-integer value sums; [[Det.r]] final
-    * rounding; total (event_type, hr) ordering. */
   /** The streamable stage of [[eventsSeasonal]]: one grouped agg — runs
     * identically over a batch frame or a complete-mode stream
     * (StreamingSpec proves the parity; windows and second aggs are not
@@ -2167,7 +2154,7 @@ object Temporal {
     * frame instead). */
   private[graft] def seasonalBase(ev: DataFrame): DataFrame = ev
     .select(col("event_type"), hour(col("ts")).as("hr"),
-      round(col("value") * 100).cast("long").as("c"))
+      Det.cents(col("value")).as("c"))
     .groupBy("event_type", "hr")
     .agg(count(lit(1)).as("n"), sum("c").as("sc"))
 
@@ -2181,6 +2168,19 @@ object Temporal {
       Det.r((col("n") * 24).cast("double") / col("tot"), 4).as("idx"))
     .orderBy("event_type", "hr")
 
+  /** HOUR-OF-DAY SEASONALITY: per (event_type, hour) the event count,
+    * mean value, and a seasonality index (that hour's share of the
+    * type's traffic vs a flat 1/24 baseline — idx 2.0 = "this hour runs
+    * at twice the type's average rate"). The capacity-planning /
+    * anomaly-baseline readout every event pipeline keeps: residuals
+    * against `n/idx` are the deseasonalized series.
+    *
+    * One corpus scan into a (event_type, hour) grouped agg — the output
+    * frame is ≤ 24·|types| rows, bounded model state at ANY corpus
+    * size. The per-type totals come from a window over THAT bounded
+    * frame (partitioned on event_type — a shuffle of ≤120 rows), never
+    * a second corpus scan. Cents-integer value sums; [[Det.r]] final
+    * rounding; total (event_type, hr) ordering. */
   def eventsSeasonal(spark: SparkSession, sfDir: String): DataFrame =
     seasonalFinish(seasonalBase(Tables.eventsTs(spark, sfDir)))
 

@@ -222,7 +222,7 @@ object TextJobs {
       .option("header", "true").csv(out)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"),
-        sum(round(col("value") * 100).cast("long")).as("value_cents"))
+        sum(Det.cents(col("value"))).as("value_cents"))
       .orderBy("event_type")
   }
 
@@ -264,7 +264,7 @@ object TextJobs {
     spark.read.orc(out)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"),
-        sum(round(col("value") * 100).cast("long")).as("value_cents"),
+        sum(Det.cents(col("value"))).as("value_cents"),
         min("event_id").as("min_event"),
         max("event_id").as("max_event"))
       .orderBy("event_type")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
 import graft.{Query, Tables}
-import graft.queries.Hist
+import graft.queries.{Det, Hist}
 import graft.Query.ArgOps
 
 /** Structured Streaming over the stream-shaped `events` table.
@@ -24,9 +24,6 @@ import graft.Query.ArgOps
   */
 object StreamingJobs {
 
-  /** Integerised 2-dp money (see Relational: exact, order-independent). */
-  private def cents(c: org.apache.spark.sql.Column) = round(c * 100).cast("long")
-
   // --------------------------------------------------------------------
   // Shared batch/stream transformations
   // --------------------------------------------------------------------
@@ -36,7 +33,7 @@ object StreamingJobs {
     events.withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
-        (sum(cents(col("value"))).cast("double") / 100).as("total_value"))
+        (sum(Det.cents(col("value"))).cast("double") / 100).as("total_value"))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n_events"), col("total_value"))
 
@@ -167,7 +164,7 @@ object StreamingJobs {
         col("c_mktsegment").as("segment"))), Seq("user_id"))
       .groupBy(window(col("ts"), "1 hour"), col("segment"))
       .agg(count(lit(1)).as("n_events"),
-        (sum(cents(col("value"))).cast("double") / 100).as("total_value"))
+        (sum(Det.cents(col("value"))).cast("double") / 100).as("total_value"))
       .select(col("window.start").as("window_start"), col("segment"),
         col("n_events"), col("total_value"))
 

@@ -36,4 +36,13 @@ class ActionBudgetSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       ActionBudget.measure(s)(queries.Relational.mvRefreshIncremental(s, TestSpark.sf))
     assert(spent.jobs == 0)
   }
+
+  test("ADC builders: a second builder call in one session launches NO job") {
+    for (name <- Seq("ann_cosine_pq", "ann_cosine_ivfpq", "ann_cosine_ivfpq_res")) {
+      val build = SparkEntry.queries(name)
+      val s = spark.newSession()
+      ActionBudget.measure(s)(build(s, TestSpark.sf))
+      assert(ActionBudget.measure(s)(build(s, TestSpark.sf)).jobs == 0, name)
+    }
+  }
 }
