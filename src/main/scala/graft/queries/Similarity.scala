@@ -3024,13 +3024,13 @@ object Similarity {
 
   /** The code frame (vec_id, codes) of a vector frame (vec_id, x): one
     * [[PqKernel.encode]] map with the codebook in a broadcast. */
-  private def pqCodes(spark: SparkSession, vecs: DataFrame,
+  private def pqCodes(spark: SparkSession, xs: DataFrame,
                       cb: Array[Array[Array[Double]]]): DataFrame = {
     import spark.implicits._
     val subDim = PqSubDim
     val kernel = PqKernel
     val bc = spark.sparkContext.broadcast(cb)
-    vecs.as[(Long, Array[Double])]
+    xs.as[(Long, Array[Double])]
       .map { case (id, x) => (id, kernel.encode(bc.value, x, subDim)) }
       .toDF("vec_id", "codes")
   }
@@ -3084,12 +3084,12 @@ object Similarity {
     * a full-corpus scored scan that never touches the float vectors.
     *
     * Scale shape: the codebook ([[pqCodebook]], memoized) rides in a
-    * broadcast; one pass encodes each vector (codes only, never
-    * materialized), the per-query LUTs are built in executors, and
-    * [[adcScored]] scores every (query, vector) pair; one shuffle ranks
-    * per query. |Q| is bounded (the [[bruteForceTopK]] contract); at
-    * production scale the candidate stream comes from an IVF coarse
-    * filter ([[annCosineIvfPq]]) rather than the full scan, but the ADC
+    * broadcast; one pass encodes each vector into its 8 codes, the
+    * per-query LUTs are built in executors, and [[adcScored]] scores
+    * every (query, vector) pair; one shuffle ranks per query. |Q| is
+    * bounded (the [[bruteForceTopK]] contract); at production scale the
+    * candidate stream comes from an IVF coarse filter
+    * ([[annCosineIvfPq]]) rather than the full scan, but the ADC
     * arithmetic is exactly this. Exact cosine is joined back for the
     * k·|Q| result rows only — the approximation-quality readout.
     *
