@@ -293,24 +293,27 @@ object Curation {
     * an assignment table). Both aggregates shuffle on the content hash
     * — `leaked` directly, the per-split distinct-count via the (split,
     * ch) expand — carrying 16-byte keys + a long, never the text. The
-    * two scalar frames (corpus total, leak count) are 1-row broadcasts.
+    * corpus total is Σ n_docs over the ≤ 3 split rows, attached through
+    * [[Hist.withTotals]] (no second pass over the assignment); the leak
+    * count is a 1-row broadcast. At 100 TB the per-split aggregation
+    * stays distributed, and at most the cap's worth of rows meets in one
+    * task.
     * Distinct counts are exact by oracle contract; the 100 TB audit
     * variant swaps HLL exactly as [[Relational.tableProfile]] documents.
     * Empty corpus: zero rows on both engines (the keyless scalars cross
     * an empty per-split aggregate). */
   def leakageSafeSplit(spark: SparkSession, sfDir: String): DataFrame = {
     val a = splitAssigned(spark, sfDir)
-    val tot = a.agg(count(lit(1)).as("n_total"))
     val leak = a.groupBy("ch")
       .agg(count_distinct(col("split")).as("ns"))
       .filter(col("ns") > 1)
       .agg(count(lit(1)).as("leaked"))
-    a.groupBy("split")
+    val perSplit = a.groupBy("split")
       .agg(count(lit(1)).as("n_docs"),
         count_distinct(col("ch")).as("n_clusters"),
         (count(lit(1)) - count_distinct(col("ch"))).as("n_dup_docs"),
         sum("n_tokens").as("tokens"))
-      .crossJoin(broadcast(tot))
+    Hist.withTotals(perSplit, "leakage_safe_split", sum("n_docs").as("n_total"))
       .crossJoin(broadcast(leak))
       .select(col("split"), col("n_docs"), col("n_clusters"),
         col("n_dup_docs"), col("tokens"),
@@ -363,8 +366,11 @@ object Curation {
     *
     * Shapes: one scan into a (split, lang) grouped agg (≤ 3·|langs|
     * rows), cross-joined against the 3×|langs| dense grid built from
-    * two bounded distinct frames; shares divide exact longs in IEEE and
-    * round via [[Det]]; the deviation subtracts the two exact-division
+    * two bounded distinct frames; the corpus total is Σ n_lang over the
+    * |langs|-row frame, attached through [[Hist.withTotals]] (at 100 TB
+    * the per-lang aggregation stays distributed, and at most the cap's
+    * worth of rows meets in one task); shares divide exact longs in
+    * IEEE and round via [[Det]]; the deviation subtracts the two exact-division
     * doubles (two fixed operands — fold-order-free, identical on both
     * engines), never a long×long product that could outgrow 2⁶³ at
     * corpus scale. */
@@ -374,12 +380,13 @@ object Curation {
       .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("tokens"))
     val s = a.groupBy("split").agg(count(lit(1)).as("n_split"))
     val l = a.groupBy("lang").agg(count(lit(1)).as("n_lang"))
-    val tot = a.agg(count(lit(1)).as("n_total"))
     // dense grid: a language missing from a split must REPORT, not vanish
     val grid = s.select("split").crossJoin(l.select("lang"))
     grid
       .join(sl, Seq("split", "lang"), "left")
-      .join(s, "split").join(broadcast(l), "lang").crossJoin(broadcast(tot))
+      .join(s, "split")
+      .join(broadcast(Hist.withTotals(l, "split_balance_audit",
+        sum("n_lang").as("n_total"))), "lang")
       .select(col("split"), col("lang"),
         coalesce(col("n_docs"), lit(0L)).as("n_docs"),
         coalesce(col("tokens"), lit(0L)).as("tokens"),

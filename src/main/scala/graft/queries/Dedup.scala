@@ -2377,8 +2377,12 @@ object Dedup {
     *
     * Scale: one scan of the materialized label table ([[
     * dedupClustersMaterialized]] — dup-mass rows), a bounded ≤64-band
-    * agg, two 1-row aggregates for the singleton row. Empty corpus →
-    * zero rows on both engines (the n_clusters > 0 guard). */
+    * agg, two 1-row aggregates for the singleton row. The bands' doc
+    * counts partition the corpus, so the corpus total is Σ n_docs over
+    * the ≤ 64 band rows through [[Hist.withTotals]]: at 100 TB the
+    * per-band aggregation stays distributed, and at most the cap's worth
+    * of rows meets in one task. Empty corpus → zero rows on both engines
+    * (the n_clusters > 0 guard). */
   def dupClusterSizeDist(spark: SparkSession, sfDir: String): DataFrame = {
     val clusters = dedupClustersMaterialized(spark, sfDir)
     val total = Tables.documents(spark, sfDir)
@@ -2392,9 +2396,8 @@ object Dedup {
       .select(lit(1).as("band"),
         (col("n_total") - col("n_labeled")).as("n_clusters"),
         (col("n_total") - col("n_labeled")).as("n_docs"))
-    bands.unionByName(singleton)
-      .filter(col("n_clusters") > 0)
-      .crossJoin(broadcast(total))
+    Hist.withTotals(bands.unionByName(singleton).filter(col("n_clusters") > 0),
+        "dup_cluster_size_dist", sum("n_docs").as("n_total"))
       .select(col("band"), col("n_clusters"), col("n_docs"),
         expr("shiftleft(CAST(1 AS BIGINT), band - 1)").as("min_size"),
         Det.r(col("n_docs").cast("double") / col("n_total"), 6).as("doc_share"))

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** Driver-walked VALUE histograms: the occupancy guard, the distributed
   * prefix scan, the nearest-rank cut and the count-histogram drift
-  * ledger.
+  * ledger — and the grand totals of a bounded grouped frame
+  * ([[withTotals]]).
   *
   * Several queries fold a corpus to a histogram keyed by a quantised
   * value — cents, $100 buckets, day counts, equi-width bins — and walk
@@ -111,6 +112,37 @@ private[graft] object Hist {
     binned.join(broadcast(carries.toDF(bin, carry)), Seq(bin))
       .withColumn(out,
         running(Window.partitionBy(bin).orderBy(order: _*)) + col(carry))
+  }
+
+  // --------------------------------------------------------------------
+  // Grand totals on a bounded grouped frame
+  // --------------------------------------------------------------------
+
+  /** `frame` with the grand totals `aggs` (aliased aggregates over its
+    * rows) attached to every row, through ONE global aggregate: the rows
+    * ride a `collect_list` beside the totals and explode back. No
+    * broadcast job, no cache and no second pass over `frame`'s input.
+    * Sound only for a frame with a STRUCTURAL row bound (|sources|,
+    * bands, ≤ 2¹⁶ cells); a frame past [[ScanBins]] rows fails the query
+    * at run time with a message naming `what`. An empty frame gives zero
+    * rows, as a cross join with its one-row total does. Builds lazily:
+    * no driver action.
+    *
+    * 100 TB story: the aggregation that produces `frame` stays
+    * distributed; at most [[ScanBins]] of its output rows meet in one
+    * task. A corpus-sized or key-grained frame keeps a broadcast one-row
+    * total instead. */
+  def withTotals(frame: DataFrame, what: String, aggs: Column*): DataFrame = {
+    val rows = frame.columns.map(c => col(s"`$c`"))
+    val folded = frame.agg(collect_list(struct(rows: _*)).as("_rows"), aggs: _*)
+    val totals = folded.columns.tail.map(c => col(s"`$c`")).toSeq
+    val guarded = when(size(col("_rows")) > ScanBins, raise_error(lit(
+      s"$what: the frame given totals exceeds $ScanBins rows — its row " +
+        "bound is not structural. Attach a broadcast one-row total " +
+        "instead.")))
+      .otherwise(col("_rows"))
+    folded.select(explode(guarded).as("_row") +: totals: _*)
+      .select(col("_row.*") +: totals: _*)
   }
 
   // --------------------------------------------------------------------

@@ -1992,13 +1992,15 @@ object Relational {
     * customer extract leaves the warehouse (a cell smaller than k
     * re-identifies its members; those rows must be suppressed or
     * generalized). One grouped agg; output is |nations·segments|
-    * bounded; the total is a windowless broadcast one-row frame. */
+    * bounded; the total is Σ n over those cells through
+    * [[Hist.withTotals]] (no second scan). At 100 TB the per-cell
+    * aggregation stays distributed, and at most the cap's worth of rows
+    * meets in one task. */
   def kAnonymity(spark: SparkSession, sfDir: String): DataFrame = {
-    val cust = Tables.customer(spark, sfDir)
-    val total = cust.agg(count(lit(1)).as("total"))
-    cust.groupBy(col("c_nationkey"), col("c_mktsegment"))
+    val cells = Tables.customer(spark, sfDir)
+      .groupBy(col("c_nationkey"), col("c_mktsegment"))
       .agg(count(lit(1)).as("n"))
-      .crossJoin(broadcast(total))
+    Hist.withTotals(cells, "k_anonymity", sum("n").as("total"))
       .select(col("c_nationkey"), col("c_mktsegment"), col("n"),
         (col("n") >= KAnonK).as("k_ok"),
         Det.r(col("n").cast("double") / col("total"), 6).as("share"))
@@ -3156,7 +3158,10 @@ object Relational {
     * terms) is model-state-sized. The χ² term is one fixed
     * parenthesization over exact integer inputs, micro-rounded (Det.r);
     * the grid is gated on n>0 so an empty corpus emits zero rows, not a
-    * phantom grid. At 100 TB: scan + 9-row shuffle — nothing else grows. */
+    * phantom grid. n = Σ n_obs rides [[Hist.withTotals]] over the 9-row
+    * grid. At 100 TB: scan + 9-row shuffle — the per-digit aggregation
+    * stays distributed, and at most the cap's worth of rows meets in one
+    * task. */
   def benfordAudit(spark: SparkSession, sfDir: String): DataFrame = {
     val obs = Tables.orders(spark, sfDir)
       .select(cents(col("o_totalprice")).as("c"))
@@ -3164,16 +3169,16 @@ object Relational {
       .groupBy(substring(col("c").cast("string"), 1, 1).cast("int")
         .as("digit"))
       .agg(count(lit(1)).as("n_obs"))
-    val tot = obs.agg(sum("n_obs").cast("long").as("n"))
     val grid = spark.range(1, 10).select(col("id").cast("int").as("digit"),
       element_at(
         array(BenfordPpb.map { case (_, p) => lit(p) }: _*),
         col("id").cast("int")).as("p_ppb"))
     val e = col("n").cast("double") * col("p_ppb") / 1e9
     val diff = col("n_obs").cast("double") - e
-    grid.crossJoin(broadcast(tot)).filter(col("n") > 0)
-      .join(obs, Seq("digit"), "left")
-      .na.fill(0L, Seq("n_obs"))
+    // every positive amount's first digit is in 1..9: Σ over the grid is n
+    val cells = grid.join(obs, Seq("digit"), "left").na.fill(0L, Seq("n_obs"))
+    Hist.withTotals(cells, "benford_audit", sum("n_obs").as("n"))
+      .filter(col("n") > 0)
       .select(col("digit"), col("n"), col("n_obs"), col("p_ppb"),
         floor(col("n_obs").cast("double") * 1e9 / col("n") + 0.5)
           .cast("long").as("obs_ppb"),

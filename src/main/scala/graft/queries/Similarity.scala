@@ -1699,10 +1699,15 @@ object Similarity {
     * Array[Double], not Seq: the primitive-array encoder deserializes
     * without boxing, and the nearestCell inner loop indexes unboxed —
     * the Seq version spent the whole assignment pass in boxed apply()
-    * (measured 126 s → 9 s at 500k vectors / 500 cells) */
-  private def unitVecs(spark: SparkSession, sfDir: String): DataFrame = {
+    * (measured 126 s → 9 s at 500k vectors / 500 cells).
+    * `below` keeps only the vectors with vec_id < it (a query set)
+    * through a Column filter BEFORE the normalising map, so the parquet
+    * scan pushes it and the rest of the corpus is never normalised. */
+  private def unitVecs(spark: SparkSession, sfDir: String,
+                       below: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    vecs(spark, sfDir)
+    val v = vecs(spark, sfDir)
+    below.fold(v)(n => v.filter(col("vec_id") < n))
       .select(col("vec_id"), col("v"), col("norm")).as[(Long, Seq[Double], Double)]
       .map { case (id, v, n) => (id, v.toArray.map(_ / n)) }
       .toDF("vec_id", "u")
@@ -1863,8 +1868,7 @@ object Similarity {
     import spark.implicits._
     val kernel = IvfKernel
     val bc = spark.sparkContext.broadcast(ivfCentroids(spark, sfDir))
-    unitVecs(spark, sfDir).as[(Long, Array[Double])]
-      .filter(_._1 < NumQueries)
+    unitVecs(spark, sfDir, Some(NumQueries)).as[(Long, Array[Double])]
       .flatMap { case (qid, u) =>
         kernel.topCells(bc.value, u, n)
           .zipWithIndex.map { case ((c, _), r) => (qid, c, r + 1) }
@@ -1985,7 +1989,10 @@ object Similarity {
     *
     * Scale shape: the assignment is the memoized one-broadcast-pass
     * frame shared with [[annCosineIvf]]/semdedup; mass/quota are
-    * |cells| ≤ 2¹⁶ rows (broadcast); the only corpus-sized work is one
+    * |cells| ≤ 2¹⁶ rows (broadcast), and both totals ride
+    * [[Hist.withTotals]] over them — at 100 TB the per-cell count stays
+    * distributed, and at most the cap's worth of rows meets in one task;
+    * the only corpus-sized work is one
     * row_number window PARTITIONED BY cell (per-task sort bounded by
     * cell occupancy ~√n — the semdedup family's within-cell cost), and
     * the output is ~budget rows. Nothing pair-shaped anywhere. */
@@ -1994,13 +2001,13 @@ object Similarity {
     require(alpha > 0 && alpha <= 1, s"need 0 < alpha <= 1, got $alpha")
     val assigned = ivfAssigned(spark, sfDir)
     val mass = assigned.groupBy("cell").agg(count(lit(1)).as("cell_mass"))
-    val tot = mass.agg(sum("cell_mass").as("total"))
-    val shared = mass.crossJoin(broadcast(tot))
+    val shared = Hist.withTotals(mass, "cluster_balanced_sample",
+        sum("cell_mass").as("total"))
       .withColumn("pow_micros",
         floor(pow(col("cell_mass").cast("double") / col("total"), alpha)
           * 1e6 + 0.5).cast("long"))
-    val powTot = shared.agg(sum("pow_micros").as("pow_total"))
-    val quota = shared.crossJoin(broadcast(powTot))
+    val quota = Hist.withTotals(shared, "cluster_balanced_sample",
+        sum("pow_micros").as("pow_total"))
       .select(col("cell"), col("cell_mass"),
         least(col("cell_mass"),
           greatest(lit(1L),
@@ -3335,13 +3342,11 @@ object Similarity {
       s"nProbe must be in 1..$IvfMinCells, got $nProbe")
     require(nQueries > 0, s"nQueries must be positive, got $nQueries")
     import spark.implicits._
-    val nQ = nQueries
     val kernel = PqKernel
     val ivf = IvfKernel
     val bcCent = spark.sparkContext.broadcast(ivfCentroids(spark, sfDir))
     val cb = pqResCodebook(spark, sfDir)
-    val qframe = unitVecs(spark, sfDir).as[(Long, Array[Double])]
-      .filter(_._1 < nQ)
+    val qframe = unitVecs(spark, sfDir, Some(nQueries)).as[(Long, Array[Double])]
     // probe rows carry the coarse offset: the identical centroid score
     // the probe ranking itself computes — exactly ivfCandidates' order
     val probes = qframe.flatMap { case (qid, u) =>

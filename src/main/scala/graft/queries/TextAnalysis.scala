@@ -762,10 +762,11 @@ object TextAnalysis {
 
   /** Per-(lang, source) corpus composition — the dataset-card numbers
     * every training corpus publishes: doc/token/char totals and each
-    * cell's share of the corpus. One grouped agg plus a broadcast one-row
-    * total (the same sanctioned scalar-agg funnel as TF-IDF's doc count:
-    * the SinglePartition exchange moves one pre-aggregated row per
-    * partition, never data). */
+    * cell's share of the corpus. One grouped agg; the corpus doc count is
+    * Σ n_docs over its |langs×sources| rows, attached through
+    * [[Hist.withTotals]] (no second scan). At 100 TB the per-cell
+    * aggregation stays distributed, and at most the cap's worth of rows
+    * meets in one task. */
   def corpusStats(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
       .select(col("lang"), col("source"),
@@ -774,8 +775,7 @@ object TextAnalysis {
       count(lit(1)).as("n_docs"),
       sum("n_tokens").as("total_tokens"),
       sum("n_chars").as("total_chars"))
-    val tot = docs.agg(count(lit(1)).as("corpus_docs"))
-    per.crossJoin(broadcast(tot))
+    Hist.withTotals(per, "corpus_stats", sum("n_docs").as("corpus_docs"))
       .select(col("lang"), col("source"), col("n_docs"),
         col("total_tokens"), col("total_chars"),
         Det.r(col("n_docs").cast("double") / col("corpus_docs"), 6).as("doc_share"))
@@ -808,8 +808,10 @@ object TextAnalysis {
     * run draws each source with: raw token share p_s is flattened to
     * q_s ∝ p_s^α (α < 1 upsamples rare sources, the multilingual/
     * data-mixing standard), and boost = q_s/p_s is the per-source
-    * sampling factor. Two grouped aggs + two broadcast one-row totals —
-    * output is |sources| rows at any corpus size.
+    * sampling factor. One grouped agg, then both totals through
+    * [[Hist.withTotals]] over the |sources|-row frame — the per-source
+    * aggregation stays distributed at 100 TB, and at most the cap's
+    * worth of rows meets in one task.
     *
     * Determinism: p_s is an exact BIGINT ratio; p_s^α is integerised to
     * micros before the normalizing sum (integer sum — order-independent,
@@ -819,21 +821,17 @@ object TextAnalysis {
   def mixtureWeights(spark: SparkSession, sfDir: String,
                      alpha: Double = MixAlpha): DataFrame = {
     require(alpha > 0 && alpha <= 1, s"need 0 < alpha <= 1, got $alpha")
-    // |sources| rows — cached so the corpus scan+agg runs ONCE; the two
-    // one-row totals and the final projection all fan out from it
     val per = Tables.documents(spark, sfDir)
       .select(col("source"), size(toks(col("text"))).as("n_tokens"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("n_tokens"))
-      .cache()
-    val tot = per.agg(sum("n_tokens").as("total_tokens"))
-    val shared = per.crossJoin(broadcast(tot))
+    val shared = Hist.withTotals(per, "mixture_weights",
+        sum("n_tokens").as("total_tokens"))
       .withColumn("share_raw",
         col("n_tokens").cast("double") / col("total_tokens"))
       .withColumn("pow_micros",
         floor(pow(col("share_raw"), alpha) * 1e6 + 0.5).cast("long"))
-    val powTot = shared.agg(sum("pow_micros").as("pow_total"))
-    shared.crossJoin(broadcast(powTot))
+    Hist.withTotals(shared, "mixture_weights", sum("pow_micros").as("pow_total"))
       .withColumn("weight_raw",
         col("pow_micros").cast("double") / col("pow_total"))
       .select(col("source"), col("n_docs"), col("n_tokens"),
@@ -2188,7 +2186,10 @@ object TextAnalysis {
     * private[graft] so PropertiesSpec can recompute every emitted micro
     * with 30-digit BigDecimal ln (the r8-flagged libm-ulp hazard: a
     * libm/engine bump that lands a weight within 1 ulp of a
-    * ⌊x·10⁶+0.5⌋ boundary must fail a spec HERE, not the hash gate). */
+    * ⌊x·10⁶+0.5⌋ boundary must fail a spec HERE, not the hash gate).
+    * The totals ride [[Hist.withTotals]] over the ≤ [[HashBuckets]]
+    * bucket rows: at 100 TB the per-bucket fold stays distributed, and
+    * at most the cap's worth of rows meets in one task. */
   private[graft] def dsirBucketCounts(spark: SparkSession, sfDir: String,
                                       targetLang: String = "en"): DataFrame = {
     val db = dsirPerDocCounts(spark, sfDir)
@@ -2198,10 +2199,9 @@ object TextAnalysis {
       sum("n").as("cnt_raw"),
       sum(when(col("lang") === targetLang, col("n")).otherwise(0L))
         .as("cnt_tgt"))
-    val totals = hist.agg(
+    Hist.withTotals(hist, "dsir_bucket_counts",
       coalesce(sum("cnt_raw"), lit(0L)).as("tot_raw"),
       coalesce(sum("cnt_tgt"), lit(0L)).as("tot_tgt"))
-    hist.crossJoin(broadcast(totals))
   }
 
   /** The per-bucket DSIR log-ratio weight in micros, over
@@ -2322,16 +2322,16 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n"))
 
   /** Count tuples feeding [[nbLwMicros]] — the [[dsirBucketCounts]]
-    * libm-hardening hook for the NB weight table. */
+    * libm-hardening hook for the NB weight table, totals attached the
+    * same way. */
   private[graft] def nbBucketCounts(spark: SparkSession,
                                     sfDir: String): DataFrame = {
     val hist = nbPerDocCounts(spark, sfDir).groupBy("b").agg(
       sum(when(col("pass"), col("n")).otherwise(0L)).as("cnt_p"),
       sum(when(!col("pass"), col("n")).otherwise(0L)).as("cnt_f"))
-    val tokTot = hist.agg(
+    Hist.withTotals(hist, "nb_bucket_counts",
       coalesce(sum("cnt_p"), lit(0L)).as("tot_p"),
       coalesce(sum("cnt_f"), lit(0L)).as("tot_f"))
-    hist.crossJoin(broadcast(tokTot))
   }
 
   /** Count tuple feeding the class-prior micros — libm-hardening hook.
@@ -2546,7 +2546,10 @@ object TextAnalysis {
     * score's shuffles plus one doc_id join; the survival cumsum is a
     * band≥band self-join of the ≤ 2·[[CalibBandClamp]]-row band frame
     * (broadcast, integer sums) — the no-corpus-window discipline, same
-    * as the forecast's join-shift move. */
+    * as the forecast's join-shift move — and the token total is Σ tokens
+    * over those bands through [[Hist.withTotals]]: at 100 TB the per-band
+    * aggregation stays distributed, and at most the cap's worth of rows
+    * meets in one task. */
   def qualitySurvivalCurve(spark: SparkSession, sfDir: String): DataFrame = {
     val nb = nbScored(spark, sfDir)
     val lab = gopherLabeled(spark, sfDir, GopherMinWords)
@@ -2560,13 +2563,12 @@ object TextAnalysis {
           .cast("int"))
       .groupBy("band")
       .agg(count(lit(1)).as("n_docs"), sum("n_words").as("tokens"))
-    val tot = per.agg(sum("tokens").as("tot_tokens"))
-    per.join(broadcast(per.select(col("band").as("b2"),
+    val surv = per.join(broadcast(per.select(col("band").as("b2"),
         col("n_docs").as("d2"), col("tokens").as("t2"))),
         col("b2") >= col("band"))
       .groupBy("band", "n_docs", "tokens")
       .agg(sum("d2").as("surv_docs"), sum("t2").as("surv_tokens"))
-      .crossJoin(broadcast(tot))
+    Hist.withTotals(surv, "quality_survival_curve", sum("tokens").as("tot_tokens"))
       .select(col("band"), col("n_docs"), col("tokens"),
         col("surv_docs"), col("surv_tokens"),
         Det.r(col("surv_tokens").cast("double") /
@@ -2618,7 +2620,11 @@ object TextAnalysis {
     * ((row·col)/n; ((d·d)/exp)·1e6) micro-floored PER CELL before the
     * integer total — the two-floor discipline, no big float sums.
     * Scale: one scan to the |langs×sources| frame; everything after is
-    * model-state-sized. */
+    * model-state-sized. n and the grid's dimensions are a broadcast
+    * one-row total over the observed cells (NULL-key cells count in n
+    * but never join the grid); the χ² total rides [[Hist.withTotals]]
+    * over the full grid. At 100 TB the per-cell aggregation stays
+    * distributed, and at most the cap's worth of rows meets in one task. */
   def langSourceChi2(spark: SparkSession, sfDir: String): DataFrame = {
     val obs = Tables.documents(spark, sfDir)
       .groupBy("lang", "source").agg(count(lit(1)).as("obs"))
@@ -2640,9 +2646,9 @@ object TextAnalysis {
       .withColumn("d", col("obs").cast("double") - col("exp"))
       .withColumn("contrib_micros",
         floor(col("d") * col("d") / col("exp") * 1e6 + 0.5).cast("long"))
-    val tot = cells.agg(sum("contrib_micros").as("chi2_micros"),
-      max((col("n_langs") - 1) * (col("n_sources") - 1)).as("dof"))
-    cells.crossJoin(broadcast(tot))
+    Hist.withTotals(cells, "lang_source_chi2",
+        sum("contrib_micros").as("chi2_micros"),
+        max((col("n_langs") - 1) * (col("n_sources") - 1)).as("dof"))
       .select(col("lang"), col("source"), col("obs"),
         Det.r(col("exp"), 4).as("expected"),
         (col("contrib_micros").cast("double") / 1e6).as("contrib"),

@@ -45,4 +45,32 @@ class ActionBudgetSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(ActionBudget.measure(s)(build(s, TestSpark.sf)).jobs == 0, name)
     }
   }
+
+  /** Jobs of a noop write of each query that attaches grand totals
+    * through `Hist.withTotals`, at sf0.001 in a fresh session. The frame
+    * is built before the write, so a first call's sink build or schema
+    * read is not counted. A returning broadcast one-row total or cache
+    * adds jobs and fails here. Each comment gives the count with
+    * broadcast one-row totals. */
+  private val totalsNoopJobs = Map(
+    "benford_audit" -> 4,  // 7
+    "cluster_balanced_sample" -> 6,  // 9
+    "corpus_stats" -> 2,  // 4
+    "dsir_weights" -> 4,  // 5
+    "dup_cluster_size_dist" -> 6,  // 8
+    "k_anonymity" -> 2,  // 4
+    "lang_source_chi2" -> 8,  // 12
+    "leakage_safe_split" -> 4,  // 6
+    "mixture_weights" -> 2,  // 5
+    "quality_survival_curve" -> 5,  // 8
+    "split_balance_audit" -> 12)  // 14
+
+  test("grand totals: noop-write job counts of the Hist.withTotals queries") {
+    val got = totalsNoopJobs.keys.toSeq.sorted.map { name =>
+      val s = spark.newSession()
+      val df = SparkEntry.queries(name)(s, TestSpark.sf)
+      name -> ActionBudget.measure(s)(GraftSession.noopSeconds(s)(df)).jobs
+    }.toMap
+    assert(got == totalsNoopJobs)
+  }
 }

@@ -44,6 +44,13 @@ class EntryPointSpec extends AnyFunSuite {
     assert(sourcesWhere(binWidth.findFirstIn(_).isDefined) == Set("Hist.scala"))
   }
 
+  test("src/main collects whole rows beside grand totals only in Hist") {
+    // the keyless totals shape: a frame's rows as one list next to its
+    // aggregates (Hist.withTotals); grouped sort_array(collect_list(…))
+    // folds are another shape
+    assert(sourcesContaining("agg(collect_list(struct(") == Set("Hist.scala"))
+  }
+
   test("SPARK_GRAFT_CPUS: an integer is the core count, anything else fails by name") {
     assert(GraftSession.cpusFrom(Some("3")) == 3)
     assert(GraftSession.cpusFrom(None) ==

@@ -1,15 +1,16 @@
 package graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.Hist
+import graft.queries.{Curation, Dedup, Det, Hist, Relational, Similarity, TextAnalysis}
 
 /** The driver-walked histogram helpers against literal left-to-right
   * folds: the distributed prefix scan in both directions and in its
-  * exclusive, inclusive and rank forms, and the nearest-rank cut. */
+  * exclusive, inclusive and rank forms, and the nearest-rank cut. The
+  * grand-totals helper against the one-row totals it replaced. */
 class HistSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -121,5 +122,121 @@ class HistSpec extends AnyFunSuite {
       val i = counts.indexWhere { c => run += c; run >= want }
       assert(Hist.nearestRank(counts, p).index == i, s"p=$p")
     }
+  }
+
+  // --------------------------------------------------------------------
+  // Grand totals
+  // --------------------------------------------------------------------
+
+  private def messages(e: Throwable): Iterator[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+
+  test("withTotals: builds lazily; a frame over the cap fails at run time, naming the query") {
+    val s = spark
+    val cap = Hist.ScanBins
+    val spent = ActionBudget.measure(s)(
+      Hist.withTotals(s.range(cap + 1).toDF("k"), "hist_spec_cap", sum("k").as("t")))
+    assert(spent.actions.isEmpty && spent.jobs == 0)
+    val e = intercept[Exception](spent.value.collect())
+    assert(messages(e).exists(_.contains("hist_spec_cap")), e.toString)
+    val atCap = Hist.withTotals(s.range(cap).toDF("k"), "hist_spec_cap", sum("k").as("t"))
+      .agg(count(lit(1)), min("t"), max("t")).head()
+    assert(atCap.getLong(0) == cap)
+    assert(atCap.getLong(1) == cap * (cap - 1) / 2 && atCap.getLong(2) == atCap.getLong(1))
+  }
+
+  test("withTotals: an empty frame gives zero rows, as a cross join with its total does") {
+    val s = spark
+    import s.implicits._
+    val df = Seq.empty[(String, Long)].toDF("k", "n")
+    assert(Hist.withTotals(df, "hist_spec", sum("n").as("t")).collect().isEmpty)
+    assert(df.crossJoin(broadcast(df.agg(sum("n").as("t")))).collect().isEmpty)
+  }
+
+  test("withTotals: a NULL grouping key survives with every total attached") {
+    val s = spark
+    import s.implicits._
+    val grouped = Seq[(String, Long)](("a", 1L), (null, 2L), ("a", 3L), (null, 4L))
+      .toDF("k", "v").groupBy("k").agg(sum("v").as("n"))
+    val out = Hist.withTotals(grouped, "hist_spec",
+        sum("n").as("t"), count(col("k")).as("keyed"))
+      .select("k", "n", "t", "keyed")
+    assert(out.columns.toSeq == Seq("k", "n", "t", "keyed"))
+    assert(out.as[(String, Long, Long, Long)].collect().toSet ==
+      Set(("a", 4L, 10L, 1L), (null, 6L, 10L, 1L)))
+  }
+
+  /** Every row of `out`, beside the one-row `old` total computed the way
+    * the query computed it before, passes `check`. */
+  private def holds(name: String, out: DataFrame, old: DataFrame, check: Column): Unit = {
+    val ok = out.crossJoin(old).select(check).collect().map(_.getBoolean(0))
+    assert(ok.nonEmpty && ok.forall(identity), name)
+  }
+
+  test("withTotals: every converted query's totals equal the old broadcast totals at sf0.01") {
+    val s = spark
+    val sf = new java.io.File(TestSpark.sf).getParent + "/sf0.01"
+    val docs = Tables.documents(s, sf)
+    val nDocs = docs.agg(count(lit(1)).as("old"))
+    def share(x: String, tot: String = "old") = Det.r(col(x).cast("double") / col(tot), 6)
+
+    holds("corpus_stats", TextAnalysis.corpusStats(s, sf), nDocs,
+      col("doc_share") === share("n_docs"))
+    holds("k_anonymity", Relational.kAnonymity(s, sf),
+      Tables.customer(s, sf).agg(count(lit(1)).as("old")),
+      col("share") === share("n"))
+    holds("leakage_safe_split", Curation.leakageSafeSplit(s, sf), nDocs,
+      col("pct_docs") === share("n_docs"))
+    holds("split_balance_audit", Curation.splitBalanceAudit(s, sf)
+        .join(docs.groupBy("lang").agg(count(lit(1)).as("n_lang")), "lang"),
+      nDocs, col("corpus_share") === share("n_lang"))
+    holds("dup_cluster_size_dist", Dedup.dupClusterSizeDist(s, sf), nDocs,
+      col("doc_share") === share("n_docs"))
+    holds("benford_audit", Relational.benfordAudit(s, sf),
+      Tables.orders(s, sf).filter(Det.cents(col("o_totalprice")) > 0)
+        .agg(count(lit(1)).as("old")),
+      col("n") === col("old"))
+
+    val survival = TextAnalysis.qualitySurvivalCurve(s, sf)
+    holds("quality_survival_curve", survival,
+      survival.agg(sum("tokens").as("old")),
+      col("surv_token_share") === share("surv_tokens"))
+    val chi2 = TextAnalysis.langSourceChi2(s, sf)
+    holds("lang_source_chi2", chi2,
+      chi2.agg(sum(round(col("contrib") * 1e6).cast("long")).as("old"),
+        ((countDistinct("lang") - 1) * (countDistinct("source") - 1)).as("old_dof")),
+      col("chi2") === col("old").cast("double") / 1e6 && col("dof") === col("old_dof"))
+
+    // two chained totals: the share's, then the normaliser of its powers
+    val alpha = 0.7
+    val mix = TextAnalysis.mixtureWeights(s, sf, alpha)
+    val tokTot = mix.agg(sum("n_tokens").as("old"))
+    val powMicros = floor(pow(col("n_tokens").cast("double") / col("old"), alpha)
+      * 1e6 + 0.5).cast("long")
+    holds("mixture_weights", mix,
+      tokTot.crossJoin(mix.crossJoin(tokTot).agg(sum(powMicros).as("old_pow"))),
+      col("share") === share("n_tokens") &&
+        col("weight") === Det.r(powMicros.cast("double") / col("old_pow"), 6))
+
+    // every cell keeps ≥ 1 member, so the sample names every cell's mass
+    val sample = Similarity.clusterBalancedSample(s, sf)
+    val cells = sample.select("cell", "cell_mass").distinct()
+    val massTot = cells.agg(sum("cell_mass").as("old"))
+    assert(massTot.head().getLong(0) == Tables.embeddings(s, sf).count())
+    val cellPow = floor(pow(col("cell_mass").cast("double") / col("old"), 0.5)
+      * 1e6 + 0.5).cast("long")
+    holds("cluster_balanced_sample", sample,
+      massTot.crossJoin(cells.crossJoin(massTot).agg(sum(cellPow).as("old_pow"))),
+      col("quota") === least(col("cell_mass"),
+        greatest(lit(1L), floor((lit(200L) * cellPow) / col("old_pow")))))
+
+    val dsir = TextAnalysis.dsirBucketCounts(s, sf)
+    holds("dsir bucket counts", dsir,
+      dsir.agg(sum("cnt_raw").as("old_raw"), sum("cnt_tgt").as("old_tgt")),
+      col("tot_raw") === col("old_raw") && col("tot_tgt") === col("old_tgt"))
+    val nb = TextAnalysis.nbBucketCounts(s, sf)
+    holds("nb bucket counts", nb,
+      nb.agg(sum("cnt_p").as("old_p"), sum("cnt_f").as("old_f")),
+      col("tot_p") === col("old_p") && col("tot_f") === col("old_f"))
   }
 }
