@@ -370,10 +370,10 @@ object Curation {
     * |langs|-row frame, attached through [[Hist.withTotals]] (at 100 TB
     * the per-lang aggregation stays distributed, and at most the cap's
     * worth of rows meets in one task); shares divide exact longs in
-    * IEEE and round via [[Det]]; the deviation subtracts the two exact-division
-    * doubles (two fixed operands — fold-order-free, identical on both
-    * engines), never a long×long product that could outgrow 2⁶³ at
-    * corpus scale. */
+    * IEEE and round via [[Det]]; the deviation subtracts the two
+    * exact-division doubles (two fixed operands — fold-order-free,
+    * identical on both engines), never a long×long product that could
+    * outgrow 2⁶³ at corpus scale. */
   def splitBalanceAudit(spark: SparkSession, sfDir: String): DataFrame = {
     val a = splitAssigned(spark, sfDir)
     val sl = a.groupBy("split", "lang")

@@ -1992,10 +1992,10 @@ object Similarity {
     * |cells| ≤ 2¹⁶ rows (broadcast), and both totals ride
     * [[Hist.withTotals]] over them — at 100 TB the per-cell count stays
     * distributed, and at most the cap's worth of rows meets in one task;
-    * the only corpus-sized work is one
-    * row_number window PARTITIONED BY cell (per-task sort bounded by
-    * cell occupancy ~√n — the semdedup family's within-cell cost), and
-    * the output is ~budget rows. Nothing pair-shaped anywhere. */
+    * the only corpus-sized work is one row_number window PARTITIONED BY
+    * cell (per-task sort bounded by cell occupancy ~√n — the semdedup
+    * family's within-cell cost), and the output is ~budget rows. Nothing
+    * pair-shaped anywhere. */
   def clusterBalancedSample(spark: SparkSession, sfDir: String,
                             alpha: Double = ClusterSampleAlpha): DataFrame = {
     require(alpha > 0 && alpha <= 1, s"need 0 < alpha <= 1, got $alpha")
