@@ -159,8 +159,8 @@ class HistSpec extends AnyFunSuite {
     val grouped = Seq[(String, Long)](("a", 1L), (null, 2L), ("a", 3L), (null, 4L))
       .toDF("k", "v").groupBy("k").agg(sum("v").as("n"))
     val out = Hist.withTotals(grouped, "hist_spec",
-        sum("n").as("t"), count(col("k")).as("keyed"))
-      .select("k", "n", "t", "keyed")
+      sum("n").as("t"), count(col("k")).as("keyed"))
+    // the frame's columns, then the totals
     assert(out.columns.toSeq == Seq("k", "n", "t", "keyed"))
     assert(out.as[(String, Long, Long, Long)].collect().toSet ==
       Set(("a", 4L, 10L, 1L), (null, 6L, 10L, 1L)))
@@ -178,7 +178,7 @@ class HistSpec extends AnyFunSuite {
     val sf = new java.io.File(TestSpark.sf).getParent + "/sf0.01"
     val docs = Tables.documents(s, sf)
     val nDocs = docs.agg(count(lit(1)).as("old"))
-    def share(x: String, tot: String = "old") = Det.r(col(x).cast("double") / col(tot), 6)
+    def share(x: String) = Det.r(col(x).cast("double") / col("old"), 6)
 
     holds("corpus_stats", TextAnalysis.corpusStats(s, sf), nDocs,
       col("doc_share") === share("n_docs"))
