@@ -39,8 +39,8 @@ object GraftSession {
       // InferFiltersFromGenerate adds `size(t) > 0` under an `explode(t)`;
       // when `t` is a projected alias (a tokenizer), predicate pushdown
       // substitutes the alias, so a Filter above the scan re-runs the
-      // whole projection per row, interpreted lambdas included. The
-      // filter only drops rows the `explode` drops anyway.
+      // whole projection per row, the tokenizer included. The filter
+      // only drops rows the `explode` drops anyway.
       .config("spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
       .config("spark.sql.warehouse.dir", "target/spark-warehouse")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Query, Substrate, Tables}
 import graft.Query.ArgOps
+import graft.functions.WordTokens
 
 /** Deduplication family over `documents` — the training-data-pipeline
   * operators a 100 TB corpus needs (exact, MinHash+LSH, SimHash, n-gram
@@ -49,8 +50,7 @@ object Dedup {
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .mapPartitions { it =>
         it.map { case (id, text) =>
-          val toks = text.toLowerCase(java.util.Locale.ROOT)
-            .split("\\W+").filter(_.nonEmpty)
+          val toks = WordTokens.words(text.toLowerCase(java.util.Locale.ROOT))
           val seen = new java.util.LinkedHashSet[String]()
           var i = 0
           while (i + 2 < toks.length) {
@@ -1700,8 +1700,7 @@ object Dedup {
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
         it.flatMap { case (id, text) =>
-          val toks = text.toLowerCase(java.util.Locale.ROOT)
-            .split("\\W+").filter(_.nonEmpty)
+          val toks = WordTokens.words(text.toLowerCase(java.util.Locale.ROOT))
           DupKernel.simhash(toks.length)(i => md.digest(toks(i).getBytes("UTF-8")))
             .map(sig => (id, sig))
         }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Query, Substrate, Tables}
 import graft.Query.ArgOps
+import graft.functions.WordTokens
+import graft.functions.WordTokens.word_tokens
 
 /** Text-analysis operators over `documents` — the per-document scoring
   * passes of a training-data pipeline: language ID, quality scoring,
@@ -17,13 +19,14 @@ import graft.Query.ArgOps
   */
 object TextAnalysis {
 
-  private[queries] def toks(c: Column): Column =
-    filter(split(lower(c), "\\W+"), t => length(t) > 0)
+  /** The words of `lower(c)` (`graft.functions.WordTokens`). */
+  private[queries] def toks(c: Column): Column = word_tokens(c)
 
   /** Normalized text: lower-cased, every `\W+` run one space, trimmed —
-    * what the k-gram fingerprints read. */
-  private[queries] def normText(c: Column): Column =
-    trim(regexp_replace(lower(c), "\\W+", " "))
+    * what the k-gram fingerprints read. Joining the words with one space
+    * is that string byte for byte: each non-word run becomes one space
+    * and the trim drops the two ends. */
+  private[queries] def normText(c: Column): Column = array_join(toks(c), " ")
 
   /** Content hash: md5 of [[normText]] — the exact-dedup and split key. */
   private[queries] def contentHash(c: Column): Column = md5(normText(c))
@@ -183,7 +186,7 @@ object TextAnalysis {
       .withColumn("n_tokens", size(col("t")))
       .withColumn("n_distinct_tokens", size(array_distinct(col("t"))))
       .withColumn("avg_token_len",
-        r4(aggregate(col("t"), lit(0L), (a, x) => a + length(x)).cast("double")
+        r4(length(array_join(col("t"), "")).cast("double")
           / greatest(col("n_tokens"), lit(1))))
       .withColumn("punct_ratio",
         r4(size(split(col("text"), "[^\\w\\s]")).minus(1).cast("double")
@@ -366,8 +369,7 @@ object TextAnalysis {
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .mapPartitions { it =>
         it.map { case (id, text) =>
-          val toks = text.toLowerCase(java.util.Locale.ROOT)
-            .split("\\W+").filter(_.nonEmpty)
+          val toks = WordTokens.words(text.toLowerCase(java.util.Locale.ROOT))
           val n = toks.length
           val counts = new java.util.HashMap[String, Int]()
           var topCnt = 0
@@ -1062,8 +1064,7 @@ object TextAnalysis {
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
         it.flatMap { case (id, text) =>
-          val toks = text.toLowerCase(java.util.Locale.ROOT)
-            .split("\\W+").filter(_.nonEmpty)
+          val toks = WordTokens.words(text.toLowerCase(java.util.Locale.ROOT))
           val seen = new java.util.LinkedHashSet[java.lang.Long]()
           var i = 0
           while (i + ContamGram - 1 < toks.length) {
@@ -1510,8 +1511,7 @@ object TextAnalysis {
     val pairs = Tables.documents(spark, sfDir)
       .select(col("text")).as[String]
       .flatMap { text =>
-        val ts = text.toLowerCase(java.util.Locale.ROOT)
-          .split("\\W+").filter(_.nonEmpty)
+        val ts = WordTokens.words(text.toLowerCase(java.util.Locale.ROOT))
         val b = Seq.newBuilder[(String, String)]
         var i = 0
         while (i < ts.length) {
@@ -1993,7 +1993,7 @@ object TextAnalysis {
   // Gopher quality rules
   // --------------------------------------------------------------------
 
-  private val GopherStops =
+  private[queries] val GopherStops =
     Seq("the", "be", "to", "of", "and", "that", "have", "with")
   private val GopherMinWords = 20
   private val GopherMaxWords = 100000
@@ -2036,7 +2036,7 @@ object TextAnalysis {
       .select(col("doc_id"), col("text"), col("lang"), toks(col("text")).as("t"))
       .withColumn("n_words", size(col("t")))
       .withColumn("mean_word_len",
-        r4(aggregate(col("t"), lit(0L), (a, x) => a + length(x)).cast("double")
+        r4(length(array_join(col("t"), "")).cast("double")
           / greatest(col("n_words"), lit(1))))
       .withColumn("symbol_ratio",
         r4(((size(split(col("text"), "#")) - 1)
@@ -2045,9 +2045,7 @@ object TextAnalysis {
       .withColumn("alpha_word_ratio",
         r4(size(filter(col("t"), x => x.rlike("[a-z]"))).cast("double")
           / greatest(col("n_words"), lit(1))))
-      .withColumn("stop_hits",
-        size(filter(array_distinct(col("t")),
-          x => array_contains(stopsArr, x))))
+      .withColumn("stop_hits", size(array_intersect(col("t"), stopsArr)))
       .withColumn("pass",
         col("n_words").between(minWords, GopherMaxWords) &&
           col("mean_word_len").between(3.0, 10.0) &&

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Query, Substrate, Tables}
 import graft.Query.ArgOps
+import graft.functions.WordTokens.word_tokens
 
 /** The reference's shipped example jobs (SURVEY.md §2.2 E1-E9), re-expressed
   * as declarative Spark plans over `documents`/`events`.
@@ -29,13 +30,12 @@ import graft.Query.ArgOps
   */
 object TextJobs {
 
-  /** E1+E2 wordcount. `\\W+` split ≙ reference's `\b\w+\b` findall
-    * (examples/wordcount/mapper.py:8) for ASCII text; empty-token filter
-    * drops the artifacts of leading/trailing separators. */
+  /** E1+E2 wordcount. The words of `lower(text)` (maximal `[A-Za-z0-9_]`
+    * runs) ≙ reference's `\b\w+\b` findall (examples/wordcount/mapper.py:8)
+    * for ASCII text. */
   def wordcount(spark: SparkSession, sfDir: String): DataFrame =
     Tables.documents(spark, sfDir)
-      .select(explode(split(lower(col("text")), "\\W+")).as("word"))
-      .filter(length(col("word")) > 0)
+      .select(explode(word_tokens(col("text"))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
       .orderBy("word")
 
@@ -59,14 +59,16 @@ object TextJobs {
   def invertedIndex(spark: SparkSession, sfDir: String): DataFrame =
     Tables.documents(spark, sfDir)
       .select(col("doc_id"),
-        explode(array_distinct(split(lower(col("text")), "\\W+"))).as("word"))
+        explode(array_distinct(word_tokens(col("text")))).as("word"))
       .filter(length(col("word")) > 2)
       .groupBy("word")
       // sort_array, not array_sort: the comparator-less array_sort runs
       // its default comparator lambda interpreted per comparison;
-      // collect_set holds no NULLs, so both orders are identical
-      .agg(concat_ws(",", sort_array(collect_set(col("doc_id").cast("string"))))
-        .as("doc_ids"),
+      // collect_set holds no NULLs, so both orders are identical. The set
+      // collects longs and casts once: long → string is injective, and
+      // the sort still runs on the strings.
+      .agg(concat_ws(",",
+        sort_array(collect_set(col("doc_id")).cast("array<string>"))).as("doc_ids"),
         count(lit(1)).as("n_docs"))
       .orderBy("word")
 
@@ -86,7 +88,7 @@ object TextJobs {
       .withColumn("content",
         ltrim(col("line").substr(col("sep") + 1, length(col("line")))))
       .select(col("doc_id"),
-        explode(array_distinct(split(lower(col("content")), "\\W+"))).as("word"))
+        explode(array_distinct(word_tokens(col("content")))).as("word"))
       .filter(length(col("word")) > 2)
       .groupBy("word")
       .agg(count(lit(1)).as("n_docs"))
@@ -154,8 +156,7 @@ object TextJobs {
     * partition by doc and sort by position; zip_with is strictly cheaper). */
   def bigrams(spark: SparkSession, sfDir: String, topN: Int = BigramsTopN): DataFrame = {
     val toks = Tables.documents(spark, sfDir)
-      .select(split(lower(col("text")), "\\W+").as("t"))
-      .select(filter(col("t"), x => length(x) > 0).as("t"))
+      .select(word_tokens(col("text")).as("t"))
     toks
       .select(explode(zip_with(
         slice(col("t"), lit(1), greatest(size(col("t")) - 1, lit(0))),

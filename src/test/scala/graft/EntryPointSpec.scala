@@ -51,6 +51,14 @@ class EntryPointSpec extends AnyFunSuite {
     assert(sourcesContaining("agg(collect_list(struct(") == Set("Hist.scala"))
   }
 
+  test("src/main tokenizes only through WordTokens: no regex split of lowered text") {
+    assert(sourcesContaining("split(lower(").isEmpty)
+    assert(sourcesContaining(".split(\"\\\\W+\")").isEmpty)
+    assert(sourcesContaining("word_tokens(") ==
+      Set("WordTokens.scala", "TextAnalysis.scala", "TextJobs.scala"))
+    assert(sourcesContaining("WordTokens.words(") == Set("TextAnalysis.scala", "Dedup.scala"))
+  }
+
   test("SPARK_GRAFT_CPUS: an integer is the core count, anything else fails by name") {
     assert(GraftSession.cpusFrom(Some("3")) == 3)
     assert(GraftSession.cpusFrom(None) ==

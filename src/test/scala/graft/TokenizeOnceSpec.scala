@@ -47,7 +47,8 @@ class TokenizeOnceSpec extends AnyFunSuite with AdaptiveSparkPlanHelper
     })
     val reused = plans.flatMap(p => collect(p) { case r: ReusedExchangeExec => r })
     val tokFilters = plans.flatMap(p => collect(p) {
-      case f: FilterExec if f.condition.toString.contains("split(lower(") => f
+      case f: FilterExec if f.condition.exists(_.isInstanceOf[functions.WordTokens]) ||
+          f.condition.toString.contains("split(lower(") => f
     })
     val shown = plans.map(_.toString).mkString("\n----\n")
     assert(docScans.size == 1, shown)
