@@ -365,12 +365,12 @@ object Curation {
     * ABSENT language in val is exactly the finding).
     *
     * Shapes: one scan into a (split, lang) grouped agg (≤ 3·|langs|
-    * rows), cross-joined against the 3×|langs| dense grid built from
-    * two bounded distinct frames; the corpus total is Σ n_lang over the
-    * |langs|-row frame, attached through [[Hist.withTotals]] (at 100 TB
-    * the per-lang aggregation stays distributed, and at most the cap's
-    * worth of rows meets in one task); shares divide exact longs in
-    * IEEE and round via [[Det]]; the deviation subtracts the two
+    * rows), whose per-split and per-lang sums are the two marginals and
+    * the axes of the 3×|langs| dense grid; the corpus total is Σ n_lang
+    * over the |langs|-row frame, attached through [[Hist.withTotals]]
+    * (at 100 TB the per-lang aggregation stays distributed, and at most
+    * the cap's worth of rows meets in one task); shares divide exact
+    * longs in IEEE and round via [[Det]]; the deviation subtracts the two
     * exact-division doubles (two fixed operands — fold-order-free,
     * identical on both engines), never a long×long product that could
     * outgrow 2⁶³ at corpus scale. */
@@ -378,8 +378,9 @@ object Curation {
     val a = splitAssigned(spark, sfDir)
     val sl = a.groupBy("split", "lang")
       .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("tokens"))
-    val s = a.groupBy("split").agg(count(lit(1)).as("n_split"))
-    val l = a.groupBy("lang").agg(count(lit(1)).as("n_lang"))
+    // both marginals are group sums of sl (a NULL lang sums as one group)
+    val s = sl.groupBy("split").agg(sum("n_docs").as("n_split"))
+    val l = sl.groupBy("lang").agg(sum("n_docs").as("n_lang"))
     // dense grid: a language missing from a split must REPORT, not vanish
     val grid = s.select("split").crossJoin(l.select("lang"))
     grid

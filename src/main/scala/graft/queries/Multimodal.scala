@@ -488,34 +488,22 @@ object Multimodal {
     * probe list against the bucketed cell assignment, score inside the
     * join, per-qid window on a |Q|-cardinality key) plus one broadcast
     * asset-metadata join — the modality filter drops ~half the
-    * candidate stream before the window. MultimodalSpec pins recall vs
-    * the brute-force cross-modal leg. */
+    * candidate stream before the window. The ranking is
+    * [[Similarity.exactRerank]], with the asset columns carried and
+    * vec_id renamed to doc_id above the sorted result. MultimodalSpec
+    * pins recall vs the brute-force cross-modal leg. */
   def crossmodalRetrieval(spark: SparkSession, sfDir: String,
                           modality: String = XmodalModality,
                           k: Int = XmodalTopK): DataFrame = {
     Args.lit("modality", modality)
     require(k > 0, s"k must be positive, got $k")
-    import org.apache.spark.sql.expressions.Window
-    val cands = Similarity.ivfCandidates(spark, sfDir, XmodalNProbe)
-    val all = Similarity.vecs(spark, sfDir)
     val asset = assets(spark, sfDir).toDF()
       .filter(col("modality") === modality)
-      .select(col("doc_id"), col("modality"), col("width"), col("height"))
-    val w = Window.partitionBy("qid")
-      .orderBy(col("cosine_raw").desc, col("vec_id").asc)
-    cands
-      .join(all, "vec_id")
-      .join(asset, col("vec_id") === col("doc_id"))
-      .join(all.select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("norm").as("qnorm")), "qid")
-      .withColumn("cosine_raw",
-        graft.functions.VectorFunctions.array_dot(col("v"), col("qv"))
-          / (col("norm") * col("qnorm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("doc_id"), col("modality"),
-        col("width"), col("height"), Det.r(col("cosine_raw"), 4).as("cosine"))
-      .orderBy("qid", "rank")
+      .select(col("doc_id").as("vec_id"), col("modality"), col("width"), col("height"))
+    val cands = Similarity.ivfCandidates(spark, sfDir, XmodalNProbe).join(asset, "vec_id")
+    Similarity.exactRerank(spark, sfDir, cands, k,
+        col("modality"), col("width"), col("height"))
+      .withColumnRenamed("vec_id", "doc_id")
   }
 
   /** DuckDB twin — the shared IVF chain's `cand`/`nv` CTEs + the asset

@@ -892,7 +892,7 @@ object Similarity {
     * [[ivfChainAfterE]] (the Lloyd chain's full-corpus assignment
     * `fin`, re-materialized since two joins consume it); identical
     * IEEE expression shape for the contribution. */
-  // lazy: NProbe/IvfIters are declared further down the object; a strict
+  // lazy: NProbe/LloydIters are declared further down the object; a strict
   // val here would capture them uninitialized (object-init order)
   lazy val ivfModularitySql: String =
     s"""WITH RECURSIVE
@@ -1633,7 +1633,8 @@ object Similarity {
 
   private val IvfMinCells = 16
   private val IvfCellsCap = 65536
-  private val IvfIters = 3
+  /** Lloyd rounds of every quantizer [[lloyd]] trains. */
+  private val LloydIters = 3
   private val NProbe = 4
   /** Escalated probe count for the multiprobe IVF path — the standard
     * FAISS nprobe knob. Cost scales ~nProbe× on the QUERY side only
@@ -1694,8 +1695,9 @@ object Similarity {
         .sortBy { case (c, s) => (-s, c) }.take(n)
   }
 
-  /** Unit-normalized vectors (vec_id, u: Array[Double]), cached for the
-    * training loop + assignment pass.
+  /** Unit-normalized vectors (vec_id, u: Array[Double]): the coarse
+    * quantizer's training input and every assignment pass's rows. Not
+    * cached here: [[lloyd]] caches its input only while it trains.
     * Array[Double], not Seq: the primitive-array encoder deserializes
     * without boxing, and the nearestCell inner loop indexes unboxed —
     * the Seq version spent the whole assignment pass in boxed apply()
@@ -1723,10 +1725,12 @@ object Similarity {
     * training is deterministic, so re-running it per query
     * (ann_cosine_ivf / _ivfpq / _ivfpq_rerank / Dedup.semDedup all
     * need the same model) only re-spent ~40% of each query's cost. */
-  private[queries] def ivfCentroids(spark: SparkSession, sfDir: String): Array[Array[Double]] =
+  private[graft] def ivfCentroids(spark: SparkSession, sfDir: String): Array[Array[Double]] =
     Substrate.derived(spark, sfDir, Seq("embeddings"), "ivf_centroids") {
       val bytes = Substrate.persistedModel(spark, "graft_ivfcent_", sfDir) {
-        val m = trainIvfCentroids(spark, sfDir)
+        val kernel = IvfKernel
+        val m = lloyd(spark, unitVecs(spark, sfDir), derivedIvfCells, Dim,
+          kernel.nearestCell, renorm = true)(0)
         val bb = java.nio.ByteBuffer.allocate(8 + m.map(8 + _.length * 8).sum)
         bb.putInt(m.length): Unit
         bb.putInt(if (m.isEmpty) 0 else m(0).length): Unit
@@ -1746,57 +1750,68 @@ object Similarity {
       }
     }
 
-  /** Spherical k-means coarse quantizer: [[derivedIvfCells]](n) cells,
-    * [[IvfIters]] Lloyd rounds over a deterministic vec_id-stride
-    * sample (~128 vectors/cell — training is O(128·cells²), the
-    * standard production IVF build; the final assignment stays exact
-    * over all n). Returns the trained centroid array. */
-  private def trainIvfCentroids(spark: SparkSession, sfDir: String): Array[Array[Double]] = {
-      import spark.implicits._
-      val unit = unitVecs(spark, sfDir).cache()
-      val n = unit.count()
-      val cells = derivedIvfCells(n)
-      val step = math.max(1L, n / (cells.toLong * 128L))
-      val train = unit.filter(col("vec_id") % step === 0)
-      val kernel = IvfKernel
-      // init from the first `cells` rows BY ORDER of vec_id, not by the
-      // predicate vec_id < cells — a sparse-id embeddings table would
-      // otherwise silently train with fewer (possibly zero) centroids
-      val centroids: Array[Array[Double]] = unit.orderBy(col("vec_id")).limit(cells)
+  /** The one Lloyd trainer behind every vector quantizer: the IVF coarse
+    * quantizer ([[ivfCentroids]], one `Dim`-wide subspace, unit means)
+    * and both PQ codebooks ([[pqCodebook]], [[pqResCodebook]]: `PqSub`
+    * subspaces of `PqSubDim`, raw means). Over a (vec_id, x:
+    * Array[Double]) frame it counts n, takes `k(n)` centroids per
+    * subspace from the subvectors of the first k rows BY ORDER of vec_id
+    * (not the predicate vec_id < k, which trains with fewer — possibly
+    * zero — centroids on sparse ids), and runs [[LloydIters]] rounds over
+    * a deterministic vec_id-stride sample of ~128 vectors per centroid
+    * (training is O(128·k²), the standard production IVF/PQ build). Each
+    * round broadcasts the model, assigns every sampled subvector with
+    * `nearest` (ascending dot folds, strict first-wins ties), groups by
+    * (subspace, centroid) and collects ≤ nSub·k rows of model state; an
+    * empty centroid keeps its previous value. The input is cached only
+    * for these eager jobs and released before returning. Returns the
+    * nSub × k × subDim model. */
+  private def lloyd(spark: SparkSession, in: DataFrame, k: Long => Int, subDim: Int,
+                    nearest: (Array[Array[Double]], Array[Double]) => Int,
+                    renorm: Boolean): Array[Array[Array[Double]]] = {
+    import spark.implicits._
+    val nSub = Dim / subDim
+    val vs = in.cache()
+    try {
+      val n = vs.count()
+      val nK = k(n)
+      val step = math.max(1L, n / (nK.toLong * 128L))
+      val train = vs.filter(col("vec_id") % step === 0).as[(Long, Array[Double])]
+      val init = vs.orderBy(col("vec_id")).limit(nK)
         .as[(Long, Array[Double])].collect().map(_._2)
-      assert(centroids.length == math.min(cells.toLong, n),
-        s"IVF init collected ${centroids.length} centroids, expected min($cells, $n)")
-      for (_ <- 1 to IvfIters) {
-        val bcIter = spark.sparkContext.broadcast(centroids)
-        val next = train.as[(Long, Array[Double])]
-          .map { case (_, u) => (kernel.nearestCell(bcIter.value, u), u) }
-          .groupByKey(_._1)
-          .mapGroups { (cell, it) =>
-            // Integerised (nanos) accumulation — long sums are fold-order-
-            // free, so the centroid is a pure function of the member
-            // MULTISET (the embeddingCentroids move). A raw double sum
-            // would depend on shuffle fetch order within the group, which
-            // is what kept this query un-oracle-able through round 5;
-            // annCosineIvfSql replays the loop bit-for-bit on this basis.
-            val sq = new Array[Long](Dim); var n = 0L
-            it.foreach { case (_, u) =>
-              var i = 0
-              while (i < Dim) { sq(i) += math.floor(u(i) * 1e9 + 0.5).toLong; i += 1 }
-              n += 1
+      assert(init.length == math.min(nK.toLong, n),
+        s"Lloyd init collected ${init.length} rows, expected min($nK, $n)")
+      val cent = Array.tabulate(nSub)(m => init.map(_.slice(m * subDim, (m + 1) * subDim)))
+      for (_ <- 1 to LloydIters) {
+        val bc = spark.sparkContext.broadcast(cent)
+        val next = train
+          .flatMap { case (_, x) =>
+            (0 until nSub).map { m =>
+              val xm = x.slice(m * subDim, (m + 1) * subDim)
+              (m * nK + nearest(bc.value(m), xm), xm)
             }
-            val m = new Array[Double](Dim)
-            var i = 0
-            while (i < Dim) { m(i) = sq(i).toDouble / 1e9 / n; i += 1 }
-            var norm = 0.0; i = 0
-            while (i < Dim) { norm += m(i) * m(i); i += 1 }
-            norm = math.sqrt(norm)
-            (cell, if (norm > 0) m.map(_ / norm) else m)
-          }.collect()  // k rows of model state, not data
-        next.foreach { case (cell, c) => centroids(cell) = c }
-        bcIter.destroy()
+          }
+          .groupByKey(_._1)
+          .mapGroups { (mk, it) =>
+            // Integerised (nanos) accumulation: long sums are fold-order-
+            // free, so a mean is a pure function of the member MULTISET (a
+            // raw double sum would follow shuffle fetch order). The DuckDB
+            // replays (ivfChainAfterE, pqChain) repeat it bit for bit.
+            val sq = new Array[Long](subDim); var cnt = 0L
+            it.foreach { case (_, xm) =>
+              var i = 0
+              while (i < subDim) { sq(i) += math.floor(xm(i) * 1e9 + 0.5).toLong; i += 1 }
+              cnt += 1
+            }
+            val mu = sq.map(_.toDouble / 1e9 / cnt)
+            val norm = if (renorm) math.sqrt(mu.foldLeft(0.0)((a, d) => a + d * d)) else 0.0
+            (mk, if (norm > 0) mu.map(_ / norm) else mu)
+          }.collect()
+        next.foreach { case (mk, mu) => cent(mk / nK)(mk % nK) = mu }
+        bc.destroy()
       }
-      unit.unpersist()
-      centroids
+      cent
+    } finally { vs.unpersist(); () }
   }
 
   /** Exact nearest-cell assignment of EVERY vector (vec_id, cell) under
@@ -1942,7 +1957,7 @@ object Similarity {
        |  FROM (SELECT v.vec_id AS qid, c.cell,
        |               row_number() OVER (PARTITION BY v.vec_id
        |                  ORDER BY list_dot_product(c.c, v.u) DESC, c.cell ASC) AS rk
-       |        FROM uv v CROSS JOIN cent$IvfIters c WHERE v.vec_id < $NumQueries)
+       |        FROM uv v CROSS JOIN cent$LloydIters c WHERE v.vec_id < $NumQueries)
        |  WHERE rk <= ${NprobeCurvePoints.max}),
        |candn AS (
        |  SELECT DISTINCT n.np, p.qid, f.vec_id
@@ -2072,7 +2087,7 @@ object Similarity {
        |$ivfScoredSql""".stripMargin
 
   /** IVF ANN: deterministic spherical k-means coarse quantizer (init =
-    * unit vectors of the first `cells` vec_ids, `IvfIters` = 3 Lloyd
+    * unit vectors of the first `cells` vec_ids, `LloydIters` = 3 Lloyd
     * iterations, ties to the lowest cell), then per-query search probes
     * the NProbe nearest cells and exact-re-ranks only their members —
     * the classic FAISS IVF topology. `cells` = [[derivedIvfCells]](n).
@@ -2110,7 +2125,7 @@ object Similarity {
     * defines the identical `e` (duplicate CTE names are illegal in one
     * WITH). */
   private[queries] def ivfChainAfterE(nProbe: Int): String = {
-    val rounds = (1 to IvfIters).map { r =>
+    val rounds = (1 to LloydIters).map { r =>
       s"""asn$r AS (
          |  SELECT vec_id, q, cell
          |  FROM (SELECT t.vec_id, t.q, c.cell,
@@ -2155,14 +2170,14 @@ object Similarity {
        |  FROM (SELECT v.vec_id, c.cell,
        |               row_number() OVER (PARTITION BY v.vec_id
        |                  ORDER BY list_dot_product(c.c, v.u) DESC, c.cell ASC) AS rk
-       |        FROM uv v CROSS JOIN cent$IvfIters c)
+       |        FROM uv v CROSS JOIN cent$LloydIters c)
        |  WHERE rk = 1),
        |pro AS (
        |  SELECT qid, cell
        |  FROM (SELECT v.vec_id AS qid, c.cell,
        |               row_number() OVER (PARTITION BY v.vec_id
        |                  ORDER BY list_dot_product(c.c, v.u) DESC, c.cell ASC) AS rk
-       |        FROM uv v CROSS JOIN cent$IvfIters c WHERE v.vec_id < $NumQueries)
+       |        FROM uv v CROSS JOIN cent$LloydIters c WHERE v.vec_id < $NumQueries)
        |  WHERE rk <= $nProbe),
        |cand AS (
        |  SELECT DISTINCT p.qid, f.vec_id
@@ -2175,7 +2190,7 @@ object Similarity {
   private[queries] val ivfChainSql: String = ivfChain(NProbe)
 
   /** DuckDB twin of [[annCosineIvf]] — the bpe_train move applied to
-    * Lloyd: the `IvfIters` k-means rounds unroll as a MATERIALIZED-CTE
+    * Lloyd: the `LloydIters` k-means rounds unroll as a MATERIALIZED-CTE
     * chain (asn/upd/cent per round). Bit-exactness rests on three facts:
     * (1) every dot product on both engines is the same ascending 64-term
     * IEEE fold (JIT'd loop ↔ `list_dot_product`), so assignment scores
@@ -2682,7 +2697,6 @@ object Similarity {
   private val PqSub = 8      // subspaces (Dim / PqSubDim)
   private val PqSubDim = 8   // dims per subspace
   private val PqK = 256      // centroids per subspace → 8-bit codes (FAISS PQ8x8)
-  private val PqIters = 3    // Lloyd rounds (the IvfIters precedent)
 
   /** The (vec_id, x: Array[Double]) frame the PQ trainer and
     * [[embeddingPq]] map over. */
@@ -2755,68 +2769,21 @@ object Similarity {
     * and released before returning — the queries' own lazy passes each
     * scan parquet once, so no corpus-sized cache outlives the model-state
     * construction (and on the memo-warm path nothing is cached at all). */
-  private def pqCodebook(spark: SparkSession, sfDir: String): Array[Array[Array[Double]]] =
+  private[graft] def pqCodebook(spark: SparkSession, sfDir: String): Array[Array[Array[Double]]] =
     Substrate.derived(spark, sfDir, Seq("embeddings"), "pq_codebook") {
-      trainPqCodebook(spark, pqRaw(spark, sfDir))
+      val kernel = PqKernel
+      lloyd(spark, pqRaw(spark, sfDir), _ => PqK, PqSubDim,
+        (cs, xm) => kernel.nearest(cs, xm, 0)._1, renorm = false)
     }
 
   /** Residual codebook for [[annCosineIvfPqRes]]: the same trainer over
     * unit-space coarse-quantizer residuals. */
-  private def pqResCodebook(spark: SparkSession, sfDir: String): Array[Array[Array[Double]]] =
+  private[graft] def pqResCodebook(spark: SparkSession, sfDir: String): Array[Array[Array[Double]]] =
     Substrate.derived(spark, sfDir, Seq("embeddings"), "pq_res_codebook") {
-      trainPqCodebook(spark, unitResiduals(spark, sfDir))
-    }
-
-  /** The Lloyd trainer shared by the raw and residual codebooks; `rawIn`
-    * must provide (vec_id, x: Array[Double]). */
-  private def trainPqCodebook(spark: SparkSession,
-                              rawIn: DataFrame): Array[Array[Array[Double]]] = {
-      import spark.implicits._
-      // local copies: a closure touching the object's fields would drag
-      // the whole (non-serializable) Similarity$ into the task closure
-      val nSub = PqSub; val subDim = PqSubDim; val nK = PqK
       val kernel = PqKernel
-      val raw = rawIn.cache()
-      try {
-      val n = raw.count()
-      val step = math.max(1L, n / (PqK.toLong * 128L))
-      val train = raw.filter(col("vec_id") % step === 0)
-      // init: subvector slices of the first PqK vectors by vec_id order
-      // (the IVF init move — "first K data points", valid on sparse ids)
-      val init = raw.orderBy("vec_id").limit(PqK)
-        .as[(Long, Array[Double])].collect().map(_._2)
-      val cent: Array[Array[Array[Double]]] = Array.tabulate(PqSub)(m =>
-        init.map(v => v.slice(m * PqSubDim, (m + 1) * PqSubDim)))
-      for (_ <- 1 to PqIters) {
-        val bcIter = spark.sparkContext.broadcast(cent)
-        val next = train.as[(Long, Array[Double])]
-          .flatMap { case (_, x) =>
-            (0 until nSub).map { m =>
-              val (k, _) = kernel.nearest(bcIter.value(m), x, m * subDim)
-              (m * nK + k, x.slice(m * subDim, (m + 1) * subDim))
-            }
-          }
-          .groupByKey(_._1)
-          .mapGroups { (mk, it) =>
-            val sq = new Array[Long](subDim); var cnt = 0L
-            it.foreach { case (_, xm) =>
-              var i = 0
-              while (i < subDim) {
-                sq(i) += math.floor(xm(i) * 1e9 + 0.5).toLong; i += 1
-              }
-              cnt += 1
-            }
-            val mu = new Array[Double](subDim)
-            var i = 0
-            while (i < subDim) { mu(i) = sq(i).toDouble / 1e9 / cnt; i += 1 }
-            (mk, mu)
-          }.collect()  // ≤ 8·256 rows of model state
-        next.foreach { case (mk, mu) => cent(mk / PqK)(mk % PqK) = mu }
-        bcIter.destroy()
-      }
-      cent
-      } finally { raw.unpersist(); () }
-  }
+      lloyd(spark, unitResiduals(spark, sfDir), _ => PqK, PqSubDim,
+        (cs, xm) => kernel.nearest(cs, xm, 0)._1, renorm = false)
+    }
 
   /** Unit-space coarse-quantizer residuals (vec_id, x = u − c_cell)
     * — the input both [[pqResCodebook]] trains on and
@@ -2910,7 +2877,7 @@ object Similarity {
       src: String = "SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings")
       : String = {
     val score = "list_dot_product(c.c, c.c) - 2 * list_dot_product(c.c, %s)"
-    val rounds = (1 to PqIters).map { r =>
+    val rounds = (1 to LloydIters).map { r =>
       s"""${p}asn$r AS (
          |  SELECT m, k, q FROM (
          |    SELECT t.m, c.k, t.q,
@@ -2953,7 +2920,7 @@ object Similarity {
        |                       + list_dot_product(s.xm, s.xm)) * 1e6 + 0.5) AS BIGINT) AS err_u,
        |           row_number() OVER (PARTITION BY s.vec_id, s.m
        |              ORDER BY ${score.format("s.xm")} ASC, c.k ASC) AS rk
-       |    FROM ${p}sub s JOIN ${p}cent$PqIters c ON c.m = s.m)
+       |    FROM ${p}sub s JOIN ${p}cent$LloydIters c ON c.m = s.m)
        |  WHERE rk = 1)""".stripMargin
   }
 
@@ -3151,7 +3118,7 @@ object Similarity {
        |lut AS MATERIALIZED (
        |  SELECT q.qid, c.m, c.k,
        |         CAST(floor(list_dot_product(q.qm, c.c) * 1e6 + 0.5) AS BIGINT) AS du
-       |  FROM qs q JOIN cent$PqIters c ON c.m = q.m),
+       |  FROM qs q JOIN cent$LloydIters c ON c.m = q.m),
        |scored AS (
        |  SELECT l.qid, e.vec_id, CAST(sum(l.du) AS BIGINT) AS score_u
        |  FROM enc e JOIN lut l ON l.m = e.m AND l.k = e.k
@@ -3255,7 +3222,7 @@ object Similarity {
        |lut AS MATERIALIZED (
        |  SELECT q.qid, c.m, c.k,
        |         CAST(floor(list_dot_product(q.qm, c.c) * 1e6 + 0.5) AS BIGINT) AS du
-       |  FROM qs q JOIN p_cent$PqIters c ON c.m = q.m),
+       |  FROM qs q JOIN p_cent$LloydIters c ON c.m = q.m),
        |adc AS (
        |  SELECT cd.qid, cd.vec_id, CAST(sum(l.du) AS BIGINT) AS score_u
        |  FROM cand cd
@@ -3370,7 +3337,7 @@ object Similarity {
       s"""SELECT u.vec_id,
          |       list_transform(range(1, ${Dim + 1}), i -> u.u[i] - c.c[i]) AS v
          |  FROM uv u JOIN fin f ON f.vec_id = u.vec_id
-         |            JOIN cent$IvfIters c ON c.cell = f.cell""".stripMargin
+         |            JOIN cent$LloydIters c ON c.cell = f.cell""".stripMargin
     s"""WITH ${ivfChain(NProbeMp)},
        |${pqChain("r_", resSrc)},
        |r_qs AS (
@@ -3381,11 +3348,11 @@ object Similarity {
        |r_lut AS MATERIALIZED (
        |  SELECT q.qid, c.m, c.k,
        |         CAST(floor(list_dot_product(q.qm, c.c) * 1e6 + 0.5) AS BIGINT) AS du
-       |  FROM r_qs q JOIN r_cent$PqIters c ON c.m = q.m),
+       |  FROM r_qs q JOIN r_cent$LloydIters c ON c.m = q.m),
        |r_off AS MATERIALIZED (
        |  SELECT u.vec_id AS qid, c.cell,
        |         CAST(floor(list_dot_product(u.u, c.c) * 1e6 + 0.5) AS BIGINT) AS ou
-       |  FROM uv u CROSS JOIN cent$IvfIters c
+       |  FROM uv u CROSS JOIN cent$LloydIters c
        |  WHERE u.vec_id < $NumQueries),
        |r_adc AS (
        |  SELECT cd.qid, cd.vec_id, CAST(o.ou + sum(l.du) AS BIGINT) AS score_u

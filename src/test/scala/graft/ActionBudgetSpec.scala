@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.execution.SortExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.Exchange
@@ -44,6 +46,29 @@ class ActionBudgetSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       ActionBudget.measure(s)(build(s, TestSpark.sf))
       assert(ActionBudget.measure(s)(build(s, TestSpark.sf)).jobs == 0, name)
     }
+  }
+
+  /** Jobs of each Lloyd model's cold build, in this order on one session
+    * over a fresh copy of the sf0.001 `embeddings` (the model memos are
+    * keyed by corpus dir, so no earlier spec in this JVM can have trained
+    * them): `ivf_centroids` (its count includes the table's first schema
+    * read), `pq_codebook`, then `pq_res_codebook` over the now-warm
+    * centroids. Each is a count, an init collect and one collect per
+    * Lloyd round. */
+  test("Lloyd models: cold-build job counts of the IVF centroids and both PQ codebooks") {
+    val dir = Files.createTempDirectory("lloyd_cold_")
+    try {
+      Files.copy(Paths.get(TestSpark.sf, "embeddings.parquet"),
+        dir.resolve("embeddings.parquet"))
+      val (d, s) = (dir.toString, spark.newSession())
+      val S = queries.Similarity
+      val got = Seq(
+        "ivf_centroids" -> ActionBudget.measure(s)(S.ivfCentroids(s, d)).jobs,
+        "pq_codebook" -> ActionBudget.measure(s)(S.pqCodebook(s, d)).jobs,
+        "pq_res_codebook" -> ActionBudget.measure(s)(S.pqResCodebook(s, d)).jobs)
+      assert(got == Seq("ivf_centroids" -> 10, "pq_codebook" -> 9,
+        "pq_res_codebook" -> 9))
+    } finally Substrate.deleteRecursively(dir.toFile)
   }
 
   /** Jobs of a noop write of each query that attaches grand totals

@@ -59,6 +59,18 @@ class EntryPointSpec extends AnyFunSuite {
     assert(sourcesContaining("WordTokens.words(") == Set("TextAnalysis.scala", "Dedup.scala"))
   }
 
+  test("src/main reduces typed groups once: mapGroups only in the one Lloyd trainer") {
+    // every vector quantizer (IVF cells, both PQ codebooks) trains
+    // through Similarity's shared Lloyd step
+    val call = raw"\.mapGroups\b".r
+    val files = Files.walk(Paths.get("src/main/scala"))
+    val hits = try files.iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .flatMap(p => call.findAllIn(Files.readString(p)).map(_ => p.getFileName.toString))
+      .toList
+    finally files.close()
+    assert(hits == List("Similarity.scala"))
+  }
+
   test("SPARK_GRAFT_CPUS: an integer is the core count, anything else fails by name") {
     assert(GraftSession.cpusFrom(Some("3")) == 3)
     assert(GraftSession.cpusFrom(None) ==

@@ -80,6 +80,31 @@ class SimilaritySpec extends AnyFunSuite {
     assert(pts.zip(pts.tail).forall { case (a, b) => a <= b })
   }
 
+  /** Shape and md5 of a model's raw double bits, row-major. */
+  private def modelBits(m: Array[Array[Array[Double]]]): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val bb = java.nio.ByteBuffer.allocate(8)
+    for (sub <- m; c <- sub; d <- c) {
+      bb.clear(); bb.putLong(java.lang.Double.doubleToRawLongBits(d))
+      md.update(bb.array())
+    }
+    val shape = Seq(m.length, m.headOption.fold(0)(_.length),
+      m.headOption.flatMap(_.headOption).fold(0)(_.length)).mkString("x")
+    shape + " " + md.digest().map("%02x".format(_)).mkString
+  }
+
+  test("Lloyd models at sf0.01: the IVF centroids and both PQ codebooks are bit-pinned") {
+    val sf01 = new java.io.File(sf).getParent + "/sf0.01"
+    val S = queries.Similarity
+    assert(Seq(
+      modelBits(Array(S.ivfCentroids(spark, sf01))),
+      modelBits(S.pqCodebook(spark, sf01)),
+      modelBits(S.pqResCodebook(spark, sf01))) == Seq(
+      "1x16x64 739d97a0fd4c0f36c0677338cd831e3b",
+      "8x256x8 ca2f1899ef1b42e694dc5116ebc4b913",
+      "8x256x8 872c7f7dbafb26e23b1a71235be117c0"))
+  }
+
   test("IVF recall@5 >= 0.85 vs brute force (derived cells — 16 at fixture, 4 probes)") {
     val truth = queries.Similarity.bruteForceTopK(spark, sf)
       .select("qid", "vec_id").as[(Long, Long)].collect().toSet

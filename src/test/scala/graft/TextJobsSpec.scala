@@ -18,12 +18,21 @@ class TextJobsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  /** `f` over a fresh corpus dir whose `documents` table is `rows`. */
+  private def withDocs[A](rows: Seq[(Long, String)])(f: String => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory("text_jobs_").toString
+    try {
+      rows.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+      f(dir)
+    } finally Substrate.deleteRecursively(new java.io.File(dir))
+  }
+
+  /** The shipped [[queries.TextJobs.wordcount]] over `lines` as documents. */
   private def wordcountOf(lines: Seq[String]): Map[String, Long] =
-    lines.toDF("text")
-      .select(explode(split(lower(col("text")), "\\W+")).as("word"))
-      .filter(length(col("word")) > 0)
-      .groupBy("word").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    withDocs(lines.zipWithIndex.map { case (t, i) => (i.toLong, t) }) { d =>
+      queries.TextJobs.wordcount(spark, d)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    }
 
   test("wordcount matches reference golden counts (test_mapreduce.py:79-82)") {
     val counts = wordcountOf(Seq(
@@ -44,15 +53,10 @@ class TextJobsSpec extends AnyFunSuite {
   }
 
   test("inverted index: per-doc distinct, len>2 filter, sorted posting list") {
-    val df = Seq((1L, "the cat cat sat"), (2L, "a cat runs"), (3L, "no pets"))
-      .toDF("doc_id", "text")
-      .select(col("doc_id"),
-        explode(array_distinct(split(lower(col("text")), "\\W+"))).as("word"))
-      .filter(length(col("word")) > 2)
-      .groupBy("word")
-      .agg(concat_ws(",", array_sort(collect_set(col("doc_id").cast("string"))))
-        .as("doc_ids"))
-    val m = df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val m = withDocs(Seq((1L, "the cat cat sat"), (2L, "a cat runs"), (3L, "no pets"))) { d =>
+      queries.TextJobs.invertedIndex(spark, d)
+        .collect().map(r => r.getAs[String]("word") -> r.getAs[String]("doc_ids")).toMap
+    }
     assert(m("cat") == "1,2")     // deduped within doc 1
     assert(m("the") == "1")
     assert(!m.contains("a"))      // len>2 filter
